@@ -48,7 +48,7 @@ def _q_extract_text(spark, sf_dir):
 
 def _q_extract_word_spans(spark, sf_dir):
     df = T.synthesize_transcripts(spark, sf_dir)
-    extracted = pipeline.extract_turns(df, emit_spans='words',
+    extracted = pipeline.extract_turns(df, emit_spans='packed',
                                        emit_sexpr=False)
     return pipeline.word_spans(extracted).select(
         'conv_id', 'turn_idx', 'word_idx', 'word', 'x0', 'y0', 'x1', 'y1')
@@ -167,7 +167,7 @@ def _q_extract_rotated(spark, sf_dir):
     parts = []
     for k in (90, 180, 270):
         extracted = pipeline.extract_turns(
-            df, rotation=k, emit_spans='words', emit_sexpr=False)
+            df, rotation=k, emit_spans='packed', emit_sexpr=False)
         parts.append(pipeline.word_spans(extracted).select(
             F.lit(k).alias('rotation'),
             'conv_id', 'turn_idx', 'word_idx', 'word',

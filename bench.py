@@ -130,11 +130,11 @@ def main():
          pipeline.extract_turns(transcripts, emit_spans=False)
          .select('conv_id', 'turn_idx', 'dialect', 'error',
                  'extracted_text', 'extracted_sexpr')),
-        # q2: word-span explode (spans fan-out path); emit_spans='words'
+        # q2: word-span explode (spans fan-out path); emit_spans='packed'
         # prunes non-word spans at the UDF — the query reads nothing else
         ('extract_word_spans',
          pipeline.word_spans(
-             pipeline.extract_turns(transcripts, emit_spans='words',
+             pipeline.extract_turns(transcripts, emit_spans='packed',
                                     emit_sexpr=False))),
         # q3: extraction + stable conversation reassembly (the one shuffle)
         ('conversation_reassembly',

@@ -230,7 +230,7 @@ def load_merges(spark, table_root: str, version=None):
 
 
 # ---------------------------------------------------------------------------
-# pure-Python reference (tests only — NOT the data path)
+# pure-Python merge loop over the collected (word, count) state
 # ---------------------------------------------------------------------------
 
 def _ref_norm(text: str) -> str:
@@ -260,7 +260,7 @@ def _train_from_counts(counts, n_merges: int,
     text actually rewritten, not n_merges * vocabulary. Tie-break is
     the engine-wide contract: (count DESC, 'a|b' label ASC) —
     equivalence-tested against both the distributed loop and the
-    naive ``reference_train``.
+    naive reference trainer in the tests.
     """
     from collections import Counter, defaultdict
     words = [list(w) for w in counts]
@@ -299,54 +299,3 @@ def _train_from_counts(counts, n_merges: int,
                 index[p].add(i)
         index.pop((a, b), None)
     return merges
-
-
-def reference_train(texts, n_merges: int, min_count: int = 2):
-    """Sequential BPE trainer with identical semantics, for the
-    randomized equivalence tests."""
-    from collections import Counter
-    counts = Counter()
-    for t in texts:
-        for w in _ref_norm(t).split(' '):
-            if w:
-                counts[w] += 1
-    state = {tuple(w): c for w, c in counts.items()}
-    merges = []
-    for _ in range(n_merges):
-        pc = Counter()
-        for toks, c in state.items():
-            for i in range(len(toks) - 1):
-                pc[(toks[i], toks[i + 1])] += c
-        if not pc:
-            break
-        # tie-break on the delimited pair LABEL ('a|b'), the
-        # engine/oracle convention (note '|' sorts above ASCII letters,
-        # so this differs from tuple order when one token prefixes
-        # another)
-        best = min(pc.items(),
-                   key=lambda kv: (-kv[1],
-                                   kv[0][0] + PAIR_SEP + kv[0][1]))
-        if best[1] < min_count:
-            break
-        (a, b), _n = best
-        merges.append((a, b))
-        new_state = {}
-        for toks, c in state.items():
-            key = tuple(_merge_pass(list(toks), a, b))
-            new_state[key] = new_state.get(key, 0) + c
-        state = new_state
-    return merges
-
-
-def reference_tokenize(text: str, merges) -> List[str]:
-    """Apply merges in rank order (one canonical left-to-right pass
-    each), the same spec the replace chain implements."""
-    out: List[str] = []
-    for w in _ref_norm(text).split(' '):
-        if not w:
-            continue
-        toks = list(w)
-        for a, b in merges:
-            toks = _merge_pass(toks, a, b)
-        out.extend(toks)
-    return out

@@ -76,31 +76,3 @@ def cms_merge(*sketches: DataFrame) -> DataFrame:
     for s in sketches[1:]:
         out = out.unionByName(s)
     return out.groupBy('row', 'pos').agg(F.sum('n').alias('n'))
-
-
-def reference_cms(keys, d: int = 3, w: int = 256):
-    """Pure-Python reference (tests only): counter dict + estimator."""
-    counters = {}
-    pos_cache = {}
-
-    def positions(key):
-        if key not in pos_cache:
-            acc = 0
-            for c in key:
-                acc = (acc * 31 + ord(c)) % HASH_MOD
-            for mul, add in FIN:
-                acc = (acc * mul + add) % HASH_MOD
-            h2 = (acc * H2_MUL + H2_ADD) % HASH_MOD
-            pos_cache[key] = [(acc + j * h2 + j * j) % w
-                              for j in range(d)]
-        return pos_cache[key]
-
-    for key in keys:
-        for j, p in enumerate(positions(key)):
-            counters[(j, p)] = counters.get((j, p), 0) + 1
-
-    def estimate(key):
-        return min(counters.get((j, p), 0)
-                   for j, p in enumerate(positions(key)))
-
-    return counters, estimate

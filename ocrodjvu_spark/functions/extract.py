@@ -22,7 +22,6 @@ from pyspark.sql.functions import pandas_udf
 from ..kernel import hocr
 from ..kernel.zones import (
     Zone,
-    ZONE_LINE,
     ZONE_NAME,
     ZONE_WORD,
 )
@@ -32,11 +31,16 @@ from ..schema import EXTRACT_RESULT, EXTRACT_RESULT_PACKED
 SPAN_RS = '\x1e'   # record separator between word spans
 SPAN_FS = '\x1f'   # field separator inside one span record
 
+# accepted ``emit_spans`` values: every zone as structs (``spans``),
+# none (``spans`` is NULL), or word spans packed into one string per
+# page (``spans_packed``)
+EMIT_SPANS = (True, False, 'packed')
+
 
 def pack_word_spans(zone) -> str:
     """Serialize word spans to the packed single-string form.
 
-    One record per word, preorder (same order as ``flatten_word_zones``):
+    One record per word, preorder (the word-zone order of ``flatten_zone``):
     ``x0 FS y0 FS x1 FS y1 FS text`` joined by RS. Text is the last
     field so it may contain anything except the two separator bytes,
     which are replaced with U+FFFD (the emitters escape C0 controls, so
@@ -54,8 +58,8 @@ def pack_word_spans(zone) -> str:
 def _pack_walk(z: Zone, recs: List[str]) -> None:
     """Single fused preorder walk emitting one packed record per word
     zone — same visit order, leaf rule and coordinate formatting as
-    ``flatten_word_zones`` + the packing loop it replaces (pinned by
-    the packed-vs-struct equivalence tests)."""
+    ``flatten_zone`` (pinned by the packed-vs-struct equivalence
+    tests)."""
     if z.type == ZONE_WORD:
         leaf = ''.join(c for c in z.children if isinstance(c, str)) or None
         x0, y0, x1, y1 = z.bbox
@@ -90,37 +94,6 @@ def flatten_zone(zone: Zone) -> List[tuple]:
                 i += 1
 
     walk(zone, 0, ())
-    return spans
-
-
-def flatten_word_zones(zone: Zone) -> List[tuple]:
-    """Word-only span list, same tuple shape as ``flatten_zone``.
-
-    The words-mode Arrow pruning knob: consumers like
-    ``pipeline.word_spans`` filter to word zones and read only
-    bbox + text + order, so shipping page/line/para spans (and the
-    per-span ``path`` array — the one nested list in the struct) is
-    pure Arrow transfer cost. Word order is preorder, identical to the
-    filtered ``flatten_zone`` output; ``path`` is None. Intended for
-    ``details='words'`` runs (word zones under chars detail carry
-    their text in child zones, same as flatten_zone's leaf rule).
-    """
-    spans: List[tuple] = []
-
-    def walk(z: Zone, depth: int):
-        if z.type == ZONE_WORD:
-            leaf = ''.join(
-                c for c in z.children if isinstance(c, str)) or None
-            x0, y0, x1, y1 = z.bbox
-            spans.append((
-                ZONE_NAME[ZONE_WORD], depth, None,
-                int(x0), int(y0), int(x1), int(y1), leaf,
-            ))
-        for child in z.children:
-            if isinstance(child, Zone):
-                walk(child, depth + 1)
-
-    walk(zone, 0)
     return spans
 
 
@@ -161,7 +134,7 @@ def extract_one(
 ):
     """Extract one turn; returns the EXTRACT_RESULT-shaped dict.
 
-    ``emit_spans`` (True | False | 'words') / ``emit_sexpr`` skip or
+    ``emit_spans`` (see ``EMIT_SPANS``) / ``emit_sexpr`` skip or
     prune those payloads (they dominate the Arrow transfer cost when a
     query only needs text or word boxes).
     """
@@ -180,12 +153,11 @@ def extract_one(
         }
     pages = []
     for zone in zones:
-        if emit_spans == 'packed' or emit_spans == 'words':
-            # both word-span modes ship the packed single-string form:
+        if emit_spans == 'packed':
             # one delimited record per word, decoded JVM-side by
             # pipeline.word_spans — the lowest-Arrow-volume spans path
             # (measured 9.5% faster than the array-of-structs form at
-            # 32 cores on the round-7 kernel)
+            # 32 cores)
             page = {'spans_packed': pack_word_spans(zone)}
         elif emit_spans:
             page = {'spans': flatten_zone(zone)}
@@ -226,11 +198,15 @@ def make_extract_udf(
     pipeline inside a single stage — no shuffle is introduced.
     ``emit_spans``/``emit_sexpr`` elide the heavy payloads when a query
     only consumes ``extracted_text`` (Catalyst cannot prune *inside* a
-    UDF result struct, so the pruning knob lives here).
+    UDF result struct, so the pruning knob lives here). This is the one
+    place that decides the span shape; any ``emit_spans`` outside
+    ``EMIT_SPANS`` raises ``ValueError``.
     """
+    if emit_spans not in EMIT_SPANS:
+        raise ValueError(
+            f'emit_spans must be one of {EMIT_SPANS}, got {emit_spans!r}')
     details_level = hocr.DETAILS_BY_NAME[details]
-    result_schema = (EXTRACT_RESULT_PACKED
-                     if emit_spans in ('packed', 'words')
+    result_schema = (EXTRACT_RESULT_PACKED if emit_spans == 'packed'
                      else EXTRACT_RESULT)
 
     @pandas_udf(result_schema)

@@ -107,20 +107,3 @@ def estimate_from_ranks(ranks: dict, p: int) -> float:
     if est <= 2.5 * m and zeros:
         est = m * math.log(m / zeros)
     return est
-
-
-def reference_sketch(keys, p: int = 6):
-    """Pure-Python reference (tests only)."""
-    m = 1 << p
-    w_bits = HASH_BITS - p
-    regs = {}
-    for key in keys:
-        acc = 0
-        for c in key:
-            acc = (acc * 31 + ord(c)) % 2147483647
-        for mul, add in FIN:
-            acc = (acc * mul + add) % 2147483647
-        j, w = acc % m, acc // m
-        rank = (w_bits + 1) if w == 0 else (w_bits + 1 - w.bit_length())
-        regs[j] = max(regs.get(j, 0), rank)
-    return regs

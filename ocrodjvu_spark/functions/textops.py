@@ -83,22 +83,6 @@ def rolling_hash(str_col: Column) -> Column:
 SHINGLE_COMBINE = 1009  # odd multiplier for combining token hashes
 
 
-def word_shingles(tokens_col: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingle strings (reference form; the hashed
-    pipeline below avoids materializing these)."""
-    joined = F.transform(
-        F.sequence(F.lit(0), F.size(tokens_col) - n),
-        lambda i: F.concat_ws(
-            ' ', *[F.element_at(tokens_col, (i + j + 1).cast('int'))
-                   for j in range(n)]),
-    )
-    # short docs (< n tokens): fall back to the whole text as one shingle
-    return F.array_distinct(
-        F.when(F.size(tokens_col) >= n, joined)
-        .otherwise(F.array(F.concat_ws(' ', tokens_col)))
-    )
-
-
 def shingle_hashes(tokens_col: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingle hashes.
 
@@ -133,23 +117,6 @@ def shingle_hashes(tokens_col: Column, n: int = 3) -> Column:
             F.when(F.size(h) >= n, joined).otherwise(F.array(whole)))
 
     return bind_once(hs, combos)
-
-
-def minhash_signature(hashes_col: Column) -> Column:
-    """Array of K minhash values over a shingle-hash array column.
-
-    NOTE: column-expression form, for per-row use on *small* arrays.
-    The scalable path is ``minhash_signature_table`` — Catalyst inlines
-    duplicated array expressions on projection collapse, so referencing
-    this array K times would recompute the shingle fold K*K times;
-    the explode+groupBy form computes each hash exactly once and gets
-    whole-stage codegen + map-side combine.
-    """
-    return F.array(*[
-        F.array_min(F.transform(
-            hashes_col, lambda h: (h * a + b) % HASH_MOD))
-        for a, b in MINHASH_PARAMS
-    ])
 
 
 def minhash_signature_table(docs: DataFrame, id_col='doc_id',

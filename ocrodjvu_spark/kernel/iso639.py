@@ -47,122 +47,3 @@ def normalize_language(code: str) -> str:
     if not _CODE_RE.match(normalized):
         raise ValueError(f'invalid language id: {code!r}')
     return normalized
-
-
-def is_language_id(code: str) -> bool:
-    try:
-        normalize_language(code)
-        return True
-    except ValueError:
-        return False
-
-
-def b_to_t(code: str, permissive: bool = False) -> str:
-    """One ISO 639-2/B code -> 639-2/T (lib/iso639.py:47-60)."""
-    if len(code) != 3:
-        if permissive:
-            return code
-        raise ValueError(code)
-    return B_TO_T.get(code, code)
-
-
-# --- per-engine language tables (T11) ---------------------------------------
-# The reference builds these maps at engine startup from the installed
-# engine's own language inventory; here they are config-time helpers the
-# driver uses before launching a job (never per-row work).
-
-CUNEIFORM_LANGUAGE_LIST_RE = re.compile(r'^Supported languages: (.*)[.]$')
-
-
-def parse_cuneiform_language_list(output: str):
-    """Engine codes from ``cuneiform -l`` output
-    (lib/engines/cuneiform.py:30,67-71)."""
-    for line in output.splitlines():
-        m = CUNEIFORM_LANGUAGE_LIST_RE.match(line)
-        if m:
-            return m.group(1).split()
-    return []
-
-
-def cuneiform_code_to_iso(code: str, available) -> str:
-    """One Cuneiform code -> ISO 639-2/T ('+'-joined for multilang).
-
-    The quirks (lib/engines/cuneiform.py:73-95): ``ruseng`` is the
-    rus+eng combo; ``slo`` means Slovenian on Cuneiform <= 1.0 (a known
-    engine bug) unless the inventory also carries ``slv``, in which case
-    it is taken as Slovak; multilang codes join with ``_``.
-    """
-    if code == 'ruseng':
-        return 'rus+eng'
-    if code == 'slo':
-        return 'slv' if 'slv' not in available else 'slk'
-    return '+'.join(b_to_t(c, permissive=True) for c in code.split('_'))
-
-
-def cuneiform_language_maps(available):
-    """(engine->iso, frozenset(iso parts)->engine) for an inventory."""
-    to_iso = {}
-    from_user = {}
-    for code in available:
-        iso = cuneiform_code_to_iso(code, available)
-        to_iso[code] = iso
-        from_user[frozenset(iso.split('+'))] = code
-        if code == 'ruseng':
-            # 'rus-eng' accepted for compatibility with ocrodjvu <= 0.7.14
-            from_user[frozenset(['rus-eng'])] = code
-    return to_iso, from_user
-
-
-def cuneiform_user_to_engine(language: str, available) -> str:
-    """User language id -> the code to pass to cuneiform, or raise.
-
-    Order-insensitive for combos ('eng+rus' == 'rus+eng'), like the
-    reference's frozenset lookup (lib/engines/cuneiform.py:130-136).
-    """
-    _, from_user = cuneiform_language_maps(available)
-    key = frozenset(b_to_t(c, permissive=True) for c in language.split('+'))
-    try:
-        return from_user[key]
-    except KeyError:
-        raise LookupError(
-            f'language pack for the selected language {language} '
-            'is not available')
-
-
-TESSERACT_CODE_RE = re.compile(r'^([a-z]{3})(?:[-_]([a-z]+))?$')
-
-
-def tesseract_code_to_iso(code: str) -> str:
-    """One Tesseract traineddata code -> ISO 639-2/T (keeps the script
-    suffix, e.g. chi_tra -> zho-tra; lib/engines/tesseract.py:182-189)."""
-    m = TESSERACT_CODE_RE.match(code)
-    if m is None:
-        return code
-    iso = B_TO_T.get(m.group(1), m.group(1))
-    if m.group(2) is not None:
-        iso += '-' + m.group(2)
-    return iso
-
-
-def tesseract_language_map(available):
-    """iso -> traineddata code over an inventory; 'osd' (the orientation
-    model) is not a language (lib/engines/tesseract.py:167-180)."""
-    return {
-        tesseract_code_to_iso(code): code
-        for code in available if code != 'osd'
-    }
-
-
-def tesseract_user_to_engine(language: str, available) -> str:
-    """User id ('+'-joined allowed) -> tesseract '-l' argument, or raise
-    (lib/engines/tesseract.py:191-200)."""
-    table = tesseract_language_map(available)
-    parts = []
-    for sub in language.split('+'):
-        iso = tesseract_code_to_iso(sub)
-        if iso not in table:
-            raise LookupError(
-                f'language pack for the selected language {iso} '
-                'is not available')
-        parts.append(table[iso])
-    return '+'.join(parts)

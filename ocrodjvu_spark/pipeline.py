@@ -21,9 +21,9 @@ Scale design (10^12-turn table, 1000 executors):
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import List, Optional, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .functions import extract as extract_fn
@@ -61,17 +61,17 @@ def extract_turns(
     """transcripts -> per-page extraction results.
 
     Output columns: conv_id, turn_idx, *keep_columns, dialect, error,
-    page_idx, spans, extracted_text, extracted_sexpr. Failed turns keep
-    their row with error set and null payload ("--on-error resume"
-    semantics, reference lib/cli/ocrodjvu.py:494-501). Pass
-    ``emit_spans=False`` / ``emit_sexpr=False`` to elide the heavy
-    payloads for text-only consumers. ``emit_spans='words'`` /
-    ``'packed'`` (synonyms since round 7) ship word spans as one
-    delimited string per page (``spans_packed`` replaces the ``spans``
-    column; see schema.PAGE_RESULT_PACKED) — the lowest-Arrow-volume
-    spans path, decoded JVM-side by ``word_spans``, measured 9.5%
-    faster end-to-end than the former array-of-structs words mode.
-    ``emit_spans=True`` keeps the full span structs (all zone levels).
+    page_idx, spans (or spans_packed), extracted_text, extracted_sexpr.
+    Failed turns keep their row with error set and null payload
+    ("--on-error resume" semantics, reference
+    lib/cli/ocrodjvu.py:494-501). ``emit_spans`` is passed to
+    ``functions.extract.make_extract_udf``, which alone decides the
+    span shape: ``True`` keeps the full span structs (all zone
+    levels); ``False`` / ``emit_sexpr=False`` elide the heavy payloads
+    for text-only consumers; ``'packed'`` ships word spans as one
+    delimited string per page (``spans_packed`` replaces ``spans``;
+    see schema.PAGE_RESULT_PACKED) — the lowest-Arrow-volume spans
+    path, decoded JVM-side by ``word_spans``.
     """
     if salt_buckets:
         df = salted_repartition(df, num_partitions, salt_buckets)
@@ -88,24 +88,18 @@ def extract_turns(
         F.col('_r.error').alias('error'),
         F.posexplode_outer('_r.pages').alias('page_idx', 'page'),
     )
-    spans_col = ('spans_packed' if emit_spans in ('packed', 'words')
-                 else 'spans')
     return exploded.select(
-        *KEY_COLUMNS, *keep, 'dialect', 'error', 'page_idx',
-        F.col(f'page.{spans_col}').alias(spans_col),
-        F.col('page.extracted_text').alias('extracted_text'),
-        F.col('page.extracted_sexpr').alias('extracted_sexpr'),
-    )
+        *KEY_COLUMNS, *keep, 'dialect', 'error', 'page_idx', 'page.*')
 
 
 def word_spans(extracted: DataFrame) -> DataFrame:
     """Explode word-level spans: one row per extracted word, in order.
 
     Requires an extraction run with ``emit_spans=True`` or, cheaper,
-    ``emit_spans='words'`` / ``'packed'`` (ONE delimited string per
-    page carrying only word spans; decoded here with pure JVM
-    split/cast inside codegen — the lowest Arrow-transfer-volume
-    path). Spans elided upstream (``False``) explode to zero rows.
+    ``emit_spans='packed'`` (ONE delimited string per page carrying
+    only word spans; decoded here with pure JVM split/cast inside
+    codegen — the lowest Arrow-transfer-volume path). Spans elided
+    upstream (``False``) explode to zero rows.
     """
     if 'spans_packed' in extracted.columns:
         packed = F.col('spans_packed')
@@ -187,16 +181,15 @@ def roundtrip_turns(extracted: DataFrame, details: str = 'words',
     Page dimensions come from the extracted PAGE span (selected by zone
     type), so this requires an ``emit_spans=True`` run: spans-elided
     runs (``False``) surface a per-row error instead of wrong geometry,
-    and the packed word-span modes carry no ``spans`` column at all.
+    and ``'packed'`` runs carry no ``spans`` column at all.
     A fixed-point check downstream asserts the re-extracted text equals
     the original (north-star round-trip semantics).
     """
     from .functions.emit import make_emit_hocr_udf
     emit = make_emit_hocr_udf(full_document=True)
-    # the PAGE span, selected by type rather than position: under
-    # emit_spans='words' there is no page span (spans[0] would be the
-    # first word), so this yields null dims and the emit UDF reports an
-    # explicit error instead of silently mis-sizing the page
+    # the PAGE span, selected by type rather than position, so a span
+    # list without a page zone yields null dims and the emit UDF
+    # reports an explicit error instead of silently mis-sizing the page
     page = F.element_at(
         F.filter(F.col('spans'),
                  lambda s: s.zone_type == F.lit('page')), 1)
@@ -218,9 +211,23 @@ def roundtrip_turns(extracted: DataFrame, details: str = 'words',
     )
 
 
-def extraction_metrics(extracted: DataFrame) -> DataFrame:
-    """Per-conversation extraction metrics (sidecar table content)."""
-    return extracted.groupBy('conv_id').agg(
+def run_metrics(extracted: DataFrame) -> List[Column]:
+    """The run metrics, as named aggregates over ``extract_turns``
+    output: n_turns, n_errors, n_spans, n_chars.
+
+    The one definition behind ``extraction_metrics`` and the checkpoint
+    sidecar; aggregate it under any grouping. ``n_spans`` counts the
+    spans the run emitted: every zone under ``emit_spans=True``, words
+    only under ``'packed'``, none under ``False``. The span shape is
+    read from the frame's columns.
+    """
+    if 'spans_packed' in extracted.columns:
+        packed = F.col('spans_packed')
+        n_spans = F.when(packed.isNull() | (packed == ''), 0) \
+            .otherwise(F.size(F.split(packed, extract_fn.SPAN_RS)))
+    else:
+        n_spans = F.size(F.coalesce(F.col('spans'), F.array()))
+    return [
         # distinct turns, not exploded page rows: count each turn's first
         # page (error rows have null page_idx and still count as a turn);
         # plain hash aggregate, no countDistinct Expand
@@ -228,8 +235,14 @@ def extraction_metrics(extracted: DataFrame) -> DataFrame:
                        | (F.col('page_idx') == 0), 1)).alias('n_turns'),
         F.sum(F.when(F.col('error').isNotNull(), 1).otherwise(0))
          .alias('n_errors'),
-        F.sum(F.size(F.coalesce(F.col('spans'), F.array())))
-         .alias('n_spans'),
+        F.sum(n_spans).alias('n_spans'),
         F.sum(F.length(F.coalesce(F.col('extracted_text'), F.lit(''))))
          .alias('n_chars'),
-    )
+    ]
+
+
+def extraction_metrics(extracted: DataFrame) -> DataFrame:
+    """Per-conversation ``run_metrics``: n_turns, n_errors, n_chars and
+    n_spans, the spans the run emitted (every zone under
+    ``emit_spans=True``, words only under ``'packed'``)."""
+    return extracted.groupBy('conv_id').agg(*run_metrics(extracted))

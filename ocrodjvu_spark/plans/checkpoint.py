@@ -138,38 +138,9 @@ def run_extraction(
     if written is None:  # snapshot path, every pending bucket empty
         written = shaped.limit(0)
 
-    # span count under either emission shape: struct array ('spans') or
-    # the packed single-string form ('spans_packed', RS-delimited —
-    # emit_spans='packed' flows through extract_kwargs)
-    if 'spans' in written.columns:
-        n_spans = F.sum(F.size(F.coalesce(F.col('spans'), F.array())))
-    elif 'spans_packed' in written.columns:
-        from ..functions.extract import SPAN_RS
-        packed = F.col('spans_packed')
-        n_spans = F.sum(F.when(
-            packed.isNull() | (packed == ''), 0)
-            .otherwise(F.size(F.split(packed, SPAN_RS))))
-    else:
-        n_spans = F.sum(F.lit(0))
-
     # lineage + metrics, appended only after the bucket data is durable;
     # empty buckets get a zero row so they are marked complete too
-    observed = (
-        written
-        .groupBy(BUCKET_COL)
-        .agg(
-            # distinct turns, not exploded page rows (same rule as
-            # pipeline.extraction_metrics)
-            F.count(F.when(F.col('page_idx').isNull()
-                           | (F.col('page_idx') == 0), 1))
-             .alias('n_turns'),
-            F.sum(F.when(F.col('error').isNotNull(), 1).otherwise(0))
-             .alias('n_errors'),
-            n_spans.alias('n_spans'),
-            F.sum(F.length(F.coalesce(F.col('extracted_text'), F.lit(''))))
-             .alias('n_chars'),
-        )
-    )
+    observed = written.groupBy(BUCKET_COL).agg(*pipeline.run_metrics(written))
     all_pending = spark.createDataFrame(
         [(b,) for b in pending], f'{BUCKET_COL} int')
     metrics = (

@@ -9,6 +9,7 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import Row
 
 from ocrodjvu_spark.functions import bpe
+from tests.oracles import reference_tokenize, reference_train
 
 _ALPHABET = 'abcd'
 
@@ -40,7 +41,7 @@ def test_train_matches_reference_randomized(spark):
         df = spark.createDataFrame([Row(doc_id=i, text=t)
                                     for i, t in enumerate(texts)])
         got = bpe.train(df, 8, min_count=1)
-        want = bpe.reference_train(texts, 8, min_count=1)
+        want = reference_train(texts, 8, min_count=1)
         assert got == want, f'seed {seed}: {got} != {want}'
 
 
@@ -52,7 +53,7 @@ def test_tokenize_matches_reference_randomized(spark):
     merges = bpe.train(df, 10, min_count=1)
     got = {r.doc_id: r for r in bpe.tokenize(df, merges).collect()}
     for i, t in enumerate(texts):
-        want = bpe.reference_tokenize(t, merges)
+        want = reference_tokenize(t, merges)
         assert _toks(got[i].toks_str) == want, f'doc {i}'
         assert got[i].n_tokens == len(want)
 
@@ -179,7 +180,7 @@ def test_distributed_and_local_train_paths_agree(spark):
                                     for i, t in enumerate(texts)])
         local = bpe.train(df, 8, min_count=1)
         dist = bpe.train(df, 8, min_count=1, max_local_state=0)
-        assert local == dist == bpe.reference_train(
+        assert local == dist == reference_train(
             texts, 8, min_count=1), f'seed {seed}'
 
 
@@ -196,5 +197,5 @@ def test_train_from_counts_matches_reference_many_merges(spark):
                 if w:
                     counts[w] += 1
         got = bpe._train_from_counts(dict(counts), 40, min_count=1)
-        want = bpe.reference_train(texts, 40, min_count=1)
+        want = reference_train(texts, 40, min_count=1)
         assert got == want, f'seed {seed}'

@@ -7,6 +7,7 @@ from collections import Counter
 from pyspark.sql import Row
 
 from ocrodjvu_spark.functions import cms
+from tests.oracles import reference_cms
 
 
 def _rand_keys(rng, n, alphabet='abcde', lo=2, hi=6):
@@ -21,7 +22,7 @@ def test_counters_and_estimates_match_reference(spark):
         keys = _rand_keys(rng, 500)
         df = spark.createDataFrame([Row(key=x) for x in keys])
         sketch = cms.cms_build(df, d=3, w=32)
-        ref_counters, ref_est = cms.reference_cms(keys, d=3, w=32)
+        ref_counters, ref_est = reference_cms(keys, d=3, w=32)
         got = {(r.row, r.pos): r.n for r in sketch.collect()}
         assert got == ref_counters, f'seed {seed}'
         probes = sorted(set(keys))

@@ -283,12 +283,12 @@ class TestIso639:
 
     def test_invalid(self):
         import pytest as _pytest
-        from ocrodjvu_spark.kernel.iso639 import (
-            is_language_id, normalize_language)
+        from ocrodjvu_spark.kernel.iso639 import normalize_language
         with _pytest.raises(ValueError):
             normalize_language('e')
-        assert not is_language_id('english')
-        assert is_language_id('slo')
+        with _pytest.raises(ValueError):
+            normalize_language('english')
+        assert normalize_language('slo') == 'slk'
 
 
 # --- T13: filename template expansion ---------------------------------------
@@ -304,63 +304,6 @@ def test_expand_template_offsets():
     import pytest
     with pytest.raises(KeyError):
         expand_template('{id+1}', 7, 'a.djvu')
-
-
-# --- T11: per-engine language tables ----------------------------------------
-
-# the reference's fake-cuneiform inventory (tests/engines/fake-cuneiform)
-CUNEIFORM_10 = ('eng ger fra rus swe spa ita ruseng ukr srp hrv pol dan '
-                'por dut cze rum hun bul slo lav lit est tur').split()
-CUNEIFORM_MULTI = CUNEIFORM_10 + ['rus_ger', 'rus_cze', 'rus_fra']
-
-
-def test_cuneiform_language_list_parse():
-    from ocrodjvu_spark.kernel.iso639 import parse_cuneiform_language_list
-    out = ('Cuneiform for Linux 1.0.0\n'
-           'Supported languages: eng ger ruseng slo.\n')
-    assert parse_cuneiform_language_list(out) == \
-        ['eng', 'ger', 'ruseng', 'slo']
-
-
-def test_cuneiform_code_to_iso_quirks():
-    from ocrodjvu_spark.kernel.iso639 import cuneiform_code_to_iso
-    # mirror of the reference's engine tests (tests/engines/test_cuneiform)
-    assert cuneiform_code_to_iso('eng', CUNEIFORM_10) == 'eng'
-    assert cuneiform_code_to_iso('ger', CUNEIFORM_10) == 'deu'
-    assert cuneiform_code_to_iso('ruseng', CUNEIFORM_10) == 'rus+eng'
-    # cuneiform <= 1.0 bug: slo means Slovenian unless slv coexists
-    assert cuneiform_code_to_iso('slo', CUNEIFORM_10) == 'slv'
-    assert cuneiform_code_to_iso('slo', CUNEIFORM_10 + ['slv']) == 'slk'
-    assert cuneiform_code_to_iso('rus_cze', CUNEIFORM_MULTI) == 'rus+ces'
-
-
-def test_cuneiform_user_to_engine():
-    from ocrodjvu_spark.kernel.iso639 import cuneiform_user_to_engine
-    import pytest
-    for user in ('rus+eng', 'eng+rus', 'rus-eng'):
-        assert cuneiform_user_to_engine(user, CUNEIFORM_10) == 'ruseng'
-    assert cuneiform_user_to_engine('deu', CUNEIFORM_10) == 'ger'
-    assert cuneiform_user_to_engine('rus+ces', CUNEIFORM_MULTI) == 'rus_cze'
-    assert cuneiform_user_to_engine('ces+rus', CUNEIFORM_MULTI) == 'rus_cze'
-    with pytest.raises(LookupError):
-        cuneiform_user_to_engine('tlh', CUNEIFORM_10)
-
-
-def test_tesseract_language_tables():
-    from ocrodjvu_spark.kernel.iso639 import (
-        tesseract_code_to_iso, tesseract_user_to_engine)
-    import pytest
-    inventory = ['eng', 'deu', 'chi_tra', 'osd']
-    assert tesseract_code_to_iso('chi_tra') == 'zho-tra'
-    assert tesseract_code_to_iso('fre') == 'fra'
-    assert tesseract_user_to_engine('eng', inventory) == 'eng'
-    assert tesseract_user_to_engine('ger', inventory) == 'deu'
-    assert tesseract_user_to_engine('eng+deu', inventory) == 'eng+deu'
-    assert tesseract_user_to_engine('zho-tra', inventory) == 'chi_tra'
-    with pytest.raises(LookupError):
-        tesseract_user_to_engine('osd', inventory)
-    with pytest.raises(LookupError):
-        tesseract_user_to_engine('tlh', inventory)
 
 
 def test_compact_sexpr_equivalence():

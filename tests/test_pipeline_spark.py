@@ -167,8 +167,8 @@ def test_word_spans_order(spark):
 
 
 def test_packed_spans_match_struct_spans(spark):
-    # the packed word-span modes ('words'/'packed': one delimited
-    # string per page, JVM-side decode) must reproduce the FULL struct
+    # the packed word-span mode (one delimited string per page,
+    # JVM-side decode) must reproduce the FULL struct
     # path (emit_spans=True, word_spans filters to word zones)
     # byte-for-byte on the synthetic corpus
     from ocrodjvu_spark.sources import transcripts as T
@@ -187,6 +187,55 @@ def test_packed_spans_match_struct_spans(spark):
     plan_b = b._jdf.queryExecution().executedPlan().toString()
     assert plan_b.count('ArrowEvalPython') == \
         plan_a.count('ArrowEvalPython')
+
+
+def test_extraction_metrics_packed_matches_struct(spark):
+    # one metric definition for both span shapes: under 'packed' the
+    # run emits word spans only, so n_spans is the word count while
+    # turns, errors and chars match the full struct run (a malformed
+    # and a null turn ride along to exercise n_errors)
+    from pyspark.sql import functions as F
+
+    from ocrodjvu_spark.sources import transcripts as T
+    docs = spark.createDataFrame(
+        [(i, ' '.join(f'w{i}x{j}' for j in range(1 + i % 7)))
+         for i in range(60)], 'doc_id long, text string')
+    good = docs.select(
+        F.concat(F.lit('c'), (F.col('doc_id') % 5).cast('string'))
+         .alias('conv_id'),
+        F.col('doc_id').cast('int').alias('turn_idx'),
+        T.hocr_markup_col(T.tokens_col('text')).alias('text'))
+    bad = spark.createDataFrame([
+        ('bad', 1, '<html><body><div class="ocr_page">no bbox'
+         '</div></body></html>'),
+        ('bad', 2, None),
+    ], 'conv_id string, turn_idx int, text string')
+    df = good.unionByName(bad)
+    struct = pipeline.extract_turns(df, emit_spans=True, emit_sexpr=False)
+    packed = pipeline.extract_turns(df, emit_spans='packed',
+                                    emit_sexpr=False)
+    want = {r.conv_id: r for r in
+            pipeline.extraction_metrics(struct).collect()}
+    got = {r.conv_id: r for r in
+           pipeline.extraction_metrics(packed).collect()}
+    words = dict(pipeline.word_spans(struct).groupBy('conv_id').count()
+                 .collect())
+    assert got and got.keys() == want.keys()
+    assert got['bad'].n_errors == 2
+    for conv_id, g in got.items():
+        w = want[conv_id]
+        assert (g.n_turns, g.n_errors, g.n_chars) == \
+            (w.n_turns, w.n_errors, w.n_chars), conv_id
+        assert g.n_spans == words.get(conv_id, 0), conv_id
+    assert sum(g.n_spans for g in got.values()) == \
+        sum(1 + i % 7 for i in range(60))
+
+
+@pytest.mark.parametrize('emit_spans', ['words', 'Packed', None])
+def test_make_extract_udf_rejects_unknown_emit_spans(emit_spans):
+    from ocrodjvu_spark.functions.extract import make_extract_udf
+    with pytest.raises(ValueError):
+        make_extract_udf(emit_spans=emit_spans)
 
 
 def test_packed_spans_null_word_text_matches_struct(spark):
