@@ -191,7 +191,7 @@ def _q_streaming_extraction(spark, sf_dir):
     ckpt = os.path.join(base, 'ckpt')
     T.synthesize_transcripts(spark, sf_dir).write.parquet(src)
     stream = ST.read_transcripts_stream(spark, src)
-    extracted = ST.extract_stream(
+    extracted = pipeline.extract_turns(
         stream, emit_spans=False, emit_sexpr=False).select(
         'conv_id', 'turn_idx', 'extracted_text')
     ST.run_to_parquet(extracted, out, ckpt).awaitTermination()
@@ -327,8 +327,8 @@ def _q_stateful_conversation_state(spark, sf_dir):
     T.synthesize_transcripts(spark, sf_dir).repartition(8) \
         .write.parquet(src)
     stream = ST.read_transcripts_stream(spark, src, max_files_per_trigger=2)
-    extracted = ST.extract_stream(stream, emit_spans=False,
-                                  emit_sexpr=False)
+    extracted = pipeline.extract_turns(stream, emit_spans=False,
+                                       emit_sexpr=False)
     state = running_conversation_state(extracted)
     _STATEFUL_GATE_SEQ[0] += 1
     name = f'stateful_gate_{os.getpid()}_{_STATEFUL_GATE_SEQ[0]}'
@@ -425,29 +425,16 @@ def _q_embedding_neardup_auto(spark, sf_dir):
         emb, threshold=0.45, n_bands='auto', target_miss=1e-5)
 
 
-def _engine_word_spans(df, udf):
-    res = df.select('doc_id', udf(F.col('text')).alias('_r'))
-    page = res.select(
-        'doc_id', F.element_at('_r.pages', 1)['spans'].alias('spans'))
-    words = F.filter(F.col('spans'), lambda s: s.zone_type == F.lit('word'))
-    return (
-        page.select('doc_id', F.posexplode(words).alias('word_idx', 'span'))
-        .select(
-            'doc_id', 'word_idx',
-            F.col('span.text').alias('word'),
-            F.col('span.x0').alias('x0'), F.col('span.y0').alias('y0'),
-            F.col('span.x1').alias('x1'), F.col('span.y1').alias('y1'))
-    )
-
-
-def _engine_sexpr(df, udf):
-    """(doc_id, dialect, extracted_sexpr) from a single-page extract UDF."""
-    res = df.select('doc_id', udf(F.col('text')).alias('_r'))
-    return res.select(
-        'doc_id',
-        F.col('_r.dialect').alias('dialect'),
-        F.element_at('_r.pages', 1)['extracted_sexpr']
-         .alias('extracted_sexpr'))
+def _extract_docs(df, words=False, **extract_kwargs):
+    """Extract a doc_id-keyed frame as one-turn conversations
+    (``pipeline.extract_turns``; ``pipeline.word_spans`` of it when
+    ``words``), keyed by doc_id again."""
+    turns = df.select(F.col('doc_id').alias('conv_id'),
+                      F.lit(0).alias('turn_idx'), 'text')
+    out = pipeline.extract_turns(turns, **extract_kwargs)
+    if words:
+        out = pipeline.word_spans(out)
+    return out.withColumnRenamed('conv_id', 'doc_id')
 
 
 def _q_extract_cuneiform(spark, sf_dir):
@@ -458,32 +445,29 @@ def _q_extract_cuneiform(spark, sf_dir):
     # page_size, char spans regrouped into words; >= 0.9 ("openocr") =
     # ocr_cinfo x_bboxes stash, whitespace (-1,-1,-1,-1) sentinels,
     # bare-<p> paragraph fallback.
-    from ocrodjvu_spark.functions.extract import make_extract_udf
-    c08 = _engine_sexpr(
+    c08 = _extract_docs(
         ES.synthesize_cuneiform08(spark, sf_dir),
-        make_extract_udf(page_size=(ES.GRID_PAGE_W, ES.GRID_PAGE_H),
-                         emit_spans=False))
-    c09 = _engine_sexpr(
-        ES.synthesize_cuneiform09(spark, sf_dir),
-        make_extract_udf(emit_spans=False))
-    return c08.unionByName(c09)
+        page_size=(ES.GRID_PAGE_W, ES.GRID_PAGE_H), emit_spans=False)
+    c09 = _extract_docs(
+        ES.synthesize_cuneiform09(spark, sf_dir), emit_spans=False)
+    return c08.unionByName(c09).select(
+        'doc_id', 'dialect', 'extracted_sexpr')
 
 
 def _q_extract_tesseract_makebox(spark, sf_dir):
     # E1/J1/T7: tesseract dialect with the makebox charbox script —
     # details=chars activates the stateful charbox zip + y-flip
-    from ocrodjvu_spark.functions.extract import make_extract_udf
     df = ES.synthesize_tesseract_makebox(spark, sf_dir)
-    return _engine_sexpr(df, make_extract_udf(
-        details='chars', emit_spans=False))
+    return _extract_docs(df, details='chars', emit_spans=False).select(
+        'doc_id', 'dialect', 'extracted_sexpr')
 
 
 def _q_extract_ocropus_surplus(spark, sf_dir):
     # E5/T3: generic-hOCR (ocropus-style) line whose bboxes list carries
     # one spare box — the non-Cuneiform surplus rule must drop it
-    from ocrodjvu_spark.functions.extract import make_extract_udf
     df = ES.synthesize_ocropus_surplus(spark, sf_dir)
-    return _engine_sexpr(df, make_extract_udf(emit_spans=False))
+    return _extract_docs(df, emit_spans=False).select(
+        'doc_id', 'dialect', 'extracted_sexpr')
 
 
 # tokens whose UAX#29 segmentation differs from simple space-splitting
@@ -535,6 +519,18 @@ UAX29_CJK_DICT_SUFFIX = ' 我们在中国学习汉语 日本語テスト'
 UAX29_CJK_DICT_SEGMENTED = ' 我们 在 中国 学习 汉语 日本語 テスト'
 
 
+def _uax29_text(spark, sf_dir, suffix, uax29):
+    """(doc_id, extracted_text) of the documents with ``suffix`` appended,
+    segmented under the ``uax29`` locale."""
+    docs = T.load_table(spark, sf_dir, 'documents')
+    suffixed = docs.select(
+        'doc_id',
+        T.hocr_markup_col(T.tokens_col(F.concat('text', F.lit(suffix))))
+         .alias('text'))
+    return _extract_docs(suffixed, uax29=uax29, emit_spans=False,
+                         emit_sexpr=False).select('doc_id', 'extracted_text')
+
+
 def _q_extract_uax29_tailoring(spark, sf_dir):
     # W2 UAX#29 distinguishing checks, BOTH suffixes in one gate
     # (consolidated from extract_uax29_segmentation +
@@ -544,21 +540,9 @@ def _q_extract_uax29_tailoring(spark, sf_dir):
     # simple path (unlike extract_uax29, where the corpus boundaries
     # coincide). 'colon': CLDR-locale tailoring (see
     # UAX29_COLON_SUFFIX).
-    from ocrodjvu_spark.functions.extract import make_extract_udf
-    docs = T.load_table(spark, sf_dir, 'documents').select('doc_id', 'text')
-    udf = make_extract_udf(uax29=True, emit_spans=False, emit_sexpr=False)
-
     def part(kind, suffix):
-        suffixed = docs.select(
-            'doc_id',
-            T.hocr_markup_col(
-                T.tokens_col(F.concat('text', F.lit(suffix))))
-             .alias('text'))
-        res = suffixed.select('doc_id', udf(F.col('text')).alias('_r'))
-        return res.select(
-            F.lit(kind).alias('tailoring'), 'doc_id',
-            F.element_at('_r.pages', 1)['extracted_text']
-             .alias('extracted_text'))
+        return _uax29_text(spark, sf_dir, suffix, True).select(
+            F.lit(kind).alias('tailoring'), '*')
 
     return part('base', UAX29_SUFFIX).unionByName(
         part('colon', UAX29_COLON_SUFFIX))
@@ -567,56 +551,19 @@ def _q_extract_uax29_tailoring(spark, sf_dir):
 def _q_extract_uax29_thai(spark, sf_dir):
     # W2 Thai dictionary segmentation through the full pipeline
     # (uax29='th' locale reaches kernel/segment.py's lexicon hook)
-    from ocrodjvu_spark.functions.extract import make_extract_udf
-    docs = T.load_table(spark, sf_dir, 'documents').select('doc_id', 'text')
-    suffixed = docs.select(
-        'doc_id',
-        T.hocr_markup_col(
-            T.tokens_col(F.concat('text', F.lit(UAX29_THAI_SUFFIX))))
-         .alias('text'))
-    udf = make_extract_udf(uax29='th', emit_spans=False, emit_sexpr=False)
-    res = suffixed.select('doc_id', udf(F.col('text')).alias('_r'))
-    return res.select(
-        'doc_id',
-        F.element_at('_r.pages', 1)['extracted_text']
-         .alias('extracted_text'))
+    return _uax29_text(spark, sf_dir, UAX29_THAI_SUFFIX, 'th')
 
 
 def _q_extract_uax29_cjk(spark, sf_dir):
     # W2 CJK divergence pin (root rules; see UAX29_CJK_SUFFIX comment)
-    from ocrodjvu_spark.functions.extract import make_extract_udf
-    docs = T.load_table(spark, sf_dir, 'documents').select('doc_id', 'text')
-    suffixed = docs.select(
-        'doc_id',
-        T.hocr_markup_col(
-            T.tokens_col(F.concat('text', F.lit(UAX29_CJK_SUFFIX))))
-         .alias('text'))
-    udf = make_extract_udf(uax29=True, emit_spans=False, emit_sexpr=False)
-    res = suffixed.select('doc_id', udf(F.col('text')).alias('_r'))
-    return res.select(
-        'doc_id',
-        F.element_at('_r.pages', 1)['extracted_text']
-         .alias('extracted_text'))
+    return _uax29_text(spark, sf_dir, UAX29_CJK_SUFFIX, True)
 
 
 def _q_extract_uax29_cjk_dict(spark, sf_dir):
     # W2 CJK dictionary opt-in through the full pipeline (uax29=
     # 'zh_dict' reaches the least-cost engine over the CJK lexicon);
     # the default path stays pinned by extract_uax29_cjk
-    from ocrodjvu_spark.functions.extract import make_extract_udf
-    docs = T.load_table(spark, sf_dir, 'documents').select('doc_id', 'text')
-    suffixed = docs.select(
-        'doc_id',
-        T.hocr_markup_col(
-            T.tokens_col(F.concat('text', F.lit(UAX29_CJK_DICT_SUFFIX))))
-         .alias('text'))
-    udf = make_extract_udf(uax29='zh_dict', emit_spans=False,
-                           emit_sexpr=False)
-    res = suffixed.select('doc_id', udf(F.col('text')).alias('_r'))
-    return res.select(
-        'doc_id',
-        F.element_at('_r.pages', 1)['extracted_text']
-         .alias('extracted_text'))
+    return _uax29_text(spark, sf_dir, UAX29_CJK_DICT_SUFFIX, 'zh_dict')
 
 
 def _q_extract_orf_gocr(spark, sf_dir):
@@ -624,17 +571,15 @@ def _q_extract_orf_gocr(spark, sf_dir):
     # extract_gocr, zero semantics lost): the ocrad ORF and gocr XML
     # adapters end-to-end over synthesized payloads, each sub-frame
     # tagged with its engine so the oracle pins both adapters.
-    from ocrodjvu_spark.functions.emit import (make_gocr_extract_udf,
-                                               make_orf_extract_udf)
-    orf = _engine_word_spans(
-        ES.synthesize_orf(spark, sf_dir),
-        make_orf_extract_udf(page_size=(ES.PAGE_W, ES.PAGE_H)))
-    gocr = _engine_word_spans(
-        ES.synthesize_gocr(spark, sf_dir),
-        make_gocr_extract_udf(page_size=(ES.PAGE_W, ES.PAGE_H)))
-    return (orf.select(F.lit('ocrad').alias('engine'), '*')
-            .unionByName(gocr.select(F.lit('gocr').alias('engine'),
-                                     '*')))
+    def engine_words(engine, df):
+        return _extract_docs(
+            df, words=True, engine=engine, page_size=(ES.PAGE_W, ES.PAGE_H),
+            emit_spans='packed', emit_sexpr=False,
+        ).select(F.lit(engine).alias('engine'), 'doc_id', 'word_idx',
+                 'word', 'x0', 'y0', 'x1', 'y1')
+
+    return engine_words('ocrad', ES.synthesize_orf(spark, sf_dir)) \
+        .unionByName(engine_words('gocr', ES.synthesize_gocr(spark, sf_dir)))
 
 
 def _q_djvused_script(spark, sf_dir):

@@ -1,10 +1,6 @@
-"""Inverse-direction and engine-adapter pandas UDFs.
-
-* ``make_emit_hocr_udf`` — extracted_sexpr column -> hOCR markup column
-  (djvu2hocr semantics; used for text-layer round-trip pipelines).
-* ``make_orf_extract_udf`` / ``make_gocr_extract_udf`` — alternate input
-  dialects (ocrad ORF text, gocr XML) -> the same EXTRACT_RESULT struct
-  as the hOCR path, so downstream operators are dialect-agnostic.
+"""Inverse-direction pandas UDF: ``make_emit_hocr_udf`` turns an
+extracted_sexpr column into an hOCR markup column (djvu2hocr semantics;
+used for text-layer round-trip pipelines).
 """
 
 from __future__ import annotations
@@ -15,10 +11,6 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType, StructField, StructType
 
 from ..kernel import hocr_emit, sexpr
-from ..kernel.engines import gocr_scan, ocrad_scan
-from ..kernel.hocr import DETAILS_BY_NAME
-from ..schema import EXTRACT_RESULT
-from .extract import flatten_zone, zone_text
 
 EMIT_RESULT = StructType([
     StructField('hocr', StringType()),
@@ -59,68 +51,3 @@ def make_emit_hocr_udf(uax29=None, full_document: bool = False):
 
     return emit_hocr
 
-
-def _zone_to_result(zone, dialect: str):
-    return {
-        'pages': [{
-            'spans': flatten_zone(zone),
-            'extracted_text': zone_text(zone),
-            'extracted_sexpr': zone.compact_sexpr(),
-        }],
-        'dialect': dialect,
-        'error': None,
-    }
-
-
-def _error_result(dialect: str, exc: Exception):
-    return {
-        'pages': None,
-        'dialect': dialect,
-        'error': f'{type(exc).__name__}: {exc}',
-    }
-
-
-def make_orf_extract_udf(details: str = 'words', uax29=None,
-                         rotation: int = 0, page_size=(1000, 1000)):
-    """ocrad ORF text column -> EXTRACT_RESULT struct column."""
-    details_level = DETAILS_BY_NAME[details]
-
-    @pandas_udf(EXTRACT_RESULT)
-    def extract_orf(texts: pd.Series) -> pd.DataFrame:
-        rows = []
-        for t in texts:
-            if t is None:
-                rows.append(_error_result('ocrad', ValueError('null input')))
-                continue
-            try:
-                zone = ocrad_scan(t, details=details_level, uax29=uax29,
-                                  page_size=page_size, rotation=rotation)
-                rows.append(_zone_to_result(zone, 'ocrad'))
-            except Exception as exc:
-                rows.append(_error_result('ocrad', exc))
-        return pd.DataFrame(rows, columns=['pages', 'dialect', 'error'])
-
-    return extract_orf
-
-
-def make_gocr_extract_udf(details: str = 'words', uax29=None,
-                          rotation: int = 0, page_size=(1000, 1000)):
-    """gocr XML text column -> EXTRACT_RESULT struct column."""
-    details_level = DETAILS_BY_NAME[details]
-
-    @pandas_udf(EXTRACT_RESULT)
-    def extract_gocr(texts: pd.Series) -> pd.DataFrame:
-        rows = []
-        for t in texts:
-            if t is None:
-                rows.append(_error_result('gocr', ValueError('null input')))
-                continue
-            try:
-                zone = gocr_scan(t, details=details_level, uax29=uax29,
-                                 page_size=page_size, rotation=rotation)
-                rows.append(_zone_to_result(zone, 'gocr'))
-            except Exception as exc:
-                rows.append(_error_result('gocr', exc))
-        return pd.DataFrame(rows, columns=['pages', 'dialect', 'error'])
-
-    return extract_gocr

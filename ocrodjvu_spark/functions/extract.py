@@ -1,4 +1,4 @@
-"""Extraction pandas UDFs: hOCR markup column -> zone spans + text + sexpr.
+"""Extraction pandas UDFs: OCR markup column -> zone spans + text + sexpr.
 
 This is the Spark face of the pure-Python kernel. Parsing HTML is
 inherently per-document Python work, so the hot path is an Arrow-batched
@@ -8,7 +8,9 @@ Arrow batch, with the kernel looping inside. Everything around it
 
 Reference parity: the per-turn result matches ocrodjvu's
 ``hocr.extract_text`` (lib/hocr.py:446-472) — one s-expression per
-``ocr_page`` in the turn's markup, with the same dialect quirks.
+``ocr_page`` in the turn's markup, with the same dialect quirks. The
+ocrad ORF and gocr XML engine adapters (``kernel/engines.py``) run
+through the same loop; each of their documents is one page.
 """
 
 from __future__ import annotations
@@ -19,7 +21,7 @@ import pandas as pd
 
 from pyspark.sql.functions import pandas_udf
 
-from ..kernel import hocr
+from ..kernel import engines, hocr
 from ..kernel.zones import (
     Zone,
     ZONE_NAME,
@@ -35,6 +37,11 @@ SPAN_FS = '\x1f'   # field separator inside one span record
 # none (``spans`` is NULL), or word spans packed into one string per
 # page (``spans_packed``)
 EMIT_SPANS = (True, False, 'packed')
+
+# accepted ``engine`` values: hOCR markup, or the output of one of the
+# engine adapters, each parsed to a single page zone
+_ENGINE_SCANS = {'ocrad': engines.ocrad_scan, 'gocr': engines.gocr_scan}
+ENGINES = ('hocr', *_ENGINE_SCANS)
 
 
 def pack_word_spans(zone) -> str:
@@ -131,12 +138,17 @@ def extract_one(
     fix_utf8: bool = False,
     emit_spans=True,
     emit_sexpr: bool = True,
+    engine: str = 'hocr',
 ):
     """Extract one turn; returns the EXTRACT_RESULT-shaped dict.
 
-    ``emit_spans`` (see ``EMIT_SPANS``) / ``emit_sexpr`` skip or
-    prune those payloads (they dominate the Arrow transfer cost when a
-    query only needs text or word boxes).
+    ``engine`` (see ``ENGINES``) names the input dialect: ``'hocr'``
+    markup, ocrad ORF text (``'ocrad'``) or gocr XML (``'gocr'``).
+    The two engine dialects need ``page_size`` and ignore ``fix_utf8``;
+    their ``dialect`` is the engine name. ``emit_spans`` (see
+    ``EMIT_SPANS``) / ``emit_sexpr`` skip or prune those payloads (they
+    dominate the Arrow transfer cost when a query only needs text or
+    word boxes).
     """
     if markup is None:
         return {'pages': None, 'dialect': None, 'error': 'null input'}
@@ -144,11 +156,18 @@ def extract_one(
         rotation=rotation, details=details, uax29=uax29,
         fix_utf8=fix_utf8, page_size=page_size)
     try:
-        zones = hocr.extract_zones(markup, settings=settings)
+        if engine == 'hocr':
+            zones = hocr.extract_zones(markup, settings=settings)
+        else:
+            # one page zone per document; the scan takes the caller's
+            # uax29 (ExtractSettings rewrites True to a locale)
+            zones = [_ENGINE_SCANS[engine](
+                markup, details=details, uax29=uax29,
+                page_size=page_size, rotation=rotation)]
     except Exception as exc:  # error channel, not abort (on-error resume)
         return {
             'pages': None,
-            'dialect': _dialect_name(settings),
+            'dialect': _dialect_name(settings, engine),
             'error': f'{type(exc).__name__}: {exc}',
         }
     pages = []
@@ -169,17 +188,17 @@ def extract_one(
         pages.append(page)
     return {
         'pages': pages,
-        'dialect': _dialect_name(settings),
+        'dialect': _dialect_name(settings, engine),
         'error': None,
     }
 
 
-def _dialect_name(settings) -> str:
+def _dialect_name(settings, engine: str) -> str:
     if settings.tesseract:
         return 'tesseract'
     if settings.cuneiform:
         return 'cuneiform{0}.{1}'.format(*settings.cuneiform)
-    return 'hocr'
+    return engine
 
 
 def make_extract_udf(
@@ -190,6 +209,7 @@ def make_extract_udf(
     fix_utf8: bool = False,
     emit_spans=True,
     emit_sexpr: bool = True,
+    engine: str = 'hocr',
 ):
     """Build the Arrow-batched extraction UDF for a fixed config.
 
@@ -200,11 +220,16 @@ def make_extract_udf(
     only consumes ``extracted_text`` (Catalyst cannot prune *inside* a
     UDF result struct, so the pruning knob lives here). This is the one
     place that decides the span shape; any ``emit_spans`` outside
-    ``EMIT_SPANS`` raises ``ValueError``.
+    ``EMIT_SPANS`` raises ``ValueError``. ``engine`` picks the input
+    dialect, one of ``ENGINES``: ``'hocr'`` (the default), ``'ocrad'``
+    (ORF text) or ``'gocr'`` (XML); any other value raises
+    ``ValueError``.
     """
     if emit_spans not in EMIT_SPANS:
         raise ValueError(
             f'emit_spans must be one of {EMIT_SPANS}, got {emit_spans!r}')
+    if engine not in ENGINES:
+        raise ValueError(f'engine must be one of {ENGINES}, got {engine!r}')
     details_level = hocr.DETAILS_BY_NAME[details]
     result_schema = (EXTRACT_RESULT_PACKED if emit_spans == 'packed'
                      else EXTRACT_RESULT)
@@ -215,7 +240,7 @@ def make_extract_udf(
             extract_one(
                 t, details=details_level, uax29=uax29, rotation=rotation,
                 page_size=page_size, fix_utf8=fix_utf8,
-                emit_spans=emit_spans, emit_sexpr=emit_sexpr,
+                emit_spans=emit_spans, emit_sexpr=emit_sexpr, engine=engine,
             )
             for t in texts
         ]

@@ -56,12 +56,18 @@ def dot_cols(a: Column, b: Column) -> Column:
     interpreted per-element lambda (measured -17% on the brute-force
     cosine top-k); other lengths (or NULL) fall back to the fold.
 
-    CALLERS MUST PASS ATTRIBUTES (e.g. ``F.col('vec')``), never
-    computed expressions: the chain references each argument ~65
-    times, and Catalyst would inline a non-trivial expression once per
-    reference (the no-CSE-for-expressions trap — measured 2x SLOWER
-    when ``_prep``'s cast transform leaked in here).
+    Both arguments must be bare column references (``F.col(name)``);
+    anything else raises ``ValueError``: the chain references each
+    argument ~65 times, and Catalyst would inline a non-trivial
+    expression once per reference (the no-CSE-for-expressions trap —
+    measured 2x SLOWER when ``_prep``'s cast transform leaked in here).
+    Use ``dot`` for computed expressions.
     """
+    for arg in (a, b):
+        node = arg._jc.node().getClass().getSimpleName()
+        if node != 'UnresolvedAttribute':
+            raise ValueError(
+                f'dot_cols takes bare column references, got {node}')
     flat = None
     for i in range(1, EMBED_DIM + 1):
         term = F.element_at(a, i) * F.element_at(b, i)

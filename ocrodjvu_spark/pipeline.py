@@ -57,6 +57,7 @@ def extract_turns(
     num_partitions: Optional[int] = None,
     emit_spans=True,
     emit_sexpr: bool = True,
+    engine: str = 'hocr',
 ) -> DataFrame:
     """transcripts -> per-page extraction results.
 
@@ -71,14 +72,16 @@ def extract_turns(
     for text-only consumers; ``'packed'`` ships word spans as one
     delimited string per page (``spans_packed`` replaces ``spans``;
     see schema.PAGE_RESULT_PACKED) — the lowest-Arrow-volume spans
-    path, decoded JVM-side by ``word_spans``.
+    path, decoded JVM-side by ``word_spans``. ``engine`` names the
+    ``text`` dialect (``'hocr'``, ``'ocrad'`` or ``'gocr'``; see
+    ``functions.extract.ENGINES``).
     """
     if salt_buckets:
         df = salted_repartition(df, num_partitions, salt_buckets)
     extract = make_extract_udf(
         details=details, uax29=uax29, rotation=rotation,
         page_size=page_size, fix_utf8=fix_utf8,
-        emit_spans=emit_spans, emit_sexpr=emit_sexpr)
+        emit_spans=emit_spans, emit_sexpr=emit_sexpr, engine=engine)
     keep = [c for c in keep_columns if c in df.columns]
     result = df.select(
         *KEY_COLUMNS, *keep, extract(F.col('text')).alias('_r'))

@@ -6,8 +6,9 @@ engine exposes the same extraction as a Structured Streaming flow:
 
 * ``readStream`` over the transcripts location (file source here; Kafka /
   Iceberg-CDC in production) with the same schema;
-* the identical Arrow-batched extraction UDF — scalar pandas UDFs are
-  streaming-safe (stateless projection);
+* the identical extraction operator, ``pipeline.extract_turns``, applied
+  to the unbounded DataFrame — scalar pandas UDFs are streaming-safe
+  (stateless projection);
 * watermark on ``ts`` + windowed per-conversation aggregation for the
   live metrics view (late turns within the watermark still count);
 * ``foreachBatch``/file sink for the extracted output, partitioned like
@@ -18,8 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from .. import pipeline
 
 TRANSCRIPTS_DDL = (
     'conv_id string, turn_idx int, role string, text string, '
@@ -35,11 +34,6 @@ def read_transcripts_stream(spark: SparkSession, input_path: str,
         .option('maxFilesPerTrigger', max_files_per_trigger)
         .parquet(input_path)
     )
-
-
-def extract_stream(stream: DataFrame, **extract_kwargs) -> DataFrame:
-    """Same extraction operator, applied to an unbounded DataFrame."""
-    return pipeline.extract_turns(stream, **extract_kwargs)
 
 
 def live_conversation_metrics(extracted: DataFrame,

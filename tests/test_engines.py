@@ -7,6 +7,8 @@ lib/engines/gocr.py:54-109) and assert full zone trees.
 
 import pytest
 
+from ocrodjvu_spark.functions.extract import (
+    ENGINES, SPAN_FS, SPAN_RS, extract_one, flatten_zone, zone_text)
 from ocrodjvu_spark.kernel.engines import gocr_scan, ocrad_scan
 from ocrodjvu_spark.kernel.zones import MalformedOcrOutput
 
@@ -99,3 +101,45 @@ def test_gocr_malformed_depth():
     with pytest.raises(MalformedOcrOutput):
         gocr_scan('<document><line><box x="1" y="1" dx="1" dy="1" value="x"/>'
                   '</line></document>', page_size=(10, 10))
+
+
+# (engine, kernel scan, document, page size) for extract_one's engine
+# branch
+ENGINE_DOCS = [
+    pytest.param('ocrad', ocrad_scan, ORF, (100, 60), id='ocrad'),
+    pytest.param('gocr', gocr_scan, GOCR_XML, (100, 40), id='gocr'),
+]
+
+
+@pytest.mark.parametrize('engine', ENGINES)
+def test_extract_one_null_input_is_one_error_row(engine):
+    assert extract_one(None, engine=engine) == {
+        'pages': None, 'dialect': None, 'error': 'null input'}
+
+
+@pytest.mark.parametrize('engine,scan,doc,page_size', ENGINE_DOCS)
+def test_extract_one_engine_matches_kernel_scan(engine, scan, doc,
+                                                page_size):
+    zone = scan(doc, page_size=page_size)
+    res = extract_one(doc, engine=engine, page_size=page_size)
+    assert res['error'] is None and res['dialect'] == engine
+    [page] = res['pages']
+    assert page['extracted_text'] == zone_text(zone)
+    assert page['extracted_sexpr'] == zone.compact_sexpr()
+    assert page['spans'] == flatten_zone(zone)
+    # packed word spans decode to the struct word spans
+    [packed] = extract_one(doc, engine=engine, page_size=page_size,
+                           emit_spans='packed')['pages']
+    decoded = [rec.split(SPAN_FS)
+               for rec in packed['spans_packed'].split(SPAN_RS)]
+    assert decoded == [
+        [str(x0), str(y0), str(x1), str(y1), text]
+        for kind, _, _, x0, y0, x1, y1, text in page['spans']
+        if kind == 'word']
+
+
+@pytest.mark.parametrize('engine,scan,doc,page_size', ENGINE_DOCS)
+def test_extract_one_engine_needs_page_size(engine, scan, doc, page_size):
+    res = extract_one(doc, engine=engine)
+    assert res['pages'] is None and res['dialect'] == engine
+    assert res['error'].startswith('MalformedOcrOutput: ')

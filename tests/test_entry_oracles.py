@@ -26,6 +26,9 @@ SUBSET = (
     # sf-agnostic late-r5 gates (most snapshot gates carry sf0.01-tuned
     # in-gate pruning assertions and run only in the full sweep)
     'sampled_quantiles', 'jsonl_roundtrip',
+    # the engine adapters and the uax29 gates through the one
+    # extraction loop
+    'extract_orf_gocr', 'extract_cuneiform', 'extract_uax29_thai',
 )
 
 

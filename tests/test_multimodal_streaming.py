@@ -2,6 +2,7 @@
 
 from pyspark.sql import functions as F
 
+from ocrodjvu_spark import pipeline
 from ocrodjvu_spark.functions import multimodal
 from ocrodjvu_spark.kernel import image_codecs as IC
 from ocrodjvu_spark.sources import transcripts as T
@@ -117,7 +118,7 @@ class TestStreaming:
 
         stream = ES.read_transcripts_stream(spark, inp,
                                             max_files_per_trigger=2)
-        extracted = ES.extract_stream(stream)
+        extracted = pipeline.extract_turns(stream)
         q = ES.run_to_parquet(extracted, out, chk, available_now=True)
         q.awaitTermination(300)
 
@@ -126,9 +127,7 @@ class TestStreaming:
         assert result.where(F.col('error').isNotNull()).count() == 0
         # per-turn parity with the batch path on a sample
         batch = {(r.conv_id, r.turn_idx): r.extracted_text
-                 for r in __import__('ocrodjvu_spark.pipeline',
-                                     fromlist=['pipeline'])
-                 .extract_turns(df).collect()}
+                 for r in pipeline.extract_turns(df).collect()}
         stream_rows = {(r.conv_id, r.turn_idx): r.extracted_text
                        for r in result.collect()}
         assert stream_rows == batch
@@ -137,7 +136,8 @@ class TestStreaming:
         inp = str(tmp_path / 'in2')
         T.synthesize_transcripts(spark, SF_DIR).limit(50).write.parquet(inp)
         stream = ES.read_transcripts_stream(spark, inp)
-        metrics = ES.live_conversation_metrics(ES.extract_stream(stream))
+        metrics = ES.live_conversation_metrics(
+            pipeline.extract_turns(stream))
         assert metrics.isStreaming
         assert 'window' in metrics.columns
 
@@ -158,8 +158,8 @@ class TestStatefulStreaming:
 
         stream = ES.read_transcripts_stream(spark, inp,
                                             max_files_per_trigger=1)
-        extracted = ES.extract_stream(stream, emit_spans=False,
-                                      emit_sexpr=False)
+        extracted = pipeline.extract_turns(stream, emit_spans=False,
+                                           emit_sexpr=False)
         stateful = running_conversation_state(extracted)
         q = (stateful.writeStream.format('memory')
              .queryName('conv_state').outputMode('update')
@@ -173,7 +173,6 @@ class TestStatefulStreaming:
         final = (updates.groupby('conv_id')
                  .agg({'n_pages': 'max', 'n_chars': 'max',
                        'max_turn_idx': 'max'}))
-        from ocrodjvu_spark import pipeline
         truth = (pipeline.extract_turns(df, emit_spans=False,
                                         emit_sexpr=False)
                  .groupBy('conv_id')

@@ -231,11 +231,16 @@ def test_extraction_metrics_packed_matches_struct(spark):
         sum(1 + i % 7 for i in range(60))
 
 
-@pytest.mark.parametrize('emit_spans', ['words', 'Packed', None])
-def test_make_extract_udf_rejects_unknown_emit_spans(emit_spans):
+@pytest.mark.parametrize('option,value', [
+    pytest.param('emit_spans', 'words', id='words'),
+    pytest.param('emit_spans', 'Packed', id='Packed'),
+    pytest.param('emit_spans', None, id='None'),
+    pytest.param('engine', 'tesseract', id='engine-tesseract'),
+])
+def test_make_extract_udf_rejects_unknown_emit_spans(option, value):
     from ocrodjvu_spark.functions.extract import make_extract_udf
     with pytest.raises(ValueError):
-        make_extract_udf(emit_spans=emit_spans)
+        make_extract_udf(**{option: value})
 
 
 def test_packed_spans_null_word_text_matches_struct(spark):

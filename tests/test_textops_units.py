@@ -604,6 +604,19 @@ def test_script_profile_dominant_and_fractions(spark):
     assert row.dominant is None and row.latin_frac is None
 
 
+def test_dot_cols_takes_only_bare_columns(spark):
+    # an expression argument would be inlined once per term of the
+    # flat chain, so dot_cols refuses it instead of running 2x slower
+    import pytest
+    from pyspark.sql import functions as F
+    from ocrodjvu_spark.functions import similarity
+    similarity.dot_cols(F.col('vec'), F.col('a.vec'))
+    doubled = F.transform('vec', lambda x: x * 2)
+    for a, b in ((doubled, F.col('vec')), (F.col('vec'), doubled)):
+        with pytest.raises(ValueError, match='UnresolvedFunction'):
+            similarity.dot_cols(a, b)
+
+
 def test_ann_recall_bounds(spark):
     from ocrodjvu_spark.functions import similarity
     from ocrodjvu_spark.sources import transcripts as T
