@@ -1919,7 +1919,7 @@ def _q_ann_index_persisted(spark, sf_dir):
     # the deployable-IVF lifecycle: TRAIN the coarse quantizer
     # (kmeans_centroids — the train-only face of the embedding_kmeans
     # loop), PUBLISH it as a versioned snapshot-table artifact
-    # (save_vector_index, the bpe.save_merges deployment contract),
+    # (save_vector_index: publish a version, serving pins one),
     # reload with a FRESH handle and ASSIGN the corpus under the
     # loaded centroids (assign_to_centroids — map-only, centroids as
     # JVM literals: the serving path). The roundtrip must be
@@ -2449,7 +2449,7 @@ docs AS (
 )'''
 
 # per-bit majority vote over token hashes -> 64-bit fingerprint
-# (mirrors textops.simhash64; operates on a CTE exposing hs). A token's
+# (mirrors textops.simhash_table; operates on a CTE exposing hs). A token's
 # 64 bit votes come from three derived 31-bit words: h itself (bits
 # 0..30), (h*48271+11)%p (31..61), (h*69621+7)%p (62..63) — the SIMHASH_W1/
 # SIMHASH_W2 constants. Bit 63's weight is BIGINT min so the DuckDB value

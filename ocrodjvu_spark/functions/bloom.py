@@ -10,12 +10,11 @@ bitmap lives as a DataFrame of ``(word_idx, bits)`` int64 words, so:
   contribution to at most ``m/64`` rows before the shuffle — the
   shuffle volume is bounded by the BITMAP size, not the corpus size,
   at any scale.
-* **Probe** is a join on ``word_idx``: broadcast while the bitmap is
-  small (the default here), a plain equi-join once m grows past the
-  broadcast threshold (a 2^33-bit filter is ~128 M rows — still tiny
-  next to the corpus it guards). A key is reported present iff ALL k
-  probed bits are set; Bloom semantics: no false negatives, false
-  positives at the designed rate (~(1 - e^{-kn/m})^k).
+* **Probe** is a broadcast join on ``word_idx`` (a 2^33-bit filter is
+  ~128 M rows — still tiny next to the corpus it guards). A key is
+  reported present iff ALL k probed bits are set; Bloom semantics: no
+  false negatives, false positives at the designed rate
+  (~(1 - e^{-kn/m})^k).
 
 Each int64 word holds 63 bits (shifts capped at 62): the sign bit stays
 clear, which keeps every mask/aggregate value positive and the whole
@@ -28,7 +27,7 @@ including its false positives.
 
 from __future__ import annotations
 
-from typing import NamedTuple, Union
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -80,33 +79,12 @@ def bloom_build(
     return BloomFilter(bitmap, m_bits, k)
 
 
-def bloom_probe(
-    probes: DataFrame,
-    bloom: Union[BloomFilter, DataFrame],
-    key_col: str = 'key',
-    m_bits: int = 4096,
-    k: int = 3,
-    broadcast_bloom: bool = True,
-) -> DataFrame:
-    """Membership test: (key, maybe_present).
-
-    Pass the ``BloomFilter`` from ``bloom_build`` and its bound
-    (m_bits, k) are used — explicit values must agree or this raises
-    (a mismatch would silently produce false negatives). A bare bitmap
-    DataFrame is accepted with caller-supplied parameters.
-
-    ``broadcast_bloom`` fits every filter up to the broadcast threshold
-    (the common case); disable it for giant filters and the probe
-    becomes a plain equi-join on word_idx.
-    """
-    if isinstance(bloom, BloomFilter):
-        if (m_bits, k) not in ((4096, 3), (bloom.m_bits, bloom.k)):
-            raise ValueError(
-                f'probe parameters ({m_bits}, {k}) contradict the '
-                f'filter\'s bound ({bloom.m_bits}, {bloom.k})')
-        m_bits, k = bloom.m_bits, bloom.k
-        bloom = bloom.bitmap
-    pos = F.explode(positions_col(F.col(key_col), k, m_bits))
+def bloom_probe(probes: DataFrame, bloom: BloomFilter,
+                key_col: str = 'key') -> DataFrame:
+    """Membership test: (key, maybe_present), probed with the filter's
+    own bound (m_bits, k) and a broadcast of its bitmap."""
+    k = bloom.k
+    pos = F.explode(positions_col(F.col(key_col), k, bloom.m_bits))
     # distinct FIRST: a duplicated probe key would explode to 2k rows
     # and fail the count==k membership test — a false negative the
     # Bloom contract forbids
@@ -117,8 +95,7 @@ def bloom_probe(
                       (F.col('pos') / 63).cast('long').alias('word_idx'),
                       F.expr('shiftleft(CAST(1 AS BIGINT), '
                              'CAST(pos % 63 AS INT))').alias('mask')))
-    rhs = F.broadcast(bloom) if broadcast_bloom else bloom
-    joined = probed.join(rhs, 'word_idx', 'left')
+    joined = probed.join(F.broadcast(bloom.bitmap), 'word_idx', 'left')
     bit_set = (F.col('bits').isNotNull()
                & (F.col('bits').bitwiseAND(F.col('mask')) != 0))
     return (joined

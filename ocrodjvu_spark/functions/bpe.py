@@ -40,7 +40,6 @@ SentencePiece-style, no ``</w>`` marker).
 
 from __future__ import annotations
 
-import re
 from typing import List, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame
@@ -205,37 +204,9 @@ def tokenize(
     return out
 
 
-def save_merges(spark, table_root: str, merges) -> int:
-    """Persist a merge table as a versioned snapshot-table artifact.
-
-    Tokenizers are deployment artifacts: training jobs publish a new
-    VERSION (atomic overwrite commit), consumers pin one, and old
-    corpus snapshots stay decodable by time-traveling to the tokenizer
-    version that produced them. Returns the committed version.
-    """
-    from ..plans.snapstore import SnapshotTable
-    df = spark.createDataFrame(
-        [(i + 1, a, b) for i, (a, b) in enumerate(merges)],
-        'rank int, a string, b string')
-    return SnapshotTable(table_root).overwrite(df)
-
-
-def load_merges(spark, table_root: str, version=None):
-    """Load a merge table (default HEAD; pass ``version`` to pin)."""
-    from ..plans.snapstore import SnapshotTable
-    df = SnapshotTable(table_root).read(spark, version)
-    if df is None:
-        return []
-    return [(r.a, r.b) for r in df.orderBy('rank').collect()]
-
-
 # ---------------------------------------------------------------------------
 # pure-Python merge loop over the collected (word, count) state
 # ---------------------------------------------------------------------------
-
-def _ref_norm(text: str) -> str:
-    return re.sub(r'\s+', ' ', re.sub(_STRIP_RE, '', text)).strip()
-
 
 def _merge_pass(toks, a, b):
     """One canonical left-to-right non-overlapping merge pass."""

@@ -15,8 +15,6 @@ an integer-exact DuckDB oracle.
   counter table — broadcast at practical sizes). One-sided error:
   estimate >= true count always; overshoot bounded by eN/w with
   probability 1 - (1/2)^d for w = e/eps counters.
-* **Merge**: counter tables add elementwise (groupBy + sum) — the same
-  distributive-monoid rollup story as the HLL sketch.
 
 The finalized hash (HLL's two multiplicative rounds) is reused so short
 keys spread over the full range.
@@ -54,25 +52,17 @@ def cms_build(keys: DataFrame, key_col: str = 'key',
             .agg(F.count('*').alias('n')))
 
 
-def cms_estimate(probes: DataFrame, sketch: DataFrame,
-                 key_col: str = 'key', d: int = 3, w: int = 256,
-                 broadcast_sketch: bool = True) -> DataFrame:
+def cms_estimate(probes: DataFrame, sketch: DataFrame, key_col: str = 'key',
+                 d: int = 3, w: int = 256) -> DataFrame:
     """(key, est) — the min of the key's d counters; 0 if any counter
     row is absent (key never inserted and its cells never collided)."""
     pos = F.posexplode(_positions(F.col(key_col), d, w))
     probed = probes.select(F.col(key_col).alias('key'),
                            pos.alias('row', 'pos'))
-    rhs = F.broadcast(sketch) if broadcast_sketch else sketch
     return (probed
-            .join(rhs, ['row', 'pos'], 'left')
+            .join(F.broadcast(sketch), ['row', 'pos'], 'left')
             .groupBy('key')
             .agg(F.min(F.coalesce(F.col('n'), F.lit(0)))
                  .alias('est')))
 
 
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Elementwise sum — the monoid op for per-partition/day rollups."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy('row', 'pos').agg(F.sum('n').alias('n'))

@@ -18,8 +18,9 @@ EMIT_RESULT = StructType([
 ])
 
 
-def make_emit_hocr_udf(uax29=None, full_document: bool = False):
-    """(extracted_sexpr, page_w, page_h) -> struct(hocr, error).
+def make_emit_hocr_udf():
+    """(extracted_sexpr, page_w, page_h) -> struct(hocr, error): one
+    full hOCR document per page.
 
     Failures are typed per-row errors (the same on-error-resume channel
     as extraction), never silent nulls.
@@ -34,13 +35,8 @@ def make_emit_hocr_udf(uax29=None, full_document: bool = False):
                 rows.append({'hocr': None, 'error': 'null input'})
                 continue
             try:
-                value = sexpr.parse(s)
-                if full_document:
-                    markup = hocr_emit.sexpr_to_hocr_document(
-                        [(value, int(w), int(h))], uax29=uax29)
-                else:
-                    markup = hocr_emit.sexpr_to_hocr_page(
-                        value, int(w), int(h), uax29=uax29)
+                markup = hocr_emit.sexpr_to_hocr_document(
+                    [(sexpr.parse(s), int(w), int(h))])
                 rows.append({'hocr': markup, 'error': None})
             except Exception as exc:
                 rows.append({

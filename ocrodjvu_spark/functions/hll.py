@@ -13,10 +13,6 @@ Shapes (the same scale story as the Bloom filter):
 * **Sketch build**: one projection (register, rank) per key + one
   ``groupBy(register).agg(max(rank))`` — map-side partial max bounds
   the shuffle at m rows per task regardless of corpus size.
-* **Merge** of two sketches is the same max-aggregation over their
-  union — the sketch is a distributive monoid, so per-partition /
-  per-day sketches roll up without rescanning (the property that makes
-  HLL the standard distinct-count structure at 100 TB).
 
 Register/rank derivation (p register bits, W = 31 - p payload bits):
 h = two multiplicative finalization rounds over the fold hash —
@@ -75,25 +71,6 @@ def hll_sketch(keys: DataFrame, key_col: str = 'key',
     return (keys.select(reg, rank)
             .groupBy('register')
             .agg(F.max('rank').alias('max_rank')))
-
-
-def hll_merge(*sketches: DataFrame) -> DataFrame:
-    """Union-merge sketches (the monoid op): max per register."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return (out.groupBy('register')
-            .agg(F.max('max_rank').alias('max_rank')))
-
-
-def hll_estimate(sketch: DataFrame, p: int = 6) -> float:
-    """Driver-side estimate from a (small, m-row) sketch table.
-
-    Raw HLL estimate with the small-range (linear counting) correction;
-    the sketch is at most m rows, so collecting it is O(m).
-    """
-    ranks = {r.register: r.max_rank for r in sketch.collect()}
-    return estimate_from_ranks(ranks, p)
 
 
 def estimate_from_ranks(ranks: dict, p: int) -> float:

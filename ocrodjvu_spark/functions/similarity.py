@@ -511,10 +511,9 @@ def assign_to_centroids(embeddings: DataFrame, centroids,
 def save_vector_index(spark, table_root: str, centroids,
                       quant: int = 1000) -> int:
     """Persist a trained coarse quantizer as a versioned
-    snapshot-table artifact (k rows: cluster, qv, quant) — the same
-    deployment contract as ``bpe.save_merges``: training jobs publish
-    a new VERSION atomically, serving jobs pin one, and a corpus
-    snapshot stays reproducible by time-traveling to the index version
+    snapshot-table artifact (k rows: cluster, qv, quant). Training
+    jobs publish a new VERSION atomically, serving jobs pin one, and a
+    corpus snapshot stays reproducible by time-traveling to the index version
     that assigned it. Returns the committed version."""
     from ..plans.snapstore import SnapshotTable
     df = spark.createDataFrame(
@@ -552,8 +551,7 @@ def semantic_dedup_pairs(embeddings: DataFrame, threshold: float = 0.4,
     you scale ``k`` with the corpus (SemDeDup uses k ~ n/5000) so
     per-cluster sizes stay bounded; ``max_cluster_size`` is the same
     cap convention the MinHash/SimHash paths have — clusters above the
-    cap are excluded from pairing rather than going quadratic, and the
-    companion ``oversized_semantic_clusters`` reports what was dropped.
+    cap are excluded from pairing rather than going quadratic.
 
     Semantics vs ``neardup_pairs``: deliberately *approximate* — a pair
     above threshold whose members land in different clusters is missed
@@ -633,21 +631,6 @@ def quantize_embeddings(embeddings: DataFrame, id_col: str = 'vec_id',
                     vec, q, lambda x, i: F.abs(x - i * m / levels))), 6)
                  .alias('max_abs_err'))))))
     return embeddings.select(F.col(id_col), F.inline(F.array(out)))
-
-
-def oversized_semantic_clusters(embeddings: DataFrame,
-                                max_cluster_size: int, k: int = 8,
-                                iterations: int = 3,
-                                id_col: str = 'vec_id',
-                                vec_col: str = 'embedding') -> DataFrame:
-    """Observability companion to ``semantic_dedup_pairs`` (same shape
-    as ``oversized_minhash_buckets``): the clusters the cap excluded
-    from pairing, as (cluster, n_members)."""
-    labels = kmeans_labels(embeddings, k=k, iterations=iterations,
-                           id_col=id_col, vec_col=vec_col)
-    return (labels.groupBy('cluster')
-            .agg(F.count('*').alias('n_members'))
-            .where(F.col('n_members') > max_cluster_size))
 
 
 def lsh_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 5,

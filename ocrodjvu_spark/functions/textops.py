@@ -153,78 +153,11 @@ SIMHASH_W2 = (69621, 7)
 SIMHASH_BITS = 64
 
 
-def _token_bit64(h: Column, j: int) -> Column:
-    """Bit j (0..63) of a token's 64-bit SimHash key.
-
-    ``rolling_hash`` yields 31 usable bits, so the 64-bit key is pieced
-    from three derived words: bits 0..30 from h itself, 31..61 from
-    (h*48271+11) mod p, 62..63 from (h*69621+7) mod p. The derived-word
-    expressions are rebuilt per bit (Catalyst does no CSE inside lambda
-    bodies) but each is just mul+add+mod — noise next to the O(64) vote
-    fold they feed.
-    """
-    if j < 31:
-        src, k = h, j
-    elif j < 62:
-        src = (h * SIMHASH_W1[0] + SIMHASH_W1[1]) % HASH_MOD
-        k = j - 31
-    else:
-        src = (h * SIMHASH_W2[0] + SIMHASH_W2[1]) % HASH_MOD
-        k = j - 62
-    return F.shiftright(src, k) % 2
-
-
-def simhash64(tokens_col: Column) -> Column:
-    """64-bit SimHash over token rolling hashes (+1/-1 bit votes).
-
-    Manku et al. (WWW'07) fingerprint width: 64 bits split into 4
-    16-bit bands gives 2^16 bucket keys per band (the 32-bit/8-bit
-    variant capped band parallelism at 256 keys — a quadratic blowup at
-    web scale). Bit 63's weight is -(2^63) so the fingerprint occupies
-    the full signed-long range exactly as DuckDB's BIGINT does; Hamming
-    distance via ``bit_count(a XOR b)`` is sign-agnostic.
-
-    The bit-vote fold and the final bits->long reduction both live in a
-    single ``F.aggregate`` (the reduction as its *finish* lambda, where
-    the vote array is a bound lambda variable evaluated once) — Catalyst
-    performs no CSE for lambda expressions, so referencing the vote
-    aggregate 64 times in a projection would recompute the whole
-    O(tokens*64) fold once per output bit.
-    """
-    token_hashes = F.transform(tokens_col, lambda t: rolling_hash(t))
-    weights = F.array(
-        *[F.lit(1 << j).cast('long') for j in range(63)],
-        F.lit(-(1 << 63)).cast('long'))
-    return F.aggregate(
-        token_hashes,
-        F.array_repeat(F.lit(0).cast('long'), SIMHASH_BITS),
-        lambda acc, h: _zip_votes(acc, h),
-        # positive weights fold first, so the running sum peaks at
-        # 2^63-1 before bit 63's negative weight lands — no ANSI-mode
-        # long overflow
-        lambda votes: F.aggregate(
-            F.zip_with(votes, weights,
-                       lambda v, w: F.when(v > 0, w)
-                                     .otherwise(F.lit(0).cast('long'))),
-            F.lit(0).cast('long'),
-            lambda acc, x: acc + x,
-        ),
-    )
-
-
-def _zip_votes(acc: Column, h: Column) -> Column:
-    bits = F.array(*[
-        F.when(_token_bit64(h, j) == 1, F.lit(1).cast('long'))
-         .otherwise(F.lit(-1).cast('long'))
-        for j in range(SIMHASH_BITS)
-    ])
-    return F.zip_with(acc, bits, lambda a, b: a + b)
-
-
 def simhash_table(docs: DataFrame, id_col='doc_id',
                   text_col='text', keep_null_docs: bool = True
                   ) -> DataFrame:
-    """(id, sim) rows, bit-exact with ``simhash64(tokens(text))``.
+    """(id, sim) rows: the 64-bit SimHash of ``tokens(text)``, bit-exact
+    with the column-form reference ``tests/oracles.simhash64``.
 
     The column form's higher-order fold evaluates its lambdas
     interpreted, per token, per bit — O(tokens x 64) interpreted
@@ -289,10 +222,7 @@ def _simhash_band_table(docs: DataFrame, id_col: str,
     band_bits = SIMHASH_BITS // n_bands
     mask = (1 << band_bits) - 1
     # null-fingerprint docs are dropped here rather than joined back:
-    # their band keys are all NULL, which can never equi-join (pairs
-    # unchanged); the only observable delta is that
-    # oversized_simhash_buckets no longer reports a NULL-band row,
-    # which was not a real bucket
+    # their band keys are all NULL, which can never equi-join
     sims = simhash_table(docs, id_col, text_col, keep_null_docs=False)
     band_keys = F.array(*[
         F.concat(F.lit(f'{b}:'),
@@ -327,8 +257,7 @@ def simhash_neardup_pairs(docs: DataFrame, max_dist: int = 3,
     fingerprints produces k^2/2 candidate rows; with the cap set,
     buckets larger than ``max_bucket_size`` are excluded from candidate
     generation (their members belong to exact/near-exact dedup
-    upstream); ``oversized_simhash_buckets`` logs what was dropped.
-    Default None = exact (what the oracle checks at small SF).
+    upstream). Default None = exact (what the oracle checks at small SF).
 
     Output: (doc_a, doc_b, hamming_dist) with doc_a < doc_b.
     """
@@ -358,17 +287,6 @@ def simhash_neardup_pairs(docs: DataFrame, max_dist: int = 3,
         .where(F.col('hamming_dist') <= max_dist)
         .distinct()
     )
-
-
-def oversized_simhash_buckets(docs: DataFrame, max_bucket_size: int,
-                              id_col='doc_id', text_col='text',
-                              n_bands: int = 4) -> DataFrame:
-    """(band, n_docs) for SimHash band buckets above the cap —
-    observability hook for what
-    ``simhash_neardup_pairs(max_bucket_size=...)`` drops."""
-    return (_simhash_band_table(docs, id_col, text_col, n_bands)
-            .groupBy('band').agg(F.count('*').alias('n_docs'))
-            .where(F.col('n_docs') > max_bucket_size))
 
 
 def doc_shingle_table(docs: DataFrame, id_col='doc_id', text_col='text',
@@ -704,17 +622,6 @@ def oversized_ngrams(docs: DataFrame, max_df: int, id_col='doc_id',
             .where(F.col('df') > max_df))
 
 
-def oversized_minhash_buckets(docs: DataFrame, max_bucket_size: int,
-                              id_col='doc_id', text_col='text',
-                              n: int = 3) -> DataFrame:
-    """(band, n_docs) for LSH buckets above the cap — observability hook
-    for what ``minhash_dedup_pairs(max_bucket_size=...)`` drops."""
-    sig = minhash_signature_table(docs, id_col, text_col, n)
-    return (minhash_band_table(sig, id_col)
-            .groupBy('band').agg(F.count('*').alias('n_docs'))
-            .where(F.col('n_docs') > max_bucket_size))
-
-
 def minhash_dedup_pairs(docs: DataFrame, id_col='doc_id', text_col='text',
                         n: int = 3, threshold: float = 0.5,
                         max_bucket_size: Optional[int] = None) -> DataFrame:
@@ -730,9 +637,8 @@ def minhash_dedup_pairs(docs: DataFrame, id_col='doc_id', text_col='text',
     candidate rows; at web scale one hot bucket can dominate the whole
     job. With the cap set, buckets larger than ``max_bucket_size`` are
     excluded from candidate generation (their members are by definition
-    near-identical — exact dedup upstream is the right tool for them);
-    use ``oversized_minhash_buckets`` to log what was dropped. Default
-    None = exact (every colliding bucket considered; what the oracle
+    near-identical — exact dedup upstream is the right tool for them).
+    Default None = exact (every colliding bucket considered; what the oracle
     checks at small SF).
     """
     sig = minhash_signature_table(docs, id_col, text_col, n)
@@ -1659,13 +1565,15 @@ def lm_score(docs: DataFrame, id_col='doc_id', text_col='text',
     # trigrams at scale (aggregations get no AQE skew split), so the
     # deterministic salt bounds any one trigram's share per partition;
     # the counts aggregation re-merges through a vocabulary-sized
-    # second exchange
+    # second exchange. The salt takes one value per shuffle partition:
+    # more values could not spread a trigram any further
+    salts = int(docs.sparkSession.conf.get('spark.sql.shuffle.partitions'))
     tris = (base
             .select(F.col(id_col), '_t', F.explode(positions).alias('_i'))
             .select(F.col(id_col),
                     F.col('_t').substr(F.col('_i'), F.lit(3)).alias('tri'))
             .repartition(F.col('tri'),
-                         F.pmod(F.xxhash64(id_col), F.lit(64))))
+                         F.pmod(F.xxhash64(id_col), F.lit(salts))))
     counts = tris.where(F.col('tri').isNotNull()) \
         .groupBy('tri').agg(F.count('*').alias('c'))
     total = counts.agg(F.sum('c').cast('double').alias('total'))

@@ -77,19 +77,8 @@ class _TreeBuilder(html.parser.HTMLParser):
     def _top(self) -> ET.Element:
         return self._stack[-1]
 
-    def _open_names(self):
-        return [e.tag for e in self._stack if isinstance(e.tag, str)]
-
     def _append(self, elem: ET.Element):
         self._top().append(elem)
-
-    def _add_text(self, data: str):
-        top = self._top()
-        if len(top):
-            last = top[-1]
-            last.tail = (last.tail or '') + data
-        else:
-            top.text = (top.text or '') + data
 
     def _implied_close(self, tag: str):
         if tag in _P_CLOSERS and any(
@@ -205,7 +194,8 @@ class _TreeBuilder(html.parser.HTMLParser):
                 return
             self._ensure_container('span')
             top = self._stack[-1]
-        # inlined _add_text (hot path: one call per text/tail chunk)
+        # append as the last child's tail, else as the container's
+        # text (inline: one call per text/tail chunk on the hot path)
         if len(top):
             last = top[-1]
             last.tail = (last.tail or '') + data

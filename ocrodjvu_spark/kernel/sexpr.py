@@ -48,17 +48,6 @@ def parse(text: str) -> SValue:
     return value
 
 
-def parse_many(text: str) -> List[SValue]:
-    """Parse all s-expressions from ``text`` (e.g. a multi-page stream)."""
-    values = []
-    pos = _skip_ws(text, 0)
-    while pos < len(text):
-        value, pos = _parse_one(text, pos)
-        values.append(value)
-        pos = _skip_ws(text, pos)
-    return values
-
-
 def _skip_ws(text: str, pos: int) -> int:
     n = len(text)
     while pos < n and text[pos] in ' \t\r\n':
@@ -214,7 +203,3 @@ def _pretty_lines(value: SValue, indent: int, width: int) -> List[str]:
     lines[-1] += ')'
     return lines
 
-
-def normalize(text: str) -> str:
-    """Re-parse and re-print: the golden-comparison normal form."""
-    return print_compact(parse(text))

@@ -42,39 +42,8 @@ def parse_page_numbers(pages: Optional[str]) -> Optional[List[int]]:
     return result
 
 
-# --- filename template expansion (T13) --------------------------------------
+# --- filename template offset grammar (T13): ``{page+1}`` / ``{page-2}``;
+# plans/checkpoint.template_path_expr compiles it to one Catalyst
+# expression
 
 _TEMPLATE_OFFSET_RE = re.compile(r'^(?P<base>.+?)(?P<sign>[+-])(?P<off>\d+)$')
-
-
-def expand_template(template: str, page_no: int, page_id: str) -> str:
-    """Expand a ``{page+1}``-style filename template.
-
-    Grammar per the reference's raw-OCR save path
-    (lib/cli/ocrodjvu.py:145-174): fields ``page`` (int), ``id`` and
-    ``id-ext`` (strings), plus ``{base+N}`` / ``{base-N}`` integer offset
-    arithmetic on any int-valued field. Unknown or non-integer offset
-    fields are left to the formatter (a KeyError surfaces like any bad
-    format string).
-    """
-    import os
-    import string
-    values = {
-        'page': page_no,
-        'id': page_id,
-        'id-ext': os.path.splitext(page_id)[0],
-    }
-    fmt = string.Formatter()
-    for _literal, field, _spec, _conv in fmt.parse(template):
-        if field is None or field in values:
-            continue
-        m = _TEMPLATE_OFFSET_RE.match(field)
-        if m is None:
-            continue
-        base = values.get(m.group('base'))
-        if not isinstance(base, int):
-            continue
-        delta = int(m.group('off'), 10)
-        values[field] = base + delta if m.group('sign') == '+' else \
-            base - delta
-    return fmt.vformat(template, (), values)

@@ -177,8 +177,7 @@ def reassemble_conversations(extracted: DataFrame) -> DataFrame:
     )
 
 
-def roundtrip_turns(extracted: DataFrame, details: str = 'words',
-                    uax29=None) -> DataFrame:
+def roundtrip_turns(extracted: DataFrame) -> DataFrame:
     """Text-layer round trip: extracted sexpr -> hOCR -> extract again.
 
     Page dimensions come from the extracted PAGE span (selected by zone
@@ -189,7 +188,7 @@ def roundtrip_turns(extracted: DataFrame, details: str = 'words',
     the original (north-star round-trip semantics).
     """
     from .functions.emit import make_emit_hocr_udf
-    emit = make_emit_hocr_udf(full_document=True)
+    emit = make_emit_hocr_udf()
     # the PAGE span, selected by type rather than position, so a span
     # list without a page zone yields null dims and the emit UDF
     # reports an explicit error instead of silently mis-sizing the page
@@ -200,7 +199,7 @@ def roundtrip_turns(extracted: DataFrame, details: str = 'words',
         'conv_id', 'turn_idx',
         emit(F.col('extracted_sexpr'), page.x1, page.y1).alias('_e'),
     )
-    extract = make_extract_udf(details=details, uax29=uax29)
+    extract = make_extract_udf()
     result = markup.select(
         'conv_id', 'turn_idx', F.col('_e.error').alias('emit_error'),
         extract(F.col('_e.hocr')).alias('_r'))

@@ -169,7 +169,7 @@ def template_path_expr(template: str):
     ``id`` / ``id-ext`` -> conv_id (conversation ids carry no file
     extension). Offset arithmetic (``{page+1}``) follows the reference's
     template grammar (lib/cli/ocrodjvu.py:145-174); the pure-Python
-    equivalent is ``kernel.utils.expand_template``.
+    reference is ``tests/oracles.expand_template``.
     """
     import string
 
@@ -194,7 +194,7 @@ def template_path_expr(template: str):
             parts.append(F.lit(literal))
         if field is not None:
             if spec or conv:
-                # keep parity with expand_template honest instead of
+                # keep parity with the per-row reference grammar instead of
                 # silently emitting differently-formatted names
                 raise ValueError(
                     'format specs/conversions are not supported in '

@@ -61,10 +61,10 @@ files). A commit carries every unchanged manifest forward BY REFERENCE
 list's recorded n_files) and rewrites only partially-retained
 manifests plus its fresh stagings, grouped by partition; append and
 delete-keys commits skip base materialization entirely
-(``_commit(list_op=...)``). Measured (``tools/bench_manifest.py``): at
-1 M files / 256 partitions a +10-file append commits in ~7 ms and
-``count_rows`` answers from list aggregates in ~1 ms; only rewrite
-ops (compact, merge, delete_where) materialize the full list (~8 s).
+(``_commit(list_op=...)``); only rewrite ops (compact, merge,
+delete_where) materialize the full list. BENCH/BASELINE.md keeps the
+historical metadata-plane timings (a +10-file append at 1 M files /
+256 partitions committed in ~7 ms).
 Partition-filtered reads skip whole manifests from the list's uniform
 partition values before loading them. Partition values are kept *in*
 the data files (the staged ``partitionBy`` column is a duplicate), so
@@ -94,6 +94,9 @@ class _CompactConflict(Exception):
 
 
 _PART_DIR = '__pv='  # staged partition directory prefix
+# attempts of a rewrite (delete_positions, delete_where, merge_into,
+# compact) whose base keeps changing under it before it raises
+_REWRITE_RETRIES = 5
 
 # stats are recorded only for values that serialize losslessly to JSON
 # and compare with Python operators; temporal values are normalized to
@@ -690,26 +693,12 @@ class SnapshotTable:
         except FileNotFoundError:
             pass
 
-    def version_at(self, ts: float) -> int:
-        """Timestamp time travel resolution: the highest version whose
-        ``committed_at`` stamp is <= ``ts`` (epoch seconds) — Iceberg's
-        snapshot-as-of-timestamp rule. Versions predating the stamp
-        (legacy) are treated as infinitely old, so they resolve for
-        any ``ts``. Returns 0 when every snapshot is newer."""
-        best = 0
-        for v in self.versions():
-            at = self._snapshot_doc(v).get('committed_at')
-            if at is None or at <= ts:
-                best = max(best, v)
-        return best
-
     def read(
         self,
         spark: SparkSession,
         version: Optional[int] = None,
         partition_values: Optional[Sequence] = None,
         stats_filters: Optional[Sequence] = None,
-        as_of: Optional[float] = None,
         ref: Optional[str] = None,
     ) -> Optional[DataFrame]:
         """A DataFrame pinned to one snapshot's explicit file list.
@@ -722,17 +711,12 @@ class SnapshotTable:
         FILE-level: the surviving files still contain non-matching rows,
         so the caller applies the same predicate row-level on the
         returned frame (exactly how an engine consumes Iceberg's
-        bounds). ``as_of`` (epoch seconds, mutually exclusive with
-        ``version``) resolves via ``version_at`` — timestamp time
-        travel. Returns None for an empty table/snapshot — callers
+        bounds). Returns None for an empty table/snapshot — callers
         decide their own empty-schema story, same convention as
         ``checkpoint._read_sidecar``.
         """
-        if sum(x is not None for x in (version, as_of, ref)) > 1:
-            raise ValueError(
-                'read: version, as_of and ref are mutually exclusive')
-        if as_of is not None:
-            version = self.version_at(as_of)
+        if version is not None and ref is not None:
+            raise ValueError('read: version and ref are mutually exclusive')
         if ref is not None:
             version = self.get_ref(ref)
             if version is None:
@@ -774,45 +758,6 @@ class SnapshotTable:
         if not files:
             return None
         return self._read_files_mor(spark, files, manifest)
-
-    def count_rows(self, version: Optional[int] = None,
-                   partition_values: Optional[Sequence] = None) -> int:
-        """Metadata-only COUNT(*) — the manifest already carries every
-        file's row count, so a table/partition cardinality costs zero
-        data I/O at any scale (Iceberg's metadata aggregate pushdown).
-        No ``stats_filters`` variant: min/max bounds can prune files
-        but cannot count matching rows. Undefined while merge-on-read
-        deletes are pending (file counts include deleted rows) —
-        raises; ``compact()`` materializes them and restores it."""
-        doc = self._snapshot_doc(version)
-        if doc.get('deletes'):
-            raise ValueError(
-                'count_rows: pending merge-on-read deletes make '
-                'metadata counts overcount — compact() first')
-        wanted = (None if partition_values is None
-                  else {str(v) for v in partition_values})
-        if 'manifest_list' in doc:
-            # manifest-list aggregates answer the count WITHOUT
-            # loading manifest files (except mixed-partition ones
-            # under a partition filter)
-            total = 0
-            for m in doc['manifest_list']:
-                if wanted is None:
-                    total += m['rows']
-                elif m.get('uniform'):
-                    if str(m['partition']) in wanted:
-                        total += m['rows']
-                else:
-                    total += sum(
-                        e['rows']
-                        for e in self._load_manifest_file(m['path'])
-                        if str(e.get('partition')) in wanted)
-            return total
-        files = doc['files']
-        if wanted is not None:
-            files = [f for f in files
-                     if str(f.get('partition')) in wanted]
-        return sum(f['rows'] for f in files)
 
     def last_consumed(self, name: str) -> int:
         """The highest source version a ``refresh_incremental`` with
@@ -1116,12 +1061,6 @@ class SnapshotTable:
             return any(m['n_files'] for m in doc['manifest_list'])
         return bool(doc['files'])
 
-    def partitions(self, version: Optional[int] = None) -> List:
-        seen = {}
-        for f in self.snapshot(version)['files']:
-            seen.setdefault(f.get('partition'), None)
-        return list(seen)
-
     # -- writes -------------------------------------------------------------
 
     def append(self, df: DataFrame,
@@ -1272,8 +1211,6 @@ class SnapshotTable:
         * ``compact()`` MATERIALIZES pending deletes: the rewrite
           applies them and drops the delete entries from the manifest;
           ``expire_snapshots`` then reclaims the delete parquet.
-        * Metadata-only ``count_rows`` is undefined while deletes are
-          pending (it raises) — compact to restore it.
         * A pending delete in a ``read_changes`` window raises, like
           every non-append commit.
         """
@@ -1336,8 +1273,7 @@ class SnapshotTable:
 
 
     def delete_positions(self, spark: SparkSession, condition,
-                         tag: Optional[str] = None,
-                         max_retries: int = 5) -> int:
+                         tag: Optional[str] = None) -> int:
         """MERGE-ON-READ position delete (Iceberg v2 position delete
         files; spec: https://iceberg.apache.org/spec/#position-delete-files,
         re-implemented, not copied): evaluate ``condition`` once
@@ -1357,10 +1293,10 @@ class SnapshotTable:
         commit validates the file set is unchanged and REBASES
         (recomputing positions) if a rewrite landed concurrently —
         the Iceberg position-delete conflict rule. Sequencing,
-        ``compact()`` materialization, ``count_rows`` / CDC guards,
+        ``compact()`` materialization, CDC guards,
         and expiry all follow the equality-delete contract.
         """
-        for _ in range(max_retries):
+        for _ in range(_REWRITE_RETRIES):
             base_manifest = self.snapshot()
             base_version = base_manifest['version']
             files0 = base_manifest['files']
@@ -1411,13 +1347,12 @@ class SnapshotTable:
             except _CompactConflict:
                 continue  # a rewrite moved row positions: recompute
         raise CommitConflict(
-            f'delete_positions: base kept changing for {max_retries} '
+            f'delete_positions: base kept changing for {_REWRITE_RETRIES} '
             'attempts')
 
     def delete_where(self, spark: SparkSession, condition,
                      partition_col: Optional[str] = None,
-                     prune_filters: Optional[Sequence] = None,
-                     max_retries: int = 5) -> int:
+                     prune_filters: Optional[Sequence] = None) -> int:
         """Copy-on-write row delete: commit a snapshot without the rows
         matching ``condition`` (a pyspark Column predicate).
 
@@ -1441,7 +1376,7 @@ class SnapshotTable:
         like ``compact``: a concurrent commit aborts and retries the
         delete on the new snapshot, so concurrent appends survive.
         """
-        for _attempt in range(max_retries):
+        for _attempt in range(_REWRITE_RETRIES):
             base_version = self.current_version()
             base_manifest = self.snapshot(base_version)
             files0 = base_manifest['files']
@@ -1492,15 +1427,14 @@ class SnapshotTable:
                 self._delete_entries(entries)
                 continue
         raise CommitConflict(
-            f'delete_where: base kept changing for {max_retries} '
+            f'delete_where: base kept changing for {_REWRITE_RETRIES} '
             'attempts')
 
     def merge_into(self, spark: SparkSession, source: DataFrame,
                    key_cols: Sequence[str],
                    partition_col: Optional[str] = None,
                    when_matched: str = 'update',
-                   insert_not_matched: bool = True,
-                   max_retries: int = 5) -> int:
+                   insert_not_matched: bool = True) -> int:
         """``MERGE INTO target USING source ON key`` — the copy-on-write
         upsert every CDC / corpus-refresh pipeline runs (Iceberg's
         ``MERGE INTO``; Spark SQL's on a v2 table):
@@ -1561,7 +1495,7 @@ class SnapshotTable:
             if lo is not None and hi is not None:
                 key_filters.append((k, '>=', lo))
                 key_filters.append((k, '<=', hi))
-        for _attempt in range(max_retries):
+        for _attempt in range(_REWRITE_RETRIES):
             base_version = self.current_version()
             base_manifest = self.snapshot(base_version)
             files0 = base_manifest['files']
@@ -1644,7 +1578,7 @@ class SnapshotTable:
                 self._delete_entries(entries)
                 continue
         raise CommitConflict(
-            f'merge_into: base kept changing for {max_retries} attempts')
+            f'merge_into: base kept changing for {_REWRITE_RETRIES} attempts')
 
     # -- maintenance --------------------------------------------------------
 
@@ -1652,8 +1586,7 @@ class SnapshotTable:
                 partition_col: Optional[str] = None,
                 target_partitions: int = 1,
                 cluster_by: Optional[Sequence[str]] = None,
-                zorder_by: Optional[Sequence[str]] = None,
-                max_retries: int = 5) -> int:
+                zorder_by: Optional[Sequence[str]] = None) -> int:
         """Rewrite HEAD's data into fewer, larger files (the
         small-files problem every streaming-append table accumulates;
         Iceberg's rewrite_data_files). Logically a no-op: the new
@@ -1694,7 +1627,7 @@ class SnapshotTable:
         cost to each (Delta's OPTIMIZE ZORDER BY). The z-value is a
         transient sort key — it is dropped before staging, never
         stored."""
-        for _attempt in range(max_retries):
+        for _attempt in range(_REWRITE_RETRIES):
             base_version = self.current_version()
             base_manifest = self.snapshot(base_version)
             files0 = base_manifest['files']
@@ -1769,7 +1702,7 @@ class SnapshotTable:
                 self._delete_entries(entries)  # stale rewrite
                 continue
         raise CommitConflict(
-            f'compact: base kept changing for {max_retries} attempts')
+            f'compact: base kept changing for {_REWRITE_RETRIES} attempts')
 
     def remove_orphans(self, older_than_sec: float = 3600.0
                        ) -> List[str]:
@@ -2211,10 +2144,9 @@ class SnapshotTable:
             if committed_transform is not None:
                 manifest['partition_transform'] = committed_transform
             manifest['write_props'] = self.write_props()
-            # wall-clock commit stamp for timestamp time travel
-            # (version_at / read(as_of=...)); writer clock skew can
-            # reorder stamps across writers — the same caveat as
-            # Iceberg's snapshot timestamps
+            # wall-clock commit stamp (``snapshot_admin log``); writer
+            # clock skew can reorder stamps across writers — the same
+            # caveat as Iceberg's snapshot timestamps
             manifest['committed_at'] = time.time()
             if tag is not None:
                 manifest['tag'] = tag
@@ -2305,7 +2237,7 @@ class SnapshotTable:
     def _mf_summary(rel: str, entries: List[dict]) -> dict:
         """A manifest-list entry: path + the aggregates that let reads
         prune (uniform partition value, per-column stat bounds) and
-        count (row sum) WITHOUT loading the manifest file."""
+        report (row sum) WITHOUT loading the manifest file."""
         out = {'path': rel, 'n_files': len(entries),
                'rows': sum(e['rows'] for e in entries)}
         pvs = {e.get('partition') for e in entries}

@@ -57,16 +57,6 @@ def get_spark(
         .config('spark.ui.enabled', 'false')
         .config('spark.driver.memory',
                 os.environ.get('SPARK_GRAFT_DRIVER_MEM', '8g'))
-        # catalog tables (bucketed co-located joins) go under /tmp, not
-        # the repo working directory — per-process paths, because
-        # Derby is single-instance (a second JVM on the same
-        # derby.system.home fails with XSDB6) and a shared warehouse
-        # would let concurrent overwrites clobber each other
-        .config('spark.sql.warehouse.dir',
-                f'/tmp/ocrodjvu-spark-warehouse-{os.getpid()}')
-        .config('spark.driver.extraJavaOptions',
-                f'-Dderby.system.home=/tmp/ocrodjvu-spark-derby-'
-                f'{os.getpid()}')
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

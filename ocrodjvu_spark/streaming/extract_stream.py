@@ -9,8 +9,6 @@ engine exposes the same extraction as a Structured Streaming flow:
 * the identical extraction operator, ``pipeline.extract_turns``, applied
   to the unbounded DataFrame — scalar pandas UDFs are streaming-safe
   (stateless projection);
-* watermark on ``ts`` + windowed per-conversation aggregation for the
-  live metrics view (late turns within the watermark still count);
 * ``foreachBatch``/file sink for the extracted output, partitioned like
   the batch path.
 """
@@ -33,27 +31,6 @@ def read_transcripts_stream(spark: SparkSession, input_path: str,
         .schema(TRANSCRIPTS_DDL)
         .option('maxFilesPerTrigger', max_files_per_trigger)
         .parquet(input_path)
-    )
-
-
-def live_conversation_metrics(extracted: DataFrame,
-                              watermark: str = '10 minutes',
-                              window: str = '5 minutes') -> DataFrame:
-    """Windowed per-conversation extraction metrics with late-data bound."""
-    return (
-        extracted
-        .withWatermark('ts', watermark)
-        .groupBy(F.window('ts', window), F.col('conv_id'))
-        .agg(
-            # streaming rows are exploded pages; distinct-turn counting
-            # needs the batch path (countDistinct is not supported with
-            # append-mode streaming aggregations)
-            F.count('*').alias('n_pages'),
-            F.sum(F.when(F.col('error').isNotNull(), 1).otherwise(0))
-             .alias('n_errors'),
-            F.sum(F.length(F.coalesce(F.col('extracted_text'), F.lit(''))))
-             .alias('n_chars'),
-        )
     )
 
 

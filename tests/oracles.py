@@ -1,12 +1,20 @@
-"""Pure-Python reference implementations the sketch and tokenizer
-tests compare the Spark operators against."""
+"""Reference implementations the sketch, tokenizer, SimHash and
+filename-template tests compare the Spark operators against."""
 
+import os
+import re
+import string
 from typing import List
 
+from pyspark.sql import Column
+from pyspark.sql import functions as F
+
 from ocrodjvu_spark.functions.bloom import H2_ADD, H2_MUL
-from ocrodjvu_spark.functions.bpe import PAIR_SEP, _merge_pass, _ref_norm
+from ocrodjvu_spark.functions.bpe import PAIR_SEP, _STRIP_RE, _merge_pass
 from ocrodjvu_spark.functions.hll import FIN, HASH_BITS
-from ocrodjvu_spark.functions.textops import HASH_MOD
+from ocrodjvu_spark.functions.textops import (
+    HASH_MOD, SIMHASH_BITS, SIMHASH_W1, SIMHASH_W2, rolling_hash)
+from ocrodjvu_spark.kernel.utils import _TEMPLATE_OFFSET_RE
 
 
 def reference_cms(keys, d: int = 3, w: int = 256):
@@ -60,7 +68,7 @@ def reference_train(texts, n_merges: int, min_count: int = 2):
     from collections import Counter
     counts = Counter()
     for t in texts:
-        for w in _ref_norm(t).split(' '):
+        for w in reference_norm(t).split(' '):
             if w:
                 counts[w] += 1
     state = {tuple(w): c for w, c in counts.items()}
@@ -95,7 +103,7 @@ def reference_tokenize(text: str, merges) -> List[str]:
     """Apply merges in rank order (one canonical left-to-right pass
     each), the same spec the replace chain implements."""
     out: List[str] = []
-    for w in _ref_norm(text).split(' '):
+    for w in reference_norm(text).split(' '):
         if not w:
             continue
         toks = list(w)
@@ -103,3 +111,106 @@ def reference_tokenize(text: str, merges) -> List[str]:
             toks = _merge_pass(toks, a, b)
         out.extend(toks)
     return out
+
+
+def reference_norm(text: str) -> str:
+    return re.sub(r'\s+', ' ', re.sub(_STRIP_RE, '', text)).strip()
+
+
+def _token_bit64(h: Column, j: int) -> Column:
+    """Bit j (0..63) of a token's 64-bit SimHash key.
+
+    ``rolling_hash`` yields 31 usable bits, so the 64-bit key is pieced
+    from three derived words: bits 0..30 from h itself, 31..61 from
+    (h*48271+11) mod p, 62..63 from (h*69621+7) mod p. The derived-word
+    expressions are rebuilt per bit (Catalyst does no CSE inside lambda
+    bodies) but each is just mul+add+mod — noise next to the O(64) vote
+    fold they feed.
+    """
+    if j < 31:
+        src, k = h, j
+    elif j < 62:
+        src = (h * SIMHASH_W1[0] + SIMHASH_W1[1]) % HASH_MOD
+        k = j - 31
+    else:
+        src = (h * SIMHASH_W2[0] + SIMHASH_W2[1]) % HASH_MOD
+        k = j - 62
+    return F.shiftright(src, k) % 2
+
+
+def simhash64(tokens_col: Column) -> Column:
+    """64-bit SimHash over token rolling hashes (+1/-1 bit votes).
+
+    Manku et al. (WWW'07) fingerprint width: 64 bits split into 4
+    16-bit bands gives 2^16 bucket keys per band (the 32-bit/8-bit
+    variant capped band parallelism at 256 keys — a quadratic blowup at
+    web scale). Bit 63's weight is -(2^63) so the fingerprint occupies
+    the full signed-long range exactly as DuckDB's BIGINT does; Hamming
+    distance via ``bit_count(a XOR b)`` is sign-agnostic.
+
+    The bit-vote fold and the final bits->long reduction both live in a
+    single ``F.aggregate`` (the reduction as its *finish* lambda, where
+    the vote array is a bound lambda variable evaluated once) — Catalyst
+    performs no CSE for lambda expressions, so referencing the vote
+    aggregate 64 times in a projection would recompute the whole
+    O(tokens*64) fold once per output bit.
+    """
+    token_hashes = F.transform(tokens_col, lambda t: rolling_hash(t))
+    weights = F.array(
+        *[F.lit(1 << j).cast('long') for j in range(63)],
+        F.lit(-(1 << 63)).cast('long'))
+    return F.aggregate(
+        token_hashes,
+        F.array_repeat(F.lit(0).cast('long'), SIMHASH_BITS),
+        lambda acc, h: _zip_votes(acc, h),
+        # positive weights fold first, so the running sum peaks at
+        # 2^63-1 before bit 63's negative weight lands — no ANSI-mode
+        # long overflow
+        lambda votes: F.aggregate(
+            F.zip_with(votes, weights,
+                       lambda v, w: F.when(v > 0, w)
+                                     .otherwise(F.lit(0).cast('long'))),
+            F.lit(0).cast('long'),
+            lambda acc, x: acc + x,
+        ),
+    )
+
+
+def _zip_votes(acc: Column, h: Column) -> Column:
+    bits = F.array(*[
+        F.when(_token_bit64(h, j) == 1, F.lit(1).cast('long'))
+         .otherwise(F.lit(-1).cast('long'))
+        for j in range(SIMHASH_BITS)
+    ])
+    return F.zip_with(acc, bits, lambda a, b: a + b)
+
+
+def expand_template(template: str, page_no: int, page_id: str) -> str:
+    """Expand a ``{page+1}``-style filename template.
+
+    Grammar per the reference's raw-OCR save path
+    (lib/cli/ocrodjvu.py:145-174): fields ``page`` (int), ``id`` and
+    ``id-ext`` (strings), plus ``{base+N}`` / ``{base-N}`` integer offset
+    arithmetic on any int-valued field. Unknown or non-integer offset
+    fields are left to the formatter (a KeyError surfaces like any bad
+    format string).
+    """
+    values = {
+        'page': page_no,
+        'id': page_id,
+        'id-ext': os.path.splitext(page_id)[0],
+    }
+    fmt = string.Formatter()
+    for _literal, field, _spec, _conv in fmt.parse(template):
+        if field is None or field in values:
+            continue
+        m = _TEMPLATE_OFFSET_RE.match(field)
+        if m is None:
+            continue
+        base = values.get(m.group('base'))
+        if not isinstance(base, int):
+            continue
+        delta = int(m.group('off'), 10)
+        values[field] = base + delta if m.group('sign') == '+' else \
+            base - delta
+    return fmt.vformat(template, (), values)

@@ -9,7 +9,8 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import Row
 
 from ocrodjvu_spark.functions import bpe
-from tests.oracles import reference_tokenize, reference_train
+from tests.oracles import (
+    reference_norm, reference_tokenize, reference_train)
 
 _ALPHABET = 'abcd'
 
@@ -142,24 +143,6 @@ def test_bracket_replace_equals_canonical_merge_pass(wm):
         assert re.findall('<([^<>]*)>', s) == toks, (w, merges)
 
 
-def test_merge_table_versioned_roundtrip(spark, tmp_path):
-    # tokenizer-as-artifact: publish v1 and v2, pin either, tokenize
-    # identically with the loaded table
-    df = spark.createDataFrame(
-        [Row(doc_id=0, text='the fast the fast key order')])
-    m5 = bpe.train(df, 3, min_count=1)
-    m10 = bpe.train(df, 6, min_count=1)
-    root = str(tmp_path / 'tokenizer')
-    v1 = bpe.save_merges(spark, root, m5)
-    v2 = bpe.save_merges(spark, root, m10)
-    assert (v1, v2) == (1, 2)
-    assert bpe.load_merges(spark, root) == m10
-    assert bpe.load_merges(spark, root, version=v1) == m5
-    got = bpe.tokenize(df, bpe.load_merges(spark, root)).head()
-    want = bpe.tokenize(df, m10).head()
-    assert got.toks_str == want.toks_str
-
-
 def test_plan_is_map_only_jvm(spark):
     # the apply path must stay inside whole-stage codegen: no
     # BatchEvalPython/ArrowEvalPython, no shuffle
@@ -193,7 +176,7 @@ def test_train_from_counts_matches_reference_many_merges(spark):
         from collections import Counter
         counts = Counter()
         for t in texts:
-            for w in bpe._ref_norm(t).split(' '):
+            for w in reference_norm(t).split(' '):
                 if w:
                     counts[w] += 1
         got = bpe._train_from_counts(dict(counts), 40, min_count=1)

@@ -194,7 +194,7 @@ def test_raw_payload_sidecar(spark, tmp_path):
 def test_template_path_expr_matches_kernel(spark):
     # the Catalyst compilation and the pure-Python grammar agree
     from pyspark.sql import functions as F
-    from ocrodjvu_spark.kernel.utils import expand_template
+    from tests.oracles import expand_template
     from ocrodjvu_spark.plans.checkpoint import template_path_expr
     df = spark.createDataFrame(
         [('docA', 4), ('docB', 9)], 'conv_id string, turn_idx int')

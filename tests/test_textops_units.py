@@ -1,6 +1,7 @@
 """Direct unit checks on the text operators (beyond the SQL oracles)."""
 
 from ocrodjvu_spark.functions import textops
+from tests.oracles import simhash64
 
 
 def _docs(spark, texts):
@@ -21,7 +22,7 @@ def test_simhash_table_matches_column_form(spark):
     table = sorted(map(tuple, textops.simhash_table(docs).collect()))
     column = sorted(map(tuple, docs.select(
         'doc_id',
-        textops.simhash64(textops.tokens('text')).alias('sim'),
+        simhash64(textops.tokens('text')).alias('sim'),
     ).collect()))
     assert table == column
 
@@ -72,7 +73,7 @@ def test_simhash_similar_docs_close(spark):
     ])
     rows = {r.doc_id: r.simhash for r in docs.select(
         'doc_id',
-        textops.simhash64(textops.tokens('text')).alias('simhash'),
+        simhash64(textops.tokens('text')).alias('simhash'),
     ).collect()}
 
     def hamming(a, b):
@@ -144,10 +145,6 @@ def test_minhash_bucket_cap_bounds_hot_buckets(spark):
                  docs, threshold=0.5, max_bucket_size=32).collect()}
     assert (5000, 5001) in pairs
     assert all(a >= 5000 for a, _ in pairs)  # hot bucket fully dropped
-    oversized = textops.oversized_minhash_buckets(
-        docs, max_bucket_size=32).collect()
-    assert len(oversized) == 4  # all 4 bands of the identical docs
-    assert all(r.n_docs == 1000 for r in oversized)
 
 
 def test_simhash_pairs_banding_is_exact(spark):
@@ -163,7 +160,7 @@ def test_simhash_pairs_banding_is_exact(spark):
            for r in textops.simhash_neardup_pairs(docs).collect()}
     sims = {r.doc_id: r.simhash for r in docs.select(
         'doc_id',
-        textops.simhash64(textops.tokens('text')).alias('simhash'))
+        simhash64(textops.tokens('text')).alias('simhash'))
         .collect()}
 
     def hamming(a, b):
@@ -188,7 +185,7 @@ def test_simhash_band_key_cardinality_and_width(spark):
     docs = _docs(spark, [f'word{i} alpha beta gamma text number {i}'
                          for i in range(20)])
     sims = [r.s for r in docs.select(
-        textops.simhash64(textops.tokens('text')).alias('s')).collect()]
+        simhash64(textops.tokens('text')).alias('s')).collect()]
     high_halves = {(s >> 32) & 0xFFFFFFFF for s in sims}
     assert len(high_halves) > 1
 
@@ -206,10 +203,6 @@ def test_simhash_bucket_cap_bounds_hot_buckets(spark):
              for r in textops.simhash_neardup_pairs(
                  docs, max_dist=3, max_bucket_size=32).collect()}
     assert all(a >= 5000 for a, _ in pairs)  # hot bucket fully dropped
-    oversized = textops.oversized_simhash_buckets(
-        docs, max_bucket_size=32).collect()
-    assert len(oversized) == 4  # all 4 bands of the identical docs
-    assert all(r.n_docs == 1000 for r in oversized)
 
 
 def test_auto_banding_meets_miss_target():
@@ -292,15 +285,11 @@ def test_semantic_dedup_pairs_within_cluster_and_cap(spark):
     assert len(pairs) == 2 * (6 * 5 // 2)  # all within-blob pairs
     for r in pairs:
         assert r.vec_a % 2 == r.vec_b % 2 and r.cos_sim > 0.99
-    # cap: both clusters have 6 members; cap at 5 excludes both and
-    # reports them instead of going quadratic
+    # cap: both clusters have 6 members; cap at 5 excludes both
+    # instead of going quadratic
     capped = similarity.semantic_dedup_pairs(
         emb, threshold=0.99, k=2, iterations=3, max_cluster_size=5)
     assert capped.count() == 0
-    over = {(r.cluster, r.n_members)
-            for r in similarity.oversized_semantic_clusters(
-                emb, max_cluster_size=5, k=2, iterations=3).collect()}
-    assert over == {(0, 6), (1, 6)}
 
 
 def test_language_id_ngram_profiles(spark):

@@ -4,7 +4,9 @@ A broken import or signature in bench.py / run_pipeline.py would zero a
 round's benchmark record, so pin them here (no timed work).
 """
 
+import glob
 import importlib
+import importlib.util
 import os
 import sys
 
@@ -33,9 +35,20 @@ def test_run_pipeline_arg_parsing():
         rp.main([])  # missing required args
 
 
-def test_bench_scaling_imports():
-    sys.path.insert(0, os.path.join(REPO_ROOT, 'tools'))
-    importlib.import_module('bench_scaling')
+SCRIPTS = sorted(
+    os.path.relpath(p, REPO_ROOT)
+    for p in glob.glob(os.path.join(REPO_ROOT, 'tools', '*.py'))
+) + ['bench.py', '__spark_entry__.py']
+
+
+@pytest.mark.parametrize('script', SCRIPTS)
+def test_script_imports(script):
+    # every script must import against the current package, so a
+    # deleted name one of them still uses fails here, not in a sweep
+    name = '_import_smoke_' + os.path.splitext(os.path.basename(script))[0]
+    spec = importlib.util.spec_from_file_location(
+        name, os.path.join(REPO_ROOT, script))
+    spec.loader.exec_module(importlib.util.module_from_spec(spec))
 
 
 def test_check_correctness_helpers():
