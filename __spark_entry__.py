@@ -826,17 +826,16 @@ def _q_doc_chunks(spark, sf_dir):
 
 
 def _q_snapshot_mview_cdc(spark, sf_dir):
-    # CDC-driven incremental MV over a MUTATING source (where the
-    # append-only refresh_incremental raises): two refreshes bracket a
-    # history of append / equality-delete / append / position-delete
-    # commits; inserts and the window's delete keys commit in ONE
-    # atomic claim (cursor tag rides it), so a replay is a no-op —
-    # asserted in-gate. The final view must equal the transform of the
+    # CDC-driven incremental MV over a MUTATING source: two refreshes
+    # bracket a history of append / equality-delete / append /
+    # position-delete commits; inserts and the window's delete keys
+    # commit in ONE atomic claim (cursor tag rides it), so a replay is
+    # a no-op — asserted in-gate. The final view must equal the transform of the
     # source's final visible state, which the oracle reconstructs
     # set-algebraically.
     import os
     from ocrodjvu_spark.plans.snapstore import (SnapshotTable,
-                                                refresh_incremental_cdc)
+                                                refresh_incremental)
     docs = T.load_table(spark, sf_dir, 'documents') \
         .select('doc_id', 'n_chars')
     base = _gate_tempdir('ocrodjvu-spark-mviewcdc-')
@@ -850,17 +849,17 @@ def _q_snapshot_mview_cdc(spark, sf_dir):
     src.append(docs)
     src.delete_keys(spark, docs.where(F.col('doc_id') % 9 == 0)
                     .select('doc_id'), ['doc_id'])
-    if refresh_incremental_cdc(spark, src, mv, transform,
-                               ['doc_id']) is None:
+    if refresh_incremental(spark, src, mv, transform,
+                           ['doc_id']) is None:
         raise AssertionError('first CDC refresh must commit')
     src.append(docs.where(F.col('doc_id') % 13 == 0).select(
         (F.col('doc_id') + F.lit(1000000)).alias('doc_id'), 'n_chars'))
     src.delete_positions(spark, F.col('doc_id') % 7 == 3)
-    if refresh_incremental_cdc(spark, src, mv, transform,
-                               ['doc_id']) is None:
+    if refresh_incremental(spark, src, mv, transform,
+                           ['doc_id']) is None:
         raise AssertionError('second CDC refresh must commit')
-    if refresh_incremental_cdc(spark, src, mv, transform,
-                               ['doc_id']) is not None:
+    if refresh_incremental(spark, src, mv, transform,
+                           ['doc_id']) is not None:
         raise AssertionError('replayed refresh must be a no-op')
     return mv.read(spark)
 
@@ -1164,10 +1163,10 @@ def _q_snapshot_lifecycle(spark, sf_dir):
     # no rewrite of old data (drops/retypes raise, unit-tested;
     # renames need Iceberg field IDs, scoped out in snapstore.py).
     # part='changes': Iceberg's CDC read — a consumer checkpointed at
-    # v1 tails ONLY the rows appended afterwards (batches 2+3) off the
-    # manifest parent chain, no re-read of the 100-TB base; the
-    # appends-only contract is load-bearing (a rewrite in the window
-    # raises, unit-tested).
+    # v1 tails ONLY the rows appended afterwards (batches 2+3, the
+    # changelog's insert events) off the manifest parent chain, no
+    # re-read of the 100-TB base; a rewrite in the window raises
+    # (unit-tested).
     import os
     from ocrodjvu_spark.plans.snapstore import SnapshotTable
     base = _gate_tempdir('ocrodjvu-spark-lifecycle-')
@@ -1183,15 +1182,16 @@ def _q_snapshot_lifecycle(spark, sf_dir):
              .where(F.col('doc_id') >= 400))
     head = t.read(spark).select(
         F.lit('head').alias('part'), 'doc_id', 'n_chars', 'lang')
-    changes = t.read_changes(spark, v1).select(
-        F.lit('changes').alias('part'), 'doc_id', 'n_chars', 'lang')
+    changes = t.read_changelog(spark, v1) \
+        .where(F.col('_change_type') == 'insert').select(
+            F.lit('changes').alias('part'), 'doc_id', 'n_chars', 'lang')
     return head.unionByName(changes)
 
 
 def _q_snapshot_mview(spark, sf_dir):
     # Exactly-once incremental materialized view over the snapshot
     # store: the English-corpus view refreshes after each source
-    # append by reading ONLY the added rows (read_changes), and the
+    # append by reading ONLY the added rows (read_changelog), and the
     # consumer cursor is the sink's own commit tag — data append and
     # cursor advance are one atomic commit, so the duplicate refresh
     # (a crashed refresher's replay) is a no-op, asserted in-gate.
@@ -1209,10 +1209,12 @@ def _q_snapshot_mview(spark, sf_dir):
             .select('doc_id', 'n_chars')
 
     src.append(docs.where(F.col('doc_id') < 250))
-    refresh_incremental(spark, src, mv, transform, name='en_view')
+    refresh_incremental(spark, src, mv, transform, ['doc_id'],
+                        name='en_view')
     src.append(docs.where(F.col('doc_id') >= 250))
-    v = refresh_incremental(spark, src, mv, transform, name='en_view')
-    replay = refresh_incremental(spark, src, mv, transform,
+    v = refresh_incremental(spark, src, mv, transform, ['doc_id'],
+                            name='en_view')
+    replay = refresh_incremental(spark, src, mv, transform, ['doc_id'],
                                  name='en_view')
     if replay is not None or mv.current_version() != v:
         raise AssertionError('duplicate refresh was not a no-op')
@@ -2260,20 +2262,31 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # this round, (3) previously-verified gates, oldest verdict first.
     # When adding a gate, insert it at the top of block (2).
     return {
-        # -- block 1+2 (round-6 rotation): round-6 NEW gates
-        #    (ann_index_persisted, winnowing_fingerprints,
-        #    snapshot_changelog, snapshot_mview_cdc) and round-6
-        #    CHANGED gates (the two segmentation pins, the
-        #    three-strategy corpus_takedown), then the late-r5 gates
-        #    that have never held a driver verdict (consolidated
-        #    where round 6 merged them) — 36 entries ---------------
-        # round-6 additions/changes: persisted-IVF lifecycle (new);
-        # frequency-costed lexicons altered the Thai pin (new ตากลม
-        # suffix) and reweighted the CJK dictionary
+        # -- block 1: the gates round 7 re-plumbed (minhash/simhash
+        #    dedup, the semantic/embedding near-dup family, the LM
+        #    scorer, the shared run-metric definition), which have no
+        #    driver verdict since — 9 entries ---------------------
+        'simhash': _q_simhash,
+        'dedup_simhash_pairs': _q_dedup_simhash_pairs,
+        'extraction_metrics': _q_extraction_metrics,
+        'dedup_minhash_lsh': _q_dedup_minhash_lsh,
+        'ann_cosine_topk': _q_ann_cosine_topk,
+        'dedup_semantic': _q_dedup_semantic,
+        'embedding_neardup_pairs': _q_embedding_neardup_pairs,
+        'embedding_neardup_auto': _q_embedding_neardup_auto,
+        'lm_quality': _q_lm_quality,
+        # -- block 2: gates re-plumbed by the snapshot-store
+        #    consolidation (one change feed, one view refresher, one
+        #    rewrite loop) first, then the round-6 additions/changes
+        #    and late-r5 gates (r7 verdicts) — 36 entries ----------
+        'snapshot_lifecycle': _q_snapshot_lifecycle,
+        'snapshot_mview': _q_snapshot_mview,
+        'snapshot_mview_cdc': _q_snapshot_mview_cdc,
+        'snapshot_upsert': _q_snapshot_upsert,
+        'corpus_takedown': _q_corpus_takedown,
         'ann_index_persisted': _q_ann_index_persisted,
         'winnowing_fingerprints': _q_winnowing_fingerprints,
         'snapshot_changelog': _q_snapshot_changelog,
-        'snapshot_mview_cdc': _q_snapshot_mview_cdc,
         'extract_uax29_thai': _q_extract_uax29_thai,
         'extract_uax29_cjk_dict': _q_extract_uax29_cjk_dict,
         'checkpoint_snapshot': _q_checkpoint_snapshot,
@@ -2282,13 +2295,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'cms_counts': _q_cms_counts,
         'ingest_pipeline': _q_ingest_pipeline,
         'events_retention': _q_events_retention,
-        'corpus_takedown': _q_corpus_takedown,
         'bpe_train': _q_bpe_train,
         'bpe_tokenize': _q_bpe_tokenize,
-        'snapshot_upsert': _q_snapshot_upsert,
         'snapshot_skipping': _q_snapshot_skipping,
-        'snapshot_lifecycle': _q_snapshot_lifecycle,
-        'snapshot_mview': _q_snapshot_mview,
         'sampled_quantiles': _q_sampled_quantiles,
         'jsonl_roundtrip': _q_jsonl_roundtrip,
         'snapshot_events_time': _q_snapshot_events_time,
@@ -2307,12 +2316,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'checkpoint_resume': _q_checkpoint_resume,
         'corpus_split': _q_corpus_split,
         # -- block 3: previously verified, oldest verdict first
-        #    (r4 verdicts; 30 + 20 = the ~50-slot window) -------
+        #    (r4 verdicts; 9 + 36 + 5 = the ~50-slot window) ------
         'multimodal_frames': _q_multimodal_frames,
         'tool_call_stats': _q_tool_call_stats,
         'quality_buckets': _q_quality_buckets,
         'ann_recall': _q_ann_recall,
         'multimodal_resize': _q_multimodal_resize,
+        # -- outside the ~50-slot window: remaining r4-verified,
+        #    then r5-verified (freshest last). NEXT ROTATION:
+        #    promote anything the next round changes, then the
+        #    oldest entries below this line -----------------------
         'extract_text': _q_extract_text,
         'extract_word_spans': _q_extract_word_spans,
         'extract_sexpr': _q_extract_sexpr,
@@ -2324,20 +2337,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'streaming_extraction': _q_streaming_extraction,
         'streaming_dedup': _q_streaming_dedup,
         'stateful_conversation_state': _q_stateful_conversation_state,
-        'embedding_neardup_pairs': _q_embedding_neardup_pairs,
-        'embedding_neardup_auto': _q_embedding_neardup_auto,
         'extract_tesseract_makebox': _q_extract_tesseract_makebox,
         'extract_ocropus_surplus': _q_extract_ocropus_surplus,
-        # -- outside the ~50-slot window: remaining r4-verified,
-        #    then r5-verified (freshest last). ROUND-7 ROTATION:
-        #    promote anything round 7 changes, then the oldest
-        #    entries below this line --------------------------
         'djvused_script': _q_djvused_script,
         'events_json_props': _q_events_json_props,
         'events_sessionization': _q_events_sessionization,
         'lineitem_pricing_summary': _q_lineitem_pricing_summary,
         'orders_per_nation': _q_orders_per_nation,
-        'lm_quality': _q_lm_quality,
         'dedup_substring_spans': _q_dedup_substring_spans,
         'dedup_substring_apply': _q_dedup_substring_apply,
         'dedup_cluster_apply': _q_dedup_cluster_apply,
@@ -2348,7 +2354,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'error_channel': _q_error_channel,
         'turns_per_conv': _q_turns_per_conv,
         'conversation_reassembly': _q_conversation_reassembly,
-        'extraction_metrics': _q_extraction_metrics,
         'dedup_exact': _q_dedup_exact,
         'length_quantiles': _q_length_quantiles,
         'dedup_apply': _q_dedup_apply,
@@ -2362,19 +2367,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'conversation_packing': _q_conversation_packing,
         'dedup_conversations': _q_dedup_conversations,
         'token_stats': _q_token_stats,
-        'dedup_minhash_lsh': _q_dedup_minhash_lsh,
         'dedup_ngram_jaccard': _q_dedup_ngram_jaccard,
         'dedup_clusters': _q_dedup_clusters,
-        'simhash': _q_simhash,
-        'dedup_simhash_pairs': _q_dedup_simhash_pairs,
         'language_id': _q_language_id,
         'language_id_ngram': _q_language_id_ngram,
         'tfidf_top_terms': _q_tfidf_top_terms,
         'quality_score': _q_quality_score,
         'doc_fingerprint': _q_doc_fingerprint,
-        'ann_cosine_topk': _q_ann_cosine_topk,
         'embedding_kmeans': _q_embedding_kmeans,
-        'dedup_semantic': _q_dedup_semantic,
         'embedding_quantize': _q_embedding_quantize,
         'semantic_clusters': _q_semantic_clusters,
         'ann_lsh_topk': _q_ann_lsh_topk,

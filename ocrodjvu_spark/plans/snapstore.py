@@ -18,8 +18,7 @@ re-implemented here, not copied):
   plus per-manifest aggregates (n_files, row sum, uniform partition
   value). Readers resolve HEAD once, then read a pinned, explicit file
   list — a concurrent commit cannot change or break an in-flight read
-  (snapshot isolation). Pre-manifest-list snapshots with an inline
-  ``files`` array remain readable.
+  (snapshot isolation).
 * **Atomic commit by rename.** A writer stages the manifest to a temp
   name and ``os.rename``\\ s it to ``v<N+1>.json``. POSIX rename is atomic
   on one filesystem; on an object store the same slot would be claimed
@@ -54,6 +53,10 @@ re-implemented here, not copied):
   and ``compact`` materializes pending deletes away. A 1-row takedown
   costs one tiny write, not a whole-file rewrite; ``delete_where``
   stays the read-optimized copy-on-write path for broad predicates.
+* **One change feed.** ``read_changelog`` walks the parent chain and
+  emits every row change of an append / merge-on-read-delete history
+  as 'insert' / 'delete' events; ``refresh_incremental`` consumes it
+  to maintain a keyed view. A rewrite commit in the window raises.
 
 Scale notes (100 TB): commits are O(entries they touch), not O(table
 files). A commit carries every unchanged manifest forward BY REFERENCE
@@ -94,8 +97,8 @@ class _CompactConflict(Exception):
 
 
 _PART_DIR = '__pv='  # staged partition directory prefix
-# attempts of a rewrite (delete_positions, delete_where, merge_into,
-# compact) whose base keeps changing under it before it raises
+# attempts of a rewrite (``SnapshotTable._rewrite``) whose base keeps
+# changing under it before it raises
 _REWRITE_RETRIES = 5
 
 # stats are recorded only for values that serialize losslessly to JSON
@@ -596,13 +599,13 @@ class SnapshotTable:
 
     def _snapshot_doc(self, version: Optional[int] = None) -> dict:
         """The RAW persisted snapshot document (no manifest-file
-        resolution): either legacy inline ``files`` or a
-        ``manifest_list`` of immutable manifest-file references."""
+        resolution): a ``manifest_list`` of immutable manifest-file
+        references."""
         if version is None:
             version = self.current_version()
         if version == 0:
             return {'version': 0, 'parent': None, 'operation': 'empty',
-                    'schema': None, 'files': []}
+                    'schema': None, 'manifest_list': []}
         path = os.path.join(self.manifest_dir, f'v{version}.json')
         with open(path, 'r', encoding='utf-8') as fh:
             return json.load(fh)
@@ -619,21 +622,19 @@ class SnapshotTable:
             self._mf_cache[rel] = cached
         return cached
 
+    def _manifest_entries(self, m: dict) -> List[dict]:
+        """The entries of manifest-list item ``m``, each tagged with
+        its source manifest (``__mf``) so commits can carry unchanged
+        manifests forward by reference."""
+        return [{**e, '__mf': m['path']}
+                for e in self._load_manifest_file(m['path'])]
+
     def snapshot(self, version: Optional[int] = None) -> dict:
         """The manifest dict of ``version`` (default HEAD), with the
-        file list MATERIALIZED: manifest-list snapshots resolve their
-        manifest files (memoized), each entry tagged with its source
-        manifest (``__mf``) so commits can carry unchanged manifests
-        forward by reference instead of rewriting O(all files)."""
+        file list MATERIALIZED from its manifest files (memoized)."""
         doc = self._snapshot_doc(version)
-        if 'manifest_list' in doc:
-            files: List[dict] = []
-            for m in doc['manifest_list']:
-                for e in self._load_manifest_file(m['path']):
-                    e = dict(e)
-                    e['__mf'] = m['path']
-                    files.append(e)
-            doc['files'] = files
+        doc['files'] = [e for m in doc['manifest_list']
+                        for e in self._manifest_entries(m)]
         return doc
 
     # -- reads --------------------------------------------------------------
@@ -723,41 +724,31 @@ class SnapshotTable:
                 raise ValueError(f'unknown ref {ref!r}')
         stats_filters = _materialize_filters(stats_filters)
         doc = self._snapshot_doc(version)
-        if 'manifest_list' in doc and (partition_values is not None
-                                       or stats_filters is not None):
-            # MANIFEST-LIST pruning: a uniform-partition manifest
-            # whose value is not wanted — or whose aggregated column
-            # bounds disprove the stats filters — is skipped without
-            # even loading it: O(partitions) planning, not O(files)
-            wanted = (None if partition_values is None
-                      else {str(v) for v in partition_values})
-            files = []
-            for m in doc['manifest_list']:
-                if (wanted is not None and m.get('uniform')
-                        and str(m['partition']) not in wanted):
-                    continue
-                if (stats_filters is not None and m.get('stats')
-                        and not file_may_match(
-                            {'stats': m['stats'],
-                             'sv': m.get('sv', 1)}, stats_filters)):
-                    continue
-                for e in self._load_manifest_file(m['path']):
-                    e = dict(e)
-                    e['__mf'] = m['path']
-                    files.append(e)
-            manifest = doc
-        else:
-            manifest = self.snapshot(version)
-            files = manifest['files']
-        if partition_values is not None:
-            wanted = {str(v) for v in partition_values}
+        wanted = (None if partition_values is None
+                  else {str(v) for v in partition_values})
+        files = []
+        for m in doc['manifest_list']:
+            # MANIFEST-LIST pruning: a uniform-partition manifest whose
+            # value is not wanted — or whose aggregated column bounds
+            # disprove the stats filters — is skipped without even
+            # loading it: O(partitions) planning, not O(files)
+            if (wanted is not None and m.get('uniform')
+                    and str(m['partition']) not in wanted):
+                continue
+            if (stats_filters is not None and m.get('stats')
+                    and not file_may_match(
+                        {'stats': m['stats'], 'sv': m.get('sv', 1)},
+                        stats_filters)):
+                continue
+            files.extend(self._manifest_entries(m))
+        if wanted is not None:
             files = [f for f in files
                      if str(f.get('partition')) in wanted]
         if stats_filters is not None:
             files = [f for f in files if file_may_match(f, stats_filters)]
         if not files:
             return None
-        return self._read_files_mor(spark, files, manifest)
+        return self._read_files_mor(spark, files, doc)
 
     def last_consumed(self, name: str) -> int:
         """The highest source version a ``refresh_incremental`` with
@@ -854,52 +845,6 @@ class SnapshotTable:
             out = df if out is None else out.unionByName(df)
         return out
 
-    def read_changes(self, spark: SparkSession, from_version: int,
-                     to_version: Optional[int] = None
-                     ) -> Optional[DataFrame]:
-        """Incremental append scan: the rows ADDED strictly after
-        ``from_version`` up to ``to_version`` (default HEAD) — the CDC
-        feed a downstream consumer tails instead of re-reading 100 TB
-        (Iceberg's incremental read / ``incremental_from_snapshot``).
-
-        Walks the parent chain and unions the file additions of each
-        traversed snapshot. Every traversed snapshot must be an
-        ``append``: a rewrite commit (overwrite / replace_partitions /
-        delete / merge / compact) makes "what changed" ambiguous at
-        file granularity, so it raises — the same contract as
-        Iceberg's append-only incremental scan. Returns None when
-        nothing was added.
-        """
-        if to_version is None:
-            to_version = self.current_version()
-        if from_version > to_version:
-            raise ValueError(
-                f'read_changes: from_version {from_version} is newer '
-                f'than to_version {to_version}')
-        added: List[dict] = []
-        v = to_version
-        while v > from_version:
-            manifest = self.snapshot(v)
-            if manifest['operation'] != 'append':
-                raise ValueError(
-                    f"read_changes: snapshot v{v} is a "
-                    f"'{manifest['operation']}' — incremental scans "
-                    'are defined over append-only history')
-            parent = manifest['parent'] or 0
-            parent_paths = {f['path']
-                            for f in self.snapshot(parent)['files']}
-            added[:0] = [f for f in manifest['files']
-                         if f['path'] not in parent_paths]
-            v = parent
-        if v != from_version:
-            raise ValueError(
-                f'read_changes: v{from_version} is not on '
-                f'v{to_version}\'s parent chain (expired?)')
-        if not added:
-            return None
-        return self._read_entries(
-            spark, added, self.snapshot(to_version).get('schema'))
-
     def read_changelog(self, spark: SparkSession, from_version: int,
                        to_version: Optional[int] = None
                        ) -> Optional[DataFrame]:
@@ -924,15 +869,13 @@ class SnapshotTable:
         * anything else (overwrite / replace_partitions / delete /
           merge / compact) raises — a rewrite makes row-level change
           attribution ambiguous at file granularity, the same contract
-          as ``read_changes`` (compaction is invisible to CDC only
-          with snapshot-diffing, which is what full-table refresh is
-          for).
+          as Iceberg's append-only incremental scan (compaction is
+          invisible to CDC only with snapshot-diffing, which is what
+          full-table refresh is for).
 
-        Insert attribution uses data-sequence numbers (entries stamped
-        ``seq == v``), so windows must start at or after the first
-        seq-stamped commit — pre-sequencing legacy history (seq 0)
-        would attribute nothing; every table written since sequencing
-        landed qualifies. Returns None for an empty window.
+        Insert attribution uses data-sequence numbers: an append at
+        ``v`` stamps its new entries ``seq == v``. Returns None for an
+        empty window.
         """
         if to_version is None:
             to_version = self.current_version()
@@ -1055,11 +998,9 @@ class SnapshotTable:
 
     @staticmethod
     def _doc_has_files(doc: dict) -> bool:
-        """Emptiness from the RAW snapshot doc — list aggregates for
-        manifest-list snapshots, so no manifest file is loaded."""
-        if 'manifest_list' in doc:
-            return any(m['n_files'] for m in doc['manifest_list'])
-        return bool(doc['files'])
+        """Emptiness from the RAW snapshot doc's list aggregates, so
+        no manifest file is loaded."""
+        return any(m['n_files'] for m in doc['manifest_list'])
 
     # -- writes -------------------------------------------------------------
 
@@ -1094,13 +1035,10 @@ class SnapshotTable:
         if partition_col is None:
             # an unpartitioned append must not ERASE a recorded spec
             return self._commit('append', entries, schema,
-                                apply=lambda base: base + entries,
-                                tag=tag, evolve=True,
-                                list_op='append')
+                                tag=tag, evolve=True, list_op='append')
         try:
             return self._commit(
-                'append', entries, schema,
-                apply=lambda base: base + entries, tag=tag,
+                'append', entries, schema, tag=tag,
                 evolve=True, transform=transform,
                 validate=self._transform_validate(transform),
                 list_op='append')
@@ -1190,8 +1128,7 @@ class SnapshotTable:
                 'spec') from None
 
     def delete_keys(self, spark: SparkSession, keys: DataFrame,
-                    key_cols: Sequence[str],
-                    tag: Optional[str] = None) -> int:
+                    key_cols: Sequence[str]) -> int:
         """MERGE-ON-READ equality delete (Iceberg v2 equality delete
         files; spec: https://iceberg.apache.org/spec/#equality-delete-files,
         re-implemented, not copied): commit the distinct key tuples of
@@ -1211,8 +1148,8 @@ class SnapshotTable:
         * ``compact()`` MATERIALIZES pending deletes: the rewrite
           applies them and drops the delete entries from the manifest;
           ``expire_snapshots`` then reclaims the delete parquet.
-        * A pending delete in a ``read_changes`` window raises, like
-          every non-append commit.
+        * ``read_changelog`` reports the removed rows as 'delete'
+          events.
         """
         key_cols = list(key_cols)
         entry = self._stage_delete_file(
@@ -1221,16 +1158,15 @@ class SnapshotTable:
             return self.current_version()  # empty key set: no-op
         return self._commit(
             'delete-keys', [entry], None,
-            apply=lambda base: list(base),
-            tag=tag,
             apply_deletes=lambda base: base + [entry],
             list_op='identity')
 
-    def _stage_delete_file(self, kdf, key_cols):
-        """Stage a delete-file parquet (one coalesced file of key
-        tuples or positions) and return its manifest entry, or None
-        when the frame is empty (the zero-row staging is reclaimed).
-        Shared by ``delete_keys`` and the CDC view refresher."""
+    def _stage_delete_file(self, kdf, key_cols=None):
+        """Stage a delete-file parquet (one coalesced file) and return
+        its manifest entry, or None when the frame is empty (the
+        zero-row staging is reclaimed). ``kdf`` holds key tuples on
+        ``key_cols`` (equality delete) or, with ``key_cols`` None,
+        (file name, row position) pairs (position delete)."""
         stage_id = uuid.uuid4().hex
         stage_dir = os.path.join(self.data_dir, f'.stage-{stage_id}')
         kdf.coalesce(1).write.parquet(stage_dir)
@@ -1246,34 +1182,66 @@ class SnapshotTable:
                 if rows == 0:
                     self._delete_entries([{'path': rel}])
                     return None
-                return {'path': rel, 'key_cols': list(key_cols),
-                        'rows': rows}
+                entry = {'path': rel, 'rows': rows}
+                if key_cols is None:
+                    entry['positions'] = True
+                else:
+                    entry['key_cols'] = list(key_cols)
+                return entry
         finally:
             shutil.rmtree(stage_dir, ignore_errors=True)
         return None
 
+    def _base_unchanged(self, base: dict):
+        """A ``_commit`` validate hook for REWRITE commits: HEAD's data
+        files AND pending delete files must be exactly the ones the
+        rewrite derived from. The delete list matters separately: a
+        racing merge-on-read delete (list_op='identity') changes NO
+        data-file path, so a path check alone would let the rewrite
+        commit — and its freshly-sequenced files would be exempt from
+        (or, for compact, silently drop) a delete the rewrite never
+        applied, resurrecting taken-down rows."""
+        def paths(doc):
+            return (sorted(f['path'] for f in doc['files']),
+                    sorted(d['path'] for d in (doc.get('deletes') or [])))
+        expected = paths(base)
+        return lambda: paths(self.snapshot()) == expected
 
-    def _deletes_unchanged_validator(self, base_manifest):
-        """A ``_commit`` validate hook for REWRITE commits: the pending
-        delete-file list must be exactly what this rewrite derived its
-        data from. A racing merge-on-read delete (list_op='identity')
-        changes NO data-file path, so the path-set check alone would
-        let the rewrite commit — and its freshly-sequenced files would
-        be exempt from (or, for compact, silently drop) a delete the
-        rewrite never applied, resurrecting taken-down rows."""
-        expected = sorted(d['path']
-                          for d in (base_manifest.get('deletes') or []))
+    def _rewrite(self, name: str, operation: str, derive,
+                 partition_col: Optional[str] = None,
+                 restages: bool = True) -> int:
+        """The one rewrite-and-retry protocol behind ``delete_where``,
+        ``merge_into``, ``compact`` and ``delete_positions``: pin HEAD
+        (an empty table returns at once), let ``derive(base)`` stage
+        the rewrite and return the ``_commit`` keyword arguments
+        (``entries``, ``schema``, ``apply``, ...) — or None when
+        nothing needs rewriting — and commit them validated against
+        the pinned base (``_base_unchanged``). A base that changed
+        underneath reclaims the staged files and re-derives on the new
+        HEAD, up to ``_REWRITE_RETRIES`` times. ``restages`` ops write
+        new data files, which must keep their partition values."""
+        for _attempt in range(_REWRITE_RETRIES):
+            base = self.snapshot()
+            if not base['files']:
+                return base['version']
+            if restages and partition_col is None and {
+                    f.get('partition') for f in base['files']} != {None}:
+                raise ValueError(
+                    'table is partitioned — pass partition_col so the '
+                    'rewrite keeps manifest partition values')
+            commit = derive(base)
+            if commit is None:
+                return base['version']
+            try:
+                return self._commit(operation,
+                                    validate=self._base_unchanged(base),
+                                    **commit)
+            except _CompactConflict:
+                self._delete_entries(commit['entries'])
+        raise CommitConflict(
+            f'{name}: base kept changing for {_REWRITE_RETRIES} attempts')
 
-        def check():
-            return sorted(
-                d['path']
-                for d in (self._snapshot_doc().get('deletes') or [])
-            ) == expected
-        return check
-
-
-    def delete_positions(self, spark: SparkSession, condition,
-                         tag: Optional[str] = None) -> int:
+    def delete_positions(self, spark: SparkSession, condition) -> int:
         """MERGE-ON-READ position delete (Iceberg v2 position delete
         files; spec: https://iceberg.apache.org/spec/#position-delete-files,
         re-implemented, not copied): evaluate ``condition`` once
@@ -1296,59 +1264,22 @@ class SnapshotTable:
         ``compact()`` materialization, CDC guards,
         and expiry all follow the equality-delete contract.
         """
-        for _ in range(_REWRITE_RETRIES):
-            base_manifest = self.snapshot()
-            base_version = base_manifest['version']
-            files0 = base_manifest['files']
-            if not files0:
-                return base_version
-            df = self._read_entries(spark, files0,
-                                    base_manifest.get('schema'))
-            pos = (df.select(
-                       F.col('_metadata.file_name').alias('file_name'),
-                       F.col('_metadata.row_index').alias('pos'),
-                       F.coalesce(condition, F.lit(False)).alias('__m'))
-                     .where(F.col('__m'))
-                     .select('file_name', 'pos'))
-            stage_id = uuid.uuid4().hex
-            stage_dir = os.path.join(self.data_dir,
-                                     f'.stage-{stage_id}')
-            pos.coalesce(1).write.parquet(stage_dir)
-            entry = None
-            try:
-                for name in sorted(os.listdir(stage_dir)):
-                    if not name.endswith('.parquet'):
-                        continue
-                    rel = f'data/{stage_id}-posdel.parquet'
-                    os.rename(os.path.join(stage_dir, name),
-                              os.path.join(self.root, rel))
-                    rows, _stats = self._file_meta(
-                        os.path.join(self.root, rel))
-                    entry = {'path': rel, 'positions': True,
-                             'rows': rows}
-                    break
-            finally:
-                shutil.rmtree(stage_dir, ignore_errors=True)
-            if entry is None or entry['rows'] == 0:
-                if entry is not None:
-                    self._delete_entries([entry])
-                return self.current_version()  # nothing matches
-            expected = sorted(f['path'] for f in files0)
-            try:
-                return self._commit(
-                    'delete-positions', [entry], None,
-                    apply=lambda base: list(base),
-                    tag=tag,
-                    apply_deletes=lambda base, e=entry: base + [e],
-                    validate=lambda: sorted(
-                        f['path'] for f in self.snapshot()['files']
-                    ) == expected,
-                    list_op='identity')
-            except _CompactConflict:
-                continue  # a rewrite moved row positions: recompute
-        raise CommitConflict(
-            f'delete_positions: base kept changing for {_REWRITE_RETRIES} '
-            'attempts')
+        def derive(base):
+            pos = (self._read_entries(spark, base['files'],
+                                      base.get('schema'))
+                   .select(F.col('_metadata.file_name').alias('file_name'),
+                           F.col('_metadata.row_index').alias('pos'),
+                           F.coalesce(condition, F.lit(False)).alias('__m'))
+                   .where(F.col('__m'))
+                   .select('file_name', 'pos'))
+            entry = self._stage_delete_file(pos)
+            if entry is None:
+                return None  # nothing matches
+            return dict(entries=[entry], schema=None,
+                        apply_deletes=lambda dels: dels + [entry],
+                        list_op='identity')
+        return self._rewrite('delete_positions', 'delete-positions',
+                             derive, restages=False)
 
     def delete_where(self, spark: SparkSession, condition,
                      partition_col: Optional[str] = None,
@@ -1376,25 +1307,15 @@ class SnapshotTable:
         like ``compact``: a concurrent commit aborts and retries the
         delete on the new snapshot, so concurrent appends survive.
         """
-        for _attempt in range(_REWRITE_RETRIES):
-            base_version = self.current_version()
-            base_manifest = self.snapshot(base_version)
-            files0 = base_manifest['files']
-            if not files0:
-                return base_version
-            prune_filters = _materialize_filters(prune_filters)
-            if prune_filters is not None:
-                touched = [f for f in files0
-                           if file_may_match(f, prune_filters)]
-            else:
-                touched = list(files0)
+        prune_filters = _materialize_filters(prune_filters)
+
+        def derive(base):
+            files0 = base['files']
+            touched = (files0 if prune_filters is None else
+                       [f for f in files0
+                        if file_may_match(f, prune_filters)])
             if not touched:
-                return base_version  # stats prove nothing matches
-            part_values = {f.get('partition') for f in files0}
-            if part_values != {None} and partition_col is None:
-                raise ValueError(
-                    'table is partitioned — pass partition_col so the '
-                    'rewrite keeps manifest partition values')
+                return None  # stats prove nothing matches
             touched_paths = {f['path'] for f in touched}
             untouched = [f for f in files0
                          if f['path'] not in touched_paths]
@@ -1405,46 +1326,26 @@ class SnapshotTable:
             # MERGE-ON-READ (pending equality deletes applied), so a
             # rewritten file — whose new seq exempts it from older
             # deletes — can never resurrect key-deleted rows.
-            df = self._read_files_mor(spark, touched, base_manifest) \
+            df = self._read_files_mor(spark, touched, base) \
                 .where(~F.coalesce(condition, F.lit(False)))
             entries, schema = self._stage(
                 df, partition_col,
-                partition_transform=base_manifest.get(
-                    'partition_transform'))
-            expected = sorted(f['path'] for f in files0)
-
-            def apply(base):
-                if sorted(f['path'] for f in base) != expected:
-                    raise _CompactConflict
-                return untouched + entries
-
-            try:
-                return self._commit(
-                    'delete', entries, schema, apply=apply,
-                    validate=self._deletes_unchanged_validator(
-                        base_manifest))
-            except _CompactConflict:
-                self._delete_entries(entries)
-                continue
-        raise CommitConflict(
-            f'delete_where: base kept changing for {_REWRITE_RETRIES} '
-            'attempts')
+                partition_transform=base.get('partition_transform'))
+            return dict(entries=entries, schema=schema,
+                        apply=lambda _files: untouched + entries)
+        return self._rewrite('delete_where', 'delete', derive,
+                             partition_col)
 
     def merge_into(self, spark: SparkSession, source: DataFrame,
                    key_cols: Sequence[str],
-                   partition_col: Optional[str] = None,
-                   when_matched: str = 'update',
-                   insert_not_matched: bool = True) -> int:
+                   partition_col: Optional[str] = None) -> int:
         """``MERGE INTO target USING source ON key`` — the copy-on-write
         upsert every CDC / corpus-refresh pipeline runs (Iceberg's
         ``MERGE INTO``; Spark SQL's on a v2 table):
 
         * target rows whose key matches a source row are **updated**
-          (replaced by the source row) — or **deleted** with
-          ``when_matched='delete'``;
-        * source rows with no target match are **inserted**
-          (``insert_not_matched=False`` turns the merge into pure
-          UPDATE/DELETE semantics);
+          (replaced by the source row);
+        * source rows with no target match are **inserted**;
         * everything else is carried forward unchanged.
 
         ``source`` must have the target's columns (update replaces the
@@ -1466,10 +1367,6 @@ class SnapshotTable:
         retries on the new snapshot, so no concurrent commit is ever
         lost.
         """
-        if when_matched not in ('update', 'delete'):
-            raise ValueError(
-                f"when_matched must be 'update' or 'delete', "
-                f'got {when_matched!r}')
         key_cols = list(key_cols)
         # ONE source pass answers both preconditions: key uniqueness
         # (max group count) and the key envelope for file-level target
@@ -1495,16 +1392,13 @@ class SnapshotTable:
             if lo is not None and hi is not None:
                 key_filters.append((k, '>=', lo))
                 key_filters.append((k, '<=', hi))
-        for _attempt in range(_REWRITE_RETRIES):
-            base_version = self.current_version()
-            base_manifest = self.snapshot(base_version)
-            files0 = base_manifest['files']
-            if not files0:
-                if not insert_not_matched:
-                    return base_version
-                # empty table: the merge degenerates to an insert-only
-                # append (nothing to rewrite, ordinary optimistic commit)
-                return self.append(source, partition_col=partition_col)
+        if not self._doc_has_files(self._snapshot_doc()):
+            # empty table: the merge degenerates to an insert-only
+            # append (nothing to rewrite, ordinary optimistic commit)
+            return self.append(source, partition_col=partition_col)
+
+        def derive(base):
+            files0 = base['files']
             # a file whose key range cannot intersect the source's
             # envelope provably holds no matched row — carry it forward
             touched = [f for f in files0
@@ -1512,73 +1406,35 @@ class SnapshotTable:
             touched_paths = {f['path'] for f in touched}
             untouched = [f for f in files0
                          if f['path'] not in touched_paths]
-            part_values = {f.get('partition') for f in files0}
-            if part_values != {None} and partition_col is None:
-                raise ValueError(
-                    'table is partitioned — pass partition_col so the '
-                    'rewrite keeps manifest partition values')
-            schema_json = base_manifest.get('schema')
+            schema_json = base.get('schema')
             target_cols = [
                 fld['name'] for fld in
                 json.loads(schema_json)['fields']] if schema_json else \
-                self.read(spark, base_version).columns
+                self.read(spark, base['version']).columns
             missing = [c for c in target_cols if c not in source.columns]
             if missing:
                 raise ValueError(
                     f'merge_into: source lacks target columns {missing}')
-            if not touched:
-                # no target file can match: pure insert (or no-op)
-                if not insert_not_matched:
-                    return base_version
-                entries, schema = self._stage(
-                    source.select(*target_cols), partition_col,
-                    partition_transform=base_manifest.get(
-                        'partition_transform'))
-            else:
+            # with no touched file the merge is a pure insert
+            merged = source.select(*target_cols)
+            if touched:
                 # merge-on-read: apply pending equality deletes before
                 # rewriting, so rewritten files (new seq, exempt from
                 # older deletes) cannot resurrect key-deleted rows
-                target = self._read_files_mor(spark, touched,
-                                              base_manifest)
-                kept = target.join(source.select(*key_cols), key_cols,
-                                   'left_anti')
-                if when_matched == 'update':
-                    incoming = (source if insert_not_matched
-                                else source.join(
-                                    target.select(*key_cols),
-                                    key_cols, 'left_semi'))
-                else:  # matched rows deleted
-                    incoming = (source.join(target.select(*key_cols),
-                                            key_cols, 'left_anti')
-                                if insert_not_matched
-                                else source.limit(0))
-                merged = kept.unionByName(incoming.select(*target_cols))
-                entries, schema = self._stage(
-                    merged, partition_col,
-                    partition_transform=base_manifest.get(
-                        'partition_transform'))
-            expected = sorted(f['path'] for f in files0)
-
-            def apply(base):
-                if sorted(f['path'] for f in base) != expected:
-                    raise _CompactConflict
-                return untouched + entries
-
-            try:
-                # evolve validates the staged schema against the base
-                # additively — load-bearing for the pruned pure-insert
-                # path, whose staged schema derives from the SOURCE
-                # frame (a retyped source column must fail the commit,
-                # not silently re-type files carried forward)
-                return self._commit(
-                    'merge', entries, schema, apply=apply, evolve=True,
-                    validate=self._deletes_unchanged_validator(
-                        base_manifest))
-            except _CompactConflict:
-                self._delete_entries(entries)
-                continue
-        raise CommitConflict(
-            f'merge_into: base kept changing for {_REWRITE_RETRIES} attempts')
+                target = self._read_files_mor(spark, touched, base)
+                merged = target.join(source.select(*key_cols), key_cols,
+                                     'left_anti').unionByName(merged)
+            entries, schema = self._stage(
+                merged, partition_col,
+                partition_transform=base.get('partition_transform'))
+            # evolve validates the staged schema against the base
+            # additively — load-bearing for the pruned pure-insert
+            # path, whose staged schema derives from the SOURCE frame
+            # (a retyped source column must fail the commit, not
+            # silently re-type files carried forward)
+            return dict(entries=entries, schema=schema, evolve=True,
+                        apply=lambda _files: untouched + entries)
+        return self._rewrite('merge_into', 'merge', derive, partition_col)
 
     # -- maintenance --------------------------------------------------------
 
@@ -1627,39 +1483,29 @@ class SnapshotTable:
         cost to each (Delta's OPTIMIZE ZORDER BY). The z-value is a
         transient sort key — it is dropped before staging, never
         stored."""
-        for _attempt in range(_REWRITE_RETRIES):
-            base_version = self.current_version()
-            base_manifest = self.snapshot(base_version)
-            files0 = base_manifest['files']
-            if not files0:
-                return base_version
+        if cluster_by and zorder_by:
+            raise ValueError(
+                'cluster_by and zorder_by are mutually exclusive')
+
+        def derive(base):
+            files0 = base['files']
             part_values = {f.get('partition') for f in files0}
-            if part_values != {None} and partition_col is None:
-                raise ValueError(
-                    'table is partitioned — pass partition_col so the '
-                    'rewrite keeps manifest partition values')
             target_total = (len(part_values) if partition_col
                             else target_partitions)
-            if cluster_by and zorder_by:
-                raise ValueError(
-                    'cluster_by and zorder_by are mutually exclusive')
-            pending_deletes = bool(base_manifest.get('deletes'))
             if (len(files0) <= target_total and not (cluster_by
                                                      or zorder_by)
-                    and not pending_deletes):
-                return base_version  # nothing to gain; do not copy data
-            # read() applies pending equality deletes (merge-on-read),
-            # so this rewrite MATERIALIZES them; the commit below
-            # drops the delete entries and expire_snapshots reclaims
-            # the delete parquet
-            df = self.read(spark, base_version)  # pinned to files0
+                    and not base.get('deletes')):
+                return None  # nothing to gain; do not copy data
+            # the merge-on-read scan applies pending deletes, so this
+            # rewrite MATERIALIZES them; the commit below drops the
+            # delete entries and expire_snapshots reclaims the delete
+            # parquet
+            df = self._read_files_mor(spark, files0, base)
             cluster_cols = list(cluster_by) if cluster_by else None
-            drop_z = False
             if zorder_by:
                 df = df.withColumn('__zv',
                                    zorder_expr(df, list(zorder_by)))
                 cluster_cols = ['__zv']
-                drop_z = True
             if cluster_cols:
                 sort_cols = [F.col(c) for c in cluster_cols]
                 if partition_col is not None:
@@ -1679,30 +1525,15 @@ class SnapshotTable:
                 df = df.repartition(F.col(partition_col))
             else:
                 df = df.repartition(target_partitions)
-            if drop_z:
+            if zorder_by:
                 df = df.drop('__zv')  # transient sort key, never stored
             entries, schema = self._stage(
                 df, partition_col,
-                partition_transform=base_manifest.get(
-                    'partition_transform'))
-            expected = sorted(f['path'] for f in files0)
-
-            def apply(base):
-                if sorted(f['path'] for f in base) != expected:
-                    raise _CompactConflict
-                return list(entries)
-
-            try:
-                return self._commit(
-                    'compact', entries, schema, apply=apply,
-                    apply_deletes=lambda base: [],
-                    validate=self._deletes_unchanged_validator(
-                        base_manifest))
-            except _CompactConflict:
-                self._delete_entries(entries)  # stale rewrite
-                continue
-        raise CommitConflict(
-            f'compact: base kept changing for {_REWRITE_RETRIES} attempts')
+                partition_transform=base.get('partition_transform'))
+            return dict(entries=entries, schema=schema,
+                        apply=lambda _files: list(entries),
+                        apply_deletes=lambda _dels: [])
+        return self._rewrite('compact', 'compact', derive, partition_col)
 
     def remove_orphans(self, older_than_sec: float = 3600.0
                        ) -> List[str]:
@@ -1725,9 +1556,7 @@ class SnapshotTable:
             referenced |= {f['path'] for f in m['files']}
             referenced |= {d['path']
                            for d in (m.get('deletes') or [])}
-            referenced |= {mf['path'] for mf in
-                           (self._snapshot_doc(v).get('manifest_list')
-                            or [])}
+            referenced |= {mf['path'] for mf in m['manifest_list']}
         now = time.time()
         removed: List[str] = []
         for name in sorted(os.listdir(self.data_dir)):
@@ -1800,18 +1629,15 @@ class SnapshotTable:
                 live.add(f['path'])
             for dl in (kept_manifest.get('deletes') or []):
                 live.add(dl['path'])  # pending delete files are live
-            for m in (self._snapshot_doc(v).get('manifest_list')
-                      or []):
+            for m in kept_manifest['manifest_list']:
                 live.add(m['path'])  # shared manifest files are live
         deleted = []
         for v in versions:
             if v in keep:
                 continue
             manifest = self.snapshot(v)
-            expired_mfs = [
-                {'path': m['path']}
-                for m in (self._snapshot_doc(v).get('manifest_list')
-                          or [])]
+            expired_mfs = [{'path': m['path']}
+                           for m in manifest['manifest_list']]
             for f in (manifest['files']
                       + list(manifest.get('deletes') or [])
                       + expired_mfs):
@@ -2020,7 +1846,8 @@ class SnapshotTable:
         return meta.num_rows, _column_stats(meta)
 
     def _commit(self, operation: str, entries, schema,
-                apply: Callable[[List[dict]], List[dict]],
+                apply: Optional[
+                    Callable[[List[dict]], List[dict]]] = None,
                 tag: Optional[str] = None,
                 evolve: bool = False,
                 validate: Optional[Callable[[], bool]] = None,
@@ -2049,16 +1876,16 @@ class SnapshotTable:
         structural — ``'append'`` (base + entries) or ``'identity'``
         (base unchanged; e.g. a delete-keys commit, which only adds a
         delete file) — so the manifest list carries forward wholesale
-        and ``apply`` (kept for the legacy inline-files fallback) never
-        materializes the base: the commit is O(entries), not O(table
-        files). A 1-row takedown on a 1M-file table writes one delete
-        file and one snapshot doc."""
+        and no ``apply`` materializes the base: the commit is
+        O(entries), not O(table files). A 1-row takedown on a 1M-file
+        table writes one delete file and one snapshot doc. Every other
+        commit passes ``apply``, which maps the base file list to the
+        new one."""
+        fast = list_op is not None
         for _attempt in range(self.max_commit_retries):
             base_version = self.current_version()
-            base = self._snapshot_doc(base_version)
-            fast = list_op is not None and 'files' not in base
-            if not fast:
-                base = self.snapshot(base_version)
+            base = (self._snapshot_doc(base_version) if fast
+                    else self.snapshot(base_version))
             if validate is not None and not validate():
                 self._delete_entries(entries)
                 raise _CompactConflict
@@ -2095,7 +1922,7 @@ class SnapshotTable:
             # flat file list: unchanged manifests carry by reference,
             # so this commit writes O(entries it touched)
             if fast:
-                base_mlist = list(base.get('manifest_list') or [])
+                base_mlist = list(base['manifest_list'])
                 if list_op == 'append' and entries:
                     ml_new, written = self._pack_manifests(entries)
                     mlist = base_mlist + ml_new
@@ -2110,7 +1937,7 @@ class SnapshotTable:
             else:
                 new_files = apply(list(base['files']))
                 mlist, written = self._pack_manifests(
-                    new_files, base.get('manifest_list'))
+                    new_files, base['manifest_list'])
                 old = {f['path']: f['rows'] for f in base['files']}
                 new = {f['path']: f['rows'] for f in new_files}
                 summary = {
@@ -2302,22 +2129,23 @@ class SnapshotTable:
 
 def refresh_incremental(spark: SparkSession, source: SnapshotTable,
                         sink: SnapshotTable, transform,
+                        key_cols: Sequence[str],
                         name: str = 'mv',
                         partition_col: Optional[str] = None
                         ) -> Optional[int]:
-    """Exactly-once incremental maintenance of an append-only derived
-    table (a materialized view): read the source rows added since the
-    last refresh, apply ``transform`` (row-wise: filter / project /
-    extract — an append-only source maps to an append-only view), and
-    append the result to ``sink``.
+    """Exactly-once incremental maintenance of a derived table (a
+    materialized view): read the source's ``read_changelog`` since the
+    last refresh, apply the row-wise ``transform`` (filter / project /
+    extract) to the window's net inserts, and commit the result to
+    ``sink``.
 
     The consumer cursor IS the sink's commit tag (``<name>@<source
-    version>``): the data append and the cursor advance are one atomic
-    tagged commit, so a crash anywhere — or a concurrent duplicate
-    refresher — replays as a no-op and can neither skip nor
-    double-apply a batch. No offset file, no two-phase dance: the same
-    shape as the streaming ingester's tagged foreachBatch, driven by
-    table versions instead of micro-batches.
+    version>``): the data and the cursor advance are one atomic tagged
+    commit, so a crash anywhere — or a concurrent duplicate refresher —
+    replays as a no-op and can neither skip nor double-apply a batch.
+    No offset file, no two-phase dance: the same shape as the
+    streaming ingester's tagged foreachBatch, driven by table versions
+    instead of micro-batches.
 
     Concurrent refreshers that observed DIFFERENT source heads carry
     different tags, so tag idempotence alone cannot serialize them
@@ -2325,53 +2153,7 @@ def refresh_incremental(spark: SparkSession, source: SnapshotTable,
     double-apply). The commit therefore re-validates ``last_consumed
     == lo`` on every attempt, atomically with the version claim: the
     loser's staged files are reclaimed and the refresh re-derives the
-    cursor, appending only the truly-unread remainder.
-
-    A rewrite commit (delete / merge / compact) inside the unread
-    window raises via ``read_changes`` — the view must then be rebuilt
-    with ``sink.overwrite(transform(source.read(spark)))``, which is
-    exactly Iceberg/Delta's incremental-view contract.
-
-    Returns the sink version committed, or None when already current.
-    """
-    for _attempt in range(10):
-        hi = source.current_version()
-        lo = sink.last_consumed(name)
-        if hi <= lo:
-            return None
-        batch = source.read_changes(spark, lo, hi)
-        if batch is None:
-            return None  # empty window: nothing staged, cursor re-derives
-        sink_tf = sink._snapshot_doc().get('partition_transform')
-        entries, schema = sink._stage(
-            transform(batch), partition_col,
-            partition_transform=sink_tf)
-        try:
-            return sink._commit(
-                'append', entries, schema,
-                apply=lambda base: base + entries,
-                tag=f'{name}@{hi}', evolve=True,
-                validate=lambda: (
-                    sink.last_consumed(name) == lo
-                    and sink._snapshot_doc().get('partition_transform')
-                    == sink_tf),
-                list_op='append')
-        except _CompactConflict:
-            continue  # cursor moved under us: recompute the window
-    raise CommitConflict(
-        f'refresh_incremental({name}): cursor kept moving')
-
-
-def refresh_incremental_cdc(spark: SparkSession, source: SnapshotTable,
-                            sink: SnapshotTable, transform,
-                            key_cols: Sequence[str],
-                            name: str = 'mv',
-                            partition_col: Optional[str] = None
-                            ) -> Optional[int]:
-    """Exactly-once incremental view maintenance over a MUTATING
-    source: consumes ``read_changelog`` (inserts AND merge-on-read
-    deletes), where ``refresh_incremental`` would raise on the first
-    delete commit in the window.
+    cursor, committing only the truly-unread remainder.
 
     ``key_cols`` must be a PRIMARY KEY of the source (unique per
     visible state) — the standard CDC-upsert-stream contract. Deletes
@@ -2379,27 +2161,28 @@ def refresh_incremental_cdc(spark: SparkSession, source: SnapshotTable,
     row-level source delete (e.g. ``delete_positions`` hitting one of
     two rows sharing the key) over-delete the other row's sink
     derivative; with a unique key, key-deletes and row-deletes
-    coincide. Row-wise ``transform`` must PRESERVE ``key_cols`` (sink
-    rows correspond to source rows on them — checked). Per window:
+    coincide. ``transform`` must PRESERVE ``key_cols`` (checked).
 
-    * The batch's NET insert set: insert events not followed (by
-      ``_commit_version``) by a delete of the same key — an insert
-      whose key the window later deletes must not reach the sink, a
-      delete-then-reinsert must.
-    * Delete events become ONE equality-delete file on ``key_cols``.
-    * Both commit in a SINGLE atomic claim (apply adds the data files,
-      apply_deletes adds the delete file, the ``<name>@<hi>`` cursor
-      tag rides the same commit) — a crash can never apply half a
-      batch. Data-sequence semantics make the combined commit correct:
-      the delete file and this batch's data files share one seq, and
-      deletes apply only strictly-later (``d.seq > f.seq``), so the
-      batch's own inserts survive its own deletes while every
-      previously-synced row with a deleted key dies merge-on-read.
+    * A window of appends only commits the transformed inserts as a
+      plain ``append`` (no delete-key aggregate, no join, no delete
+      file), so the view's own history stays a changelog source.
+    * A window with a merge-on-read delete commits ``cdc-refresh``:
+      the NET insert set (insert events not followed, by
+      ``_commit_version``, by a delete of the same key — a
+      delete-then-reinsert survives) plus ONE equality-delete file on
+      ``key_cols``, in a SINGLE atomic claim. The delete file and the
+      batch's data files share one seq and deletes apply only to
+      strictly-earlier seqs, so the batch's own inserts survive while
+      every previously-synced row with a deleted key dies
+      merge-on-read. Run ``sink.compact()`` periodically, like any
+      merge-on-read consumer.
+    * A rewrite commit (overwrite / replace_partitions / delete /
+      merge / compact) in the window raises via ``read_changelog`` —
+      the view must then be rebuilt with
+      ``sink.overwrite(transform(source.read(spark)))``, which is
+      exactly Iceberg/Delta's incremental-view contract.
 
     Returns the sink version committed, or None when already current.
-    The sink accumulates pending delete files at refresh cadence —
-    run ``sink.compact()`` periodically, exactly like any
-    merge-on-read consumer.
     """
     key_cols = list(key_cols)
     for _attempt in range(10):
@@ -2410,47 +2193,53 @@ def refresh_incremental_cdc(spark: SparkSession, source: SnapshotTable,
         log = source.read_changelog(spark, lo, hi)
         if log is None:
             return None  # empty window: cursor re-derives next call
-        dels = log.where(F.col('_change_type') == 'delete')
-        last_del = (dels.groupBy(*key_cols)
-                    .agg(F.max('_commit_version').alias('__last_del')))
-        ins = log.where(F.col('_change_type') == 'insert')
-        survivors = (ins.join(F.broadcast(last_del), key_cols, 'left')
-                     .where(F.col('__last_del').isNull()
-                            | (F.col('_commit_version')
-                               > F.col('__last_del')))
-                     .drop('__last_del', '_change_type',
-                           '_commit_version'))
-        new_rows = transform(survivors)
+        # read_changelog validated the chain lo+1..hi, so its
+        # operations say on the driver whether any delete is in it
+        mutating = any(source._snapshot_doc(v)['operation'] != 'append'
+                       for v in range(lo + 1, hi + 1))
+        rows = log
+        if mutating:
+            dels = log.where(F.col('_change_type') == 'delete')
+            last_del = (dels.groupBy(*key_cols)
+                        .agg(F.max('_commit_version').alias('__last_del')))
+            rows = (log.where(F.col('_change_type') == 'insert')
+                    .join(F.broadcast(last_del), key_cols, 'left')
+                    .where(F.col('__last_del').isNull()
+                           | (F.col('_commit_version')
+                              > F.col('__last_del')))
+                    .drop('__last_del'))
+        new_rows = transform(rows.drop('_change_type', '_commit_version'))
         missing = [k for k in key_cols if k not in new_rows.columns]
         if missing:
             raise ValueError(
-                f'refresh_incremental_cdc: transform dropped key '
-                f'columns {missing} — deletes could not be propagated')
+                f'refresh_incremental: transform dropped key columns '
+                f'{missing} — deletes could not be propagated')
         sink_tf = sink._snapshot_doc().get('partition_transform')
         entries, schema = sink._stage(
             new_rows, partition_col, partition_transform=sink_tf)
-        data_entries = [e for e in entries if e['rows'] > 0]
         sink._delete_entries(  # empty stagings: reclaim, don't commit
             [e for e in entries if e['rows'] == 0])
-        del_entry = sink._stage_delete_file(
-            dels.select(*key_cols).dropDuplicates(), key_cols)
-        staged = data_entries + ([del_entry] if del_entry else [])
-
-        def apply(base, de=data_entries):
-            return base + de
-
-        def apply_deletes(base, d=del_entry):
-            return base + [d] if d else base
+        entries = [e for e in entries if e['rows'] > 0]
+        if mutating:
+            del_entry = sink._stage_delete_file(
+                dels.select(*key_cols).dropDuplicates(), key_cols)
+            new_deletes = [del_entry] if del_entry else []
+            commit = dict(operation='cdc-refresh',
+                          entries=entries + new_deletes,
+                          apply=lambda base: base + entries,
+                          apply_deletes=lambda base: base + new_deletes)
+        else:
+            commit = dict(operation='append', entries=entries,
+                          list_op='append')
         try:
             return sink._commit(
-                'cdc-refresh', staged, schema,
-                apply=apply, apply_deletes=apply_deletes,
-                tag=f'{name}@{hi}', evolve=True,
+                schema=schema, tag=f'{name}@{hi}', evolve=True,
                 validate=lambda: (
                     sink.last_consumed(name) == lo
                     and sink._snapshot_doc().get('partition_transform')
-                    == sink_tf))
+                    == sink_tf),
+                **commit)
         except _CompactConflict:
             continue  # cursor moved under us: recompute the window
     raise CommitConflict(
-        f'refresh_incremental_cdc({name}): cursor kept moving')
+        f'refresh_incremental({name}): cursor kept moving')

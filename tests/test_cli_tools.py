@@ -118,12 +118,23 @@ def test_snapshot_admin_metadata_and_changelog(spark, tmp_path, capsys):
     out = capsys.readouterr().out
     assert 'inserts: 8' in out and 'deletes: 1' in out
 
-    # a rewrite in the window surfaces as an error, not a stack trace?
-    # (the CLI propagates the ValueError — callers see the message)
     t.delete_positions(spark, F.col('doc_id') == 6)
     assert snapshot_admin.main([root, 'changelog', '--from', '2']) == 0
     out = capsys.readouterr().out
     assert 'deletes: 1' in out
+
+    # a request the table rejects ends in one error line, not a trace
+    assert snapshot_admin.main([root, 'compact']) == 1
+    err = capsys.readouterr().err
+    assert 'error: table is partitioned' in err
+    assert 'Traceback' not in err
+    assert snapshot_admin.main(
+        [root, 'compact', '--partition-col', 'bucket']) == 0
+    capsys.readouterr()
+    assert snapshot_admin.main([root, 'changelog', '--from', '0']) == 1
+    err = capsys.readouterr().err
+    assert "error: read_changelog: snapshot v4 is a 'compact'" in err
+    assert 'Traceback' not in err
 
     # not-a-table guard
     assert snapshot_admin.main([str(tmp_path), 'log']) == 1

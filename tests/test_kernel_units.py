@@ -451,3 +451,94 @@ def test_uax29_cjk_dict_opt_in():
     assert toks('中国人民', 'zh_dict') == ['中国', '人民']
     # Latin context around Han runs keeps root segmentation
     assert toks('see 中国 now', 'zh_dict') == ['see', '中国', 'now']
+
+
+# --- kernel branches the gate synthesizers never produce --------------------
+# Expected values worked by hand from the reference semantics: forward
+# y-flip y' = page_h - y, proportional char split x0 + w*i//n
+# (lib/text_zones.py:193-199); inverse char slices int(x0 + w*i/n + 0.5)
+# and word titles carrying ``bboxes`` (lib/cli/djvu2hocr.py:146-185).
+
+_HOCR_HEAD = ('<html><head><meta name="ocr-capabilities" '
+              'content="ocr_line ocrx_word"/></head><body>'
+              '<div class="ocr_page" title="bbox 0 0 100 50">')
+_HOCR_TAIL = '</div></body></html>'
+
+
+def test_hocr_word_holding_char_zones_or_inline_text():
+    # a word whose children are char-level zones (nested leaf words)
+    # passes them through to the line's regrouping; a word whose text
+    # sits in an inline element is one unsplit char zone
+    from ocrodjvu_spark.kernel import hocr
+    doc = (_HOCR_HEAD
+           + '<span class="ocr_line" title="bbox 10 10 60 20">'
+           '<span class="ocrx_word" title="bbox 10 10 30 20">'
+           '<span class="ocrx_word" title="bbox 10 10 20 20">a</span>'
+           '<span class="ocrx_word" title="bbox 20 10 30 20">b</span>'
+           '</span> <span class="ocrx_word" title="bbox 40 10 60 20">'
+           '<strong>cd</strong></span></span>' + _HOCR_TAIL)
+    line = ['line', 10, 30, 60, 40]
+    assert hocr.extract_sexprs(doc, details=ZONE_WORD) == [
+        ['page', 0, 0, 100, 50, line + [
+            ['word', 10, 30, 30, 40, 'ab'],
+            ['word', 40, 30, 60, 40, 'cd']]]]
+    assert hocr.extract_sexprs(doc, details=ZONE_CHARACTER) == [
+        ['page', 0, 0, 100, 50, line + [
+            ['word', 10, 30, 30, 40, ['char', 10, 30, 20, 40, 'a'],
+             ['char', 20, 30, 30, 40, 'b']],
+            ['word', 40, 30, 60, 40, ['char', 40, 30, 50, 40, 'c'],
+             ['char', 50, 30, 60, 40, 'd']]]]]
+    # a boxless word over boxed char zones passes them through; a
+    # boxless word holding only text has no box to give it
+    boxless = (_HOCR_HEAD
+               + '<span class="ocr_line" title="bbox 10 10 60 20">'
+               '<span class="ocrx_word">'
+               '<span class="ocrx_word" title="bbox 10 10 20 20">a</span>'
+               '<span class="ocrx_word" title="bbox 20 10 30 20">b</span>'
+               '</span></span>' + _HOCR_TAIL)
+    assert hocr.extract_sexprs(boxless) == [
+        ['page', 0, 0, 100, 50, line + [['word', 10, 30, 30, 40, 'ab']]]]
+    with pytest.raises(hocr.MalformedHocr, match='without bounding box'):
+        hocr.extract_sexprs(
+            _HOCR_HEAD + '<span class="ocr_line" title="bbox 10 10 60 20">'
+            '<span class="ocrx_word"><em>x</em></span></span>' + _HOCR_TAIL)
+
+
+def test_hocr_boxless_lines_dropped_or_rejected():
+    # OCRopus 0.2 omits boxes on childless zones, and a box-less zone
+    # holding one blank string is noise: both vanish
+    # (lib/hocr.py:356-367); a box-less zone with real text raises
+    from ocrodjvu_spark.kernel import hocr
+    doc = (_HOCR_HEAD
+           + '<span class="ocr_line">ghost</span>'
+           '<span class="ocr_line"><span> </span></span>'
+           '<span class="ocr_line" title="bbox 10 10 60 20">'
+           '<span class="ocrx_word" title="bbox 10 10 30 20">ab</span>'
+           '</span>' + _HOCR_TAIL)
+    assert hocr.extract_sexprs(doc) == [
+        ['page', 0, 0, 100, 50,
+         ['line', 10, 30, 60, 40, ['word', 10, 30, 30, 40, 'ab']]]]
+    with pytest.raises(hocr.MalformedHocr,
+                       match='text zone without bounding box'):
+        hocr.extract_sexprs(_HOCR_HEAD + '<span class="ocr_line">'
+                            '<em>real</em></span>' + _HOCR_TAIL)
+
+
+def test_djvu_char_zones_to_hocr_words():
+    # char-level zones re-segment into word spans whose titles carry
+    # the union box and per-char ``bboxes``; a multi-char zone is
+    # sliced proportionally; a non-final word keeps its space tail
+    from ocrodjvu_spark.kernel import hocr_emit
+    page = ['page', 0, 0, 100, 50,
+            ['line', 10, 30, 60, 40,
+             ['word', 10, 30, 30, 40, ['char', 10, 30, 20, 40, 'a'],
+              ['char', 20, 30, 30, 40, 'b']],
+             ['word', 40, 30, 60, 40, ['char', 40, 30, 60, 40, 'cd']]]]
+    assert hocr_emit.sexpr_to_hocr_page(page, 100, 50) == (
+        '<div class="ocr_page" title="bbox 0 0 100 50">'
+        '<span class="ocrx_line" title="bbox 10 10 60 20">'
+        '<span class="ocrx_word" '
+        'title="bbox 10 10 30 20; bboxes 10 10 20 20, 20 10 30 20">ab'
+        '</span> <span class="ocrx_word" '
+        'title="bbox 40 10 60 20; bboxes 40 10 50 20, 50 10 60 20">cd'
+        '</span></span>\n</div>\n')

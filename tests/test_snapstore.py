@@ -481,39 +481,6 @@ def test_merge_into_upsert_updates_and_inserts(spark, tmp_path):
     assert {r.ver for r in pre.select('ver').distinct().collect()} == {'a'}
 
 
-def test_merge_into_update_only(spark, tmp_path):
-    t = SnapshotTable(str(tmp_path / 't'))
-    t.append(_docs(spark, 'a', n=10))
-    src = _docs(spark, 'b', n=16)
-    t.merge_into(spark, src, ['doc_id'], insert_not_matched=False)
-    got = t.read(spark)
-    assert got.count() == 10  # no inserts
-    assert {r.ver for r in got.select('ver').distinct().collect()} == {'b'}
-
-
-def test_merge_into_matched_delete(spark, tmp_path):
-    t = SnapshotTable(str(tmp_path / 't'))
-    t.append(_docs(spark, 'a', n=10))
-    # source rows 6..11: 6..9 match -> deleted, 10..11 -> inserted
-    src = _docs(spark, 'b', n=12).where(F.col('doc_id') >= 6)
-    t.merge_into(spark, src, ['doc_id'], when_matched='delete')
-    got = t.read(spark).collect()
-    ids = sorted(r.doc_id for r in got)
-    assert ids == [0, 1, 2, 3, 4, 5, 10, 11]
-    vers = {r.doc_id: r.ver for r in got}
-    assert vers[10] == 'b' and vers[0] == 'a'
-
-
-def test_merge_into_matched_delete_no_insert(spark, tmp_path):
-    t = SnapshotTable(str(tmp_path / 't'))
-    t.append(_docs(spark, 'a', n=10))
-    src = _docs(spark, 'b', n=12).where(F.col('doc_id') >= 6)
-    t.merge_into(spark, src, ['doc_id'], when_matched='delete',
-                 insert_not_matched=False)
-    ids = sorted(r.doc_id for r in t.read(spark).collect())
-    assert ids == [0, 1, 2, 3, 4, 5]
-
-
 def test_merge_into_ambiguous_source_raises(spark, tmp_path):
     t = SnapshotTable(str(tmp_path / 't'))
     t.append(_docs(spark, 'a', n=4))
@@ -693,12 +660,6 @@ def test_merge_into_disjoint_source_is_pure_insert(spark, tmp_path):
     after = {f['path'] for f in t.snapshot()['files']}
     assert before <= after  # nothing rewritten: every base file carried
     assert t.read(spark).count() == 35
-    # ...and with insert_not_matched=False the merge is a no-op commit
-    v = t.current_version()
-    src2 = spark.createDataFrame(
-        [Row(doc_id=i, bucket=i % 4, ver='c') for i in range(200, 203)])
-    assert t.merge_into(spark, src2, ['doc_id'],
-                        insert_not_matched=False) == v
 
 
 def test_delete_where_prune_filters_carry_files_forward(spark, tmp_path):
@@ -729,7 +690,8 @@ def test_delete_where_prune_no_match_is_noop(spark, tmp_path):
 # -- incremental (CDC) append scans -----------------------------------------
 
 
-def test_read_changes_returns_only_appended_rows(spark, tmp_path):
+def test_changelog_append_window_inserts_are_appended_rows(
+        spark, tmp_path):
     t = SnapshotTable(str(tmp_path / 't'))
     t.append(_docs(spark, 'a', n=10))
     v1 = t.current_version()
@@ -737,33 +699,14 @@ def test_read_changes_returns_only_appended_rows(spark, tmp_path):
         [Row(doc_id=i, bucket=i % 4, ver='b') for i in range(10, 16)]))
     t.append(spark.createDataFrame(
         [Row(doc_id=i, bucket=i % 4, ver='c') for i in range(16, 20)]))
-    got = t.read_changes(spark, v1)
-    assert sorted(r.doc_id for r in got.collect()) == list(range(10, 20))
+    got = t.read_changelog(spark, v1).collect()
+    assert {r._change_type for r in got} == {'insert'}
+    assert sorted(r.doc_id for r in got) == list(range(10, 20))
     # a narrower window sees only its own snapshot's additions
-    mid = t.read_changes(spark, v1, to_version=v1 + 1)
+    mid = t.read_changelog(spark, v1, to_version=v1 + 1)
     assert {r.ver for r in mid.select('ver').distinct().collect()} == {'b'}
-
-
-def test_read_changes_empty_and_bad_ranges(spark, tmp_path):
-    t = SnapshotTable(str(tmp_path / 't'))
-    t.append(_docs(spark, 'a', n=5))
-    v = t.current_version()
-    assert t.read_changes(spark, v) is None  # nothing after HEAD
     with pytest.raises(ValueError, match='newer than'):
-        t.read_changes(spark, v + 3, to_version=v)
-
-
-def test_read_changes_rejects_rewrite_history(spark, tmp_path):
-    t = SnapshotTable(str(tmp_path / 't'))
-    t.append(_docs(spark, 'a', n=10))
-    v1 = t.current_version()
-    t.delete_where(spark, F.col('doc_id') >= 8)
-    t.append(_docs(spark, 'b', n=3))
-    with pytest.raises(ValueError, match="'delete'"):
-        t.read_changes(spark, v1)
-    # but a window that spans only appends still works
-    got = t.read_changes(spark, v1 + 1)
-    assert {r.ver for r in got.select('ver').distinct().collect()} == {'b'}
+        t.read_changelog(spark, v1 + 3, to_version=v1)
 
 
 # -- additive schema evolution ----------------------------------------------
@@ -781,8 +724,9 @@ def test_append_adds_column_old_files_read_null(spark, tmp_path):
     assert all(rows[i] is None for i in range(6))
     assert all(rows[i] == 'en' for i in range(6, 10))
     # the incremental scan of the new batch carries the evolved schema
-    changes = t.read_changes(spark, 1)
-    assert set(changes.columns) == {'doc_id', 'bucket', 'ver', 'lang'}
+    changes = t.read_changelog(spark, 1)
+    assert set(changes.columns) == {'doc_id', 'bucket', 'ver', 'lang',
+                                    '_change_type', '_commit_version'}
 
 
 def test_append_dropping_or_retyping_column_raises(spark, tmp_path):
@@ -860,17 +804,18 @@ def test_refresh_incremental_exactly_once(spark, tmp_path):
     transform = lambda df: df.where(F.col('doc_id') % 2 == 0) \
         .select('doc_id', 'ver')
     src.append(_docs(spark, 'a', n=10))
-    assert refresh_incremental(spark, src, mv, transform) is not None
+    key = ['doc_id']
+    assert refresh_incremental(spark, src, mv, transform, key) is not None
     assert sorted(r.doc_id for r in mv.read(spark).collect()) == \
         [0, 2, 4, 6, 8]
     # already current: no-op, no new sink version
     v = mv.current_version()
-    assert refresh_incremental(spark, src, mv, transform) is None
+    assert refresh_incremental(spark, src, mv, transform, key) is None
     assert mv.current_version() == v
     # second source batch refreshes incrementally (only new rows read)
     src.append(spark.createDataFrame(
         [Row(doc_id=i, bucket=i % 4, ver='b') for i in range(10, 14)]))
-    refresh_incremental(spark, src, mv, transform)
+    refresh_incremental(spark, src, mv, transform, key)
     got = {(r.doc_id, r.ver) for r in mv.read(spark).collect()}
     assert got == {(0, 'a'), (2, 'a'), (4, 'a'), (6, 'a'), (8, 'a'),
                    (10, 'b'), (12, 'b')}
@@ -881,10 +826,11 @@ def test_refresh_incremental_replay_is_idempotent(spark, tmp_path):
     src = SnapshotTable(str(tmp_path / 'src'))
     mv = SnapshotTable(str(tmp_path / 'mv'))
     src.append(_docs(spark, 'a', n=6))
-    v1 = refresh_incremental(spark, src, mv, lambda df: df)
+    v1 = refresh_incremental(spark, src, mv, lambda df: df, ['doc_id'])
     # a crashed refresher restarts and replays the SAME window: the
     # tagged append dedupes, so no rows double-apply
-    assert refresh_incremental(spark, src, mv, lambda df: df) is None
+    assert refresh_incremental(spark, src, mv, lambda df: df,
+                               ['doc_id']) is None
     assert mv.current_version() == v1
     assert mv.read(spark).count() == 6
 
@@ -894,11 +840,11 @@ def test_refresh_incremental_rejects_rewritten_window(spark, tmp_path):
     src = SnapshotTable(str(tmp_path / 'src'))
     mv = SnapshotTable(str(tmp_path / 'mv'))
     src.append(_docs(spark, 'a', n=6))
-    refresh_incremental(spark, src, mv, lambda df: df)
+    refresh_incremental(spark, src, mv, lambda df: df, ['doc_id'])
     src.delete_where(spark, F.col('doc_id') >= 4)
     src.append(_docs(spark, 'b', n=2))
-    with pytest.raises(ValueError, match='append-only'):
-        refresh_incremental(spark, src, mv, lambda df: df)
+    with pytest.raises(ValueError, match="'delete'"):
+        refresh_incremental(spark, src, mv, lambda df: df, ['doc_id'])
     # the documented fallback: full rebuild
     mv.overwrite(src.read(spark))
     assert mv.read(spark).count() == src.read(spark).count()
@@ -925,14 +871,13 @@ def test_refresh_incremental_racing_different_heads(spark, tmp_path):
             # separate handle (it never saw v2)
             a_mv = SnapshotTable(mv.root)
             a_src = SnapshotTable(src.root)
-            batch = a_src.read_changes(spark, 0, 1)
-            a_mv.append(batch, tag='mv@1')
+            a_mv.append(a_src.read(spark, version=1), tag='mv@1')
         return orig_claim(version, manifest)
 
     mv._claim_version = racing_claim
     # refresher B runs with the full window (0, v2]; it must lose the
     # race, re-derive lo=1, and append ONLY v2's rows
-    refresh_incremental(spark, src, mv, lambda df: df)
+    refresh_incremental(spark, src, mv, lambda df: df, ['doc_id'])
     got = mv.read(spark)
     assert got.count() == 7  # 4 + 3, no double-applied rows
     by_ver = {r.ver: r.n for r in
@@ -1105,13 +1050,13 @@ def test_refresh_stale_validate_cannot_slip_through(spark, tmp_path):
             raced['done'] = True
             # twin commits window (0, v1] AFTER we observed cursor 0
             twin = SnapshotTable(mv.root)
-            twin.append(SnapshotTable(src.root)
-                        .read_changes(spark, 0, 1), tag='mv@1')
+            twin.append(SnapshotTable(src.root).read(spark, version=1),
+                        tag='mv@1')
             return val  # stale answer: cursor still looked like 0
         return orig_last(name)
 
     mv.last_consumed = stale_last_consumed
-    refresh_incremental(spark, src, mv, lambda df: df)
+    refresh_incremental(spark, src, mv, lambda df: df, ['doc_id'])
     got = mv.read(spark)
     assert got.count() == 5  # 3 + 2, window prefix not double-applied
     by_ver = {r.ver: r.n for r in
@@ -1140,7 +1085,7 @@ def test_expire_preserves_tags_as_tombstones(spark, tmp_path):
     src = SnapshotTable(str(tmp_path / 'src'))
     mv = SnapshotTable(str(tmp_path / 'mv'))
     src.append(_docs(spark, 'a', n=4))
-    refresh_incremental(spark, src, mv, lambda df: df)
+    refresh_incremental(spark, src, mv, lambda df: df, ['doc_id'])
     mv.compact(spark)  # untagged commit on top of the tagged one
     mv.expire_snapshots(keep_last=1)
     # cursor survives expiry via the tombstone...
@@ -1148,7 +1093,8 @@ def test_expire_preserves_tags_as_tombstones(spark, tmp_path):
     assert fresh.last_consumed('mv') == 1
     assert fresh.find_tag('mv@1') == 1
     # ...so a refresh with no new source data stays a no-op
-    assert refresh_incremental(spark, src, fresh, lambda df: df) is None
+    assert refresh_incremental(spark, src, fresh, lambda df: df,
+                               ['doc_id']) is None
     assert fresh.read(spark).count() == 4
     # and a tagged APPEND replay after expiry is still idempotent
     v = fresh.current_version()
@@ -1508,17 +1454,6 @@ def test_merge_into_does_not_resurrect_key_deleted_rows(
     assert len(got) == 5
 
 
-def test_read_changes_rejects_delete_keys_window(spark, tmp_path):
-    t = SnapshotTable(str(tmp_path / 't'))
-    t.append(_docs(spark, 'a', n=3))
-    v1 = t.current_version()
-    t.delete_keys(spark, spark.createDataFrame([Row(doc_id=0)]),
-                  ['doc_id'])
-    t.append(_docs(spark, 'b', n=2))
-    with pytest.raises(ValueError, match='delete-keys'):
-        t.read_changes(spark, v1)
-
-
 # -- manifest list: per-partition manifest files ------------------------------
 # Iceberg spec §"Manifest lists" (https://iceberg.apache.org/spec/), the
 # amortization the single-JSON design documented as its seam: a commit
@@ -1594,28 +1529,6 @@ def test_expire_keeps_manifest_files_shared_with_live_version(
         assert os.path.exists(os.path.join(t.root, rel))
     fresh = SnapshotTable(str(tmp_path / 't'))
     assert fresh.read(spark).count() == 25
-
-
-def test_legacy_inline_files_snapshot_still_reads(spark, tmp_path):
-    import json as _json
-    t = SnapshotTable(str(tmp_path / 't'))
-    t.append(_docs(spark, 'v1'), partition_col='bucket')
-    # rewrite v1.json to the pre-manifest-list inline form
-    doc = t.snapshot(1)
-    inline = dict(doc)
-    inline.pop('manifest_list')
-    inline['files'] = [{k: v for k, v in e.items() if k != '__mf'}
-                       for e in doc['files']]
-    path = os.path.join(t.manifest_dir, 'v1.json')
-    with open(path, 'w', encoding='utf-8') as fh:
-        _json.dump(inline, fh)
-    fresh = SnapshotTable(str(tmp_path / 't'))
-    assert fresh.read(spark).count() == 20
-    assert fresh.read(spark, partition_values=[1]).count() == 5
-    # and a commit on top of the legacy snapshot packs a manifest list
-    fresh.append(_docs(spark, 'v2', n=4), partition_col='bucket')
-    assert 'manifest_list' in fresh._snapshot_doc(2)
-    assert fresh.read(spark).count() == 24
 
 
 # -- merge-on-read POSITION deletes (Iceberg v2 position delete files)
@@ -1880,7 +1793,7 @@ def test_refresh_incremental_cdc_tracks_mutating_source(
         spark, tmp_path):
     # key_cols is a PRIMARY KEY of the source (the CDC-upsert
     # contract) — every batch uses fresh or explicitly-reused ids
-    from ocrodjvu_spark.plans.snapstore import refresh_incremental_cdc
+    from ocrodjvu_spark.plans.snapstore import refresh_incremental
     src = SnapshotTable(str(tmp_path / 'src'))
     mv = SnapshotTable(str(tmp_path / 'mv'))
 
@@ -1893,18 +1806,18 @@ def test_refresh_incremental_cdc_tracks_mutating_source(
                  .select('doc_id', 'ver')
 
     src.append(batch(range(8), 'a'))
-    assert refresh_incremental_cdc(
+    assert refresh_incremental(
         spark, src, mv, transform, ['doc_id']) is not None
     assert _mv_state(spark, mv) == {(d, 'a') for d in (0, 2, 4, 6)}
     # idempotent replay: nothing new
-    assert refresh_incremental_cdc(
+    assert refresh_incremental(
         spark, src, mv, transform, ['doc_id']) is None
 
     # one window with a delete, a same-key REINSERT, and fresh inserts
     src.delete_keys(spark, spark.createDataFrame(
         [Row(doc_id=2), Row(doc_id=4)]), ['doc_id'])
     src.append(batch([2, 8, 9, 10], 'b'))  # 2 reborn as 'b'
-    assert refresh_incremental_cdc(
+    assert refresh_incremental(
         spark, src, mv, transform, ['doc_id']) is not None
     want = {(r.doc_id, r.ver)
             for r in transform(src.read(spark)).collect()}
@@ -1918,7 +1831,7 @@ def test_refresh_incremental_cdc_tracks_mutating_source(
     src.delete_positions(spark, F.col('ver') == 'c')
     src.delete_keys(spark, spark.createDataFrame(
         [Row(doc_id=6)]), ['doc_id'])
-    assert refresh_incremental_cdc(
+    assert refresh_incremental(
         spark, src, mv, transform, ['doc_id']) is not None
     want = {(r.doc_id, r.ver)
             for r in transform(src.read(spark)).collect()}
@@ -1935,13 +1848,37 @@ def test_refresh_incremental_cdc_tracks_mutating_source(
 
 def test_refresh_incremental_cdc_rejects_key_dropping_transform(
         spark, tmp_path):
-    from ocrodjvu_spark.plans.snapstore import refresh_incremental_cdc
+    from ocrodjvu_spark.plans.snapstore import refresh_incremental
     src = SnapshotTable(str(tmp_path / 'src'))
     mv = SnapshotTable(str(tmp_path / 'mv'))
     src.append(_docs(spark, 'a', n=2))
     with pytest.raises(ValueError, match='dropped key'):
-        refresh_incremental_cdc(
+        refresh_incremental(
             spark, src, mv, lambda df: df.select('ver'), ['doc_id'])
+
+
+def test_refresh_append_only_window_commits_plain_append(
+        spark, tmp_path):
+    # a window without a delete commit runs no delete-key work: the
+    # view commits a plain 'append' with no delete file, so its own
+    # history stays readable by read_changelog
+    from ocrodjvu_spark.plans.snapstore import refresh_incremental
+    src = SnapshotTable(str(tmp_path / 'src'))
+    mv = SnapshotTable(str(tmp_path / 'mv'))
+    src.append(_docs(spark, 'a', n=6))
+    src.append(_docs(spark, 'b', n=2))
+    v = refresh_incremental(spark, src, mv, lambda df: df, ['doc_id'])
+    assert mv.snapshot(v)['operation'] == 'append'
+    assert not mv.snapshot(v).get('deletes')
+    assert not [n for n in os.listdir(mv.data_dir)
+                if n.endswith('-del.parquet')]
+    assert mv.read_changelog(spark, 0).count() == 8
+    # a window holding a delete commit takes the CDC path
+    src.delete_keys(spark, spark.createDataFrame([Row(doc_id=1)]),
+                    ['doc_id'])
+    v = refresh_incremental(spark, src, mv, lambda df: df, ['doc_id'])
+    assert mv.snapshot(v)['operation'] == 'cdc-refresh'
+    assert {r.doc_id for r in mv.read(spark).collect()} == {0, 2, 3, 4, 5}
 
 
 def test_compact_racing_mor_delete_rebases_not_drops(spark, tmp_path):

@@ -8,7 +8,7 @@ from collections import Counter
 
 from pyspark.sql import Row, functions as F
 
-from ocrodjvu_spark.plans.snapstore import SnapshotTable
+from ocrodjvu_spark.plans.snapstore import SnapshotTable, refresh_incremental
 
 N_BUCKETS = 3
 
@@ -154,11 +154,30 @@ def test_random_operation_sequences_match_model(spark, tmp_path):
 def test_changelog_replay_reconstructs_every_version(spark, tmp_path):
     """Randomized append / delete_keys / delete_positions histories:
     replaying read_changelog(0, v) must reconstruct read(version=v)
-    exactly, for every v — the CDC-consumer contract."""
+    exactly, for every v — the CDC-consumer contract. A keyed view
+    refreshed after every step, and one refreshed once over the whole
+    history, must equal the transform of the visible state. Every
+    delete here removes all rows sharing a doc_id, so doc_id serves
+    as the views' key even where it repeats."""
+    def transform(df):
+        return df.where(F.col('bucket') != 0).select('doc_id', 'ver')
+
+    def view_rows(df):
+        return Counter() if df is None else Counter(
+            (r.doc_id, r.ver) for r in df.collect())
+
+    def refreshed(view):
+        refresh_incremental(spark, t, view, transform, ['doc_id'])
+        want = t.read(spark)
+        assert view_rows(view.read(spark)) == view_rows(
+            None if want is None else transform(want))
+
     for seed in (5, 23):
         rng = random.Random(seed)
         t = SnapshotTable(str(tmp_path / f'cl{seed}'))
+        step_view = SnapshotTable(str(tmp_path / f'mv{seed}'))
         t.append(_batch(spark, rng, 's0')[0])
+        refreshed(step_view)
         for step in range(1, 6):
             op = rng.choice(['append', 'delete_keys',
                              'delete_positions'])
@@ -174,6 +193,8 @@ def test_changelog_replay_reconstructs_every_version(spark, tmp_path):
             else:
                 m = rng.randrange(2, 5)
                 t.delete_positions(spark, F.col('doc_id') % m == 1)
+            refreshed(step_view)
+        refreshed(SnapshotTable(str(tmp_path / f'whole{seed}')))
         for v in t.versions():
             log = t.read_changelog(spark, 0, v)
             replay = Counter()

@@ -6,7 +6,6 @@ Usage:
     python tools/snapshot_admin.py <table_root> show [--version N] [-n N]
     python tools/snapshot_admin.py <table_root> compact [--partition-col C]
         [--cluster-by A,B | --zorder-by A,B] [--target-partitions N]
-    python tools/snapshot_admin.py <table_root> changes --from N [--to M]
     python tools/snapshot_admin.py <table_root> changelog --from N [--to M]
     python tools/snapshot_admin.py <table_root> manifests [--version N]
     python tools/snapshot_admin.py <table_root> diff --from N [--to M]
@@ -16,9 +15,13 @@ Usage:
     python tools/snapshot_admin.py <table_root> refs | set-ref <name> <V>
         | drop-ref <name>
 
-`log` / `describe` are metadata-only (no Spark); `show` / `compact`
-start a local session. A path without a manifests/ directory is
-rejected (the CLI never creates a table as a side effect of a typo).
+`log` / `describe` are metadata-only (no Spark); `show` / `compact` /
+`changelog` start a local session. `changelog` prints the row changes
+of an append / merge-on-read-delete window as insert and delete
+events. A path without a manifests/ directory is rejected (the CLI
+never creates a table as a side effect of a typo), and a request the
+table rejects (say, `changelog` across a rewrite commit) prints one
+`error:` line and exits 1.
 """
 
 from __future__ import annotations
@@ -50,10 +53,6 @@ def main(argv=None):
                    help='comma-separated z-order columns '
                         '(multi-dimensional skipping)')
     p.add_argument('--target-partitions', type=int, default=1)
-    p = sub.add_parser('changes')
-    p.add_argument('--from', dest='from_version', type=int, required=True)
-    p.add_argument('--to', dest='to_version', type=int, default=None)
-    p.add_argument('-n', type=int, default=20)
     p = sub.add_parser('changelog')
     p.add_argument('--from', dest='from_version', type=int, required=True)
     p.add_argument('--to', dest='to_version', type=int, default=None)
@@ -85,8 +84,14 @@ def main(argv=None):
         return 1
 
     from ocrodjvu_spark.plans.snapstore import SnapshotTable
-    t = SnapshotTable(args.root)
+    try:
+        return _run(args, SnapshotTable(args.root))
+    except ValueError as exc:  # the table rejected the request
+        print(f'error: {exc}', file=sys.stderr)
+        return 1
 
+
+def _run(args, t):
     if args.cmd == 'log':
         import datetime
         for v in t.versions():
@@ -114,8 +119,8 @@ def main(argv=None):
         # metadata-only: approx COUNT(DISTINCT) from manifest
         # sketches; p comes from the table's recorded write props
         # unless overridden
-        tn = (SnapshotTable(args.root, ndv_p=args.ndv_p)
-              if args.ndv_p is not None else SnapshotTable(args.root))
+        from ocrodjvu_spark.plans.snapstore import SnapshotTable
+        tn = SnapshotTable(args.root, ndv_p=args.ndv_p)
         est = tn.ndv(args.column)
         if est is None:
             print(f'no complete ndv sketch for {args.column!r} '
@@ -128,15 +133,9 @@ def main(argv=None):
 
     if args.cmd == 'manifests':
         # metadata-only: the snapshot's manifest list with per-manifest
-        # aggregates (legacy inline snapshots print as one pseudo-row)
+        # aggregates
         doc = t._snapshot_doc(args.version)
-        mlist = doc.get('manifest_list')
-        if mlist is None:
-            files = doc['files']
-            print(f"v{doc['version']}: legacy inline file list "
-                  f"({len(files)} files, "
-                  f"{sum(f.get('rows', 0) for f in files)} rows)")
-            return 0
+        mlist = doc['manifest_list']
         print(f"v{doc['version']}: {len(mlist)} manifest files")
         for m in mlist:
             part = (f" partition={m['partition']}" if m.get('uniform')
@@ -221,15 +220,6 @@ def main(argv=None):
                       target_partitions=args.target_partitions)
         print(f'compacted -> v{v} '
               f'({len(t.snapshot(v)["files"])} files)')
-        return 0
-
-    if args.cmd == 'changes':
-        df = t.read_changes(spark, args.from_version, args.to_version)
-        if df is None:
-            print('(no additions in window)')
-            return 0
-        df.show(args.n, truncate=40)
-        print('rows added:', df.count())
         return 0
 
     if args.cmd == 'changelog':
