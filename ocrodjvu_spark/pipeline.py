@@ -21,7 +21,7 @@ Scale design (10^12-turn table, 1000 executors):
 
 from __future__ import annotations
 
-from typing import List, Optional, Sequence
+from typing import Dict, List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -213,15 +213,15 @@ def roundtrip_turns(extracted: DataFrame) -> DataFrame:
     )
 
 
-def run_metrics(extracted: DataFrame) -> List[Column]:
-    """The run metrics, as named aggregates over ``extract_turns``
-    output: n_turns, n_errors, n_spans, n_chars.
+def run_metric_terms(extracted: DataFrame) -> Dict[str, Column]:
+    """The run metrics over ``extract_turns`` output, as per-row terms
+    whose sums are the metrics: n_turns, n_errors, n_spans, n_chars.
 
-    The one definition behind ``extraction_metrics`` and the checkpoint
-    sidecar; aggregate it under any grouping. ``n_spans`` counts the
-    spans the run emitted: every zone under ``emit_spans=True``, words
-    only under ``'packed'``, none under ``False``. The span shape is
-    read from the frame's columns.
+    The one definition behind ``run_metrics``, ``extraction_metrics``
+    and the checkpoint sidecar. ``n_spans`` counts the spans the run
+    emitted: every zone under ``emit_spans=True``, words only under
+    ``'packed'``, none under ``False``. The span shape is read from the
+    frame's columns.
     """
     if 'spans_packed' in extracted.columns:
         packed = F.col('spans_packed')
@@ -229,18 +229,23 @@ def run_metrics(extracted: DataFrame) -> List[Column]:
             .otherwise(F.size(F.split(packed, extract_fn.SPAN_RS)))
     else:
         n_spans = F.size(F.coalesce(F.col('spans'), F.array()))
-    return [
+    return {
         # distinct turns, not exploded page rows: count each turn's first
         # page (error rows have null page_idx and still count as a turn);
         # plain hash aggregate, no countDistinct Expand
-        F.count(F.when(F.col('page_idx').isNull()
-                       | (F.col('page_idx') == 0), 1)).alias('n_turns'),
-        F.sum(F.when(F.col('error').isNotNull(), 1).otherwise(0))
-         .alias('n_errors'),
-        F.sum(n_spans).alias('n_spans'),
-        F.sum(F.length(F.coalesce(F.col('extracted_text'), F.lit(''))))
-         .alias('n_chars'),
-    ]
+        'n_turns': F.when(F.col('page_idx').isNull()
+                          | (F.col('page_idx') == 0), 1).otherwise(0),
+        'n_errors': F.when(F.col('error').isNotNull(), 1).otherwise(0),
+        'n_spans': n_spans,
+        'n_chars': F.length(F.coalesce(F.col('extracted_text'), F.lit(''))),
+    }
+
+
+def run_metrics(extracted: DataFrame) -> List[Column]:
+    """``run_metric_terms`` as named sums; aggregate them under any
+    grouping."""
+    return [F.sum(term).alias(name)
+            for name, term in run_metric_terms(extracted).items()]
 
 
 def extraction_metrics(extracted: DataFrame) -> DataFrame:

@@ -1085,14 +1085,23 @@ class SnapshotTable:
 
     def overwrite(self, df: DataFrame,
                   partition_col: Optional[str] = None,
-                  partition_transform: Optional[str] = None) -> int:
+                  partition_transform: Optional[str] = None,
+                  tag: Optional[str] = None) -> int:
         """Commit ``df`` as the table's full new contents. As a full
         replacement it MAY change the partition transform (the one
-        sanctioned "partition evolution": nothing old is carried)."""
+        sanctioned "partition evolution": nothing old is carried).
+        ``tag`` means what it means for ``append``: a tag already
+        committed makes the call a no-op returning that version — so a
+        view rebuilt under its ``<name>@<version>`` cursor tag resumes
+        incremental refreshes from that version."""
+        if tag is not None:
+            existing = self.find_tag(tag)
+            if existing is not None:
+                return existing
         entries, schema = self._stage(df, partition_col,
                                       partition_transform=partition_transform)
         return self._commit('overwrite', entries, schema,
-                            apply=lambda base: list(entries),
+                            apply=lambda base: list(entries), tag=tag,
                             transform=partition_transform,
                             apply_deletes=lambda base: [])
 
@@ -2178,9 +2187,12 @@ def refresh_incremental(spark: SparkSession, source: SnapshotTable,
       merge-on-read consumer.
     * A rewrite commit (overwrite / replace_partitions / delete /
       merge / compact) in the window raises via ``read_changelog`` —
-      the view must then be rebuilt with
-      ``sink.overwrite(transform(source.read(spark)))``, which is
-      exactly Iceberg/Delta's incremental-view contract.
+      the view must then be rebuilt from one source version ``v``
+      (typically ``source.current_version()``) with
+      ``sink.overwrite(transform(source.read(spark, version=v)),
+      tag=f'{name}@{v}')``, which is exactly Iceberg/Delta's
+      incremental-view contract; the tag moves the cursor to ``v``, so
+      later refreshes resume from there.
 
     Returns the sink version committed, or None when already current.
     """

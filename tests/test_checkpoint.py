@@ -254,3 +254,215 @@ def test_run_extraction_with_packed_spans_metrics(spark, tmp_path):
     from ocrodjvu_spark import pipeline
     decoded = pipeline.word_spans(spark.read.parquet(out)).count()
     assert total_spans == decoded > 0
+
+
+# -- run metrics observed on the write --------------------------------------
+
+# the sidecar layout every existing sidecar was written in
+SIDECAR_DTYPES = [('bucket', 'int'), ('n_turns', 'bigint'),
+                  ('n_errors', 'bigint'), ('n_spans', 'bigint'),
+                  ('n_chars', 'bigint'), ('run_ts', 'timestamp')]
+
+
+def _read(spark, path, table_format):
+    """The table at ``path``; None when it holds no data file."""
+    from ocrodjvu_spark.plans.snapstore import SnapshotTable
+    if table_format == 'snapshot':
+        return SnapshotTable(path).read(spark)
+    return checkpoint._read_sidecar(spark, path)
+
+
+def _rows_by_bucket(df):
+    return {r[0]: tuple(r[1:]) for r in df.collect()}
+
+
+def _expected_sidecar(spark, out, table_format, buckets):
+    """``run_metrics`` grouped by bucket over the written output, with a
+    zero row for each bucket that holds no rows."""
+    from ocrodjvu_spark import pipeline
+    written = _read(spark, out, table_format)
+    got = {} if written is None else _rows_by_bucket(
+        written.groupBy(checkpoint.BUCKET_COL)
+        .agg(*pipeline.run_metrics(written)))
+    return {b: got.get(b, (0, 0, 0, 0)) for b in buckets}
+
+
+class _Scans:
+    """File scans of the SQL executions a session starts after ``mark``,
+    read from Spark's SQL status store."""
+
+    def __init__(self, spark):
+        self.spark = spark
+        self.store = spark._jsparkSession.sharedState().statusStore()
+        self.seen = self._ids()
+
+    def _ids(self):
+        execs = self.store.executionsList()
+        return {execs.apply(i).executionId() for i in range(execs.size())}
+
+    def since_mark(self):
+        # the status store is fed by the listener bus; drain it first
+        self.spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        descs = []
+        for eid in sorted(self._ids() - self.seen):
+            nodes = self.store.planGraph(eid).allNodes()
+            descs.extend(nodes.apply(i).desc() for i in range(nodes.size())
+                         if nodes.apply(i).name().startswith('Scan'))
+        self.seen = self._ids()
+        return descs
+
+
+@pytest.mark.parametrize('table_format', ['parquet', 'snapshot'])
+def test_sidecar_metrics_observed_without_rescan(spark, tmp_path,
+                                                 table_format):
+    # the sidecar's per-bucket metrics come from the write itself: no
+    # execution of run_extraction reads the output table back, yet the
+    # sidecar equals run_metrics grouped over the written output —
+    # including zero rows for empty pending buckets and for a run whose
+    # pending buckets are all empty
+    tr = T.synthesize_transcripts(spark, SF_DIR)
+    few = tr.where(F.col('conv_id').isin('conv-1', 'conv-2', 'conv-3'))
+    runs = [('full', tr, N_BUCKETS, 3), ('sparse', few, 16, None),
+            ('empty', tr.limit(0), 4, None)]
+    key = 'spark.sql.maxMetadataStringLength'
+    old = spark.conf.get(key)
+    spark.conf.set(key, '100000')  # untruncated scan locations
+    try:
+        for name, df, n_buckets, max_buckets in runs:
+            out = str(tmp_path / name / 'out')
+            side = str(tmp_path / name / 'side')
+            scans = _Scans(spark)
+            done = checkpoint.run_extraction(
+                spark, df, out, side, n_buckets=n_buckets,
+                max_buckets=max_buckets, table_format=table_format,
+                emit_spans='packed')
+            if max_buckets:
+                done += checkpoint.run_extraction(
+                    spark, df, out, side, n_buckets=n_buckets,
+                    table_format=table_format, emit_spans='packed')
+            descs = scans.since_mark()
+            if name != 'empty':  # the reader sees the input scan
+                assert any('sf0.001' in d for d in descs), name
+            assert not [d for d in descs if out in d], name
+            assert sorted(done) == list(range(n_buckets))
+            sidecar = _read(spark, side, table_format)
+            assert sidecar.dtypes == SIDECAR_DTYPES
+            got = _rows_by_bucket(sidecar.drop('run_ts'))
+            assert got == _expected_sidecar(
+                spark, out, table_format, range(n_buckets)), name
+            if name == 'full':
+                assert sum(v[0] for v in got.values()) == tr.count()
+            else:
+                assert any(v == (0, 0, 0, 0) for v in got.values())
+    finally:
+        spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize('table_format', ['parquet', 'snapshot'])
+def test_resume_from_sidecar_in_existing_layout(spark, tmp_path,
+                                                table_format):
+    # sidecars written before the metrics were observed on the write
+    # (all-nullable metric columns) still drive a resume
+    from ocrodjvu_spark.plans.snapstore import SnapshotTable
+    out, side = str(tmp_path / 'out'), str(tmp_path / 'side')
+    old = spark.createDataFrame(
+        [(0, 5, 0, 0, 40), (1, 7, 1, 0, 60)],
+        'bucket int, n_turns bigint, n_errors bigint, n_spans bigint, '
+        'n_chars bigint').withColumn('run_ts', F.current_timestamp())
+    if table_format == 'snapshot':
+        SnapshotTable(side).append(old)
+    else:
+        old.write.parquet(side)
+    tr = T.synthesize_transcripts(spark, SF_DIR)
+    done = checkpoint.run_extraction(spark, tr, out, side, n_buckets=4,
+                                     table_format=table_format)
+    assert done == [2, 3]
+    assert checkpoint.completed_buckets(
+        spark, side, table_format) == [0, 1, 2, 3]
+    sidecar = _read(spark, side, table_format)
+    assert sidecar.dtypes == SIDECAR_DTYPES
+    got = _rows_by_bucket(sidecar.drop('run_ts'))
+    assert got[0] == (5, 0, 0, 40) and got[1] == (7, 1, 0, 60)
+    assert {b: got[b] for b in done} == _expected_sidecar(
+        spark, out, table_format, done)
+
+
+_RETRY_SCRIPT = r'''
+import json, os, sys
+from pyspark.sql import SparkSession, functions as F
+from ocrodjvu_spark import pipeline
+from ocrodjvu_spark.plans import checkpoint
+from ocrodjvu_spark.plans.snapstore import SnapshotTable
+from ocrodjvu_spark.sources import transcripts as T
+
+root, sf_dir = sys.argv[1], sys.argv[2]
+# local[2,2]: two task slots, and every task may fail once
+spark = (SparkSession.builder.master('local[2,2]')
+         .config('spark.sql.shuffle.partitions', '4')
+         .config('spark.ui.enabled', 'false').getOrCreate())
+spark.sparkContext.setLogLevel('FATAL')
+write_output = checkpoint._write_output
+
+
+def fail_first_attempt(shaped, output_path, snap_out):
+    """Hand the write a frame that keeps every row but fails attempt 0
+    of the first non-empty partition to run it."""
+    marker = output_path + '.failed'
+
+    def keep(bucket):
+        from pyspark import TaskContext
+        if TaskContext.get().attemptNumber() == 0:
+            try:
+                os.close(os.open(marker, os.O_CREAT | os.O_EXCL))
+            except FileExistsError:
+                return True
+            raise RuntimeError('planted first-attempt failure')
+        return True
+
+    write_output(shaped.where(F.udf(keep, 'boolean')('bucket')),
+                 output_path, snap_out)
+
+
+checkpoint._write_output = fail_first_attempt
+tr = T.synthesize_transcripts(spark, sf_dir)
+result = {}
+for fmt in ('parquet', 'snapshot'):
+    out = os.path.join(root, fmt, 'out')
+    side = os.path.join(root, fmt, 'side')
+    done = checkpoint.run_extraction(spark, tr, out, side, n_buckets=4,
+                                     table_format=fmt, emit_spans='packed')
+    read = ((lambda p: SnapshotTable(p).read(spark)) if fmt == 'snapshot'
+            else spark.read.parquet)
+    written, sidecar = read(out), read(side)
+    result[fmt] = {
+        'done': done,
+        'failed': os.path.exists(out + '.failed'),
+        'sidecar': sorted(list(r) for r in sidecar.drop('run_ts').collect()),
+        'expected': sorted(list(r) for r in written.groupBy('bucket').agg(
+            *pipeline.run_metrics(written)).collect()),
+        'turns': tr.count(),
+    }
+print(json.dumps(result))
+'''
+
+
+def test_observed_metrics_count_retried_rows_once(tmp_path):
+    # the sidecar is lineage: a write task that fails once and is retried
+    # must leave each row counted once in the observed metrics
+    import json
+    import os
+    import subprocess
+    import sys
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    r = subprocess.run(
+        [sys.executable, '-c', _RETRY_SCRIPT, str(tmp_path), SF_DIR],
+        capture_output=True, text=True, cwd=repo,
+        env=dict(os.environ, PYTHONPATH=repo), timeout=600)
+    assert r.returncode == 0, r.stderr[-3000:]
+    result = json.loads(r.stdout.strip().splitlines()[-1])
+    for fmt in ('parquet', 'snapshot'):
+        got = result[fmt]
+        assert got['failed'], fmt  # the planted failure fired
+        assert got['done'] == [0, 1, 2, 3]
+        assert got['sidecar'] == got['expected'], fmt
+        assert sum(row[1] for row in got['sidecar']) == got['turns']

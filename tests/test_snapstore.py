@@ -850,6 +850,37 @@ def test_refresh_incremental_rejects_rewritten_window(spark, tmp_path):
     assert mv.read(spark).count() == src.read(spark).count()
 
 
+def test_refresh_incremental_resumes_after_rebuild(spark, tmp_path):
+    # the documented recovery after a rewrite commit: rebuild the view
+    # from one source version under the cursor tag, then keep refreshing
+    # incrementally. Without the tag the cursor stays behind the delete
+    # and every later refresh raises again.
+    from ocrodjvu_spark.plans.snapstore import refresh_incremental
+    src = SnapshotTable(str(tmp_path / 'src'))
+    mv = SnapshotTable(str(tmp_path / 'mv'))
+    transform = lambda df: df.where(F.col('doc_id') % 2 == 0) \
+        .select('doc_id', 'ver')
+    src.append(_docs(spark, 'a', n=10))
+    refresh_incremental(spark, src, mv, transform, ['doc_id'])
+    src.delete_where(spark, F.col('doc_id') >= 6)
+    v = src.current_version()
+    rebuilt = mv.overwrite(transform(src.read(spark, version=v)),
+                           tag=f'mv@{v}')
+    assert mv.last_consumed('mv') == v
+    # replaying the rebuild is a no-op, like a replayed tagged append
+    assert mv.overwrite(transform(src.read(spark, version=v)),
+                        tag=f'mv@{v}') == rebuilt
+    src.append(spark.createDataFrame(
+        [Row(doc_id=i, bucket=i % 4, ver='b') for i in range(10, 14)]))
+    assert refresh_incremental(spark, src, mv, transform,
+                               ['doc_id']) is not None
+    assert mv.last_consumed('mv') == src.current_version()
+    got = sorted(tuple(r) for r in mv.read(spark).collect())
+    assert got == sorted(tuple(r) for r in
+                         transform(src.read(spark)).collect())
+    assert got == [(0, 'a'), (2, 'a'), (4, 'a'), (10, 'b'), (12, 'b')]
+
+
 def test_refresh_incremental_racing_different_heads(spark, tmp_path):
     # two refreshers share the cursor (lo=0) but observed DIFFERENT
     # source heads: A saw v1, B saw v1+v2. Tag idempotence alone would
