@@ -40,6 +40,7 @@ dynamic-overwrite path as the zero-metadata default.
 
 from __future__ import annotations
 
+import datetime
 from typing import List, Optional
 
 import pyarrow as pa
@@ -66,8 +67,9 @@ def completed_buckets(spark: SparkSession, sidecar_path: str,
         sidecar = _read_sidecar(spark, sidecar_path)
     if sidecar is None:
         return []
-    rows = sidecar.select(BUCKET_COL).distinct().collect()
-    return sorted(r[BUCKET_COL] for r in rows)
+    # one row per completed bucket and run: deduplicated on the driver,
+    # since a distinct() is a second job under AQE
+    return sorted({r[0] for r in sidecar.select(BUCKET_COL).collect()})
 
 
 def run_extraction(
@@ -145,20 +147,25 @@ def run_extraction(
 
     # lineage + metrics, appended only after the bucket data is durable;
     # empty buckets get a zero row so they are marked complete too. The
-    # few rows go through Arrow; a list of tuples would be parallelized
-    # as a pickled Python RDD, which made the sidecar append 2x slower.
+    # few rows are built on the driver as Arrow, run_ts from the driver
+    # clock; the snapshot store appends the table itself (no Spark job),
+    # the parquet format writes it through Spark's Hadoop filesystem.
     observed = observation.get
+    run_ts = datetime.datetime.now(datetime.timezone.utc)
     table = pa.Table.from_arrays(
         [pa.array(pending, pa.int32())]
-        + [pa.array([v or 0 for v in observed[n]], pa.int64()) for n in terms],
-        schema=pa.schema([pa.field(BUCKET_COL, pa.int32())] + [
-            pa.field(n, pa.int64(), nullable=False) for n in terms]))
-    metrics = (spark.createDataFrame(table)
-               .withColumn('run_ts', F.current_timestamp()))
+        + [pa.array([v or 0 for v in observed[n]], pa.int64()) for n in terms]
+        + [pa.array([run_ts] * len(pending), pa.timestamp('us', 'UTC'))],
+        schema=pa.schema(
+            [pa.field(BUCKET_COL, pa.int32())]
+            + [pa.field(n, pa.int64(), nullable=False) for n in terms]
+            + [pa.field('run_ts', pa.timestamp('us', 'UTC'),
+                        nullable=False)]))
     if snap_side is not None:
-        snap_side.append(metrics)
+        snap_side.append(table)
     else:
-        metrics.write.mode('append').parquet(sidecar_path)
+        spark.createDataFrame(table).write.mode('append').parquet(
+            sidecar_path)
     return pending
 
 
@@ -251,9 +258,17 @@ def _read_sidecar(spark: SparkSession, path: str) -> Optional[DataFrame]:
     """Open the sidecar through Spark itself (works on any Hadoop
     filesystem — HDFS/S3/local — unlike a driver-side os.path probe,
     which on a cluster deployment would always miss and silently degrade
-    resume into full reprocessing). A missing or empty path surfaces as
-    AnalysisException and means 'no sidecar yet'."""
+    resume into full reprocessing). A missing path, checked through the
+    path's Hadoop ``FileSystem``, or one that holds no data (an
+    AnalysisException) means 'no sidecar yet'. The existence check keeps
+    the common first run from failing analysis, which a session that has
+    used an ``Observation`` logs as a listener error with a stack trace.
+    """
     from pyspark.errors import AnalysisException
+    sc = spark.sparkContext
+    jpath = sc._jvm.org.apache.hadoop.fs.Path(path)
+    if not jpath.getFileSystem(sc._jsc.hadoopConfiguration()).exists(jpath):
+        return None
     try:
         df = spark.read.parquet(path)
         df.schema  # force resolution eagerly

@@ -84,6 +84,8 @@ import time
 import uuid
 from typing import Callable, Dict, List, Optional, Sequence
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1004,11 +1006,13 @@ class SnapshotTable:
 
     # -- writes -------------------------------------------------------------
 
-    def append(self, df: DataFrame,
+    def append(self, df: DataFrame | pa.Table,
                partition_col: Optional[str] = None,
                tag: Optional[str] = None,
                partition_transform: Optional[str] = None) -> int:
         """Commit ``df`` as new files appended to HEAD; returns the version.
+        A ``pyarrow.Table`` is written by the driver as one unpartitioned
+        file, without a Spark job (see ``_stage``).
 
         ``tag`` makes the append IDEMPOTENT: if any committed snapshot
         already carries the tag, the call is a no-op returning that
@@ -1681,7 +1685,8 @@ class SnapshotTable:
 
     # -- internals ----------------------------------------------------------
 
-    def _stage(self, df: DataFrame, partition_col: Optional[str],
+    def _stage(self, df: DataFrame | pa.Table,
+               partition_col: Optional[str],
                partition_transform: Optional[str] = None):
         """Write ``df`` to uniquely-named immutable files under data/.
 
@@ -1691,9 +1696,23 @@ class SnapshotTable:
         reconstruction; the duplicate only shapes the staging layout.
         ``partition_transform`` derives the value instead of copying
         the column (hidden partitioning — ``_transform_expr``).
+
+        A ``pyarrow.Table`` (unpartitioned only) is written by the
+        driver as ONE file, with no Spark job: the few-row bookkeeping
+        appends (the checkpoint sidecar) cost a footer write, not a
+        job's scheduling; its recorded schema is the Spark schema the
+        same rows would get from ``createDataFrame``.
         """
         props = self.write_props()
         stage_id = uuid.uuid4().hex
+        if isinstance(df, pa.Table):
+            if partition_col is not None:
+                raise ValueError('an Arrow table stages unpartitioned')
+            from pyspark.sql.pandas.types import from_arrow_schema
+            rel = f'data/{stage_id}-0.parquet'
+            pq.write_table(df, os.path.join(self.root, rel))
+            return ([self._entry(rel, None, props)],
+                    from_arrow_schema(df.schema).json())
         stage_dir = os.path.join(self.data_dir, f'.stage-{stage_id}')
         writer = df
         if partition_col is not None:
@@ -1706,7 +1725,6 @@ class SnapshotTable:
         schema = df.schema.json()
         entries = []
         try:
-            i = 0
             for dirpath, _dirnames, filenames in os.walk(stage_dir):
                 part_val = None
                 base = os.path.basename(dirpath)
@@ -1715,39 +1733,41 @@ class SnapshotTable:
                 for name in sorted(filenames):
                     if not name.endswith('.parquet'):
                         continue
-                    rel = f'data/{stage_id}-{i}.parquet'
+                    rel = f'data/{stage_id}-{len(entries)}.parquet'
                     os.rename(os.path.join(dirpath, name),
                               os.path.join(self.root, rel))
-                    full = os.path.join(self.root, rel)
-                    rows, stats = self._file_meta(full)
-                    entry = {
-                        'path': rel,
-                        'partition': part_val,
-                        'rows': rows,
-                        'stats': stats,
-                        # stats-encoding version 2: temporal bounds on
-                        # one epoch-micros axis (round 6 re-encoded
-                        # dates from day ordinals — a versionless
-                        # entry's date/ts bounds cannot be trusted by
-                        # a temporal probe)
-                        'sv': 2,
-                    }
-                    blooms, ndv = self._file_structures(
-                        df.sparkSession, full, props)
-                    if blooms:
-                        entry['bloom'] = blooms
-                    if ndv:
-                        entry['ndv'] = ndv
-                    entries.append(entry)
-                    i += 1
+                    entries.append(self._entry(rel, part_val, props))
         finally:
             shutil.rmtree(stage_dir, ignore_errors=True)
         # the staged schema (post-partitionBy) drops __pv; record the
         # ORIGINAL DataFrame schema, which matches the file contents
         return entries, schema
 
-    def _file_structures(self, spark: SparkSession, path: str,
-                         props: dict):
+    def _entry(self, rel: str, part_val, props: dict) -> dict:
+        """The manifest entry of one staged data file: row count and
+        column stats from its footer, plus the table's per-file
+        structures (blooms, NDV registers)."""
+        full = os.path.join(self.root, rel)
+        rows, stats = self._file_meta(full)
+        entry = {
+            'path': rel,
+            'partition': part_val,
+            'rows': rows,
+            'stats': stats,
+            # stats-encoding version 2: temporal bounds on one
+            # epoch-micros axis (round 6 re-encoded dates from day
+            # ordinals — a versionless entry's date/ts bounds cannot be
+            # trusted by a temporal probe)
+            'sv': 2,
+        }
+        blooms, ndv = self._file_structures(full, props)
+        if blooms:
+            entry['bloom'] = blooms
+        if ndv:
+            entry['ndv'] = ndv
+        return entry
+
+    def _file_structures(self, path: str, props: dict):
         """Per-file bloom bitmaps and HLL register tables for the
         table's write properties — built JVM-SIDE by the very modules
         the gates verify (``functions.bloom.bloom_build``: explode
@@ -1767,7 +1787,7 @@ class SnapshotTable:
         from pyspark.sql.types import IntegralType, StringType
         from ..functions.bloom import bloom_build
         from ..functions.hll import hll_sketch
-        reader = spark.read.parquet(path)
+        reader = SparkSession.active().read.parquet(path)
 
         def sketchable(col):
             return col in reader.columns and isinstance(
@@ -1850,7 +1870,6 @@ class SnapshotTable:
         """(row count, column min/max stats) from one footer read of a
         file this writer just staged — the manifest's data-skipping
         index costs no extra data scan."""
-        import pyarrow.parquet as pq
         meta = pq.ParquetFile(path).metadata
         return meta.num_rows, _column_stats(meta)
 

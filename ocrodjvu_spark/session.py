@@ -9,8 +9,23 @@ sizing relative to parallelism).
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
+
+# output-format settings every session that writes the package's tables
+# needs, whoever builds it (``get_spark``, or ``tools/run_pipeline.py``
+# under spark-submit, which keeps the submitted master):
+FORMAT_CONF = {
+    # pin the session timezone: date_trunc/date_format gates must not
+    # depend on the host TZ (DuckDB oracles compute in UTC)
+    'spark.sql.session.timeZone': 'UTC',
+    # int64 micros instead of legacy INT96 for TIMESTAMP columns: INT96
+    # carries no parquet min/max stats, which would blind the snapshot
+    # store's time-range file skipping (and every other engine's
+    # row-group pruning) on ltz timestamp columns
+    'spark.sql.parquet.outputTimestampType': 'TIMESTAMP_MICROS',
+}
 
 
 def get_spark(
@@ -28,17 +43,9 @@ def get_spark(
         SparkSession.builder
         .appName(app_name)
         .master(master)
+        .config(map=FORMAT_CONF)
         # AQE: runtime coalescing + skew-join splitting; at cluster scale
         # this is what absorbs conv_id skew after the salted repartition.
-        # pin the session timezone: date_trunc/date_format gates must
-        # not depend on the host TZ (DuckDB oracles compute in UTC)
-        .config('spark.sql.session.timeZone', 'UTC')
-        # int64 micros instead of legacy INT96 for TIMESTAMP columns:
-        # INT96 carries no parquet min/max stats, which would blind the
-        # snapshot store's time-range file skipping (and every other
-        # engine's row-group pruning) on ltz timestamp columns
-        .config('spark.sql.parquet.outputTimestampType',
-                'TIMESTAMP_MICROS')
         .config('spark.sql.adaptive.enabled', 'true')
         .config('spark.sql.adaptive.coalescePartitions.enabled', 'true')
         .config('spark.sql.adaptive.skewJoin.enabled', 'true')
@@ -55,9 +62,18 @@ def get_spark(
         # executor memory at high SF (tune per deployment)
         .config('spark.sql.files.maxPartitionBytes', '134217728')
         .config('spark.ui.enabled', 'false')
+        # Python workers fork from ``worker_daemon``: pyspark's daemon
+        # minus the per-task re-read of pyspark.zip (see that module)
+        .config('spark.python.daemon.module',
+                'ocrodjvu_spark.worker_daemon')
         .config('spark.driver.memory',
                 os.environ.get('SPARK_GRAFT_DRIVER_MEM', '8g'))
     )
+    # the Python workers import this package from where the driver did,
+    # whatever the working directory (the daemon is one of its modules)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    if root not in site.getsitepackages():
+        builder = builder.config('spark.executorEnv.PYTHONPATH', root)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -287,9 +287,10 @@ def _expected_sidecar(spark, out, table_format, buckets):
     return {b: got.get(b, (0, 0, 0, 0)) for b in buckets}
 
 
-class _Scans:
-    """File scans of the SQL executions a session starts after ``mark``,
-    read from Spark's SQL status store."""
+class _PlanNodes:
+    """(name, description) of the plan nodes of the SQL executions a
+    session starts after the last mark, read from Spark's SQL status
+    store."""
 
     def __init__(self, spark):
         self.spark = spark
@@ -303,13 +304,13 @@ class _Scans:
     def since_mark(self):
         # the status store is fed by the listener bus; drain it first
         self.spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-        descs = []
+        found = []
         for eid in sorted(self._ids() - self.seen):
             nodes = self.store.planGraph(eid).allNodes()
-            descs.extend(nodes.apply(i).desc() for i in range(nodes.size())
-                         if nodes.apply(i).name().startswith('Scan'))
+            found.extend((nodes.apply(i).name(), nodes.apply(i).desc())
+                         for i in range(nodes.size()))
         self.seen = self._ids()
-        return descs
+        return found
 
 
 @pytest.mark.parametrize('table_format', ['parquet', 'snapshot'])
@@ -319,7 +320,8 @@ def test_sidecar_metrics_observed_without_rescan(spark, tmp_path,
     # execution of run_extraction reads the output table back, yet the
     # sidecar equals run_metrics grouped over the written output —
     # including zero rows for empty pending buckets and for a run whose
-    # pending buckets are all empty
+    # pending buckets are all empty. The snapshot store appends the
+    # sidecar from the driver: no execution writes it
     tr = T.synthesize_transcripts(spark, SF_DIR)
     few = tr.where(F.col('conv_id').isin('conv-1', 'conv-2', 'conv-3'))
     runs = [('full', tr, N_BUCKETS, 3), ('sparse', few, 16, None),
@@ -331,7 +333,7 @@ def test_sidecar_metrics_observed_without_rescan(spark, tmp_path,
         for name, df, n_buckets, max_buckets in runs:
             out = str(tmp_path / name / 'out')
             side = str(tmp_path / name / 'side')
-            scans = _Scans(spark)
+            plan_nodes = _PlanNodes(spark)
             done = checkpoint.run_extraction(
                 spark, df, out, side, n_buckets=n_buckets,
                 max_buckets=max_buckets, table_format=table_format,
@@ -340,10 +342,14 @@ def test_sidecar_metrics_observed_without_rescan(spark, tmp_path,
                 done += checkpoint.run_extraction(
                     spark, df, out, side, n_buckets=n_buckets,
                     table_format=table_format, emit_spans='packed')
-            descs = scans.since_mark()
+            nodes = plan_nodes.since_mark()
+            descs = [d for n, d in nodes if n.startswith('Scan')]
             if name != 'empty':  # the reader sees the input scan
                 assert any('sf0.001' in d for d in descs), name
             assert not [d for d in descs if out in d], name
+            side_writes = [d for n, d in nodes
+                           if not n.startswith('Scan') and side in d]
+            assert bool(side_writes) == (table_format == 'parquet'), name
             assert sorted(done) == list(range(n_buckets))
             sidecar = _read(spark, side, table_format)
             assert sidecar.dtypes == SIDECAR_DTYPES
@@ -466,3 +472,43 @@ def test_observed_metrics_count_retried_rows_once(tmp_path):
         assert got['done'] == [0, 1, 2, 3]
         assert got['sidecar'] == got['expected'], fmt
         assert sum(row[1] for row in got['sidecar']) == got['turns']
+
+
+_PROBE_SCRIPT = r'''
+import os, sys
+sys.path.insert(0, sys.argv[3])
+from ocrodjvu_spark.plans import checkpoint
+from ocrodjvu_spark.session import get_spark
+from ocrodjvu_spark.sources import transcripts as T
+
+root, sf_dir = sys.argv[1], sys.argv[2]
+spark = get_spark('probe', cpus=2, shuffle_partitions=2)
+tr = T.synthesize_transcripts(spark, sf_dir)
+for name in ('first', 'second'):
+    done = checkpoint.run_extraction(
+        spark, tr, os.path.join(root, name, 'out'),
+        os.path.join(root, name, 'side'), n_buckets=2)
+    assert done == [0, 1], done
+'''
+
+
+def test_parquet_runs_probe_missing_sidecar_quietly_from_any_cwd(tmp_path):
+    # once a session has used an Observation (the first run does), a
+    # query that fails analysis makes Spark's listener bus log an ERROR
+    # with a stack trace: the second run's probe of its missing sidecar
+    # must not fail analysis. The session starts in a directory without
+    # the package on PYTHONPATH, and its Python workers (the daemon and
+    # the extraction UDF) still import the package
+    import os
+    import subprocess
+    import sys
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != 'PYTHONPATH'}
+    env['SPARK_GRAFT_DRIVER_MEM'] = '1g'
+    r = subprocess.run(
+        [sys.executable, '-c', _PROBE_SCRIPT, str(tmp_path / 'runs'),
+         SF_DIR, repo],
+        capture_output=True, text=True, cwd=str(tmp_path), env=env,
+        timeout=600)
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert 'ExecutionListenerBus' not in r.stderr, r.stderr[-3000:]

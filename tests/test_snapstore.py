@@ -1984,3 +1984,48 @@ def test_legacy_ordinal_date_stats_never_prune(spark, tmp_path):
     assert not file_may_match(v2, probe)         # provably outside
     # non-temporal probes on legacy entries still prune
     assert not file_may_match(legacy, [('d', '>', 10**9)])
+
+
+def test_arrow_append_records_what_a_dataframe_append_does(spark, tmp_path):
+    # a pyarrow.Table is written by the driver as one file, with no SQL
+    # execution, and records the manifest schema JSON, row count, stats
+    # and NDV registers that a DataFrame append of the same rows records
+    import datetime
+    import pyarrow as pa
+    ts = datetime.datetime(2024, 3, 1, 12, tzinfo=datetime.timezone.utc)
+    table = pa.Table.from_arrays(
+        [pa.array([0, 1, None], pa.int32()),
+         pa.array([5, 7, 0], pa.int64()),
+         pa.array(['a', None, 'c']),
+         pa.array([ts] * 3, pa.timestamp('us', 'UTC'))],
+        schema=pa.schema([
+            pa.field('bucket', pa.int32()),
+            pa.field('n', pa.int64(), nullable=False),
+            pa.field('s', pa.string()),
+            pa.field('run_ts', pa.timestamp('us', 'UTC'),
+                     nullable=False)]))
+    by_frame = SnapshotTable(str(tmp_path / 'frame'), ndv_cols=['bucket'],
+                             ndv_p=4)
+    by_frame.append(spark.createDataFrame(table).coalesce(1))
+    by_arrow = SnapshotTable(str(tmp_path / 'arrow'))
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    n_executions = store.executionsList().size()
+    by_arrow.append(table)
+    bus.waitUntilEmpty()
+    assert store.executionsList().size() == n_executions
+    assert by_arrow.snapshot()['schema'] == by_frame.snapshot()['schema']
+    # NDV registers are built by Spark over the driver-written file
+    sketched = SnapshotTable(by_arrow.root, ndv_cols=['bucket'], ndv_p=4)
+    sketched.append(table)
+
+    def entry(t):
+        f = t.snapshot()['files'][-1]
+        return f['rows'], f['stats'], f['ndv']
+
+    assert entry(sketched) == entry(by_frame)
+    assert sorted(by_arrow.read(spark).collect(), key=str) == sorted(
+        by_frame.read(spark).collect() * 2, key=str)
+    with pytest.raises(ValueError):
+        by_arrow.append(table, partition_col='bucket')

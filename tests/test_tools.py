@@ -85,6 +85,11 @@ def test_run_pipeline_jsonl_input_end_to_end(spark, tmp_path):
         [ln for ln in r.stdout.splitlines() if ln.startswith('{')][-1])
     assert summary['corrupt_input_lines'] == 1
     assert summary['total_turns'] == n
+    # the CLI's session writes int64-micros timestamps, so every output
+    # file records ts stats for time-range file skipping
+    from ocrodjvu_spark.plans.snapstore import SnapshotTable
+    files = SnapshotTable(str(tmp_path / 'out')).snapshot()['files']
+    assert files and all('ts' in f['stats'] for f in files)
 
 
 def test_run_pipeline_snapshot_input_end_to_end(spark, tmp_path):
