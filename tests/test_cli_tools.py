@@ -13,13 +13,18 @@ import djvused2hocr  # noqa: E402
 import hocr2djvused  # noqa: E402
 
 from ocrodjvu_spark.kernel import sexpr
-from tests.corpus import HOCR2DJVUSED_DIR, golden_cases
+from tests.corpus import (
+    DJVU2HOCR_DIR, HOCR2DJVUSED_DIR, NESTING_DJVUSED, ONE_PAGE_HOCR,
+    REFERENCE_PRESENT, golden_cases, needs_reference_corpus)
 
 # a representative golden per dialect family, each driven by ITS OWN
 # header's CLI args (the same line the reference harness feeds its
 # command); compared value-level like tests/test_kernel_golden.py.
-# The full 68-case sweep already runs at kernel level; these pin the
-# CLI wiring: arg mapping, block format, multi-page numbering.
+# With the reference corpus present, the full 68-case sweep runs at
+# kernel level and these pin the CLI wiring: arg mapping, block format,
+# multi-page numbering. Without it, these cases and the sweep are
+# skipped; multi-file numbering and the djvused -> hOCR -> djvused
+# round trip below still run on the in-repo inputs of tests/corpus.py.
 _CLI_CASES = [
     'alice_tesseract3.00.test1',
     'alice_cuneiform0.8.test2',
@@ -53,6 +58,7 @@ def _parse_blocks(script):
     return pages
 
 
+@needs_reference_corpus
 @pytest.mark.parametrize('test_name', _CLI_CASES, ids=_CLI_CASES)
 def test_hocr2djvused_cli_matches_golden(test_name):
     args, html, golden = _load_case(test_name)
@@ -64,28 +70,42 @@ def test_hocr2djvused_cli_matches_golden(test_name):
     assert got and got == want
 
 
-def test_hocr2djvused_multifile_numbers_pages_continuously():
-    path = os.path.join(HOCR2DJVUSED_DIR, 'alice_tesseract3.00.html')
-    out = io.StringIO()
-    hocr2djvused.main(['--page-size=2488x3507', path, path], out=out)
-    text = out.getvalue()
-    assert 'select 1\n' in text and 'select 2\n' in text
+def test_hocr2djvused_multifile_numbers_pages_continuously(tmp_path):
+    paths = [str(tmp_path / name) for name in ('a.html', 'b.html')]
+    for path in paths:
+        with open(path, 'wb') as f:
+            f.write(ONE_PAGE_HOCR)
+    runs = [paths]
+    if REFERENCE_PRESENT:
+        path = os.path.join(HOCR2DJVUSED_DIR, 'alice_tesseract3.00.html')
+        runs.append([path, path])
+    for files in runs:
+        out = io.StringIO()
+        hocr2djvused.main(['--page-size=2488x3507'] + files, out=out)
+        text = out.getvalue()
+        assert 'select 1\n' in text and 'select 2\n' in text
 
 
 def test_djvused2hocr_roundtrips_through_hocr2djvused(tmp_path):
-    src = '/root/reference/tests/djvu2hocr/nesting.djvused'
-    html = io.StringIO()
-    djvused2hocr.main([src], out=html)
-    html_path = tmp_path / 'roundtrip.html'
-    html_path.write_text(html.getvalue())
-    script = io.StringIO()
-    hocr2djvused.main(['--page-size=100x100', str(html_path)],
-                      out=script)
-    got = _parse_blocks(script.getvalue())
-    want = _parse_blocks(open(src, encoding='UTF-8').read())
-    assert got == want
+    in_repo = tmp_path / 'nesting.djvused'
+    in_repo.write_text(NESTING_DJVUSED, encoding='UTF-8')
+    sources = [str(in_repo)]
+    if REFERENCE_PRESENT:
+        sources.append(os.path.join(DJVU2HOCR_DIR, 'nesting.djvused'))
+    for n, src in enumerate(sources):
+        html = io.StringIO()
+        djvused2hocr.main([src], out=html)
+        html_path = tmp_path / f'roundtrip{n}.html'
+        html_path.write_text(html.getvalue())
+        script = io.StringIO()
+        hocr2djvused.main(['--page-size=100x100', str(html_path)],
+                          out=script)
+        got = _parse_blocks(script.getvalue())
+        want = _parse_blocks(open(src, encoding='UTF-8').read())
+        assert got == want
 
 
+@needs_reference_corpus
 def test_golden_cases_importable():
     # keep the shared corpus loader import exercised from this module
     assert len(list(golden_cases())) == 68

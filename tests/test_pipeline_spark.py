@@ -16,7 +16,7 @@ from ocrodjvu_spark.kernel import sexpr
 TRANSCRIPTS_DDL = ('conv_id string, turn_idx int, role string, '
                    'text string, tool string, ts timestamp')
 
-from tests.corpus import golden_cases
+from tests.corpus import golden_cases, needs_reference_corpus
 
 
 def _corpus_transcripts(spark, details='words', uax29=None):
@@ -75,6 +75,7 @@ def test_golden_corpus_through_spark(spark, details, uax29):
             assert sexpr.parse(got_page) == want, key
 
 
+@needs_reference_corpus
 def test_page_size_dialects_through_spark(spark):
     """cuneiform 0.7/0.8 fixtures (need --page-size) through the UDF.
 
