@@ -39,10 +39,10 @@ def salted_repartition(
     salt_buckets: int = 16,
 ) -> DataFrame:
     """Spread skewed conv_id groups across salt_buckets partitions."""
-    salt = F.pmod(F.xxhash64('turn_idx'), F.lit(salt_buckets))
+    salt = F.expr(f'pmod(xxhash64(turn_idx), {int(salt_buckets)})')
     if num_partitions:
-        return df.repartition(num_partitions, F.col('conv_id'), salt)
-    return df.repartition(F.col('conv_id'), salt)
+        return df.repartition(num_partitions, 'conv_id', salt)
+    return df.repartition('conv_id', salt)
 
 
 def extract_turns(
@@ -83,16 +83,20 @@ def extract_turns(
         page_size=page_size, fix_utf8=fix_utf8,
         emit_spans=emit_spans, emit_sexpr=emit_sexpr, engine=engine)
     keep = [c for c in keep_columns if c in df.columns]
-    result = df.select(
-        *KEY_COLUMNS, *keep, extract(F.col('text')).alias('_r'))
-    exploded = result.select(
-        *KEY_COLUMNS, *keep,
-        F.col('_r.dialect').alias('dialect'),
-        F.col('_r.error').alias('error'),
-        F.posexplode_outer('_r.pages').alias('page_idx', 'page'),
-    )
-    return exploded.select(
-        *KEY_COLUMNS, *keep, 'dialect', 'error', 'page_idx', 'page.*')
+    result = df.select(*KEY_COLUMNS, *keep, extract('text').alias('_r'))
+    # the projections after the UDF as SQL text: one parse on the JVM
+    # instead of a py4j call per Column
+    cols = [_quote(c) for c in (*KEY_COLUMNS, *keep)]
+    return result.selectExpr(
+        *cols, '_r.dialect AS dialect', '_r.error AS error',
+        'posexplode_outer(_r.pages) AS (page_idx, page)',
+    ).selectExpr(*cols, 'dialect', 'error', 'page_idx', 'page.*')
+
+
+def _quote(name: str) -> str:
+    """``name`` as a SQL identifier (a top-level column, never a field
+    path)."""
+    return '`{}`'.format(name.replace('`', '``'))
 
 
 def word_spans(extracted: DataFrame) -> DataFrame:
@@ -213,38 +217,40 @@ def roundtrip_turns(extracted: DataFrame) -> DataFrame:
     )
 
 
-def run_metric_terms(extracted: DataFrame) -> Dict[str, Column]:
-    """The run metrics over ``extract_turns`` output, as per-row terms
-    whose sums are the metrics: n_turns, n_errors, n_spans, n_chars.
+def run_metric_terms(extracted: DataFrame) -> Dict[str, str]:
+    """The run metrics over ``extract_turns`` output, as per-row SQL
+    terms whose sums are the metrics: n_turns, n_errors, n_spans,
+    n_chars.
 
     The one definition behind ``run_metrics``, ``extraction_metrics``
-    and the checkpoint sidecar. ``n_spans`` counts the spans the run
-    emitted: every zone under ``emit_spans=True``, words only under
-    ``'packed'``, none under ``False``. The span shape is read from the
-    frame's columns.
+    and the checkpoint sidecar, kept as SQL text so that a plan built
+    from it costs one parse on the JVM rather than a py4j call per
+    Column. ``n_spans`` counts the spans the run emitted: every zone
+    under ``emit_spans=True``, words only under ``'packed'``, none
+    under ``False``. The span shape is read from the frame's columns.
     """
     if 'spans_packed' in extracted.columns:
-        packed = F.col('spans_packed')
-        n_spans = F.when(packed.isNull() | (packed == ''), 0) \
-            .otherwise(F.size(F.split(packed, extract_fn.SPAN_RS)))
+        n_spans = ("CASE WHEN spans_packed IS NULL OR spans_packed = '' "
+                   f"THEN 0 ELSE size(split(spans_packed, "
+                   f"'{extract_fn.SPAN_RS}')) END")
     else:
-        n_spans = F.size(F.coalesce(F.col('spans'), F.array()))
+        n_spans = 'size(coalesce(spans, array()))'
     return {
         # distinct turns, not exploded page rows: count each turn's first
         # page (error rows have null page_idx and still count as a turn);
         # plain hash aggregate, no countDistinct Expand
-        'n_turns': F.when(F.col('page_idx').isNull()
-                          | (F.col('page_idx') == 0), 1).otherwise(0),
-        'n_errors': F.when(F.col('error').isNotNull(), 1).otherwise(0),
+        'n_turns': 'CASE WHEN page_idx IS NULL OR page_idx = 0 '
+                   'THEN 1 ELSE 0 END',
+        'n_errors': 'CASE WHEN error IS NOT NULL THEN 1 ELSE 0 END',
         'n_spans': n_spans,
-        'n_chars': F.length(F.coalesce(F.col('extracted_text'), F.lit(''))),
+        'n_chars': "length(coalesce(extracted_text, ''))",
     }
 
 
 def run_metrics(extracted: DataFrame) -> List[Column]:
     """``run_metric_terms`` as named sums; aggregate them under any
     grouping."""
-    return [F.sum(term).alias(name)
+    return [F.expr(f'sum({term}) AS {name}')
             for name, term in run_metric_terms(extracted).items()]
 
 

@@ -53,9 +53,8 @@ BUCKET_COL = 'bucket'
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
-    return df.withColumn(
-        BUCKET_COL,
-        F.pmod(F.xxhash64('conv_id'), F.lit(n_buckets)).cast('int'))
+    return df.withColumn(BUCKET_COL, F.expr(
+        f'CAST(pmod(xxhash64(conv_id), {int(n_buckets)}) AS INT)'))
 
 
 def completed_buckets(spark: SparkSession, sidecar_path: str,
@@ -116,8 +115,10 @@ def run_extraction(
     if not pending:
         return []
 
-    src = with_bucket(transcripts, n_buckets)
-    src = src.where(F.col(BUCKET_COL).isin(pending))
+    # plans built from SQL text: one parse on the JVM instead of a py4j
+    # call per Column
+    src = with_bucket(transcripts, n_buckets).where(
+        '{} IN ({})'.format(BUCKET_COL, ', '.join(map(str, pending))))
     if raw_output_path:
         # S9 sidecar restricted to this run's pending buckets (dynamic
         # overwrite — resumes never rescan or clobber completed buckets)
@@ -126,23 +127,19 @@ def run_extraction(
         src, keep_columns=('role', 'tool', 'ts', BUCKET_COL),
         salt_buckets=salt_buckets, **extract_kwargs)
 
-    shaped = extracted.repartition(max(len(pending), 1), F.col(BUCKET_COL))
+    shaped = extracted.repartition(max(len(pending), 1), BUCKET_COL)
     # the run metrics ride on the write itself, in the result stage after
     # the last exchange, where Spark merges each task's accumulators once
     # however often the task is retried. Per metric ONE observed array of
-    # conditional sums, one element per pending bucket, over the per-row
-    # terms projected as hidden columns: a constant number of Column
-    # calls on the driver, whatever the bucket count.
+    # conditional sums of its per-row term, one element per pending
+    # bucket: one parsed expression per metric, whatever the bucket count.
     terms = pipeline.run_metric_terms(shaped)
     observation = Observation('run_metrics')
-    shaped = (shaped
-              .select('*', *(t.alias(f'__{n}') for n, t in terms.items()))
-              .observe(observation, *(
-                  F.expr('array({})'.format(', '.join(
-                      f'sum(if({BUCKET_COL} = {b}, __{n}, NULL))'
-                      for b in pending))).alias(n)
-                  for n in terms))
-              .drop(*(f'__{n}' for n in terms)))
+    shaped = shaped.observe(observation, *(
+        F.expr('array({}) AS {}'.format(', '.join(
+            f'sum(if({BUCKET_COL} = {b}, ({term}), NULL))'
+            for b in pending), n))
+        for n, term in terms.items()))
     _write_output(shaped, output_path, snap_out)
 
     # lineage + metrics, appended only after the bucket data is durable;
@@ -164,8 +161,9 @@ def run_extraction(
     if snap_side is not None:
         snap_side.append(table)
     else:
-        spark.createDataFrame(table).write.mode('append').parquet(
-            sidecar_path)
+        # one file per run, not one per partition of the Arrow frame
+        spark.createDataFrame(table).coalesce(1).write.mode(
+            'append').parquet(sidecar_path)
     return pending
 
 

@@ -388,7 +388,9 @@ def _merge_schema(base_json: Optional[str], new_json: str) -> str:
             merged.append(nf)
     out = dict(base)
     out['fields'] = merged
-    return json.dumps(out)
+    # serialized as pyspark's ``DataType.json`` does, so an unchanged
+    # schema is recorded as the same string whichever commit wrote it
+    return json.dumps(out, separators=(',', ':'), sort_keys=True)
 
 
 def _materialize_filters(filters):

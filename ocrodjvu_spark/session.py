@@ -4,6 +4,23 @@ Local mode stands in for a multi-executor cluster; the knobs below are the
 ones that matter at 100 TB too (AQE for runtime re-planning and skew-join
 splitting, Arrow batching for the pandas-UDF kernel, shuffle-partition
 sizing relative to parallelism).
+
+``SESSION_CONF`` holds the settings every session of the package needs,
+whoever builds it: ``get_spark`` applies it, and so does
+``tools/run_pipeline.py`` under spark-submit. Besides the output format
+it turns off pyspark's DataFrame call-site capture
+(``spark.python.sql.dataFrameDebugging.enabled``, on by default in
+pyspark 4.1). With capture on, every ``F.col`` and every ``Column``
+method call on the driver also looks up the active session and a JVM
+class, reads a conf, and sets and clears an origin in the JVM: about six
+extra py4j round trips per call, for a call site that only error
+messages show. Plans and results do not change.
+
+Caveat: pyspark reads the setting once per process, from the active
+session at the first wrapped call
+(``pyspark.errors.utils.is_debugging_enabled``), and keeps it for the
+life of the process; a process whose first session leaves capture on
+keeps it on in every later session.
 """
 
 from __future__ import annotations
@@ -13,10 +30,10 @@ import site
 
 from pyspark.sql import SparkSession
 
-# output-format settings every session that writes the package's tables
-# needs, whoever builds it (``get_spark``, or ``tools/run_pipeline.py``
-# under spark-submit, which keeps the submitted master):
-FORMAT_CONF = {
+# settings every session of the package needs, whoever builds it
+# (``get_spark``, or ``tools/run_pipeline.py`` under spark-submit, which
+# keeps the submitted master):
+SESSION_CONF = {
     # pin the session timezone: date_trunc/date_format gates must not
     # depend on the host TZ (DuckDB oracles compute in UTC)
     'spark.sql.session.timeZone': 'UTC',
@@ -25,6 +42,8 @@ FORMAT_CONF = {
     # store's time-range file skipping (and every other engine's
     # row-group pruning) on ltz timestamp columns
     'spark.sql.parquet.outputTimestampType': 'TIMESTAMP_MICROS',
+    # no call-site capture on driver-side Column calls (module docstring)
+    'spark.python.sql.dataFrameDebugging.enabled': 'false',
 }
 
 
@@ -43,7 +62,7 @@ def get_spark(
         SparkSession.builder
         .appName(app_name)
         .master(master)
-        .config(map=FORMAT_CONF)
+        .config(map=SESSION_CONF)
         # AQE: runtime coalescing + skew-join splitting; at cluster scale
         # this is what absorbs conv_id skew after the salted repartition.
         .config('spark.sql.adaptive.enabled', 'true')

@@ -30,6 +30,9 @@ def test_resume_after_partial_run(spark, paths):
     second = checkpoint.run_extraction(
         spark, df, out, side, n_buckets=N_BUCKETS)
     assert sorted(first + second) == list(range(N_BUCKETS))
+    # the sidecar grows by one file per run, not one per partition
+    import glob
+    assert len(glob.glob(f'{side}/part-*.parquet')) == 2
 
     # third run: nothing pending -> no-op
     assert checkpoint.run_extraction(

@@ -4,6 +4,8 @@ The decisive test feeds the reference's real hOCR fixtures through the
 *Spark* pipeline as a transcripts table — one turn per golden case — and
 asserts per-turn sexpr equality against the goldens (per-turn text
 equality under stable turn ordering, per BASELINE.json input_hint).
+Where the reference corpus is absent it feeds the in-repo pages of
+``tests/corpus.py`` instead, against the kernel's own extraction.
 """
 
 import datetime
@@ -12,26 +14,44 @@ import pytest
 from pyspark.sql import Row
 
 from ocrodjvu_spark import pipeline
-from ocrodjvu_spark.kernel import sexpr
+from ocrodjvu_spark.kernel import hocr, sexpr
 TRANSCRIPTS_DDL = ('conv_id string, turn_idx int, role string, '
                    'text string, tool string, ts timestamp')
 
-from tests.corpus import golden_cases, needs_reference_corpus
+from tests.corpus import (IN_REPO_HOCR_PAGES, REFERENCE_PRESENT,
+                          golden_cases, needs_reference_corpus)
 
 
-def _corpus_transcripts(spark, details='words', uax29=None):
-    """One conversation per fixture config; turns = golden cases."""
-    rows = []
-    expected = {}
-    i = 0
-    for case_id, html_bytes, kwargs, expected_pages in golden_cases():
-        if kwargs['details'] != (
-                {'lines': 3, 'words': 2, 'chars': 1}[details]):
+def _cases(details, uax29):
+    """(hOCR bytes, expected page sexprs) per turn for one config.
+
+    Where the reference corpus is present: its golden cases. Where it is
+    absent: the in-repo pages, whose expected pages are the kernel's own
+    extraction, so the Spark shell around the kernel (salting, Arrow
+    batching, page explode, per-turn order) is still checked.
+    """
+    level = hocr.DETAILS_BY_NAME[details]
+    if not REFERENCE_PRESENT:
+        for html_bytes in IN_REPO_HOCR_PAGES:
+            yield html_bytes, hocr.extract_sexprs(
+                html_bytes, details=level, uax29=uax29)
+        return
+    for _case_id, html_bytes, kwargs, expected_pages in golden_cases():
+        if kwargs['details'] != level:
             continue
         if bool(kwargs['uax29']) != bool(uax29):
             continue
         if kwargs.get('page_size') is not None:
             continue  # page-size configs tested at kernel level
+        yield html_bytes, [sexpr.parse(p) for p in expected_pages]
+
+
+def _corpus_transcripts(spark, details='words', uax29=None):
+    """One conversation per fixture config; turns = cases."""
+    rows = []
+    expected = {}
+    for i, (html_bytes, expected_pages) in enumerate(
+            _cases(details, uax29)):
         conv_id = f'conv-{i % 4}'
         turn_idx = i // 4 + 1
         rows.append(Row(
@@ -42,9 +62,7 @@ def _corpus_transcripts(spark, details='words', uax29=None):
             tool=None,
             ts=datetime.datetime(2025, 1, 1) + datetime.timedelta(seconds=i),
         ))
-        expected[(conv_id, turn_idx)] = [
-            sexpr.parse(p) for p in expected_pages]
-        i += 1
+        expected[(conv_id, turn_idx)] = expected_pages
     df = spark.createDataFrame(rows, schema=','.join([
         'conv_id string', 'turn_idx int', 'role string', 'text string',
         'tool string', 'ts timestamp']))
@@ -57,6 +75,7 @@ def _corpus_transcripts(spark, details='words', uax29=None):
 ])
 def test_golden_corpus_through_spark(spark, details, uax29):
     df, expected = _corpus_transcripts(spark, details, uax29)
+    assert expected, 'no case for this config: the corpus is partial'
     out = pipeline.extract_turns(
         df, details=details, uax29=uax29, salt_buckets=4)
     got = out.select(
@@ -230,6 +249,44 @@ def test_extraction_metrics_packed_matches_struct(spark):
         assert g.n_spans == words.get(conv_id, 0), conv_id
     assert sum(g.n_spans for g in got.values()) == \
         sum(1 + i % 7 for i in range(60))
+
+
+@pytest.mark.parametrize('shape', ['spans', 'spans_packed'])
+def test_run_metrics_pinned_on_hand_built_rows(spark, shape):
+    # the metric definition against literal numbers, not against itself:
+    # a multi-page turn counts once, an error row counts as a turn with
+    # no spans or chars, and a NULL payload (and a '' packed string)
+    # adds no span
+    from ocrodjvu_spark.functions.extract import SPAN_FS, SPAN_RS
+
+    def packed(n):
+        return SPAN_RS.join(SPAN_FS.join(['0', '0', '1', '1', f'w{i}'])
+                            for i in range(n))
+
+    span = ('page', 'x')
+    payload = {
+        'spans': ([span, span], [span], [span] * 3, None, []),
+        'spans_packed': (packed(2), packed(1), packed(3), None, ''),
+    }[shape]
+    ddl = {'spans': 'array<struct<zone_type:string,text:string>>',
+           'spans_packed': 'string'}[shape]
+    rows = [
+        # conv_id, turn_idx, page_idx, error, extracted_text, spans
+        ('a', 1, 0, None, 'ab cd', payload[0]),
+        ('a', 2, 0, None, 'x', payload[1]),   # a two-page turn
+        ('a', 2, 1, None, 'yz', payload[2]),
+        ('a', 3, None, 'unparsable', None, None),  # an error row
+        ('b', 1, 0, None, None, payload[3]),  # NULL text and spans
+        ('b', 2, 0, None, '', payload[4]),    # '' text, no span
+    ]
+    df = spark.createDataFrame(
+        rows, 'conv_id string, turn_idx int, page_idx int, error string, '
+              f'extracted_text string, {shape} {ddl}')
+    by_conv = {r.conv_id: tuple(r)[1:] for r in
+               pipeline.extraction_metrics(df).collect()}
+    # (n_turns, n_errors, n_spans, n_chars)
+    assert by_conv == {'a': (3, 1, 6, 8), 'b': (2, 0, 0, 0)}
+    assert tuple(df.agg(*pipeline.run_metrics(df)).first()) == (5, 1, 6, 8)
 
 
 @pytest.mark.parametrize('option,value', [

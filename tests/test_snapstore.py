@@ -729,6 +729,17 @@ def test_append_adds_column_old_files_read_null(spark, tmp_path):
                                     '_change_type', '_commit_version'}
 
 
+def test_unchanged_schema_recorded_as_one_string(spark, tmp_path):
+    # appends that do not change the schema record it byte for byte as
+    # the first one did (pyspark's DataType.json serialization)
+    t = SnapshotTable(str(tmp_path / 't'))
+    batches = [_docs(spark, v, n=4) for v in 'abc']
+    for df in batches:
+        t.append(df)
+    assert {t.snapshot(v)['schema'] for v in (1, 2, 3)} == {
+        batches[0].schema.json()}
+
+
 def test_append_dropping_or_retyping_column_raises(spark, tmp_path):
     import os
     t = SnapshotTable(str(tmp_path / 't'))

@@ -92,6 +92,61 @@ def test_run_pipeline_jsonl_input_end_to_end(spark, tmp_path):
     assert files and all('ts' in f['stats'] for f in files)
 
 
+_CAPTURE_SCRIPT = r'''
+import json, sys
+sys.path.insert(0, sys.argv[1])
+import run_pipeline
+from pyspark.errors.utils import is_debugging_enabled
+from ocrodjvu_spark.plans import checkpoint
+
+seen = []
+real = checkpoint.run_extraction
+
+
+def spy(spark, *args, **kwargs):
+    seen.append(is_debugging_enabled())
+    return real(spark, *args, **kwargs)
+
+
+checkpoint.run_extraction = spy
+run_pipeline.main(sys.argv[2:])
+print(json.dumps(seen))
+'''
+
+
+def test_sessions_run_without_call_site_capture(spark, tmp_path):
+    # pyspark's per-Column call-site capture costs py4j round trips on
+    # every plan-building call: get_spark sessions and the CLI's session
+    # (a fresh process, so pyspark's process-wide cache is unset) run
+    # with it off
+    import datetime
+    import json as _json
+    import subprocess
+    from pyspark.errors.utils import is_debugging_enabled
+    assert spark.conf.get(
+        'spark.python.sql.dataFrameDebugging.enabled') == 'false'
+    assert is_debugging_enabled() is False
+    inp = str(tmp_path / 'in')
+    page = ('<html><head><meta name="ocr-capabilities" content="x"/>'
+            '</head><body><div class="ocr_page" title="bbox 0 0 100 100">'
+            '<span class="ocr_line" title="bbox 1 1 9 9">hi</span>'
+            '</div></body></html>')
+    spark.createDataFrame(
+        [(f'c{i}', 1, 'user', page, None, datetime.datetime(2025, 1, 1))
+         for i in range(4)],
+        'conv_id string, turn_idx int, role string, text string, '
+        'tool string, ts timestamp').write.parquet(inp)
+    r = subprocess.run(
+        [sys.executable, '-c', _CAPTURE_SCRIPT,
+         os.path.join(REPO_ROOT, 'tools'), '--input', inp,
+         '--output', str(tmp_path / 'out'),
+         '--sidecar', str(tmp_path / 'side'), '--buckets', '2'],
+        capture_output=True, text=True, cwd=REPO_ROOT,
+        env=dict(os.environ, PYTHONPATH=REPO_ROOT), timeout=600)
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert _json.loads(r.stdout.strip().splitlines()[-1]) == [False]
+
+
 def test_run_pipeline_snapshot_input_end_to_end(spark, tmp_path):
     # snapshot-table INPUT through the production path: the 10^12-turn
     # source is itself an Iceberg-style table — extraction reads a

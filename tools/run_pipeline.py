@@ -81,16 +81,17 @@ def main(argv=None):
     from ocrodjvu_spark.kernel.iso639 import normalize_language
     from ocrodjvu_spark.kernel.utils import parse_page_numbers
     from ocrodjvu_spark.plans import checkpoint
-    from ocrodjvu_spark.session import FORMAT_CONF
+    from ocrodjvu_spark.session import SESSION_CONF
 
     normalize_language(args.language)  # validate config early
 
-    # master and resources come from spark-submit; the output format
-    # settings are the package's (UTC, int64-micros timestamps with
-    # stats). pyspark's stock worker daemon: under --py-files the
-    # package may not be importable when the daemon starts
+    # master and resources come from spark-submit; the session settings
+    # are the package's (UTC, int64-micros timestamps with stats, no
+    # call-site capture). pyspark's stock worker daemon: under
+    # --py-files the package may not be importable when the daemon
+    # starts
     spark = SparkSession.builder.appName('ocrodjvu-spark-extract') \
-        .config(map=FORMAT_CONF).getOrCreate()
+        .config(map=SESSION_CONF).getOrCreate()
     n_corrupt = 0
     if args.input_format == 'jsonl':
         from ocrodjvu_spark.sources import jsonl as J
