@@ -11,6 +11,7 @@ Usage: python tools/explain_audit.py [sf_dir]
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -25,6 +26,22 @@ from ocrodjvu_spark.sources import transcripts as T  # noqa: E402
 
 def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+_RUN_SPECIFIC = ((re.compile(r'#(\d+)'), '#{}'),
+                 (re.compile(r'plan_id=(\d+)'), 'plan_id={}'))
+_SNAP_FILE = re.compile(r'plan-audit-snap-\w+/t/data/[0-9a-f]*')
+
+
+def stable_text(plan: str) -> str:
+    """The plan as PLANS.md records it: expression and plan ids renumbered
+    by first appearance and the audit's temporary paths masked, so the
+    file changes only when a plan does. The checks read the raw text."""
+    for pattern, fmt in _RUN_SPECIFIC:
+        ids = {}
+        plan = pattern.sub(
+            lambda m: fmt.format(ids.setdefault(m.group(1), len(ids))), plan)
+    return _SNAP_FILE.sub('plan-audit-snap-<tmp>/t/data/<file>', plan)
 
 
 def main():
@@ -520,7 +537,7 @@ def main():
     for name, plan, results in sections:
         lines.append(f'## {name}\n')
         lines.append('```')
-        lines.append(plan.strip()[:4000])
+        lines.append(stable_text(plan.strip())[:4000])
         lines.append('```\n')
     with open('PLANS.md', 'w') as f:
         f.write('\n'.join(lines))
