@@ -59,11 +59,7 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
 
 def completed_buckets(spark: SparkSession, sidecar_path: str,
                       table_format: str = 'parquet') -> List[int]:
-    if table_format == 'snapshot':
-        from .snapstore import SnapshotTable
-        sidecar = SnapshotTable(sidecar_path).read(spark)
-    else:
-        sidecar = _read_sidecar(spark, sidecar_path)
+    sidecar = read_table(spark, sidecar_path, table_format)
     if sidecar is None:
         return []
     # one row per completed bucket and run: deduplicated on the driver,
@@ -252,16 +248,24 @@ def save_raw_payloads(transcripts: DataFrame, path: str,
         transcripts.select(*cols).write.mode('overwrite').parquet(path)
 
 
-def _read_sidecar(spark: SparkSession, path: str) -> Optional[DataFrame]:
-    """Open the sidecar through Spark itself (works on any Hadoop
+def read_table(spark: SparkSession, path: str,
+               table_format: str) -> Optional[DataFrame]:
+    """The output or sidecar table at ``path`` in ``table_format``; None
+    when it holds no data yet.
+
+    A snapshot table reads its HEAD through ``SnapshotTable.read``. A
+    parquet table is opened through Spark itself (works on any Hadoop
     filesystem — HDFS/S3/local — unlike a driver-side os.path probe,
     which on a cluster deployment would always miss and silently degrade
     resume into full reprocessing). A missing path, checked through the
     path's Hadoop ``FileSystem``, or one that holds no data (an
-    AnalysisException) means 'no sidecar yet'. The existence check keeps
+    AnalysisException) means 'no table yet'. The existence check keeps
     the common first run from failing analysis, which a session that has
     used an ``Observation`` logs as a listener error with a stack trace.
     """
+    if table_format == 'snapshot':
+        from .snapstore import SnapshotTable
+        return SnapshotTable(path).read(spark)
     from pyspark.errors import AnalysisException
     sc = spark.sparkContext
     jpath = sc._jvm.org.apache.hadoop.fs.Path(path)

@@ -718,7 +718,7 @@ class SnapshotTable:
         returned frame (exactly how an engine consumes Iceberg's
         bounds). Returns None for an empty table/snapshot — callers
         decide their own empty-schema story, same convention as
-        ``checkpoint._read_sidecar``.
+        ``checkpoint.read_table``.
         """
         if version is not None and ref is not None:
             raise ValueError('read: version and ref are mutually exclusive')

@@ -267,14 +267,6 @@ SIDECAR_DTYPES = [('bucket', 'int'), ('n_turns', 'bigint'),
                   ('n_chars', 'bigint'), ('run_ts', 'timestamp')]
 
 
-def _read(spark, path, table_format):
-    """The table at ``path``; None when it holds no data file."""
-    from ocrodjvu_spark.plans.snapstore import SnapshotTable
-    if table_format == 'snapshot':
-        return SnapshotTable(path).read(spark)
-    return checkpoint._read_sidecar(spark, path)
-
-
 def _rows_by_bucket(df):
     return {r[0]: tuple(r[1:]) for r in df.collect()}
 
@@ -283,7 +275,7 @@ def _expected_sidecar(spark, out, table_format, buckets):
     """``run_metrics`` grouped by bucket over the written output, with a
     zero row for each bucket that holds no rows."""
     from ocrodjvu_spark import pipeline
-    written = _read(spark, out, table_format)
+    written = checkpoint.read_table(spark, out, table_format)
     got = {} if written is None else _rows_by_bucket(
         written.groupBy(checkpoint.BUCKET_COL)
         .agg(*pipeline.run_metrics(written)))
@@ -354,7 +346,7 @@ def test_sidecar_metrics_observed_without_rescan(spark, tmp_path,
                            if not n.startswith('Scan') and side in d]
             assert bool(side_writes) == (table_format == 'parquet'), name
             assert sorted(done) == list(range(n_buckets))
-            sidecar = _read(spark, side, table_format)
+            sidecar = checkpoint.read_table(spark, side, table_format)
             assert sidecar.dtypes == SIDECAR_DTYPES
             got = _rows_by_bucket(sidecar.drop('run_ts'))
             assert got == _expected_sidecar(
@@ -388,7 +380,7 @@ def test_resume_from_sidecar_in_existing_layout(spark, tmp_path,
     assert done == [2, 3]
     assert checkpoint.completed_buckets(
         spark, side, table_format) == [0, 1, 2, 3]
-    sidecar = _read(spark, side, table_format)
+    sidecar = checkpoint.read_table(spark, side, table_format)
     assert sidecar.dtypes == SIDECAR_DTYPES
     got = _rows_by_bucket(sidecar.drop('run_ts'))
     assert got[0] == (5, 0, 0, 40) and got[1] == (7, 1, 0, 60)

@@ -130,13 +130,8 @@ def main(argv=None):
         rotation=args.rotation, fix_utf8=args.fix_utf8,
     )
     elapsed = time.time() - t0
-    if not processed:
-        metrics = None
-    elif args.table_format == 'snapshot':
-        from ocrodjvu_spark.plans.snapstore import SnapshotTable
-        metrics = SnapshotTable(args.sidecar).read(spark)
-    else:
-        metrics = spark.read.parquet(args.sidecar)
+    metrics = checkpoint.read_table(
+        spark, args.sidecar, args.table_format) if processed else None
     summary = {
         'buckets_processed': len(processed),
         'elapsed_sec': round(elapsed, 2),
