@@ -1042,26 +1042,19 @@ QUANTILE_PROBS = (0.25, 0.5, 0.75, 0.95)
 
 
 def length_quantiles(docs: DataFrame, value_col='n_chars',
-                     stratum_col='lang', approx: bool = False,
-                     accuracy: int = 10_000) -> DataFrame:
+                     stratum_col='lang') -> DataFrame:
     """Per-stratum length distribution (the data-card table): p25 / p50 /
     p75 / p95 of ``value_col`` plus the document count.
 
-    ``approx=False`` uses the exact interpolating ``percentile``
-    aggregate — it buffers every group value in the aggregation buffer,
-    fine up to millions of rows per stratum and bit-comparable to the
-    SQL oracle's ``quantile_cont``. At 100 TB use ``approx=True``:
-    ``approx_percentile`` (Greenwald-Khanna sketch, bounded memory,
-    map-side combinable) with ``accuracy`` trading error for buffer
-    size — same output schema, not oracle-exact by construction.
+    The exact interpolating ``percentile`` aggregate buffers every group
+    value in the aggregation buffer — fine up to millions of rows per
+    stratum and bit-comparable to the SQL oracle's ``quantile_cont``.
+    ``sampled_quantiles`` is the bounded-memory path.
     """
     probs = F.array(*[F.lit(p) for p in QUANTILE_PROBS])
-    if approx:
-        q = F.percentile_approx(value_col, probs, F.lit(accuracy))
-    else:
-        q = F.percentile(value_col, probs)
     return (docs.groupBy(F.col(stratum_col).alias('stratum'))
-            .agg(F.count('*').alias('n_docs'), q.alias('q'))
+            .agg(F.count('*').alias('n_docs'),
+                 F.percentile(value_col, probs).alias('q'))
             .select('stratum', 'n_docs',
                     *[F.round(F.element_at('q', i + 1), 6)
                       .alias(f'p{int(p * 100)}')
@@ -1071,9 +1064,8 @@ def length_quantiles(docs: DataFrame, value_col='n_chars',
 def sampled_quantiles(docs: DataFrame, value_col='n_chars',
                       key_col='doc_id', stratum_col='lang',
                       rate: int = 4) -> DataFrame:
-    """Deterministic hash-sampled quantiles: the third quantile path —
-    oracle-exact like ``length_quantiles(approx=False)`` AND
-    memory-bounded like ``approx=True``.
+    """Deterministic hash-sampled quantiles: the bounded-memory quantile
+    path — oracle-exact like ``length_quantiles`` and memory-bounded.
 
     The sample is the rows whose portable rolling hash of the key is
     ``0 (mod rate)``: deterministic (no RNG — stable across retries,
@@ -1260,9 +1252,7 @@ def quality_buckets(docs: DataFrame, id_col='doc_id', text_col='text',
     Scale shape: the thresholds are ONE aggregate row broadcast back
     over the corpus (no global sort / ntile — a single-partition window
     would serialize the corpus through one task at 100 TB). The exact
-    interpolating ``percentile`` is oracle-comparable; swap
-    ``percentile_approx`` in at extreme scale (same shape, documented
-    like ``length_quantiles``).
+    interpolating ``percentile`` is oracle-comparable.
     """
     scored = lm_score(docs, id_col, text_col, vocab_size)
     # cuts rounded to 6dp (same convention as lm_score itself): Spark
