@@ -53,12 +53,11 @@ _STRIP_RE = '[<>/|]'
 _TOKEN_RE = '<([^<>]*)>'
 
 
-def norm_text_col(text_col='text') -> Column:
+def norm_text_col() -> Column:
     """Whitespace-collapsed, structural-character-stripped text (the
     tokenizer's input normalization; mirrored 1:1 in the gate oracle)."""
-    col = F.col(text_col) if isinstance(text_col, str) else text_col
     return F.trim(F.regexp_replace(
-        F.regexp_replace(col, _STRIP_RE, ''), r'\s+', ' '))
+        F.regexp_replace(F.col('text'), _STRIP_RE, ''), r'\s+', ' '))
 
 
 def word_repr_col(word: Column) -> Column:
@@ -66,14 +65,14 @@ def word_repr_col(word: Column) -> Column:
     return F.regexp_replace(word, '(.)', f'{OPEN}$1{CLOSE}')
 
 
-def doc_repr_col(text_col='text') -> Column:
+def doc_repr_col() -> Column:
     """Whole document -> its token-list string, word boundaries as '/'.
 
     'go up' -> '<g><o>/<u><p>'. A merge pattern '<a><b>' can never span
     the boundary marker, so per-word and per-document application are
     equivalent and the per-document form is a single string column.
     """
-    bracketed = F.regexp_replace(norm_text_col(text_col),
+    bracketed = F.regexp_replace(norm_text_col(),
                                  '(.)', f'{OPEN}$1{CLOSE}')
     # the space between words became '< >'; collapse it to the boundary
     return F.replace(bracketed, F.lit(f'{OPEN} {CLOSE}'), F.lit(BOUND))
@@ -98,18 +97,17 @@ def tokens_col(repr_col: Column) -> Column:
     return F.regexp_extract_all(repr_col, F.lit(_TOKEN_RE), 1)
 
 
-def word_counts(docs: DataFrame, text_col='text') -> DataFrame:
+def word_counts(docs: DataFrame) -> DataFrame:
     """Corpus -> distinct (word, cnt) training state. The ONE corpus
     scan + one shuffle on the word key; everything after operates on
     vocabulary-sized data."""
     words = docs.select(
-        F.explode(F.split(norm_text_col(text_col), ' ')).alias('word'))
+        F.explode(F.split(norm_text_col(), ' ')).alias('word'))
     return (words.where(F.col('word') != '')
             .groupBy('word').agg(F.count('*').alias('cnt')))
 
 
-def pair_counts(state: DataFrame,
-                repr_col: str = 'toks_str') -> DataFrame:
+def pair_counts(state: DataFrame) -> DataFrame:
     """Adjacent-pair counts over the training state.
 
     Pairs come from zipping the token array with its own tail
@@ -117,7 +115,7 @@ def pair_counts(state: DataFrame,
     higher-order expression), weighted by the word count.
     Result: (pair, n) with the pair label 'a|b'.
     """
-    toks = tokens_col(F.col(repr_col))
+    toks = tokens_col(F.col('toks_str'))
     head = F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0)))
     tail = F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0)))
     pairs = F.zip_with(head, tail,
@@ -130,7 +128,6 @@ def pair_counts(state: DataFrame,
 def train(
     docs: DataFrame,
     n_merges: int,
-    text_col: str = 'text',
     min_count: int = 2,
     max_local_state: int = 5_000_000,
 ) -> List[Tuple[str, str]]:
@@ -150,7 +147,7 @@ def train(
     ((count DESC, 'a|b' label ASC)) and are equivalence-tested against
     each other and the sequential reference.
     """
-    wc = word_counts(docs, text_col)
+    wc = word_counts(docs)
     # ONE job decides the path AND fetches the state: take(N+1)
     # returns at most N+1 rows — overflow means "too big, go
     # distributed" without a second corpus-sized aggregation
@@ -179,8 +176,6 @@ def train(
 def tokenize(
     docs: DataFrame,
     merges: Sequence[Tuple[str, str]],
-    text_col: str = 'text',
-    id_col: str = 'doc_id',
     keep_tokens: bool = True,
 ) -> DataFrame:
     """Apply a merge table to every document (map-only, JVM-only).
@@ -190,11 +185,11 @@ def tokenize(
     strongest value-level evidence for the oracle hash compare; drop it
     with ``keep_tokens=False`` when only counts are needed.
     """
-    repr_ = apply_merges(doc_repr_col(text_col), merges)
+    repr_ = apply_merges(doc_repr_col(), merges)
     toks = tokens_col(repr_)
-    norm = norm_text_col(text_col)
+    norm = norm_text_col()
     out = docs.select(
-        F.col(id_col),
+        F.col('doc_id'),
         F.size(toks).alias('n_tokens'),
         F.size(F.split(norm, ' ')).alias('n_words'),
         repr_.alias('toks_str'),

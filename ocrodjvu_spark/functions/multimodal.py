@@ -320,11 +320,13 @@ def frame_byte_sum(col):
     return _FRAME_BYTE_SUM(col)
 
 
-def sample_frames(media: DataFrame, frame_bytes: int = 256,
-                  every_n: int = 2) -> DataFrame:
+FALLBACK_FRAME_BYTES = 256
+
+
+def sample_frames(media: DataFrame, every_n: int = 2) -> DataFrame:
     """REAL frame sampling for AVI payloads: every Nth decoded frame's
     raw bytes, in stream order. Non-AVI / undecodable payloads fall
-    back to fixed-size byte windows (the former stub, kept so the
+    back to ``FALLBACK_FRAME_BYTES``-byte windows (the former stub, kept so the
     plumbing — explode shape, Arrow batching, binary frames — still
     exercises arbitrary binaries)."""
 
@@ -336,9 +338,9 @@ def sample_frames(media: DataFrame, frame_bytes: int = 256,
                 try:
                     frames = list(VC.iter_avi_frames(data))
                 except VC.VideoDecodeError:
-                    frames = [
-                        data[i * frame_bytes:(i + 1) * frame_bytes]
-                        for i in range(max(len(data) // frame_bytes, 1))]
+                    n = FALLBACK_FRAME_BYTES
+                    frames = [data[i * n:(i + 1) * n]
+                              for i in range(max(len(data) // n, 1))]
                 for i in range(0, len(frames), every_n):
                     rows.append({
                         'media_id': media_id,

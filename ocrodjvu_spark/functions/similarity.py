@@ -81,50 +81,48 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def hyperplane(j: int, dim: int = 64) -> Column:
+def hyperplane(j: int) -> Column:
     """Deterministic pseudo-random hyperplane: ((i*37 + j*101) % 19) - 9."""
     return F.array(*[
-        F.lit(float((i * 37 + j * 101) % 19 - 9)) for i in range(dim)
+        F.lit(float((i * 37 + j * 101) % 19 - 9)) for i in range(EMBED_DIM)
     ])
 
 
-def lsh_bucket(vec: Column, n_planes: int = N_HYPERPLANES,
-               dim: int = 64) -> Column:
+def lsh_bucket(vec: Column) -> Column:
     """Sign-LSH bucket id as a bit string, e.g. '10011010'."""
     bits = [
-        F.when(dot(vec, hyperplane(j, dim)) >= 0, F.lit('1'))
+        F.when(dot(vec, hyperplane(j)) >= 0, F.lit('1'))
          .otherwise(F.lit('0'))
-        for j in range(n_planes)
+        for j in range(N_HYPERPLANES)
     ]
     return F.concat(*bits)
 
 
-def _prep(embeddings: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    v = as_double(F.col(vec_col))
+def _prep(embeddings: DataFrame) -> DataFrame:
+    v = as_double(F.col('embedding'))
     return embeddings.select(
-        F.col(id_col), v.alias('vec'), norm(v).alias('nrm'))
+        F.col('vec_id'), v.alias('vec'), norm(v).alias('nrm'))
 
 
-def cosine_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
-                id_col: str = 'vec_id',
-                vec_col: str = 'embedding') -> DataFrame:
+def cosine_topk(embeddings: DataFrame, n_queries: int = 10,
+                k: int = 5) -> DataFrame:
     """Brute-force cosine top-k of the first ``n_queries`` vectors.
 
     Output: (query_id, rank, neighbor_id, cos_sim) with rank 1..k by
     (cos_sim desc, neighbor_id) after rounding to 6 decimals.
     """
-    corpus = _prep(embeddings, id_col, vec_col)
-    queries = corpus.where(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias('query_id'),
+    corpus = _prep(embeddings)
+    queries = corpus.where(F.col('vec_id') < n_queries).select(
+        F.col('vec_id').alias('query_id'),
         F.col('vec').alias('qvec'),
         F.col('nrm').alias('qnrm'),
     )
     scored = (
         corpus.crossJoin(F.broadcast(queries))
-        .where(F.col(id_col) != F.col('query_id'))
+        .where(F.col('vec_id') != F.col('query_id'))
         .select(
             'query_id',
-            F.col(id_col).alias('neighbor_id'),
+            F.col('vec_id').alias('neighbor_id'),
             F.round(
                 dot_cols(F.col('vec'), F.col('qvec'))
                 / (F.col('nrm') * F.col('qnrm')), 6).alias('cos_sim'),
@@ -139,9 +137,7 @@ def cosine_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
     )
 
 
-def ann_recall(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
-               id_col: str = 'vec_id', vec_col: str = 'embedding',
-               nprobe: int = 1) -> DataFrame:
+def ann_recall(embeddings: DataFrame, nprobe: int = 1) -> DataFrame:
     """Recall@k of the IVF index against the exact brute-force answer —
     the evaluation loop every production ANN deployment runs before
     trusting an index (and after every re-train of the quantizer).
@@ -157,10 +153,9 @@ def ann_recall(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
     Output: (query_id, n_hit, n_exact, recall) with recall rounded to
     6 decimals.
     """
-    exact = cosine_topk(embeddings, n_queries, k, id_col, vec_col) \
+    exact = cosine_topk(embeddings) \
         .select('query_id', 'neighbor_id')
-    approx = (ivf_topk(embeddings, n_queries, k, id_col, vec_col,
-                       nprobe=nprobe)
+    approx = (ivf_topk(embeddings, nprobe=nprobe)
               .select('query_id', 'neighbor_id')
               .distinct()
               .withColumn('_hit', F.lit(1)))
@@ -178,8 +173,6 @@ def ann_recall(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
 
 
 def ivf_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
-             id_col: str = 'vec_id', vec_col: str = 'embedding',
-             label_col: str = 'label', dim: int = 64,
              nprobe: int = 1) -> DataFrame:
     """IVF-style ANN: coarse quantizer = per-label mean centroids.
 
@@ -195,19 +188,19 @@ def ivf_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
     if nprobe < 1:
         raise ValueError(f'nprobe must be >= 1 (got {nprobe})')
     corpus = embeddings.select(
-        F.col(id_col), F.col(label_col).alias('list_id'),
-        as_double(F.col(vec_col)).alias('vec'))
+        F.col('vec_id'), F.col('label').alias('list_id'),
+        as_double(F.col('embedding')).alias('vec'))
     corpus = corpus.select(
-        id_col, 'list_id', 'vec', norm(F.col('vec')).alias('nrm'))
+        'vec_id', 'list_id', 'vec', norm(F.col('vec')).alias('nrm'))
     centroids = corpus.groupBy('list_id').agg(
         F.array(*[
-            F.avg(F.element_at('vec', i + 1)) for i in range(dim)
+            F.avg(F.element_at('vec', i + 1)) for i in range(EMBED_DIM)
         ]).alias('cvec'))
     centroids = centroids.select(
         F.col('list_id').alias('c_list'), 'cvec',
         norm(F.col('cvec')).alias('cnrm'))
-    queries = corpus.where(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias('query_id'),
+    queries = corpus.where(F.col('vec_id') < n_queries).select(
+        F.col('vec_id').alias('query_id'),
         F.col('vec').alias('qvec'),
         F.col('nrm').alias('qnrm'),
     )
@@ -227,10 +220,10 @@ def ivf_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
     scored = (
         corpus.join(F.broadcast(probes),
                     F.col('list_id') == F.col('probe_list'))
-        .where(F.col(id_col) != F.col('query_id'))
+        .where(F.col('vec_id') != F.col('query_id'))
         .select(
             'query_id',
-            F.col(id_col).alias('neighbor_id'),
+            F.col('vec_id').alias('neighbor_id'),
             F.round(
                 dot(F.col('vec'), F.col('qvec'))
                 / (F.col('nrm') * F.col('qnrm')), 6).alias('cos_sim'),
@@ -245,8 +238,7 @@ def ivf_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
     )
 
 
-def _lcg_plane_values(n_planes: int, dim: int,
-                      seed: int = 123456789) -> list[list[float]]:
+def _lcg_plane_values(n_planes: int, dim: int) -> list[list[float]]:
     """Deterministic pseudo-random hyperplanes via an LCG stream.
 
     The ``hyperplane`` family above is a shifted sawtooth with only 19
@@ -255,7 +247,7 @@ def _lcg_plane_values(n_planes: int, dim: int,
     gives uncorrelated planes and is trivially reproducible in SQL by
     inlining the literal values (both sides call this same function).
     """
-    x = seed
+    x = 123456789
     planes = []
     for _ in range(n_planes):
         row = []
@@ -266,10 +258,9 @@ def _lcg_plane_values(n_planes: int, dim: int,
     return planes
 
 
-def banded_buckets(vec: Column, n_bands: int, band_size: int,
-                   dim: int = 64) -> Column:
+def banded_buckets(vec: Column, n_bands: int, band_size: int) -> Column:
     """Array of per-band sign-LSH bucket keys ('<band>:<bits>')."""
-    planes = _lcg_plane_values(n_bands * band_size, dim)
+    planes = _lcg_plane_values(n_bands * band_size, EMBED_DIM)
     keys = []
     for b in range(n_bands):
         bits = [
@@ -282,9 +273,8 @@ def banded_buckets(vec: Column, n_bands: int, band_size: int,
     return F.array(*keys)
 
 
-def auto_banding(threshold: float, target_miss: float = 1e-4,
-                 max_band_size: int = 8,
-                 max_bands: int = 64) -> tuple[int, int]:
+def auto_banding(threshold: float,
+                 target_miss: float = 1e-4) -> tuple[int, int]:
     """(n_bands, band_size) meeting a per-pair miss-probability target.
 
     Sign-LSH OR-amplification: a pair at cosine s agrees with one plane
@@ -306,25 +296,24 @@ def auto_banding(threshold: float, target_miss: float = 1e-4,
         raise ValueError(
             f'target_miss must be in (0, 1), got {target_miss}')
     p1 = 1.0 - math.acos(threshold) / math.pi
-    for band_size in range(max_band_size, 0, -1):
+    for band_size in range(8, 0, -1):
         p_band = p1 ** band_size
         if p_band >= 1.0:
             return 1, band_size
         n_bands = math.ceil(math.log(target_miss) / math.log(1.0 - p_band))
-        if n_bands <= max_bands:
+        if n_bands <= 64:
             return n_bands, band_size
-    # even single-plane bands need more than max_bands: recall target is
+    # even single-plane bands need more than 64: recall target is
     # unreachable under the cap — surface that instead of silently
     # degrading
     raise ValueError(
-        f'no banding within max_bands={max_bands} reaches '
-        f'miss<={target_miss} at threshold={threshold}')
+        f'no banding within 64 bands reaches miss<={target_miss} at '
+        f'threshold={threshold}')
 
 
 def neardup_pairs(embeddings: DataFrame, threshold: float = 0.4,
-                  id_col: str = 'vec_id', vec_col: str = 'embedding',
-                  n_bands=16, band_size: int = 2,
-                  dim: int = 64, target_miss: float = 1e-4) -> DataFrame:
+                  n_bands=16,
+                  target_miss: float = 1e-4) -> DataFrame:
     """Embedding near-duplicate pairs: banded sign-LSH + exact verify.
 
     Scale shape (same as ``minhash_dedup_pairs``): candidates come from a
@@ -347,25 +336,26 @@ def neardup_pairs(embeddings: DataFrame, threshold: float = 0.4,
     ``n_bands='auto'`` sizes the banding from (threshold, target_miss)
     via ``auto_banding`` instead of the explicit 16x2 default.
     """
+    band_size = 2
     if n_bands == 'auto':
         n_bands, band_size = auto_banding(threshold, target_miss)
-    corpus = _prep(embeddings, id_col, vec_col)
+    corpus = _prep(embeddings)
     bands = corpus.select(
-        F.col(id_col),
-        F.explode(banded_buckets(F.col('vec'), n_bands, band_size, dim))
+        F.col('vec_id'),
+        F.explode(banded_buckets(F.col('vec'), n_bands, band_size))
          .alias('band'))
     a = bands.alias('a')
     b = bands.alias('b')
     candidates = (
         a.join(b, (F.col('a.band') == F.col('b.band'))
-               & (F.col(f'a.{id_col}') < F.col(f'b.{id_col}')))
-        .select(F.col(f'a.{id_col}').alias('vec_a'),
-                F.col(f'b.{id_col}').alias('vec_b'))
+               & (F.col('a.vec_id') < F.col('b.vec_id')))
+        .select(F.col('a.vec_id').alias('vec_a'),
+                F.col('b.vec_id').alias('vec_b'))
         .distinct()
     )
-    ca = corpus.select(F.col(id_col).alias('vec_a'),
+    ca = corpus.select(F.col('vec_id').alias('vec_a'),
                        F.col('vec').alias('va'), F.col('nrm').alias('na'))
-    cb = corpus.select(F.col(id_col).alias('vec_b'),
+    cb = corpus.select(F.col('vec_id').alias('vec_b'),
                        F.col('vec').alias('vb'), F.col('nrm').alias('nb'))
     return (
         candidates.join(ca, 'vec_a').join(cb, 'vec_b')
@@ -377,9 +367,11 @@ def neardup_pairs(embeddings: DataFrame, threshold: float = 0.4,
     )
 
 
-def kmeans_labels(embeddings: DataFrame, k: int = 8, iterations: int = 3,
-                  id_col: str = 'vec_id', vec_col: str = 'embedding',
-                  quant: int = 1000) -> DataFrame:
+KMEANS_QUANT = 1000  # k-means integer grid: round(x * KMEANS_QUANT)
+
+
+def kmeans_labels(embeddings: DataFrame, k: int = 8,
+                  iterations: int = 3) -> DataFrame:
     """Lloyd's k-means over an embedding column, deterministic + portable.
 
     Scale shape: the classic broadcast-centroids loop — per iteration
@@ -392,7 +384,7 @@ def kmeans_labels(embeddings: DataFrame, k: int = 8, iterations: int = 3,
     executor-scalable at any corpus size.
 
     Engine portability: vectors are quantized to an integer grid
-    (``round(x * quant)``), so squared distances are EXACT integer
+    (``round(x * KMEANS_QUANT)``), so squared distances are EXACT integer
     sums — no float summation-order hazards against the SQL oracle.
     The only float op per iteration is the centroid mean: an exact
     integer sum divided by a count, identical as a double in any
@@ -410,8 +402,8 @@ def kmeans_labels(embeddings: DataFrame, k: int = 8, iterations: int = 3,
     Output: (vec_id, cluster) after the final assignment.
     """
     centroids, _dim, assign, pts = _kmeans_loop(
-        embeddings, k, iterations, id_col, vec_col, quant)
-    result = assign(centroids).select(id_col, 'cluster')
+        embeddings, k, iterations)
+    result = assign(centroids).select('vec_id', 'cluster')
     pts.unpersist(False)
     return result
 
@@ -437,22 +429,22 @@ def _nearest_centroid_scores(centroids) -> Column:
     ])
 
 
-def _quantized_points(embeddings: DataFrame, id_col: str,
-                      vec_col: str, quant: int) -> DataFrame:
+def _quantized_points(embeddings: DataFrame) -> DataFrame:
     return embeddings.select(
-        F.col(id_col),
-        F.transform(as_double(F.col(vec_col)),
-                    lambda x: F.round(x * quant).cast('long')).alias('qv'))
+        F.col('vec_id'),
+        F.transform(as_double(F.col('embedding')),
+                    lambda x: F.round(x * KMEANS_QUANT).cast('long'))
+         .alias('qv'))
 
 
-def _kmeans_loop(embeddings, k, iterations, id_col, vec_col, quant):
+def _kmeans_loop(embeddings, k, iterations):
     """Run the Lloyd loop; returns (centroids, dim, assign, pts) with
     ``pts`` still persisted — the caller must unpersist after its last
     ``assign``. Factored out so training (``kmeans_centroids``) and
     assignment-only consumers share one implementation."""
-    pts = _quantized_points(embeddings, id_col, vec_col, quant)
+    pts = _quantized_points(embeddings)
     pts = pts.persist()
-    seed_rows = pts.orderBy(id_col).limit(k).collect()
+    seed_rows = pts.orderBy('vec_id').limit(k).collect()
     if len(seed_rows) < k:
         pts.unpersist(False)
         raise ValueError(
@@ -464,7 +456,7 @@ def _kmeans_loop(embeddings, k, iterations, id_col, vec_col, quant):
     def assign(cents) -> DataFrame:
         # struct ordering is lexicographic: min distance, ties by cid
         return pts.select(
-            id_col, 'qv',
+            'vec_id', 'qv',
             F.array_min(_nearest_centroid_scores(cents))
              .getField('cid').alias('cluster'))
 
@@ -480,36 +472,30 @@ def _kmeans_loop(embeddings, k, iterations, id_col, vec_col, quant):
 
 
 def kmeans_centroids(embeddings: DataFrame, k: int = 8,
-                     iterations: int = 3, id_col: str = 'vec_id',
-                     vec_col: str = 'embedding',
-                     quant: int = 1000):
+                     iterations: int = 3):
     """Train-only face of ``kmeans_labels``: the final quantized
     centroid table as ``{cluster_id: [long, ...]}`` — k x dim values,
     the deployable coarse-quantizer artifact (see
     ``save_vector_index``)."""
     centroids, _dim, _assign, pts = _kmeans_loop(
-        embeddings, k, iterations, id_col, vec_col, quant)
+        embeddings, k, iterations)
     pts.unpersist(False)
     return centroids
 
 
-def assign_to_centroids(embeddings: DataFrame, centroids,
-                        id_col: str = 'vec_id',
-                        vec_col: str = 'embedding',
-                        quant: int = 1000) -> DataFrame:
+def assign_to_centroids(embeddings: DataFrame, centroids) -> DataFrame:
     """Map-only nearest-centroid assignment under a TRAINED quantizer
     (centroids inlined as JVM literals, exact integer distances —
     identical tie-break to ``kmeans_labels``): the serving-time path
     of a persisted IVF index. Output: (id, cluster)."""
-    pts = _quantized_points(embeddings, id_col, vec_col, quant)
+    pts = _quantized_points(embeddings)
     return pts.select(
-        id_col,
+        'vec_id',
         F.array_min(_nearest_centroid_scores(centroids))
          .getField('cid').alias('cluster'))
 
 
-def save_vector_index(spark, table_root: str, centroids,
-                      quant: int = 1000) -> int:
+def save_vector_index(spark, table_root: str, centroids) -> int:
     """Persist a trained coarse quantizer as a versioned
     snapshot-table artifact (k rows: cluster, qv, quant). Training
     jobs publish a new VERSION atomically, serving jobs pin one, and a
@@ -517,7 +503,7 @@ def save_vector_index(spark, table_root: str, centroids,
     that assigned it. Returns the committed version."""
     from ..plans.snapstore import SnapshotTable
     df = spark.createDataFrame(
-        [(int(cid), [int(x) for x in vec], int(quant))
+        [(int(cid), [int(x) for x in vec], KMEANS_QUANT)
          for cid, vec in sorted(centroids.items())],
         'cluster int, qv array<bigint>, quant int')
     return SnapshotTable(table_root).overwrite(df)
@@ -537,7 +523,6 @@ def load_vector_index(spark, table_root: str, version=None):
 
 def semantic_dedup_pairs(embeddings: DataFrame, threshold: float = 0.4,
                          k: int = 8, iterations: int = 3,
-                         id_col: str = 'vec_id', vec_col: str = 'embedding',
                          max_cluster_size: Optional[int] = None
                          ) -> DataFrame:
     """SemDeDup-style semantic near-duplicate pairs (Abbas et al. 2023,
@@ -561,9 +546,8 @@ def semantic_dedup_pairs(embeddings: DataFrame, threshold: float = 0.4,
 
     Output: (cluster, vec_a, vec_b, cos_sim) with vec_a < vec_b.
     """
-    labels = kmeans_labels(embeddings, k=k, iterations=iterations,
-                           id_col=id_col, vec_col=vec_col)
-    corpus = _prep(embeddings, id_col, vec_col).join(labels, id_col)
+    labels = kmeans_labels(embeddings, k=k, iterations=iterations)
+    corpus = _prep(embeddings).join(labels, 'vec_id')
     if max_cluster_size is not None:
         csize = (labels.groupBy('cluster')
                  .agg(F.count('*').alias('n_members')))
@@ -571,9 +555,9 @@ def semantic_dedup_pairs(embeddings: DataFrame, threshold: float = 0.4,
                   .join(F.broadcast(csize), 'cluster')
                   .where(F.col('n_members') <= max_cluster_size)
                   .drop('n_members'))
-    a = corpus.select('cluster', F.col(id_col).alias('vec_a'),
+    a = corpus.select('cluster', F.col('vec_id').alias('vec_a'),
                       F.col('vec').alias('va'), F.col('nrm').alias('na'))
-    b = corpus.select('cluster', F.col(id_col).alias('vec_b'),
+    b = corpus.select('cluster', F.col('vec_id').alias('vec_b'),
                       F.col('vec').alias('vb'), F.col('nrm').alias('nb'))
     pairs = (
         a.join(b, ['cluster'])
@@ -586,15 +570,13 @@ def semantic_dedup_pairs(embeddings: DataFrame, threshold: float = 0.4,
     return pairs
 
 
-def quantize_embeddings(embeddings: DataFrame, id_col: str = 'vec_id',
-                        vec_col: str = 'embedding',
-                        bits: int = 8) -> DataFrame:
+def quantize_embeddings(embeddings: DataFrame) -> DataFrame:
     """Symmetric per-vector integer quantization (the embedding
     storage/IO compressor: float32 -> int8 is a 4x scan-volume cut at
     100 TB, the standard trade for ANN candidate generation with
     full-precision re-ranking).
 
-    Per vector: ``scale = max|x| / (2^(bits-1) - 1)``,
+    Per vector (8-bit codes): ``scale = max|x| / 127``,
     ``q_i = round(x_i / scale)``. Map-only projection, no shuffle. The
     three derived quantities (max-abs, quantized codes, reconstruction
     error) are computed under nested bound lambda variables so each is
@@ -611,12 +593,12 @@ def quantize_embeddings(embeddings: DataFrame, id_col: str = 'vec_id',
     worst per-dimension reconstruction error.
     """
     from .textops import bind_once
-    levels = 2 ** (bits - 1) - 1
+    levels = 127  # int8 codes: 2^(8-1) - 1
     null_row = F.struct(
         F.lit(None).cast('double').alias('scale'),
         F.lit(None).cast('string').alias('q_hash'),
         F.lit(None).cast('double').alias('max_abs_err'))
-    out = bind_once(as_double(F.col(vec_col)), lambda vec: bind_once(
+    out = bind_once(as_double(F.col('embedding')), lambda vec: bind_once(
         F.array_max(F.transform(vec, F.abs)), lambda m: F.when(
             m == 0, null_row
         ).otherwise(bind_once(
@@ -630,17 +612,16 @@ def quantize_embeddings(embeddings: DataFrame, id_col: str = 'vec_id',
                 F.round(F.array_max(F.zip_with(
                     vec, q, lambda x, i: F.abs(x - i * m / levels))), 6)
                  .alias('max_abs_err'))))))
-    return embeddings.select(F.col(id_col), F.inline(F.array(out)))
+    return embeddings.select(F.col('vec_id'), F.inline(F.array(out)))
 
 
-def lsh_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
-             id_col: str = 'vec_id', vec_col: str = 'embedding',
-             n_planes: int = N_HYPERPLANES, dim: int = 64) -> DataFrame:
+def lsh_topk(embeddings: DataFrame, n_queries: int = 10,
+             k: int = 5) -> DataFrame:
     """Approximate cosine top-k restricted to same-LSH-bucket candidates."""
-    corpus = _prep(embeddings, id_col, vec_col).withColumn(
-        'bucket', lsh_bucket(F.col('vec'), n_planes, dim))
-    queries = corpus.where(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias('query_id'),
+    corpus = _prep(embeddings).withColumn(
+        'bucket', lsh_bucket(F.col('vec')))
+    queries = corpus.where(F.col('vec_id') < n_queries).select(
+        F.col('vec_id').alias('query_id'),
         F.col('vec').alias('qvec'),
         F.col('nrm').alias('qnrm'),
         F.col('bucket').alias('qbucket'),
@@ -648,10 +629,10 @@ def lsh_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
     scored = (
         corpus.join(F.broadcast(queries),
                     F.col('bucket') == F.col('qbucket'))
-        .where(F.col(id_col) != F.col('query_id'))
+        .where(F.col('vec_id') != F.col('query_id'))
         .select(
             'query_id',
-            F.col(id_col).alias('neighbor_id'),
+            F.col('vec_id').alias('neighbor_id'),
             F.round(
                 dot(F.col('vec'), F.col('qvec'))
                 / (F.col('nrm') * F.col('qnrm')), 6).alias('cos_sim'),

@@ -13,16 +13,16 @@ parallelize across keys/buckets.
 
 from __future__ import annotations
 
-from typing import Sequence
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# both sides are events: (event_id, user_id, ts[, value]) keyed by
+# user_id; the as-of joins carry this right-side payload
+ASOF_PAYLOAD = ('event_id', 'ts', 'value')
 
-def asof_join(left: DataFrame, right: DataFrame, key_col: str = 'user_id',
-              ts_col: str = 'ts',
-              payload_cols: Sequence[str] = ('event_id', 'ts', 'value'),
-              prefix: str = 'matched_', strict: bool = False) -> DataFrame:
+
+def asof_join(left: DataFrame, right: DataFrame,
+              strict: bool = False) -> DataFrame:
     """As-of (backward) join: attach to each left row the most recent
     right row with ``right.ts <= left.ts`` (``<`` when ``strict``) for
     the same key; left rows with no prior right row keep nulls.
@@ -40,31 +40,29 @@ def asof_join(left: DataFrame, right: DataFrame, key_col: str = 'user_id',
     <=/< distinction; among equal-(key, ts) right rows the payload
     struct is the deterministic tiebreak (lexicographic max wins).
 
-    Output: every left column plus ``{prefix}<payload_col>`` columns.
+    Output: every left column plus ``matched_<c>`` for each ``c`` in
+    ``ASOF_PAYLOAD``.
     """
-    payload = F.struct(*[F.col(c) for c in payload_cols])
+    payload = F.struct(*[F.col(c) for c in ASOF_PAYLOAD])
     rt = right.select(
-        F.col(key_col), F.col(ts_col), payload.alias('_rp'),
+        F.col('user_id'), F.col('ts'), payload.alias('_rp'),
         F.lit(0).alias('_side'))
     lt = left.withColumn('_side', F.lit(1))
     unioned = lt.unionByName(rt, allowMissingColumns=True)
     side = F.col('_side').desc() if strict else F.col('_side').asc()
-    w = (Window.partitionBy(key_col)
-         .orderBy(F.col(ts_col).asc(), side, F.col('_rp').asc())
+    w = (Window.partitionBy('user_id')
+         .orderBy(F.col('ts').asc(), side, F.col('_rp').asc())
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     carried = unioned.withColumn(
         '_match', F.last('_rp', ignorenulls=True).over(w))
     return (carried.where(F.col('_side') == 1)
             .select(*[F.col(c) for c in left.columns],
-                    *[F.col(f'_match.{c}').alias(f'{prefix}{c}')
-                      for c in payload_cols]))
+                    *[F.col(f'_match.{c}').alias(f'matched_{c}')
+                      for c in ASOF_PAYLOAD]))
 
 
 def asof_join_bucketed(left: DataFrame, right: DataFrame,
-                       key_col: str = 'user_id', ts_col: str = 'ts',
-                       payload_cols: Sequence[str] = ('event_id', 'ts',
-                                                      'value'),
-                       prefix: str = 'matched_', strict: bool = False,
+                       strict: bool = False,
                        bucket_sec: int = 86_400) -> DataFrame:
     """Skew-proof as-of join: identical semantics to ``asof_join``, but
     the carry-forward runs as a segmented scan over (key, time-bucket).
@@ -83,16 +81,16 @@ def asof_join_bucketed(left: DataFrame, right: DataFrame,
     ``bucket_sec`` so a (key, bucket) segment fits a task comfortably.
     """
     b_of = lambda c: F.floor(F.unix_timestamp(c) / bucket_sec)
-    payload = F.struct(*[F.col(c) for c in payload_cols])
+    payload = F.struct(*[F.col(c) for c in ASOF_PAYLOAD])
     rt = right.select(
-        F.col(key_col), F.col(ts_col), payload.alias('_rp'),
+        F.col('user_id'), F.col('ts'), payload.alias('_rp'),
         F.lit(0).alias('_side'))
     lt = left.withColumn('_side', F.lit(1))
     unioned = lt.unionByName(rt, allowMissingColumns=True).withColumn(
-        '_b', b_of(F.col(ts_col)))
+        '_b', b_of(F.col('ts')))
     side = F.col('_side').desc() if strict else F.col('_side').asc()
-    w_seg = (Window.partitionBy(key_col, '_b')
-             .orderBy(F.col(ts_col).asc(), side, F.col('_rp').asc())
+    w_seg = (Window.partitionBy('user_id', '_b')
+             .orderBy(F.col('ts').asc(), side, F.col('_rp').asc())
              .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     seg = unioned.withColumn(
         '_partial', F.last('_rp', ignorenulls=True).over(w_seg))
@@ -100,29 +98,28 @@ def asof_join_bucketed(left: DataFrame, right: DataFrame,
     # bucket-level pass: final right payload per (key, bucket) — max by
     # (ts, payload) matches the row-level tiebreak — carried to every
     # later bucket that appears on either side
-    rb = (rt.withColumn('_b', b_of(F.col(ts_col)))
-          .groupBy(key_col, '_b')
-          .agg(F.max(F.struct(F.col(ts_col), F.col('_rp'))).alias('_m')))
-    buckets = unioned.select(key_col, '_b').distinct()
-    w_carry = (Window.partitionBy(key_col).orderBy('_b')
+    rb = (rt.withColumn('_b', b_of(F.col('ts')))
+          .groupBy('user_id', '_b')
+          .agg(F.max(F.struct(F.col('ts'), F.col('_rp'))).alias('_m')))
+    buckets = unioned.select('user_id', '_b').distinct()
+    w_carry = (Window.partitionBy('user_id').orderBy('_b')
                .rowsBetween(Window.unboundedPreceding, -1))
-    prev = (buckets.join(rb, [key_col, '_b'], 'left')
+    prev = (buckets.join(rb, ['user_id', '_b'], 'left')
             .withColumn('_prev',
                         F.last('_m', ignorenulls=True).over(w_carry))
-            .select(key_col, '_b', F.col('_prev._rp').alias('_pp')))
+            .select('user_id', '_b', F.col('_prev._rp').alias('_pp')))
 
     joined = (seg.where(F.col('_side') == 1)
-              .join(prev, [key_col, '_b'], 'left')
+              .join(prev, ['user_id', '_b'], 'left')
               .withColumn('_match', F.coalesce('_partial', '_pp')))
     return joined.select(
         *[F.col(c) for c in left.columns],
-        *[F.col(f'_match.{c}').alias(f'{prefix}{c}')
-          for c in payload_cols])
+        *[F.col(f'_match.{c}').alias(f'matched_{c}')
+          for c in ASOF_PAYLOAD])
 
 
-def range_join(left: DataFrame, right: DataFrame, key_col: str = 'user_id',
-               ts_col: str = 'ts', window_sec: int = 600,
-               prefix: str = 'near_') -> DataFrame:
+def range_join(left: DataFrame, right: DataFrame,
+               window_sec: int = 600) -> DataFrame:
     """Bounded range join: all (left, right) pairs with the same key and
     ``|left.ts - right.ts| <= window_sec``.
 
@@ -135,20 +132,19 @@ def range_join(left: DataFrame, right: DataFrame, key_col: str = 'user_id',
     join parallelizes across (key, bucket). This is how range joins
     survive 100 TB; a ``ts BETWEEN`` theta-join does not.
 
-    Output: left key/ts plus ``{prefix}ts`` and ``delta_sec``.
+    Output: (user_id, ts, near_ts, delta_sec).
     """
     bucket = lambda c: F.floor(F.unix_timestamp(c) / window_sec)
     lt = left.select(
-        F.col(key_col), F.col(ts_col),
-        F.explode(F.array(bucket(F.col(ts_col)) - 1,
-                          bucket(F.col(ts_col)),
-                          bucket(F.col(ts_col)) + 1)).alias('_b'))
+        F.col('user_id'), F.col('ts'),
+        F.explode(F.array(bucket(F.col('ts')) - 1,
+                          bucket(F.col('ts')),
+                          bucket(F.col('ts')) + 1)).alias('_b'))
     rt = right.select(
-        F.col(key_col), F.col(ts_col).alias(f'{prefix}{ts_col}'),
-        bucket(F.col(ts_col)).alias('_b'))
-    delta = (F.unix_timestamp(f'{prefix}{ts_col}')
-             - F.unix_timestamp(ts_col))
-    return (lt.join(rt, [key_col, '_b'])
+        F.col('user_id'), F.col('ts').alias('near_ts'),
+        bucket(F.col('ts')).alias('_b'))
+    delta = F.unix_timestamp('near_ts') - F.unix_timestamp('ts')
+    return (lt.join(rt, ['user_id', '_b'])
             .where(F.abs(delta) <= window_sec)
-            .select(key_col, ts_col, f'{prefix}{ts_col}',
+            .select('user_id', 'ts', 'near_ts',
                     delta.alias('delta_sec')))

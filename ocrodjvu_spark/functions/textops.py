@@ -24,6 +24,8 @@ Operators:
 * PII scrub (email/phone redaction + counts)
 * domain mix weights (target token-mixture sampling table)
 * sliding-window document chunking (pretraining/RAG splitting)
+
+Every operator reads its documents as ``doc_id`` and ``text`` columns.
 """
 
 from __future__ import annotations
@@ -81,9 +83,10 @@ def rolling_hash(str_col: Column) -> Column:
 
 
 SHINGLE_COMBINE = 1009  # odd multiplier for combining token hashes
+SHINGLE_N = 3  # words per shingle: MinHash, Jaccard, fingerprint, leakage
 
 
-def shingle_hashes(tokens_col: Column, n: int = 3) -> Column:
+def shingle_hashes(tokens_col: Column) -> Column:
     """Distinct word n-gram shingle hashes.
 
     Each token is rolling-hashed ONCE, then a shingle's hash combines
@@ -105,44 +108,42 @@ def shingle_hashes(tokens_col: Column, n: int = 3) -> Column:
     def combos(h):
         def one(i):
             out = F.element_at(h, (i + 1).cast('int'))
-            for j in range(1, n):
+            for j in range(1, SHINGLE_N):
                 out = (out * SHINGLE_COMBINE
                        + F.element_at(h, (i + j + 1).cast('int'))) % HASH_MOD
             return out
-        joined = F.transform(F.sequence(F.lit(0), F.size(h) - n), one)
+        joined = F.transform(F.sequence(F.lit(0), F.size(h) - SHINGLE_N), one)
         whole = F.aggregate(
             h, F.lit(0).cast('long'),
             lambda acc, x: (acc * SHINGLE_COMBINE + x) % HASH_MOD)
         return F.array_distinct(
-            F.when(F.size(h) >= n, joined).otherwise(F.array(whole)))
+            F.when(F.size(h) >= SHINGLE_N, joined).otherwise(F.array(whole)))
 
     return bind_once(hs, combos)
 
 
-def minhash_signature_table(docs: DataFrame, id_col='doc_id',
-                            text_col='text', n: int = 3) -> DataFrame:
+def minhash_signature_table(docs: DataFrame) -> DataFrame:
     """(id, mh0..mhK-1): minhash signature via explode + aggregate."""
-    sh = doc_shingle_table(docs, id_col, text_col, n)
-    return sh.groupBy(id_col).agg(*[
+    sh = doc_shingle_table(docs)
+    return sh.groupBy('doc_id').agg(*[
         F.min((F.col('shingle') * a + b) % HASH_MOD).alias(f'mh{k}')
         for k, (a, b) in enumerate(MINHASH_PARAMS)
     ])
 
 
-def minhash_band_table(sig: DataFrame, id_col='doc_id',
-                       band_size: int = LSH_BAND_SIZE) -> DataFrame:
+def minhash_band_table(sig: DataFrame) -> DataFrame:
     """(id, band): one row per LSH band key 'band_idx:h1-h2-...'."""
-    n_bands = len(MINHASH_PARAMS) // band_size
+    n_bands = len(MINHASH_PARAMS) // LSH_BAND_SIZE
     bands = F.array(*[
         F.concat_ws(
             ':', F.lit(str(b)),
             F.concat_ws('-', *[
-                F.col(f'mh{b * band_size + j}').cast('string')
-                for j in range(band_size)
+                F.col(f'mh{b * LSH_BAND_SIZE + j}').cast('string')
+                for j in range(LSH_BAND_SIZE)
             ]))
         for b in range(n_bands)
     ])
-    return sig.select(id_col, F.explode(bands).alias('band'))
+    return sig.select('doc_id', F.explode(bands).alias('band'))
 
 
 # Multipliers deriving the 2nd/3rd 31-bit words of a token's 64-bit
@@ -153,8 +154,7 @@ SIMHASH_W2 = (69621, 7)
 SIMHASH_BITS = 64
 
 
-def simhash_table(docs: DataFrame, id_col='doc_id',
-                  text_col='text', keep_null_docs: bool = True
+def simhash_table(docs: DataFrame, keep_null_docs: bool = True
                   ) -> DataFrame:
     """(id, sim) rows: the 64-bit SimHash of ``tokens(text)``, bit-exact
     with the column-form reference ``tests/oracles.simhash64``.
@@ -172,15 +172,15 @@ def simhash_table(docs: DataFrame, id_col='doc_id',
     """
     w0 = F.col('_w0')
     rows = docs.select(
-        F.col(id_col), F.explode(tokens(text_col)).alias('_tok'),
+        F.col('doc_id'), F.explode(tokens('text')).alias('_tok'),
     ).select(
-        F.col(id_col), rolling_hash(F.col('_tok')).alias('_w0'),
+        F.col('doc_id'), rolling_hash(F.col('_tok')).alias('_w0'),
     ).select(
         # the derived words come from the materialized _w0 attribute,
         # so the expensive char fold runs once per token (CollapseProject
         # keeps non-cheap expressions un-duplicated; double-checked in
         # the committed plan: one 'aggregate(split' per branch)
-        F.col(id_col), w0,
+        F.col('doc_id'), w0,
         ((w0 * SIMHASH_W1[0] + SIMHASH_W1[1]) % HASH_MOD).alias('_w1'),
         ((w0 * SIMHASH_W2[0] + SIMHASH_W2[1]) % HASH_MOD).alias('_w2'),
     )
@@ -195,7 +195,7 @@ def simhash_table(docs: DataFrame, id_col='doc_id',
         bit = F.shiftright(src, k) % 2
         return F.sum(F.when(bit == 1, 1).otherwise(-1)).alias(f'_v{j}')
 
-    votes = rows.groupBy(id_col).agg(*[vote(j) for j in range(64)])
+    votes = rows.groupBy('doc_id').agg(*[vote(j) for j in range(64)])
     weights = [1 << j for j in range(63)] + [-(1 << 63)]
     sim = None
     for j in range(64):
@@ -203,53 +203,53 @@ def simhash_table(docs: DataFrame, id_col='doc_id',
                       F.lit(weights[j]).cast('long')) \
                 .otherwise(F.lit(0).cast('long'))
         sim = term if sim is None else sim + term
-    sims = votes.select(F.col(id_col), sim.alias('sim'))
+    sims = votes.select(F.col('doc_id'), sim.alias('sim'))
     if not keep_null_docs:
         # a NULL fingerprint can neither band-join nor rank — callers
         # that only pair (the band table) skip the join-back
         return sims
     # join-back so null-text docs keep their NULL sim row (parity with
     # the column form; explode dropped them)
-    return docs.select(id_col).join(sims, id_col, 'left')
+    return docs.select('doc_id').join(sims, 'doc_id', 'left')
 
 
-def _simhash_band_table(docs: DataFrame, id_col: str,
-                        text_col: str, n_bands: int) -> DataFrame:
+SIMHASH_BANDS = 4  # 4 x 16 bits
+
+
+def _simhash_band_table(docs: DataFrame) -> DataFrame:
     """(id, sim, band) rows: one per 16-bit band key of the 64-bit
     fingerprint. Arithmetic shiftright + mask extracts the band
     correctly for negative fingerprints (the mask kills the
     sign-extension bits)."""
-    band_bits = SIMHASH_BITS // n_bands
+    band_bits = SIMHASH_BITS // SIMHASH_BANDS
     mask = (1 << band_bits) - 1
     # null-fingerprint docs are dropped here rather than joined back:
     # their band keys are all NULL, which can never equi-join
-    sims = simhash_table(docs, id_col, text_col, keep_null_docs=False)
+    sims = simhash_table(docs, keep_null_docs=False)
     band_keys = F.array(*[
         F.concat(F.lit(f'{b}:'),
                  (F.shiftright(F.col('sim'), b * band_bits)
                   .bitwiseAND(F.lit(mask))).cast('string'))
-        for b in range(n_bands)
+        for b in range(SIMHASH_BANDS)
     ])
-    return sims.select(F.col(id_col), 'sim',
+    return sims.select(F.col('doc_id'), 'sim',
                        F.explode(band_keys).alias('band'))
 
 
 def simhash_neardup_pairs(docs: DataFrame, max_dist: int = 3,
-                          id_col='doc_id', text_col='text',
-                          n_bands: int = 4,
                           max_bucket_size: Optional[int] = None
                           ) -> DataFrame:
     """SimHash near-duplicate pairs via banded bucket join + Hamming verify.
 
-    The 64-bit SimHash splits into ``n_bands`` bands (default 4 x 16
+    The 64-bit SimHash splits into ``SIMHASH_BANDS`` bands (4 x 16
     bits = 65,536 distinct keys per band, so band-join parallelism
     scales with the cluster instead of capping at the key count);
     candidate pairs share at least one identical band (an equi-join on
     the band key — never a cross join), then the exact Hamming distance
-    filters to ``max_dist``. With ``max_dist < n_bands`` recall is
+    filters to ``max_dist``. With ``max_dist`` < 4 bands recall is
     EXACT by pigeonhole: fewer differing bits than bands means some
     band is untouched, so every qualifying pair collides somewhere. The
-    default (3 < 4) keeps that guarantee; raising max_dist to n_bands
+    default (3 < 4) keeps that guarantee; raising max_dist to 4
     or beyond turns the operator into an approximation.
 
     ``max_bucket_size`` (skew guard, same contract as
@@ -261,14 +261,11 @@ def simhash_neardup_pairs(docs: DataFrame, max_dist: int = 3,
 
     Output: (doc_a, doc_b, hamming_dist) with doc_a < doc_b.
     """
-    if n_bands not in (1, 2, 4, 8, 16, 32, 64):
-        raise ValueError(
-            f'n_bands must be a divisor of 64 (got {n_bands})')
     # the band rows CARRY the fingerprint, so the verify step needs no
     # extra joins back to sims and the O(tokens*64) SimHash fold runs in
     # one plan subtree (the band self-join's two sides are the identical
     # exchange, which Spark reuses)
-    bands = _simhash_band_table(docs, id_col, text_col, n_bands)
+    bands = _simhash_band_table(docs)
     if max_bucket_size is not None:
         small = (bands.groupBy('band')
                  .agg(F.count('*').alias('_bsz'))
@@ -279,9 +276,9 @@ def simhash_neardup_pairs(docs: DataFrame, max_dist: int = 3,
     b = bands.alias('b')
     return (
         a.join(b, (F.col('a.band') == F.col('b.band'))
-               & (F.col(f'a.{id_col}') < F.col(f'b.{id_col}')))
-        .select(F.col(f'a.{id_col}').alias('doc_a'),
-                F.col(f'b.{id_col}').alias('doc_b'),
+               & (F.col('a.doc_id') < F.col('b.doc_id')))
+        .select(F.col('a.doc_id').alias('doc_a'),
+                F.col('b.doc_id').alias('doc_b'),
                 F.bit_count(F.col('a.sim').bitwiseXOR(F.col('b.sim')))
                  .alias('hamming_dist'))
         .where(F.col('hamming_dist') <= max_dist)
@@ -289,11 +286,10 @@ def simhash_neardup_pairs(docs: DataFrame, max_dist: int = 3,
     )
 
 
-def doc_shingle_table(docs: DataFrame, id_col='doc_id', text_col='text',
-                      n: int = 3) -> DataFrame:
+def doc_shingle_table(docs: DataFrame) -> DataFrame:
     """Exploded distinct (doc_id, shingle_hash) pairs.
 
-    Explicitly repartitioned by ``id_col`` BEFORE the distinct: a
+    Explicitly repartitioned by ``doc_id`` BEFORE the distinct: a
     hash partitioning on the id satisfies the clustered-distribution
     requirement of every downstream keyed operation in this family —
     the distinct on (id, shingle), the per-doc signature aggregation,
@@ -305,13 +301,12 @@ def doc_shingle_table(docs: DataFrame, id_col='doc_id', text_col='text',
     and strictly fewer shuffles at scale.
     """
     return docs.select(
-        F.col(id_col),
-        F.explode(shingle_hashes(tokens(text_col), n)).alias('shingle'),
-    ).repartition(id_col).distinct()
+        F.col('doc_id'),
+        F.explode(shingle_hashes(tokens('text'))).alias('shingle'),
+    ).repartition('doc_id').distinct()
 
 
-def jaccard_pairs(docs: DataFrame, id_col='doc_id', text_col='text',
-                  n: int = 3, threshold: float = 0.5,
+def jaccard_pairs(docs: DataFrame, threshold: float = 0.5,
                   max_df: Optional[int] = None) -> DataFrame:
     """Exact n-gram Jaccard near-duplicate pairs via shingle self-join.
 
@@ -328,8 +323,8 @@ def jaccard_pairs(docs: DataFrame, id_col='doc_id', text_col='text',
     are missed (the standard web-dedup approximation). Default None =
     exact (what the oracle checks).
     """
-    sh = doc_shingle_table(docs, id_col, text_col, n)
-    sizes = sh.groupBy(id_col).agg(F.count('*').alias('n_shingles'))
+    sh = doc_shingle_table(docs)
+    sizes = sh.groupBy('doc_id').agg(F.count('*').alias('n_shingles'))
     if max_df is not None:
         rare = (sh.groupBy('shingle')
                 .agg(F.count('*').alias('df'))
@@ -340,29 +335,29 @@ def jaccard_pairs(docs: DataFrame, id_col='doc_id', text_col='text',
         b = sh_cand.alias('b')
         candidates = (
             a.join(b, (F.col('a.shingle') == F.col('b.shingle'))
-                   & (F.col(f'a.{id_col}') < F.col(f'b.{id_col}')))
-            .select(F.col(f'a.{id_col}').alias('doc_a'),
-                    F.col(f'b.{id_col}').alias('doc_b'))
+                   & (F.col('a.doc_id') < F.col('b.doc_id')))
+            .select(F.col('a.doc_id').alias('doc_a'),
+                    F.col('b.doc_id').alias('doc_b'))
             .distinct()
         )
-        return _verify_pairs(candidates, sh, sizes, id_col, threshold)
+        return _verify_pairs(candidates, sh, sizes, threshold)
     a = sh.alias('a')
     b = sh.alias('b')
     inter = (
         a.join(b, (F.col('a.shingle') == F.col('b.shingle'))
-               & (F.col(f'a.{id_col}') < F.col(f'b.{id_col}')))
-        .groupBy(F.col(f'a.{id_col}').alias('doc_a'),
-                 F.col(f'b.{id_col}').alias('doc_b'))
+               & (F.col('a.doc_id') < F.col('b.doc_id')))
+        .groupBy(F.col('a.doc_id').alias('doc_a'),
+                 F.col('b.doc_id').alias('doc_b'))
         .agg(F.count('*').alias('n_common'))
     )
-    return _score_pairs(inter, sizes, id_col, threshold)
+    return _score_pairs(inter, sizes, threshold)
 
 
-def _score_pairs(inter: DataFrame, sizes: DataFrame, id_col: str,
+def _score_pairs(inter: DataFrame, sizes: DataFrame,
                  threshold: float) -> DataFrame:
-    sa = sizes.select(F.col(id_col).alias('doc_a'),
+    sa = sizes.select(F.col('doc_id').alias('doc_a'),
                       F.col('n_shingles').alias('size_a'))
-    sb = sizes.select(F.col(id_col).alias('doc_b'),
+    sb = sizes.select(F.col('doc_id').alias('doc_b'),
                       F.col('n_shingles').alias('size_b'))
     return (
         inter.join(sa, 'doc_a').join(sb, 'doc_b')
@@ -377,11 +372,11 @@ def _score_pairs(inter: DataFrame, sizes: DataFrame, id_col: str,
 
 
 def _verify_pairs(candidates: DataFrame, sh: DataFrame, sizes: DataFrame,
-                  id_col: str, threshold: float) -> DataFrame:
+                  threshold: float) -> DataFrame:
     """Exact Jaccard over *full* shingle sets, restricted to candidates."""
-    sa = sh.select(F.col(id_col).alias('doc_a'),
+    sa = sh.select(F.col('doc_id').alias('doc_a'),
                    F.col('shingle').alias('sh_a'))
-    sb = sh.select(F.col(id_col).alias('_doc_b'),
+    sb = sh.select(F.col('doc_id').alias('_doc_b'),
                    F.col('shingle').alias('sh_b'))
     inter = (
         candidates
@@ -391,7 +386,7 @@ def _verify_pairs(candidates: DataFrame, sh: DataFrame, sizes: DataFrame,
         .groupBy('doc_a', 'doc_b')
         .agg(F.count('*').alias('n_common'))
     )
-    return _score_pairs(inter, sizes, id_col, threshold)
+    return _score_pairs(inter, sizes, threshold)
 
 
 def positioned_shingle_hashes(tokens_col: Column, n: int = 3) -> Column:
@@ -424,8 +419,7 @@ WINNOW_POS_CAP = 1 << 20  # max token positions per doc in the
 # long before fingerprinting
 
 
-def winnowing_fingerprints(docs: DataFrame, id_col='doc_id',
-                           text_col='text', n: int = 3,
+def winnowing_fingerprints(docs: DataFrame, n: int = 3,
                            window: int = 4) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
     SIGMOD 2003 — the MOSS local fingerprinting algorithm;
@@ -453,41 +447,40 @@ def winnowing_fingerprints(docs: DataFrame, id_col='doc_id',
     hash.
     """
     pos_sh = docs.select(
-        F.col(id_col),
-        F.explode(positioned_shingle_hashes(tokens(text_col), n))
+        F.col('doc_id'),
+        F.explode(positioned_shingle_hashes(tokens('text'), n))
          .alias('p')
-    ).select(F.col(id_col), F.col('p.pos').alias('pos'),
+    ).select(F.col('doc_id'), F.col('p.pos').alias('pos'),
              (F.col('p.sh') * WINNOW_POS_CAP
               + F.col('p.pos')).alias('key'))
     # the composite key is only injective below the cap — fail LOUDLY
     # on a >= 2^20-token doc rather than corrupt its fingerprints
     # (chunk such docs first; see doc_chunks)
     pos_sh = pos_sh.select(
-        id_col, 'pos', 'key',
+        'doc_id', 'pos', 'key',
         F.assert_true(F.col('pos') < WINNOW_POS_CAP,
                       F.lit('winnowing: document exceeds '
                             'WINNOW_POS_CAP positions'))
          .alias('__chk')).drop('__chk')
-    w_doc = Window.partitionBy(id_col)
-    w_slide = (Window.partitionBy(id_col).orderBy('pos')
+    w_doc = Window.partitionBy('doc_id')
+    w_slide = (Window.partitionBy('doc_id').orderBy('pos')
                .rowsBetween(Window.currentRow, window - 1))
     selected = (pos_sh
-                .select(F.col(id_col), 'pos',
+                .select(F.col('doc_id'), 'pos',
                         F.min('key').over(w_slide).alias('wmin'),
                         F.count('*').over(w_doc).alias('m'))
                 .where(F.col('pos')
                        <= F.greatest(F.col('m') - window, F.lit(0)))
-                .select(F.col(id_col), F.col('wmin'))
+                .select(F.col('doc_id'), F.col('wmin'))
                 .distinct())
     return selected.select(
-        F.col(id_col),
+        F.col('doc_id'),
         F.col('wmin').bitwiseAND(WINNOW_POS_CAP - 1)
          .cast('int').alias('fp_pos'),
         F.shiftright('wmin', 20).alias('fp'))
 
 
-def duplicated_spans(docs: DataFrame, id_col='doc_id', text_col='text',
-                     n: int = 5, min_df: int = 2,
+def duplicated_spans(docs: DataFrame, n: int = 5, min_df: int = 2,
                      max_df: Optional[int] = None) -> DataFrame:
     """Exact-substring duplicate regions: per-document token spans
     covered by n-grams that appear in >= ``min_df`` distinct documents.
@@ -527,40 +520,39 @@ def duplicated_spans(docs: DataFrame, id_col='doc_id', text_col='text',
     ranges) is identical either way.
     """
     pos_sh = docs.select(
-        F.col(id_col),
-        F.explode(positioned_shingle_hashes(tokens(text_col), n))
+        F.col('doc_id'),
+        F.explode(positioned_shingle_hashes(tokens('text'), n))
          .alias('p')
-    ).select(F.col(id_col), F.col('p.pos').alias('pos'),
+    ).select(F.col('doc_id'), F.col('p.pos').alias('pos'),
              F.col('p.sh').alias('sh'))
-    df_counts = (pos_sh.select(id_col, 'sh').distinct()
+    df_counts = (pos_sh.select('doc_id', 'sh').distinct()
                  .groupBy('sh').agg(F.count('*').alias('df'))
                  .where(F.col('df') >= min_df))
     if max_df is not None:
         df_counts = df_counts.where(F.col('df') <= max_df)
     df_counts = df_counts.select('sh')
     dup = pos_sh.join(df_counts, 'sh').select(
-        id_col, 'pos', (F.col('pos') + n).alias('end'))
-    w_order = Window.partitionBy(id_col).orderBy('pos')
+        'doc_id', 'pos', (F.col('pos') + n).alias('end'))
+    w_order = Window.partitionBy('doc_id').orderBy('pos')
     prev_max = F.max('end').over(
         w_order.rowsBetween(Window.unboundedPreceding, -1))
     islands = dup.select(
-        id_col, 'pos', 'end',
+        'doc_id', 'pos', 'end',
         F.sum(F.when(prev_max.isNull() | (F.col('pos') >= prev_max), 1)
               .otherwise(0)).over(w_order).alias('island'))
-    return (islands.groupBy(id_col, 'island')
+    return (islands.groupBy('doc_id', 'island')
             .agg(F.min('pos').alias('span_start'),
                  F.max('end').alias('span_end'))
             .select(
-                id_col,
+                'doc_id',
                 F.col('span_start').cast('int').alias('span_start'),
                 F.col('span_end').cast('int').alias('span_end'),
                 (F.col('span_end') - F.col('span_start')).cast('int')
                  .alias('n_tokens')))
 
 
-def remove_duplicated_spans(docs: DataFrame, id_col='doc_id',
-                            text_col='text', n: int = 5, min_df: int = 2,
-                            max_df: Optional[int] = None) -> DataFrame:
+def remove_duplicated_spans(docs: DataFrame, n: int = 5,
+                            min_df: int = 2) -> DataFrame:
     """The *apply* side of :func:`duplicated_spans` (Lee et al. 2022's
     actual dedup step): drop every token covered by a duplicated span
     and reassemble the document.
@@ -576,12 +568,12 @@ def remove_duplicated_spans(docs: DataFrame, id_col='doc_id',
     Output: (id, clean_text, n_tokens, n_removed) with clean_text the
     space-joined surviving tokens.
     """
-    spans = duplicated_spans(docs, id_col, text_col, n, min_df, max_df)
-    per_doc = spans.groupBy(id_col).agg(
+    spans = duplicated_spans(docs, n, min_df)
+    per_doc = spans.groupBy('doc_id').agg(
         F.collect_list(F.struct('span_start', 'span_end')).alias('_spans'))
-    joined = docs.join(per_doc, id_col, 'left').select(
-        F.col(id_col),
-        tokens(text_col).alias('_toks'),
+    joined = docs.join(per_doc, 'doc_id', 'left').select(
+        F.col('doc_id'),
+        tokens('text').alias('_toks'),
         F.coalesce(
             '_spans',
             F.array().cast(
@@ -593,37 +585,35 @@ def remove_duplicated_spans(docs: DataFrame, id_col='doc_id',
             F.col('_spans'),
             lambda s: (i >= s['span_start']) & (i < s['span_end'])))
     return joined.select(
-        F.col(id_col),
+        F.col('doc_id'),
         F.inline(F.transform(F.array(kept), lambda k: F.struct(
             F.array_join(k, ' ').alias('clean_text'),
             F.size(k).alias('n_tokens'),
         ))),
         (F.size('_toks')).alias('_total'),
     ).select(
-        id_col, 'clean_text', 'n_tokens',
+        'doc_id', 'clean_text', 'n_tokens',
         (F.col('_total') - F.col('n_tokens')).cast('int')
          .alias('n_removed'))
 
 
-def oversized_ngrams(docs: DataFrame, max_df: int, id_col='doc_id',
-                     text_col='text', n: int = 5) -> DataFrame:
+def oversized_ngrams(docs: DataFrame, max_df: int, n: int = 5) -> DataFrame:
     """(sh, df) for n-gram hashes above the stop-gram cap —
     observability hook for what ``duplicated_spans(max_df=...)``
     excludes. Same shuffle shape as the df-count stage itself (one
     distinct + one groupBy on the hash key), so it is safe to run at
     any corpus size before committing to a cap."""
     pos_sh = docs.select(
-        F.col(id_col),
-        F.explode(positioned_shingle_hashes(tokens(text_col), n))
+        F.col('doc_id'),
+        F.explode(positioned_shingle_hashes(tokens('text'), n))
          .alias('p')
-    ).select(F.col(id_col), F.col('p.sh').alias('sh'))
+    ).select(F.col('doc_id'), F.col('p.sh').alias('sh'))
     return (pos_sh.distinct()
             .groupBy('sh').agg(F.count('*').alias('df'))
             .where(F.col('df') > max_df))
 
 
-def minhash_dedup_pairs(docs: DataFrame, id_col='doc_id', text_col='text',
-                        n: int = 3, threshold: float = 0.5,
+def minhash_dedup_pairs(docs: DataFrame, threshold: float = 0.5,
                         max_bucket_size: Optional[int] = None) -> DataFrame:
     """MinHash+LSH near-dup pairs, verified with exact Jaccard.
 
@@ -641,8 +631,8 @@ def minhash_dedup_pairs(docs: DataFrame, id_col='doc_id', text_col='text',
     Default None = exact (every colliding bucket considered; what the oracle
     checks at small SF).
     """
-    sig = minhash_signature_table(docs, id_col, text_col, n)
-    bands = minhash_band_table(sig, id_col)
+    sig = minhash_signature_table(docs)
+    bands = minhash_band_table(sig)
     if max_bucket_size is not None:
         small = (bands.groupBy('band')
                  .agg(F.count('*').alias('_bsz'))
@@ -653,17 +643,17 @@ def minhash_dedup_pairs(docs: DataFrame, id_col='doc_id', text_col='text',
     b = bands.alias('b')
     candidates = (
         a.join(b, (F.col('a.band') == F.col('b.band'))
-               & (F.col(f'a.{id_col}') < F.col(f'b.{id_col}')))
-        .select(F.col(f'a.{id_col}').alias('doc_a'),
-                F.col(f'b.{id_col}').alias('doc_b'))
+               & (F.col('a.doc_id') < F.col('b.doc_id')))
+        .select(F.col('a.doc_id').alias('doc_a'),
+                F.col('b.doc_id').alias('doc_b'))
         .distinct()
     )
     # exact-Jaccard verification restricted to the candidate set: the
     # shingle join fans out per *candidate pair*, never per hot shingle,
     # so cost scales with |candidates|, not sum(df^2) over shingles.
-    sh = doc_shingle_table(docs, id_col, text_col, n)
-    sizes = sh.groupBy(id_col).agg(F.count('*').alias('n_shingles'))
-    return _verify_pairs(candidates, sh, sizes, id_col, threshold)
+    sh = doc_shingle_table(docs)
+    sizes = sh.groupBy('doc_id').agg(F.count('*').alias('n_shingles'))
+    return _verify_pairs(candidates, sh, sizes, threshold)
 
 
 def _ensure_checkpoint_dir(df: DataFrame) -> None:
@@ -711,8 +701,7 @@ def _small_star(edges: DataFrame) -> DataFrame:
         .distinct()
 
 
-def connected_components(edges: DataFrame, u_col='doc_a', v_col='doc_b',
-                         max_iterations: int = 25) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """Connected components via alternating large-star / small-star.
 
     The map-reduce CC algorithm of Kiveris et al. (KDD'14): each round
@@ -727,12 +716,13 @@ def connected_components(edges: DataFrame, u_col='doc_a', v_col='doc_b',
 
     Returns (v, cluster_id = component minimum) for every vertex.
     """
-    edges = edges.select(F.col(u_col).alias('u'), F.col(v_col).alias('v')) \
+    edges = edges.select(F.col('doc_a').alias('u'),
+                         F.col('doc_b').alias('v')) \
         .where(F.col('u') != F.col('v')).distinct()
     _ensure_checkpoint_dir(edges)
     cur = edges.checkpoint()
     cur_count = cur.count()
-    for _ in range(max_iterations):
+    for _ in range(25):
         nxt = _small_star(_large_star(cur)).checkpoint()
         nxt_count = nxt.count()
         if nxt_count == cur_count and nxt.subtract(cur).isEmpty():
@@ -745,14 +735,11 @@ def connected_components(edges: DataFrame, u_col='doc_a', v_col='doc_b',
             return labels.union(roots).distinct()
         cur, cur_count = nxt, nxt_count
     raise RuntimeError(
-        f'connected_components did not converge in {max_iterations} '
-        'alternating star rounds (expected O(log n)); raise '
-        'max_iterations')
+        'connected_components did not converge in 25 alternating star '
+        'rounds (expected O(log n))')
 
 
-def dedup_clusters(docs: DataFrame, id_col='doc_id', text_col='text',
-                   n: int = 3, threshold: float = 0.5,
-                   max_iterations: int = 25) -> DataFrame:
+def dedup_clusters(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Near-duplicate clusters: connected components over MinHash pairs.
 
     Pair generation is the LSH-banded ``minhash_dedup_pairs``; component
@@ -760,16 +747,13 @@ def dedup_clusters(docs: DataFrame, id_col='doc_id', text_col='text',
     ``connected_components``). Output: (doc_id, cluster_id = min doc_id
     of the component) for every document with at least one near-dup.
     """
-    edges = minhash_dedup_pairs(docs, id_col, text_col, n, threshold) \
+    edges = minhash_dedup_pairs(docs, threshold) \
         .select('doc_a', 'doc_b')
-    cc = connected_components(edges, max_iterations=max_iterations)
-    return cc.select(F.col('v').alias(id_col), 'cluster_id')
+    cc = connected_components(edges)
+    return cc.select(F.col('v').alias('doc_id'), 'cluster_id')
 
 
-def dedup_cluster_apply(docs: DataFrame, id_col='doc_id',
-                        text_col='text', n: int = 3,
-                        threshold: float = 0.5,
-                        max_iterations: int = 25) -> DataFrame:
+def dedup_cluster_apply(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Keep-one-per-cluster corpus filter — the apply side of
     :func:`dedup_clusters`: every document outside any near-dup cluster
     survives, and each cluster keeps its minimum-id representative.
@@ -779,12 +763,11 @@ def dedup_cluster_apply(docs: DataFrame, id_col='doc_id',
     on the high-cardinality document key drops them — no broadcast of
     anything corpus-sized, no second pass over text.
     """
-    labels = dedup_clusters(docs, id_col, text_col, n, threshold,
-                            max_iterations)
-    losers = labels.where(F.col(id_col) != F.col('cluster_id')) \
-        .select(id_col)
-    return docs.join(losers, id_col, 'left_anti') \
-        .select(F.col(id_col), F.col(text_col))
+    labels = dedup_clusters(docs, threshold)
+    losers = labels.where(F.col('doc_id') != F.col('cluster_id')) \
+        .select('doc_id')
+    return docs.join(losers, 'doc_id', 'left_anti') \
+        .select(F.col('doc_id'), F.col('text'))
 
 
 # --- language ID + quality -------------------------------------------------
@@ -806,23 +789,22 @@ def stopword_hits(tokens_col: Column, lang: str) -> Column:
                            lambda t: F.array_contains(words, t)))
 
 
-def language_id(docs: DataFrame, id_col='doc_id',
-                text_col='text') -> DataFrame:
+def language_id(docs: DataFrame) -> DataFrame:
     """Stopword-hit language classifier with deterministic tie-break.
 
     argmax over LANG_ORDER; 'und' (undetermined) when no stopword hits.
     """
-    toks = tokens(text_col)
+    toks = tokens('text')
     hits = [stopword_hits(toks, lang).alias(f'hits_{lang}')
             for lang in LANG_ORDER]
-    scored = docs.select(F.col(id_col), F.size(toks).alias('n_tokens'),
+    scored = docs.select(F.col('doc_id'), F.size(toks).alias('n_tokens'),
                          *hits)
     best = F.greatest(*[F.col(f'hits_{lang}') for lang in LANG_ORDER])
     pred = F.when(best <= 0, F.lit('und'))
     for lang in LANG_ORDER:
         pred = pred.when(F.col(f'hits_{lang}') == best, F.lit(lang))
     return scored.select(
-        id_col, 'n_tokens',
+        'doc_id', 'n_tokens',
         *[f'hits_{lang}' for lang in LANG_ORDER],
         pred.alias('lang_pred'),
         F.round(best / F.greatest(F.col('n_tokens'), F.lit(1)), 6)
@@ -842,8 +824,7 @@ TRIGRAM_PROFILES = {
 }
 
 
-def language_id_ngram(docs: DataFrame, id_col='doc_id',
-                      text_col='text') -> DataFrame:
+def language_id_ngram(docs: DataFrame) -> DataFrame:
     """Character-n-gram language classifier (profile-hit heuristic).
 
     Counts how many of the text's character trigrams appear in each
@@ -852,8 +833,8 @@ def language_id_ngram(docs: DataFrame, id_col='doc_id',
     (``language_id``): n-gram profiles also fire on inflected forms and
     unsegmented text. JVM-side per-row scan, no shuffle.
     """
-    norm = norm_text(text_col)
-    scored = docs.select(F.col(id_col), norm.alias('norm'))
+    norm = norm_text('text')
+    scored = docs.select(F.col('doc_id'), norm.alias('norm'))
     positions = F.sequence(F.lit(1), F.length('norm') - 2)
 
     def hits(lang):
@@ -864,7 +845,7 @@ def language_id_ngram(docs: DataFrame, id_col='doc_id',
                 profile, F.col('norm').substr(i, F.lit(3)))))
 
     scored = scored.select(
-        id_col,
+        'doc_id',
         (F.length('norm') - 2).cast('int').alias('n_trigrams'),
         *[hits(lang).alias(f'hits_{lang}') for lang in LANG_ORDER])
     best = F.greatest(*[F.col(f'hits_{lang}') for lang in LANG_ORDER])
@@ -872,7 +853,7 @@ def language_id_ngram(docs: DataFrame, id_col='doc_id',
     for lang in LANG_ORDER:
         pred = pred.when(F.col(f'hits_{lang}') == best, F.lit(lang))
     return scored.select(
-        id_col, 'n_trigrams',
+        'doc_id', 'n_trigrams',
         *[f'hits_{lang}' for lang in LANG_ORDER],
         pred.alias('lang_pred'),
         F.round(best / F.greatest(F.col('n_trigrams'), F.lit(1)), 6)
@@ -880,11 +861,10 @@ def language_id_ngram(docs: DataFrame, id_col='doc_id',
     )
 
 
-def quality_score(docs: DataFrame, id_col='doc_id',
-                  text_col='text') -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """Heuristic document quality features + a combined score."""
-    norm = norm_text(text_col)
-    toks = tokens(text_col)
+    norm = norm_text('text')
+    toks = tokens('text')
     n_tokens = F.size(toks)
     n_chars = F.length(norm)
     alpha_chars = F.length(F.regexp_replace(norm, r'[^a-zA-Z]', ''))
@@ -903,7 +883,7 @@ def quality_score(docs: DataFrame, id_col='doc_id',
         + F.least(stop_ratio * F.lit(5.0), F.lit(1.0)) * 0.25
     )
     return docs.select(
-        id_col,
+        'doc_id',
         n_tokens.alias('n_tokens'),
         F.round(mean_tok, 6).alias('mean_token_len'),
         F.round(alpha_ratio, 6).alias('alpha_ratio'),
@@ -913,8 +893,7 @@ def quality_score(docs: DataFrame, id_col='doc_id',
     )
 
 
-def repetition_stats(docs: DataFrame, id_col='doc_id',
-                     text_col='text') -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Gopher/MassiveText-style repetition quality signals per document.
 
     * ``dup_token_frac``: 1 - distinct/total tokens — computed as a pure
@@ -930,7 +909,7 @@ def repetition_stats(docs: DataFrame, id_col='doc_id',
     (Gopher, 2021) appendix A cut documents on exactly these families of
     thresholds.
     """
-    toks = tokens(text_col)
+    toks = tokens('text')
 
     # bind the token array ONCE as a lambda variable (the shingle_hashes
     # pattern): Catalyst inlines duplicated higher-order expressions on
@@ -951,22 +930,22 @@ def repetition_stats(docs: DataFrame, id_col='doc_id',
             bigrams.alias('bigrams'))
 
     base = docs.select(
-        F.col(id_col),
+        F.col('doc_id'),
         F.inline(F.array(bind_once(toks, stats)))
     ).select(
-        F.col(id_col), 'n_tokens', 'n_distinct',
+        F.col('doc_id'), 'n_tokens', 'n_distinct',
         F.explode_outer('bigrams').alias('bigram'))
     per_bigram = base.groupBy(
-        id_col, 'n_tokens', 'n_distinct', 'bigram').agg(
+        'doc_id', 'n_tokens', 'n_distinct', 'bigram').agg(
         F.count('*').alias('c'))
     not_null = F.col('bigram').isNotNull()
-    per_doc = per_bigram.groupBy(id_col, 'n_tokens', 'n_distinct').agg(
+    per_doc = per_bigram.groupBy('doc_id', 'n_tokens', 'n_distinct').agg(
         F.sum(F.when(not_null, F.col('c')).otherwise(0))
          .alias('n_bigrams'),
         F.max(F.when(not_null, F.col('c')).otherwise(0))
          .alias('top_bigram_count'))
     return per_doc.select(
-        id_col,
+        'doc_id',
         F.col('n_tokens').cast('int').alias('n_tokens'),
         F.round(1.0 - F.col('n_distinct')
                 / F.greatest(F.col('n_tokens'), F.lit(1)), 6)
@@ -978,23 +957,18 @@ def repetition_stats(docs: DataFrame, id_col='doc_id',
     )
 
 
-def gopher_rules(docs: DataFrame, id_col='doc_id', text_col='text',
-                 min_words: int = 20, max_words: int = 100_000,
-                 min_mean_word_len: float = 3.0,
-                 max_mean_word_len: float = 10.0,
-                 max_symbol_ratio: float = 0.1,
-                 min_alpha_word_frac: float = 0.8,
-                 min_stop_hits: int = 2) -> DataFrame:
+def gopher_rules(docs: DataFrame) -> DataFrame:
     """Gopher-style document filter (Rae et al. 2021, appendix A).
 
-    Per document: word-count bounds, mean word length bounds,
-    symbol-to-word ratio (``#`` and ``...``), fraction of words with at
-    least one alphabetic character, and a minimum stopword-hit count —
-    plus the combined ``keep`` verdict. One tokenize pass (every token
+    Per document: word-count bounds (20 to 100,000), mean word length
+    bounds (3 to 10), symbol-to-word ratio (``#`` and ``...``, at most
+    0.1), fraction of words with at least one alphabetic character (at
+    least 0.8), and a minimum of 2 English stopword hits — plus the
+    combined ``keep`` verdict. One tokenize pass (every token
     statistic is folded from a single bound lambda variable), a pure
     map-side projection: no shuffle, scales linearly with executors.
     """
-    norm = norm_text(text_col)
+    norm = norm_text('text')
     hash_chars = F.length(norm) - F.length(F.replace(norm, F.lit('#')))
     ellipses = F.size(F.regexp_extract_all(norm, F.lit(r'\.\.\.'), 0))
     en_words = F.array(*[F.lit(w) for w in STOPWORDS['en']])
@@ -1011,8 +985,8 @@ def gopher_rules(docs: DataFrame, id_col='doc_id', text_col='text',
         )
 
     feat = docs.select(
-        F.col(id_col),
-        F.inline(F.array(bind_once(tokens(text_col), stats))),
+        F.col('doc_id'),
+        F.inline(F.array(bind_once(tokens('text'), stats))),
         hash_chars.alias('hash_chars'), ellipses.alias('ellipses'))
     n_words = F.col('n_words')
     mean_word_len = F.col('sum_len') / F.greatest(n_words, F.lit(1))
@@ -1020,15 +994,15 @@ def gopher_rules(docs: DataFrame, id_col='doc_id', text_col='text',
                     / F.greatest(n_words, F.lit(1)))
     alpha_frac = F.col('n_alpha_words') / F.greatest(n_words, F.lit(1))
     keep = (
-        (n_words >= min_words) & (n_words <= max_words)
-        & (mean_word_len >= min_mean_word_len)
-        & (mean_word_len <= max_mean_word_len)
-        & (symbol_ratio <= max_symbol_ratio)
-        & (alpha_frac >= min_alpha_word_frac)
-        & (F.col('stop_hits') >= min_stop_hits)
+        (n_words >= 20) & (n_words <= 100_000)
+        & (mean_word_len >= 3.0)
+        & (mean_word_len <= 10.0)
+        & (symbol_ratio <= 0.1)
+        & (alpha_frac >= 0.8)
+        & (F.col('stop_hits') >= 2)
     )
     return feat.select(
-        id_col,
+        'doc_id',
         n_words.cast('int').alias('n_words'),
         F.round(mean_word_len, 6).alias('mean_word_len'),
         F.round(symbol_ratio, 6).alias('symbol_word_ratio'),
@@ -1041,10 +1015,9 @@ def gopher_rules(docs: DataFrame, id_col='doc_id', text_col='text',
 QUANTILE_PROBS = (0.25, 0.5, 0.75, 0.95)
 
 
-def length_quantiles(docs: DataFrame, value_col='n_chars',
-                     stratum_col='lang') -> DataFrame:
+def length_quantiles(docs: DataFrame) -> DataFrame:
     """Per-stratum length distribution (the data-card table): p25 / p50 /
-    p75 / p95 of ``value_col`` plus the document count.
+    p75 / p95 of ``n_chars`` per ``lang`` plus the document count.
 
     The exact interpolating ``percentile`` aggregate buffers every group
     value in the aggregation buffer — fine up to millions of rows per
@@ -1052,18 +1025,16 @@ def length_quantiles(docs: DataFrame, value_col='n_chars',
     ``sampled_quantiles`` is the bounded-memory path.
     """
     probs = F.array(*[F.lit(p) for p in QUANTILE_PROBS])
-    return (docs.groupBy(F.col(stratum_col).alias('stratum'))
+    return (docs.groupBy(F.col('lang').alias('stratum'))
             .agg(F.count('*').alias('n_docs'),
-                 F.percentile(value_col, probs).alias('q'))
+                 F.percentile('n_chars', probs).alias('q'))
             .select('stratum', 'n_docs',
                     *[F.round(F.element_at('q', i + 1), 6)
                       .alias(f'p{int(p * 100)}')
                       for i, p in enumerate(QUANTILE_PROBS)]))
 
 
-def sampled_quantiles(docs: DataFrame, value_col='n_chars',
-                      key_col='doc_id', stratum_col='lang',
-                      rate: int = 4) -> DataFrame:
+def sampled_quantiles(docs: DataFrame, rate: int = 4) -> DataFrame:
     """Deterministic hash-sampled quantiles: the bounded-memory quantile
     path — oracle-exact like ``length_quantiles`` and memory-bounded.
 
@@ -1079,24 +1050,23 @@ def sampled_quantiles(docs: DataFrame, value_col='n_chars',
     Unlike ``approx_percentile`` (Greenwald-Khanna, engine-specific
     internals), every step here is reproducible in plain SQL.
     """
-    h = rolling_hash(F.col(key_col).cast('string'))
+    h = rolling_hash(F.col('doc_id').cast('string'))
     sample = docs.where(h % F.lit(rate) == 0)
     probs = F.array(*[F.lit(p) for p in QUANTILE_PROBS])
-    return (sample.groupBy(F.col(stratum_col).alias('stratum'))
+    return (sample.groupBy(F.col('lang').alias('stratum'))
             .agg(F.count('*').alias('n_sampled'),
-                 F.percentile(value_col, probs).alias('q'))
+                 F.percentile('n_chars', probs).alias('q'))
             .select('stratum', 'n_sampled',
                     *[F.round(F.element_at('q', i + 1), 6)
                       .alias(f'p{int(p * 100)}')
                       for i, p in enumerate(QUANTILE_PROBS)]))
 
 
-def dedup_lines(docs: DataFrame, id_col='doc_id', text_col='text',
-                min_chars: int = 10) -> DataFrame:
+def dedup_lines(docs: DataFrame) -> DataFrame:
     """C4's cross-document span dedup at line granularity (Raffel et
     al. 2020 deduplicate repeated three-sentence spans corpus-wide;
     the line is the natural span unit for transcript markup): every
-    line of at least ``min_chars`` characters is kept only at its
+    line of at least 10 characters is kept only at its
     FIRST occurrence in the corpus (ordered by document id, then line
     position); later occurrences are dropped and each document is
     reassembled from its surviving lines. Short lines are exempt —
@@ -1117,22 +1087,22 @@ def dedup_lines(docs: DataFrame, id_col='doc_id', text_col='text',
     Output: (id, clean_text, n_lines, n_removed).
     """
     lines = docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(text_col, r'\r?\n'))
+        F.col('doc_id'),
+        F.posexplode(F.split('text', r'\r?\n'))
          .alias('line_idx', 'line'))
     firsts = (lines
-              .where(F.length('line') >= min_chars)
+              .where(F.length('line') >= 10)
               .groupBy('line')
-              .agg(F.min(F.struct(F.col(id_col), F.col('line_idx')))
+              .agg(F.min(F.struct(F.col('doc_id'), F.col('line_idx')))
                     .alias('_first')))
     marked = (lines
               .join(firsts, 'line', 'left')
               .select(
-                  id_col, 'line_idx', 'line',
-                  F.when(F.length('line') < min_chars, F.lit(True))
-                   .otherwise(F.struct(F.col(id_col), F.col('line_idx'))
+                  'doc_id', 'line_idx', 'line',
+                  F.when(F.length('line') < 10, F.lit(True))
+                   .otherwise(F.struct(F.col('doc_id'), F.col('line_idx'))
                               == F.col('_first')).alias('_keep')))
-    return (marked.groupBy(id_col)
+    return (marked.groupBy('doc_id')
             .agg(
                 F.array_join(
                     F.transform(
@@ -1149,16 +1119,13 @@ def dedup_lines(docs: DataFrame, id_col='doc_id', text_col='text',
 def incremental_dedup(
     new_docs: DataFrame,
     seen_keys: DataFrame,
-    id_col: str = 'doc_id',
-    text_col: str = 'text',
-    key_col: str = 'content_hash',
     bloom_filter=None,
 ) -> DataFrame:
     """Cross-snapshot dedup: which new-crawl documents survive against
     an existing corpus snapshot?
 
     Survivors are documents whose normalized-content hash (a) does not
-    appear in ``seen_keys`` (one column named ``key_col``) and (b) are
+    appear in ``seen_keys`` (one column named ``content_hash``) and (b) are
     the first occurrence of their hash inside this batch (min id —
     the skew-safe min-struct aggregation, not a window).
 
@@ -1175,27 +1142,27 @@ def incremental_dedup(
     driver gate checks (its oracle is bloom-agnostic).
     """
     keyed = new_docs.select(
-        F.col(id_col), F.md5(norm_text(text_col)).alias(key_col))
-    seen = seen_keys.select(F.col(key_col)).distinct()
+        F.col('doc_id'), F.md5(norm_text('text')).alias('content_hash'))
+    seen = seen_keys.select(F.col('content_hash')).distinct()
     if bloom_filter is not None:
         from .bloom import bloom_probe
         probed = bloom_probe(
-            keyed.select(F.col(key_col).alias('key')),
+            keyed.select(F.col('content_hash').alias('key')),
             bloom_filter)
         flagged = keyed.join(
-            probed.withColumnRenamed('key', key_col), key_col)
+            probed.withColumnRenamed('key', 'content_hash'), 'content_hash')
         fast = (flagged.where(~F.col('maybe_present'))
-                .select(id_col, key_col))
+                .select('doc_id', 'content_hash'))
         slow = (flagged.where(F.col('maybe_present'))
-                .select(id_col, key_col)
-                .join(seen, key_col, 'left_anti'))
+                .select('doc_id', 'content_hash')
+                .join(seen, 'content_hash', 'left_anti'))
         unseen = fast.unionByName(slow)
     else:
-        unseen = keyed.join(seen, key_col, 'left_anti')
+        unseen = keyed.join(seen, 'content_hash', 'left_anti')
     return (unseen
-            .groupBy(key_col)
-            .agg(F.min(F.col(id_col)).alias(id_col))
-            .select(id_col, key_col))
+            .groupBy('content_hash')
+            .agg(F.min(F.col('doc_id')).alias('doc_id'))
+            .select('doc_id', 'content_hash'))
 
 
 SCRIPT_CLASSES = (
@@ -1208,8 +1175,7 @@ SCRIPT_CLASSES = (
 )
 
 
-def script_profile(docs: DataFrame, id_col='doc_id',
-                   text_col='text') -> DataFrame:
+def script_profile(docs: DataFrame) -> DataFrame:
     """Per-document script composition + dominant script — the routing
     signal for script-specific downstream stages (which segmentation
     locale to use, which LM to score with, whether dictionary breaking
@@ -1227,8 +1193,8 @@ def script_profile(docs: DataFrame, id_col='doc_id',
             / F.greatest(F.length(t), F.lit(1))
 
     t = F.col('_t')
-    staged = docs.select(F.col(id_col), norm_text(text_col).alias('_t')) \
-        .select(id_col, F.length('_t').alias('n_chars'),
+    staged = docs.select(F.col('doc_id'), norm_text('text').alias('_t')) \
+        .select('doc_id', F.length('_t').alias('n_chars'),
                 *[F.round(frac(t, cls), 6).alias(f'{name}_frac')
                   for name, cls, _ in SCRIPT_CLASSES])
     best = F.greatest(*[F.col(f'{n}_frac') for n, _, _ in SCRIPT_CLASSES])
@@ -1237,13 +1203,12 @@ def script_profile(docs: DataFrame, id_col='doc_id',
         dominant = dominant.when(F.col(f'{name}_frac') == best,
                                  F.lit(name))
     return staged.select(
-        id_col, 'n_chars',
+        'doc_id', 'n_chars',
         *[f'{n}_frac' for n, _, _ in SCRIPT_CLASSES],
         dominant.alias('dominant'))
 
 
-def quality_buckets(docs: DataFrame, id_col='doc_id', text_col='text',
-                    vocab_size: int = 50000) -> DataFrame:
+def quality_buckets(docs: DataFrame, vocab_size: int = 50000) -> DataFrame:
     """CCNet-style perplexity bucketing (Wenzek et al. 2020): corpus
     tercile thresholds over the LM quality score split documents into
     head / middle / tail; docs with no score (zero trigrams) are
@@ -1254,7 +1219,7 @@ def quality_buckets(docs: DataFrame, id_col='doc_id', text_col='text',
     would serialize the corpus through one task at 100 TB). The exact
     interpolating ``percentile`` is oracle-comparable.
     """
-    scored = lm_score(docs, id_col, text_col, vocab_size)
+    scored = lm_score(docs, vocab_size)
     # cuts rounded to 6dp (same convention as lm_score itself): Spark
     # F.percentile and DuckDB quantile_cont interpolate in different
     # fp orders, so un-rounded cuts could bucket a doc sitting exactly
@@ -1264,22 +1229,20 @@ def quality_buckets(docs: DataFrame, id_col='doc_id', text_col='text',
         F.round(F.percentile('lm_score', F.lit(2.0 / 3)), 6).alias('q66'))
     return (scored.crossJoin(F.broadcast(cuts))
             .select(
-                id_col, 'lm_score',
+                'doc_id', 'lm_score',
                 F.when(F.col('lm_score').isNull(), 'unscored')
                  .when(F.col('lm_score') >= F.col('q66'), 'head')
                  .when(F.col('lm_score') >= F.col('q33'), 'middle')
                  .otherwise('tail').alias('bucket')))
 
 
-def c4_rules(docs: DataFrame, id_col='doc_id', text_col='text',
-             min_line_words: int = 5,
-             min_kept_lines: int = 3) -> DataFrame:
+def c4_rules(docs: DataFrame) -> DataFrame:
     """C4 cleaning rules (Raffel et al. 2020, section 2.2): line-level
     filtering plus document-level exclusions.
 
     A line survives iff it ends in terminal punctuation (``. ! ? "``)
-    and has at least ``min_line_words`` words; the document survives iff
-    at least ``min_kept_lines`` lines survive AND the text contains no
+    and has at least 5 words; the document survives iff
+    at least 3 lines survive AND the text contains no
     ``{`` (code marker) and no ``lorem ipsum`` (boilerplate marker).
     The paper's dirty-word list and three-sentence-span dedup are
     covered elsewhere (``pii_scrub`` / ``duplicated_spans``).
@@ -1295,12 +1258,12 @@ def c4_rules(docs: DataFrame, id_col='doc_id', text_col='text',
         # full whitespace trim (bound once), not F.trim: a bare trailing
         # \r (no \n after it) would otherwise both let Java's `$` match
         # before the \r AND add a trailing empty token that inflates the
-        # word count past min_line_words; an all-whitespace line counts
+        # word count past the 5-word minimum; an all-whitespace line counts
         # as zero words
         return bind_once(
             F.regexp_replace(ln, r'^\s+|\s+$', ''),
             lambda t: ((t != '')
-                       & (F.size(F.split(t, r'\s+')) >= min_line_words)
+                       & (F.size(F.split(t, r'\s+')) >= 5)
                        & t.rlike('[.!?"]$')))
 
     def stats(ls):
@@ -1316,16 +1279,16 @@ def c4_rules(docs: DataFrame, id_col='doc_id', text_col='text',
     # split on \r?\n so CRLF documents don't leave a trailing \r on each
     # line: F.trim strips only spaces, and Java's `$` would still match
     # before a final \r while the documented RE2/oracle semantics don't
-    lines = F.split(F.col(text_col), r'\r?\n')
+    lines = F.split(F.col('text'), r'\r?\n')
     feat = docs.select(
-        F.col(id_col),
+        F.col('doc_id'),
         F.inline(F.array(bind_once(lines, stats))),
-        F.col(text_col).contains('{').alias('has_brace'),
-        F.lower(F.col(text_col)).contains('lorem ipsum').alias('has_lorem'))
-    keep = ((F.col('k.n_kept_lines') >= min_kept_lines)
+        F.col('text').contains('{').alias('has_brace'),
+        F.lower(F.col('text')).contains('lorem ipsum').alias('has_lorem'))
+    keep = ((F.col('k.n_kept_lines') >= 3)
             & ~F.col('has_brace') & ~F.col('has_lorem'))
     return feat.select(
-        id_col,
+        'doc_id',
         F.col('n_lines').cast('int').alias('n_lines'),
         F.col('k.n_kept_lines').cast('int').alias('n_kept_lines'),
         F.col('k.kept_text').alias('kept_text'),
@@ -1337,9 +1300,7 @@ SAMPLE_DENOM = 10_000
 
 
 def stratified_sample(docs: DataFrame, rates: dict,
-                      id_col='doc_id', text_col='text',
-                      stratum_col='lang', default_rate: float = 0.0,
-                      salt: str = 'sample') -> DataFrame:
+                      default_rate: float = 0.0) -> DataFrame:
     """Deterministic per-stratum downsampling (the data-mix resampling
     step): keep a document iff its salted rolling text hash mod
     ``SAMPLE_DENOM`` falls under the stratum's threshold.
@@ -1354,39 +1315,38 @@ def stratified_sample(docs: DataFrame, rates: dict,
     thresholds = {s: int(round(r * SAMPLE_DENOM)) for s, r in rates.items()}
     thr_map = F.create_map(
         *[F.lit(x) for kv in thresholds.items() for x in kv])
-    thr = F.coalesce(thr_map[F.col(stratum_col)],
+    thr = F.coalesce(thr_map[F.col('lang')],
                      F.lit(int(round(default_rate * SAMPLE_DENOM))))
     bucket = rolling_hash(
-        F.concat(F.lit(salt + ':'), F.col(stratum_col), F.lit(':'),
-                 norm_text(text_col))) % SAMPLE_DENOM
+        F.concat(F.lit('sample:'), F.col('lang'), F.lit(':'),
+                 norm_text('text'))) % SAMPLE_DENOM
     return (docs
-            .select(F.col(id_col), F.col(stratum_col).alias('stratum'),
+            .select(F.col('doc_id'), F.col('lang').alias('stratum'),
                     bucket.cast('int').alias('sample_bucket'), thr.alias('_thr'))
             .where(F.col('sample_bucket') < F.col('_thr'))
             .drop('_thr'))
 
 
 def contamination_pairs(train: DataFrame, test: DataFrame,
-                        id_col='doc_id', text_col='text', n: int = 3,
                         min_common: int = 1) -> DataFrame:
     """Cross-split n-gram leakage: (test_doc, train_doc) pairs sharing
     word shingles, with the contaminated fraction of the test document.
 
     The train/test contamination check every LLM data pipeline runs
     before evaluation (n-gram overlap methodology per the GPT-3 /
-    PaLM / Gopher data cards; they use 8-13-gram windows at web scale —
-    ``n`` is the knob). Scale shape: shingle equi-join — the test side
-    is orders of magnitude smaller and pre-aggregated per shingle;
-    ``min_common`` prunes incidental single-shingle collisions before
-    the pair rollup.
+    PaLM / Gopher data cards; they use 8-13-gram windows at web scale,
+    this operator ``SHINGLE_N``-word shingles). Scale shape: shingle
+    equi-join — the test side is orders of magnitude smaller and
+    pre-aggregated per shingle; ``min_common`` prunes incidental
+    single-shingle collisions before the pair rollup.
 
     Output: (test_doc, train_doc, n_common_shingles, contamination)
     where contamination = shared/test-doc-total shingles.
     """
-    sh_tr = doc_shingle_table(train, id_col, text_col, n).select(
-        F.col(id_col).alias('train_doc'), 'shingle')
-    sh_te = doc_shingle_table(test, id_col, text_col, n).select(
-        F.col(id_col).alias('test_doc'), 'shingle')
+    sh_tr = doc_shingle_table(train).select(
+        F.col('doc_id').alias('train_doc'), 'shingle')
+    sh_te = doc_shingle_table(test).select(
+        F.col('doc_id').alias('test_doc'), 'shingle')
     te_sizes = sh_te.groupBy('test_doc').agg(
         F.count('*').alias('n_test_shingles'))
     pairs = (sh_te.join(sh_tr, 'shingle')
@@ -1407,8 +1367,7 @@ PII_EMAIL_RE = '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}'
 PII_PHONE_RE = '[0-9]{3}-[0-9]{3}-[0-9]{4}'
 
 
-def pii_scrub(docs: DataFrame, id_col='doc_id',
-              text_col='text') -> DataFrame:
+def pii_scrub(docs: DataFrame) -> DataFrame:
     """Redact emails / phone-shaped numbers, keeping match counts.
 
     Pure JVM-side ``regexp_replace``/``regexp_count`` projection — no
@@ -1416,12 +1375,12 @@ def pii_scrub(docs: DataFrame, id_col='doc_id',
     pruning to the scan. Counts feed the pipeline's observability
     (how much PII a source emits is itself a quality signal).
     """
-    norm = norm_text(text_col)
+    norm = norm_text('text')
     scrubbed = F.regexp_replace(
         F.regexp_replace(norm, PII_EMAIL_RE, '<EMAIL>'),
         PII_PHONE_RE, '<PHONE>')
     return docs.select(
-        F.col(id_col),
+        F.col('doc_id'),
         F.regexp_count(norm, F.lit(PII_EMAIL_RE)).cast('int')
          .alias('n_emails'),
         F.regexp_count(norm, F.lit(PII_PHONE_RE)).cast('int')
@@ -1430,9 +1389,7 @@ def pii_scrub(docs: DataFrame, id_col='doc_id',
     )
 
 
-def domain_mix_weights(docs: DataFrame, targets: dict,
-                       domain_col: str = 'source',
-                       text_col: str = 'text') -> DataFrame:
+def domain_mix_weights(docs: DataFrame, targets: dict) -> DataFrame:
     """Per-domain sampling weights to hit a target token mix.
 
     The domain-reweighting step of a pretraining data pipeline (the
@@ -1452,22 +1409,22 @@ def domain_mix_weights(docs: DataFrame, targets: dict,
     """
     tgt = F.create_map(*[
         F.lit(x) for kv in targets.items() for x in kv])
-    per = docs.groupBy(domain_col).agg(
+    per = docs.groupBy('source').agg(
         F.count('*').alias('n_docs'),
-        F.sum(F.size(tokens(text_col))).alias('n_tokens'))
+        F.sum(F.size(tokens('text'))).alias('n_tokens'))
     w_all = Window.partitionBy()
     total = F.sum('n_tokens').over(w_all).cast('double')
     share = F.col('n_tokens') / total
     return per.select(
-        domain_col, 'n_docs', 'n_tokens',
+        'source', 'n_docs', 'n_tokens',
         F.round(share, 6).alias('token_share'),
         F.round(
-            F.coalesce(tgt[F.col(domain_col)], F.lit(0.0)) / share,
+            F.coalesce(tgt[F.col('source')], F.lit(0.0)) / share,
             6).alias('mix_weight'))
 
 
-def chunk_documents(docs: DataFrame, window: int = 64, stride: int = 48,
-                    id_col='doc_id', text_col='text') -> DataFrame:
+def chunk_documents(docs: DataFrame, window: int = 64,
+                    stride: int = 48) -> DataFrame:
     """Sliding-window token chunks with overlap (pretraining/RAG prep).
 
     Chunk k covers tokens [k*stride, k*stride + window); the last
@@ -1481,7 +1438,7 @@ def chunk_documents(docs: DataFrame, window: int = 64, stride: int = 48,
     if not 0 < stride <= window:
         raise ValueError(
             f'need 0 < stride <= window (got {stride}, {window})')
-    toks = tokens(text_col)
+    toks = tokens('text')
 
     def chunks(t):
         n = F.size(t)
@@ -1496,10 +1453,10 @@ def chunk_documents(docs: DataFrame, window: int = 64, stride: int = 48,
                  .alias('_toks')))
 
     exploded = docs.select(
-        F.col(id_col),
+        F.col('doc_id'),
         F.explode(bind_once(toks, chunks)).alias('c'))
     return exploded.select(
-        id_col,
+        'doc_id',
         F.col('c.chunk_idx').alias('chunk_idx'),
         F.size('c._toks').cast('int').alias('n_tokens'),
         F.array_join('c._toks', ' ').alias('chunk_text'))
@@ -1508,8 +1465,7 @@ def chunk_documents(docs: DataFrame, window: int = 64, stride: int = 48,
 LM_QUANT = 1_000_000  # log-prob quantization grid (1e-6 nats)
 
 
-def lm_score(docs: DataFrame, id_col='doc_id', text_col='text',
-             vocab_size: int = 50000) -> DataFrame:
+def lm_score(docs: DataFrame, vocab_size: int = 50000) -> DataFrame:
     """Corpus char-trigram LM quality score (CCNet/KenLM-style filter).
 
     The classic model-based quality signal: score each document by the
@@ -1542,7 +1498,7 @@ def lm_score(docs: DataFrame, id_col='doc_id', text_col='text',
     # substr: the per-position substring runs in whole-stage codegen
     # instead of an interpreted higher-order lambda (same rows — the
     # NULL-position row keeps the short-doc NULL-trigram semantics)
-    base = docs.select(F.col(id_col), norm_text(text_col).alias('_t'))
+    base = docs.select(F.col('doc_id'), norm_text('text').alias('_t'))
     positions = F.when(
         F.length('_t') >= 3,
         F.sequence(F.lit(1), F.length('_t') - 2)
@@ -1559,11 +1515,11 @@ def lm_score(docs: DataFrame, id_col='doc_id', text_col='text',
     # more values could not spread a trigram any further
     salts = int(docs.sparkSession.conf.get('spark.sql.shuffle.partitions'))
     tris = (base
-            .select(F.col(id_col), '_t', F.explode(positions).alias('_i'))
-            .select(F.col(id_col),
+            .select(F.col('doc_id'), '_t', F.explode(positions).alias('_i'))
+            .select(F.col('doc_id'),
                     F.col('_t').substr(F.col('_i'), F.lit(3)).alias('tri'))
             .repartition(F.col('tri'),
-                         F.pmod(F.xxhash64(id_col), F.lit(salts))))
+                         F.pmod(F.xxhash64('doc_id'), F.lit(salts))))
     counts = tris.where(F.col('tri').isNotNull()) \
         .groupBy('tri').agg(F.count('*').alias('c'))
     total = counts.agg(F.sum('c').cast('double').alias('total'))
@@ -1579,22 +1535,21 @@ def lm_score(docs: DataFrame, id_col='doc_id', text_col='text',
               .join(F.broadcast(vocab), 'tri', 'left')
               .crossJoin(F.broadcast(total))
               .select(
-                  id_col,
+                  'doc_id',
                   F.col('tri'),
                   F.coalesce(F.col('logp_q'), floor_q).alias('lp')))
-    return (scored.groupBy(id_col)
+    return (scored.groupBy('doc_id')
             .agg(F.count(F.col('tri')).cast('int').alias('n_trigrams'),
                  F.sum('lp').alias('_s'), F.count('*').alias('_n'))
             .select(
-                id_col, 'n_trigrams',
+                'doc_id', 'n_trigrams',
                 F.when(F.col('n_trigrams') > 0,
                        F.round(F.col('_s') / F.col('_n') / LM_QUANT, 6))
                  .alias('lm_score')))
 
 
-def doc_fingerprint(docs: DataFrame, id_col='doc_id', text_col='text',
-                    n: int = 3, k: int = 4) -> DataFrame:
-    """Bottom-k sketch fingerprint over shingle hashes (string-joined).
+def doc_fingerprint(docs: DataFrame) -> DataFrame:
+    """Bottom-4 sketch fingerprint over shingle hashes (string-joined).
 
     ``shingle_hashes`` already returns a distinct array. The three
     output columns derive from it through one ``inline`` over a bound
@@ -1602,12 +1557,12 @@ def doc_fingerprint(docs: DataFrame, id_col='doc_id', text_col='text',
     (three plain column references would each inline a full recompute —
     Catalyst has no CSE for lambda expressions).
     """
-    hashes = shingle_hashes(tokens(text_col), n)
+    hashes = shingle_hashes(tokens('text'))
     return docs.select(
-        F.col(id_col),
+        F.col('doc_id'),
         F.inline(F.transform(F.array(hashes), lambda h: F.struct(
             F.array_join(
-                F.transform(F.slice(F.array_sort(h), 1, k),
+                F.transform(F.slice(F.array_sort(h), 1, 4),
                             lambda x: x.cast('string')), '-')
              .alias('fingerprint'),
             F.array_min(h).alias('fp_min'),

@@ -51,14 +51,12 @@ def run_incremental_ingest(
     corpus_root: str,
     registry_root: str,
     checkpoint_path: str,
-    id_col: str = 'doc_id',
-    text_col: str = 'text',
-    available_now: bool = True,
 ):
-    """Start the ingestion query; returns the StreamingQuery.
+    """Start the ingestion query (an ``availableNow`` trigger: drain what
+    the source holds, then stop); returns the StreamingQuery.
 
-    ``stream`` must carry ``id_col`` (batch-internal keep-first key)
-    and ``text_col``; all columns are persisted for survivors.
+    ``stream`` must carry ``doc_id`` (batch-internal keep-first key)
+    and ``text``; all columns are persisted for survivors.
     """
     corpus = SnapshotTable(corpus_root)
     registry = SnapshotTable(registry_root)
@@ -68,13 +66,11 @@ def run_incremental_ingest(
         seen = registry.read(spark)
         if seen is None:
             seen = spark.createDataFrame([], f'{KEY_COL} string')
-        survivors = textops.incremental_dedup(
-            batch, seen, id_col=id_col, text_col=text_col,
-            key_col=KEY_COL)
-        rows = batch.join(survivors.select(id_col), id_col, 'left_semi')
+        survivors = textops.incremental_dedup(batch, seen)
+        rows = batch.join(survivors.select('doc_id'), 'doc_id', 'left_semi')
         # batch-internal duplicate ids (full-copy re-deliveries inside
         # one batch) collapse to one row
-        rows = rows.dropDuplicates([id_col])
+        rows = rows.dropDuplicates(['doc_id'])
         corpus.append(rows, tag=f'ingest-{batch_id}-corpus')
         registry.append(survivors.select(KEY_COL),
                         tag=f'ingest-{batch_id}-keys')
@@ -82,6 +78,4 @@ def run_incremental_ingest(
     writer = (stream.writeStream
               .foreachBatch(ingest_batch)
               .option('checkpointLocation', checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()

@@ -17,8 +17,6 @@ from pyspark.sql import functions as F
 
 
 def interval_join_stream(left: DataFrame, right: DataFrame,
-                         key_col: str = 'user_id', ts_col: str = 'ts',
-                         id_col: str = 'event_id',
                          interval: str = '60 minutes',
                          watermark: str = '24 hours') -> DataFrame:
     """Streaming interval join: (left, right) pairs with the same key
@@ -35,16 +33,16 @@ def interval_join_stream(left: DataFrame, right: DataFrame,
 
     Output: (left_id, key, left_ts, right_id, right_ts).
     """
-    lt = (left.select(F.col(id_col).alias('left_id'),
-                      F.col(key_col), F.col(ts_col).alias('left_ts'))
+    lt = (left.select(F.col('event_id').alias('left_id'),
+                      F.col('user_id'), F.col('ts').alias('left_ts'))
           .withWatermark('left_ts', watermark))
-    rt = (right.select(F.col(id_col).alias('right_id'),
-                       F.col(key_col).alias('_rk'),
-                       F.col(ts_col).alias('right_ts'))
+    rt = (right.select(F.col('event_id').alias('right_id'),
+                       F.col('user_id').alias('_rk'),
+                       F.col('ts').alias('right_ts'))
           .withWatermark('right_ts', watermark))
-    cond = ((F.col(key_col) == F.col('_rk'))
+    cond = ((F.col('user_id') == F.col('_rk'))
             & (F.col('right_ts') >= F.col('left_ts'))
             & (F.col('right_ts') <=
                F.col('left_ts') + F.expr(f'INTERVAL {interval}')))
     return (lt.join(rt, cond, 'inner')
-            .select('left_id', key_col, 'left_ts', 'right_id', 'right_ts'))
+            .select('left_id', 'user_id', 'left_ts', 'right_id', 'right_ts'))

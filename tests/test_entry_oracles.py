@@ -100,9 +100,8 @@ def test_vector_index_roundtrip_and_versioning(spark, tmp_path):
             similarity.kmeans_labels(emb, k=3, iterations=2).collect()}
     assert got == want
     # publishing again bumps the version; the old pin stays readable
-    assert similarity.save_vector_index(spark, root, {0: [1, 2, 3]},
-                                        quant=500) == 2
+    assert similarity.save_vector_index(spark, root, {0: [1, 2, 3]}) == 2
     old, q1 = similarity.load_vector_index(spark, root, version=1)
     assert old == loaded and q1 == 1000
     new, q2 = similarity.load_vector_index(spark, root)
-    assert new == {0: [1, 2, 3]} and q2 == 500
+    assert new == {0: [1, 2, 3]} and q2 == 1000

@@ -94,12 +94,12 @@ class TestMultimodal:
 
     def test_frame_sampling_non_avi_fallback(self, spark):
         # undecodable payloads keep the byte-window fallback shape
-        rows = [(1, 'video', b'not an avi at all' * 20, None, None, 'raw')]
+        rows = [(1, 'video', b'not an avi at all' * 80, None, None, 'raw')]
         media = spark.createDataFrame(
             rows, schema=multimodal.MEDIA_SCHEMA)
-        out = multimodal.sample_frames(media, frame_bytes=64,
-                                       every_n=2).collect()
-        assert out and all(len(r.frame) <= 64 for r in out)
+        out = multimodal.sample_frames(media, every_n=2).collect()
+        assert len(out) == 3 and all(
+            len(r.frame) == multimodal.FALLBACK_FRAME_BYTES for r in out)
         assert all(r.frame_idx % 2 == 0 for r in out)
 
 

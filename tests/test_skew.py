@@ -80,7 +80,7 @@ def test_dedup_lines_boilerplate_skew_shape(spark):
         F.col('id').alias('doc_id'),
         F.concat(F.lit('unique line for doc '), F.col('id'),
                  F.lit('\n'), F.lit(footer)).alias('text'))
-    out = textops.dedup_lines(docs, min_chars=10)
+    out = textops.dedup_lines(docs)
     rows = {r.doc_id: r for r in out.collect()}
     assert len(rows) == 500
     assert rows[0].clean_text == 'unique line for doc 0\n' + footer

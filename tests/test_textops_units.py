@@ -610,16 +610,15 @@ def test_ann_recall_bounds(spark):
     from ocrodjvu_spark.functions import similarity
     from ocrodjvu_spark.sources import transcripts as T
     emb = T.load_table(spark, '/root/testdata/sf0.001', 'embeddings')
-    rows = similarity.ann_recall(emb, n_queries=5, k=3).collect()
-    assert len(rows) == 5
+    rows = similarity.ann_recall(emb).collect()
+    assert len(rows) == 10
     for r in rows:
         assert 0.0 <= r.recall <= 1.0
-        assert r.n_exact == 3 and 0 <= r.n_hit <= 3
+        assert r.n_exact == 5 and 0 <= r.n_hit <= 5
         assert r.recall == round(r.n_hit / r.n_exact, 6)
     # probing every list recovers the exact answer (IVF sanity bound)
     labels = emb.select('label').distinct().count()
-    full = similarity.ann_recall(emb, n_queries=5, k=3, nprobe=labels) \
-        .collect()
+    full = similarity.ann_recall(emb, nprobe=labels).collect()
     assert all(r.recall == 1.0 for r in full)
 
 
@@ -636,13 +635,11 @@ def test_ann_recall_learned_quantizer(spark):
     relabeled = (emb.select('vec_id', 'embedding').join(lab, 'vec_id')
                  .select('vec_id', 'embedding',
                          F.col('cluster').alias('label')))
-    full = similarity.ann_recall(relabeled, n_queries=5, k=3,
-                                 nprobe=k_lists).collect()
-    assert len(full) == 5
+    full = similarity.ann_recall(relabeled, nprobe=k_lists).collect()
+    assert len(full) == 10
     assert all(r.recall == 1.0 for r in full)
     # nprobe=1 is a strict subset of the scan: recall can only drop
-    one = similarity.ann_recall(relabeled, n_queries=5, k=3,
-                                nprobe=1).collect()
+    one = similarity.ann_recall(relabeled, nprobe=1).collect()
     assert all(0.0 <= r.recall <= 1.0 for r in one)
 
 
