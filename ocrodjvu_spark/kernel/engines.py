@@ -53,8 +53,7 @@ class _Lines:
 
 
 def ocrad_scan(stream, details=TEXT_DETAILS_WORD, uax29=None,
-               page_size=None, rotation=0,
-               replacement_character=REPLACEMENT_CHARACTER) -> Zone:
+               page_size=None, rotation=0) -> Zone:
     """Parse an ocrad ORF document into a page zone."""
     if isinstance(stream, str):
         stream = _Lines(stream)
@@ -104,7 +103,7 @@ def ocrad_scan(stream, details=TEXT_DETAILS_WORD, uax29=None,
                 bbox = BBox(x, y, x + w, y + h)
                 if line[0] == '0':
                     # no interpretations proposed for this character
-                    text = replacement_character
+                    text = REPLACEMENT_CHARACTER
                 else:
                     m = _character_re.match(line)
                     if not m:

@@ -292,7 +292,7 @@ _DOC_HEADER = '''\
 <html xmlns="http://www.w3.org/1999/xhtml">
 <head>
   <meta http-equiv="Content-Type" content="text/html; charset=UTF-8" />
-  <meta name="ocr-system" content="{ocr_system}" />
+  <meta name="ocr-system" content="ocrodjvu-spark" />
   <meta name="ocr-capabilities" content="{ocr_capabilities}" />
   <title>{title}</title>
 </head>
@@ -306,15 +306,13 @@ _DOC_FOOTER = '''
 
 
 def sexpr_to_hocr_document(pages: List[Tuple[list, int, int]], uax29=None,
-                           title='DjVu hidden text layer',
-                           ocr_system='ocrodjvu-spark') -> str:
+                           title='DjVu hidden text layer') -> str:
     """Multiple (page_value, page_w, page_h) -> complete hOCR document."""
     body = ''.join(
         sexpr_to_hocr_page(value, w, h, uax29=uax29)
         for value, w, h in pages
     )
     header = _DOC_HEADER.format(
-        ocr_system=ocr_system,
         ocr_capabilities=HOCR_CAPABILITIES,
         title=title,
     )

@@ -176,9 +176,9 @@ def _compact_into(value: SValue, out: List[str]) -> None:
     out.append(')')
 
 
-def print_pretty(value: SValue, width: int = 80) -> str:
-    """Width-limited pretty printer (one zone per line when too wide)."""
-    return '\n'.join(_pretty_lines(value, 0, width))
+def print_pretty(value: SValue) -> str:
+    """80-column pretty printer (one zone per line when too wide)."""
+    return '\n'.join(_pretty_lines(value, 0, 80))
 
 
 def _pretty_lines(value: SValue, indent: int, width: int) -> List[str]:

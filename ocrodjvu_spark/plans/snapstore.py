@@ -102,6 +102,8 @@ _PART_DIR = '__pv='  # staged partition directory prefix
 # attempts of a rewrite (``SnapshotTable._rewrite``) whose base keeps
 # changing under it before it raises
 _REWRITE_RETRIES = 5
+# version claims a commit may lose to concurrent writers before it raises
+_COMMIT_RETRIES = 20
 
 # stats are recorded only for values that serialize losslessly to JSON
 # and compare with Python operators; temporal values are normalized to
@@ -273,10 +275,10 @@ def _comparable(value, lo, hi):
     return kind(value) is not None and kind(value) == kind(lo) == kind(hi)
 
 
-def zorder_expr(df: DataFrame, cols: Sequence[str], bits: int = 4):
+def zorder_expr(df: DataFrame, cols: Sequence[str]):
     """A JVM-computed Morton (z-order) value over ``cols``.
 
-    Each column is rank-bucketed into ``2**bits`` quantile buckets
+    Each column is rank-bucketed into 16 quantile buckets
     (cut points from one driver-side ``percentile_approx`` collect —
     metadata-scale, like k-means seeds; rank buckets, unlike
     equal-width, stay balanced under skew), then the bucket bits are
@@ -291,7 +293,7 @@ def zorder_expr(df: DataFrame, cols: Sequence[str], bits: int = 4):
     All whole-stage codegen. NULLs bucket to 0 (sort first, prune like
     any other value).
     """
-    n_buckets = 1 << bits
+    n_buckets = 16
     probs = [i / n_buckets for i in range(1, n_buckets)]
     cuts_row = df.select(*[
         F.percentile_approx(c, probs, 10000).alias(c) for c in cols
@@ -308,7 +310,7 @@ def zorder_expr(df: DataFrame, cols: Sequence[str], bits: int = 4):
         # precomputed per bucket value, so `bucket` appears once
         spread = [
             sum(((v >> b) & 1) << (b * len(cols) + ci)
-                for b in range(bits))
+                for b in range(4))
             for v in range(n_buckets)
         ]
         z = z + F.element_at(
@@ -515,9 +517,8 @@ class SnapshotTable:
     movement is Spark-side and distributed.
     """
 
-    def __init__(self, root: str, max_commit_retries: int = 20,
+    def __init__(self, root: str,
                  bloom_cols: Optional[Sequence[str]] = None,
-                 bloom_bits: Optional[int] = None,
                  ndv_cols: Optional[Sequence[str]] = None,
                  ndv_p: Optional[int] = None):
         """``bloom_cols`` opts staged writes into PER-FILE BLOOM
@@ -525,10 +526,9 @@ class SnapshotTable:
         filters, kept in the manifest like Iceberg could): equality
         and IN probes on hash-like columns — content_hash, doc ids —
         prune files where min/max stats are useless (uniformly random
-        values span the whole domain in every file). Size
-        ``bloom_bits`` to expected rows/file (~10 bits/key for ~1% FP;
-        the default 8192 bits = 1 KiB packed suits small files — at
-        100 MB files use 2^20). Write-side opt-in per handle, like
+        values span the whole domain in every file). Each filter has
+        8192 bits (1 KiB packed, ~1% FP at ~800 keys/file), or the
+        size a table recorded. Write-side opt-in per handle, like
         Iceberg table write properties; readers need nothing.
 
         ``ndv_cols`` likewise records a PER-FILE HyperLogLog register
@@ -550,10 +550,8 @@ class SnapshotTable:
         self.root = root
         self.data_dir = os.path.join(root, 'data')
         self.manifest_dir = os.path.join(root, 'manifests')
-        self.max_commit_retries = max_commit_retries
         self._bloom_cols = (None if bloom_cols is None
                             else list(bloom_cols))
-        self._bloom_bits = bloom_bits
         self._ndv_cols = None if ndv_cols is None else list(ndv_cols)
         self._ndv_p = ndv_p
         self._tag_cache: Dict[int, Optional[str]] = {}
@@ -564,19 +562,14 @@ class SnapshotTable:
     def write_props(self) -> dict:
         """The effective sketch/table write properties: this handle's
         explicit settings, falling back to the ones recorded at HEAD
-        (absent both -> defaults: no blooms, no ndv, bloom_bits 8192,
-        ndv_p 12)."""
+        (absent both -> defaults: no blooms, no ndv, ndv_p 12). The bloom
+        size is the one recorded at HEAD, 8192 bits by default."""
         base = self._snapshot_doc().get('write_props') or {}
         return {
             'bloom_cols': (self._bloom_cols
                            if self._bloom_cols is not None
                            else base.get('bloom_cols', [])),
-            # None (not the default VALUE) is the inherit sentinel, so
-            # an explicit bloom_bits=8192 over a table that recorded a
-            # different size overrides it, as the docstring promises
-            'bloom_bits': (self._bloom_bits
-                           if self._bloom_bits is not None
-                           else base.get('bloom_bits', 1 << 13)),
+            'bloom_bits': base.get('bloom_bits', 1 << 13),
             'ndv_cols': (self._ndv_cols
                          if self._ndv_cols is not None
                          else base.get('ndv_cols', [])),
@@ -985,7 +978,7 @@ class SnapshotTable:
             raise ValueError(
                 f'partition transform {spec!r} != table\'s '
                 f'{base_spec!r} — partition evolution is out of scope '
-                '(overwrite() may change it)')
+                '(overwrite() replaces the table)')
         return spec
 
     def _transform_validate(self, transform: Optional[str]):
@@ -1090,12 +1083,9 @@ class SnapshotTable:
         return cache
 
     def overwrite(self, df: DataFrame,
-                  partition_col: Optional[str] = None,
-                  partition_transform: Optional[str] = None,
                   tag: Optional[str] = None) -> int:
-        """Commit ``df`` as the table's full new contents. As a full
-        replacement it MAY change the partition transform (the one
-        sanctioned "partition evolution": nothing old is carried).
+        """Commit ``df``, unpartitioned, as the table's full new
+        contents (nothing old is carried, partition transform included).
         ``tag`` means what it means for ``append``: a tag already
         committed makes the call a no-op returning that version — so a
         view rebuilt under its ``<name>@<version>`` cursor tag resumes
@@ -1104,16 +1094,13 @@ class SnapshotTable:
             existing = self.find_tag(tag)
             if existing is not None:
                 return existing
-        entries, schema = self._stage(df, partition_col,
-                                      partition_transform=partition_transform)
+        entries, schema = self._stage(df, None)
         return self._commit('overwrite', entries, schema,
                             apply=lambda base: list(entries), tag=tag,
-                            transform=partition_transform,
+                            transform=None,
                             apply_deletes=lambda base: [])
 
-    def replace_partitions(self, df: DataFrame, partition_col: str,
-                           partition_transform: Optional[str] = None
-                           ) -> int:
+    def replace_partitions(self, df: DataFrame, partition_col: str) -> int:
         """Dynamic-overwrite at snapshot granularity: the partitions
         present in ``df`` are swapped for its files; all other partitions
         are carried forward untouched. Concurrent swaps of disjoint
@@ -1121,8 +1108,7 @@ class SnapshotTable:
         last-writer-wins. With a hidden-partitioned table the swap is
         at TRANSFORMED granularity — e.g. replacing one day(ts)
         partition with a re-crawl of that day."""
-        transform = self._resolve_transform(partition_col,
-                                            partition_transform)
+        transform = self._resolve_transform(partition_col, None)
         entries, schema = self._stage(df, partition_col,
                                       partition_transform=transform)
         replaced = {e['partition'] for e in entries}
@@ -1831,19 +1817,12 @@ class SnapshotTable:
             }
         return blooms, ndv
 
-    def ndv_registers(self, col: str,
-                      version: Optional[int] = None,
-                      partition_values: Optional[Sequence] = None
-                      ) -> Optional[dict]:
+    def ndv_registers(self, col: str) -> Optional[dict]:
         """The merged {register: max_rank} table of ``col`` over a
         snapshot (optionally one partition subset) — pure driver-side
         metadata (the HLL monoid: max per register across files).
         None if any selected file lacks the sketch."""
-        files = self.snapshot(version)['files']
-        if partition_values is not None:
-            wanted = {str(v) for v in partition_values}
-            files = [f for f in files
-                     if str(f.get('partition')) in wanted]
+        files = self.snapshot()['files']
         p = self.write_props()['ndv_p']
         merged: Dict[int, int] = {}
         for f in files:
@@ -1855,13 +1834,11 @@ class SnapshotTable:
                     merged[reg] = rank
         return merged
 
-    def ndv(self, col: str, version: Optional[int] = None,
-            partition_values: Optional[Sequence] = None
-            ) -> Optional[float]:
+    def ndv(self, col: str) -> Optional[float]:
         """Approx COUNT(DISTINCT col) with ZERO data I/O, from the
         manifest's per-file HLL registers. None when a selected file
         carries no sketch (never a silent wrong answer)."""
-        merged = self.ndv_registers(col, version, partition_values)
+        merged = self.ndv_registers(col)
         if merged is None:
             return None
         from ..functions.hll import estimate_from_ranks
@@ -1912,7 +1889,7 @@ class SnapshotTable:
         commit passes ``apply``, which maps the base file list to the
         new one."""
         fast = list_op is not None
-        for _attempt in range(self.max_commit_retries):
+        for _attempt in range(_COMMIT_RETRIES):
             base_version = self.current_version()
             base = (self._snapshot_doc(base_version) if fast
                     else self.snapshot(base_version))
@@ -2014,7 +1991,7 @@ class SnapshotTable:
             self._reclaim_manifest_files(written)
         self._delete_entries(entries)  # never published — reclaim
         raise CommitConflict(
-            f'{operation}: lost {self.max_commit_retries} commit races')
+            f'{operation}: lost {_COMMIT_RETRIES} commit races')
 
     def _delete_entries(self, entries) -> None:
         for f in entries:
@@ -2160,9 +2137,7 @@ class SnapshotTable:
 def refresh_incremental(spark: SparkSession, source: SnapshotTable,
                         sink: SnapshotTable, transform,
                         key_cols: Sequence[str],
-                        name: str = 'mv',
-                        partition_col: Optional[str] = None
-                        ) -> Optional[int]:
+                        name: str = 'mv') -> Optional[int]:
     """Exactly-once incremental maintenance of a derived table (a
     materialized view): read the source's ``read_changelog`` since the
     last refresh, apply the row-wise ``transform`` (filter / project /
@@ -2249,7 +2224,7 @@ def refresh_incremental(spark: SparkSession, source: SnapshotTable,
                 f'{missing} — deletes could not be propagated')
         sink_tf = sink._snapshot_doc().get('partition_transform')
         entries, schema = sink._stage(
-            new_rows, partition_col, partition_transform=sink_tf)
+            new_rows, None, partition_transform=sink_tf)
         sink._delete_entries(  # empty stagings: reclaim, don't commit
             [e for e in entries if e['rows'] == 0])
         entries = [e for e in entries if e['rows'] > 0]

@@ -28,25 +28,20 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 
 
-def write_jsonl(df: DataFrame, path: str, shards: Optional[int] = None,
-                compression: Optional[str] = None) -> None:
+def write_jsonl(df: DataFrame, path: str,
+                shards: Optional[int] = None) -> None:
     """Export ``df`` as sharded JSONL under ``path`` (overwrite).
 
     ``shards`` coalesces the output to a fixed file count (None keeps
     the upstream partitioning — the right default at scale; use an
     explicit repartition upstream for size-targeted shards).
-    ``compression`` e.g. ``'gzip'`` for archival exports.
     """
     if shards is not None:
         df = df.coalesce(shards)
-    writer = df.write.mode('overwrite')
-    if compression:
-        writer = writer.option('compression', compression)
-    writer.json(path)
+    df.write.mode('overwrite').json(path)
 
 
-def read_jsonl(spark: SparkSession, path: str, schema,
-               corrupt_col: str = '_corrupt_record') -> DataFrame:
+def read_jsonl(spark: SparkSession, path: str, schema) -> DataFrame:
     """Read JSONL with an explicit schema; malformed lines survive as
     rows with only ``corrupt_col`` set (PERMISSIVE), so ingest jobs
     can split the error channel off with one filter instead of dying
@@ -55,12 +50,12 @@ def read_jsonl(spark: SparkSession, path: str, schema,
     from pyspark.sql.types import StructType, StructField, StringType
     if isinstance(schema, str):
         schema = StructType.fromDDL(schema)
-    if corrupt_col not in [f.name for f in schema.fields]:
+    if '_corrupt_record' not in [f.name for f in schema.fields]:
         schema = StructType(
             list(schema.fields)
-            + [StructField(corrupt_col, StringType(), True)])
+            + [StructField('_corrupt_record', StringType(), True)])
     return (spark.read
             .schema(schema)
             .option('mode', 'PERMISSIVE')
-            .option('columnNameOfCorruptRecord', corrupt_col)
+            .option('columnNameOfCorruptRecord', '_corrupt_record')
             .json(path))

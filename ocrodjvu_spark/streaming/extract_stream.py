@@ -34,15 +34,14 @@ def read_transcripts_stream(spark: SparkSession, input_path: str,
     )
 
 
-def dedup_stream(stream: DataFrame,
-                 watermark: str = '10 minutes') -> DataFrame:
+def dedup_stream(stream: DataFrame) -> DataFrame:
     """Streaming exact dedup: the streaming face of the batch
     ``dedup_exact`` operator.
 
     ``dropDuplicatesWithinWatermark`` on the normalized-text hash keeps
     the FIRST arrival of each key and suppresses re-deliveries and
-    duplicate turns that arrive within the watermark horizon; state for
-    keys older than the watermark is evicted, so memory is bounded by
+    duplicate turns that arrive within the 10-minute watermark horizon;
+    state for keys older than the watermark is evicted, so memory is bounded by
     (arrival rate x horizon) instead of growing with the corpus — the
     only dedup shape that survives an unbounded 10^12-turn feed.
     Exactly-once upstream delivery composes with this for end-to-end
@@ -51,12 +50,12 @@ def dedup_stream(stream: DataFrame,
     """
     from ..functions.textops import norm_text
     keyed = stream.withColumn('text_hash', F.md5(norm_text('text')))
-    return (keyed.withWatermark('ts', watermark)
+    return (keyed.withWatermark('ts', '10 minutes')
             .dropDuplicatesWithinWatermark(['text_hash']))
 
 
 def run_to_parquet(extracted: DataFrame, output_path: str,
-                   checkpoint_path: str, available_now: bool = True):
+                   checkpoint_path: str):
     """Drain the stream to parquet (availableNow processes the backlog
     and stops — the streaming analogue of a batch catch-up run)."""
     writer = (
@@ -65,7 +64,6 @@ def run_to_parquet(extracted: DataFrame, output_path: str,
         .option('path', output_path)
         .option('checkpointLocation', checkpoint_path)
         .outputMode('append')
+        .trigger(availableNow=True)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
     return writer.start()

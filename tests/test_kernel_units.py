@@ -245,7 +245,7 @@ class TestSexprText:
         value = ['page', 0, 0, 1000, 1000] + [
             ['line', i, 0, i + 10, 10, 'x' * 30] for i in range(8)
         ]
-        printed = sexpr.print_pretty(value, width=80)
+        printed = sexpr.print_pretty(value)
         assert all(len(line) <= 80 for line in printed.split('\n'))
         assert sexpr.parse(printed) == value
 

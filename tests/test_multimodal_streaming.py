@@ -119,7 +119,7 @@ class TestStreaming:
         stream = ES.read_transcripts_stream(spark, inp,
                                             max_files_per_trigger=2)
         extracted = pipeline.extract_turns(stream)
-        q = ES.run_to_parquet(extracted, out, chk, available_now=True)
+        q = ES.run_to_parquet(extracted, out, chk)
         q.awaitTermination(300)
 
         result = spark.read.parquet(out)

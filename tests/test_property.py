@@ -70,7 +70,7 @@ def zone_values(depth):
 def test_sexpr_roundtrip(value):
     printed = sexpr.print_compact(value)
     assert sexpr.parse(printed) == value
-    pretty = sexpr.print_pretty(value, width=60)
+    pretty = sexpr.print_pretty(value)
     assert sexpr.parse(pretty) == value
 
 

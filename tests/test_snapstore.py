@@ -395,8 +395,10 @@ def test_null_partition_value_roundtrip(spark, tmp_path):
     assert rows == {(1, 'x'), (9, None)}
 
 
-def test_exhausted_retries_raise(spark, tmp_path):
-    t = SnapshotTable(str(tmp_path / 't'), max_commit_retries=2)
+def test_exhausted_retries_raise(spark, tmp_path, monkeypatch):
+    from ocrodjvu_spark.plans import snapstore
+    monkeypatch.setattr(snapstore, '_COMMIT_RETRIES', 2)
+    t = SnapshotTable(str(tmp_path / 't'))
     t._claim_version = lambda version, manifest: False
     with pytest.raises(CommitConflict):
         t.append(_docs(spark, 'x', n=1))
@@ -1042,17 +1044,6 @@ def test_bloom_probe_type_cross_check(spark, tmp_path):
     assert not file_may_match(fs, [('s', '=', 'absent')])
 
 
-def test_explicit_default_bloom_bits_overrides_recorded(spark, tmp_path):
-    # None is the inherit sentinel — an EXPLICIT bloom_bits equal to
-    # the default (8192) must override a recorded non-default size
-    t = SnapshotTable(str(tmp_path / 't'), bloom_cols=['h'],
-                      bloom_bits=1 << 16)
-    t.append(spark.createDataFrame([Row(h='a')]))
-    assert SnapshotTable(t.root).write_props()['bloom_bits'] == 1 << 16
-    explicit = SnapshotTable(t.root, bloom_bits=1 << 13)
-    assert explicit.write_props()['bloom_bits'] == 1 << 13
-
-
 def test_expire_tombstone_truncated_file_does_not_brick_tags(
         spark, tmp_path):
     # a truncated tombstone (crash mid-write before the fsync+link fix,
@@ -1330,8 +1321,6 @@ def test_manifest_ndv_merges_to_whole_scan_sketch(spark, tmp_path):
     assert merged == whole
     est = t.ndv('doc_id')
     assert abs(est - 180) / 180 < 0.2  # ~1.04/sqrt(256) expected error
-    # partition-subset NDV works off the same metadata
-    assert t.ndv('doc_id', partition_values=[None]) == est
 
 
 def test_manifest_ndv_missing_sketch_returns_none(spark, tmp_path):
