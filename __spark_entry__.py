@@ -277,7 +277,7 @@ def _q_streaming_ingest(spark, sf_dir):
     IG.seed_registry(
         spark, registry_root,
         docs.where(F.col('doc_id') % 5 == 0)
-            .select(F.md5(textops.norm_text('text'))
+            .select(F.md5(textops.norm_text())
                     .alias(IG.KEY_COL)))
     stream = (spark.readStream
               .schema('doc_id bigint, conv_id string, turn_idx int, '
@@ -365,7 +365,7 @@ def _q_multimodal_resize(spark, sf_dir):
     # the resized payloads: geometry + pixel sums prove the resample
     from ocrodjvu_spark.functions import multimodal as MM
     media = MM.synthesize_media(spark, sf_dir)
-    resized = MM.resize_images(media, max_side=4)
+    resized = MM.resize_images(media)
     return (MM.extract_features(resized)
             .where(F.col('kind') == 'image')
             .drop('checksum', 'sample_rate', 'duration_ms'))
@@ -380,7 +380,7 @@ def _q_multimodal_frames(spark, sf_dir):
     # it CAN recompute the sum.
     from ocrodjvu_spark.functions import multimodal as MM
     media = MM.synthesize_media(spark, sf_dir)
-    frames = MM.sample_frames(media, every_n=2)
+    frames = MM.sample_frames(media)
     return frames.select(
         'media_id',
         F.col('frame_idx').cast('int').alias('frame_idx'),
@@ -717,7 +717,7 @@ def _q_sampled_quantiles(spark, sf_dir):
     # stratum. Completes the portable sketch family (membership /
     # cardinality / frequency / quantiles).
     docs = T.load_table(spark, sf_dir, 'documents')
-    return textops.sampled_quantiles(docs, rate=4)
+    return textops.sampled_quantiles(docs)
 
 
 def _q_dedup_apply(spark, sf_dir):
@@ -735,7 +735,7 @@ def _q_dedup_apply(spark, sf_dir):
                     F.lit('shared boilerplate footer text'))
              .otherwise(F.col('text')))
     docs = docs.select('doc_id', 'lang', text2.alias('text'))
-    h = F.md5(textops.norm_text('text'))
+    h = F.md5(textops.norm_text())
     hashed = docs.select('doc_id', 'lang', h.alias('content_hash'))
     firsts = (hashed.groupBy('content_hash')
               .agg(F.min('doc_id').alias('doc_id')))
@@ -786,7 +786,7 @@ def _q_c4_quality(spark, sf_dir):
         .when(F.col('doc_id') % 4 == 1, F.lit('lorem ipsum dolor sit amet.'))
         .otherwise(F.lit('the third injected line rounds out the document.')))
     text2 = F.concat(
-        textops.norm_text('text'), F.lit('\n'),
+        textops.norm_text(), F.lit('\n'),
         F.lit('the first injected line has enough words.\n'
               'tiny.\n'
               'the second injected line also has enough words.\n'),
@@ -897,7 +897,7 @@ def _q_winnowing_fingerprints(spark, sf_dir):
     # hash*2^20+pos composite key) — guarantees a shared fingerprint
     # for any >= 6-token shared substring at ~40% of the hash volume
     docs = T.load_table(spark, sf_dir, 'documents')
-    return textops.winnowing_fingerprints(docs, n=3, window=4)
+    return textops.winnowing_fingerprints(docs)
 
 
 def _q_dedup_substring_spans(spark, sf_dir):
@@ -905,7 +905,7 @@ def _q_dedup_substring_spans(spark, sf_dir):
     # spans covered by 5-grams shared by >= 2 documents, merged
     # per-document (gaps-and-islands)
     docs = T.load_table(spark, sf_dir, 'documents')
-    return textops.duplicated_spans(docs, n=5, min_df=2)
+    return textops.duplicated_spans(docs)
 
 
 def _q_checkpoint_resume(spark, sf_dir):
@@ -1016,9 +1016,9 @@ def _q_corpus_takedown(spark, sf_dir):
     docs = T.load_table(spark, sf_dir, 'documents') \
         .select('doc_id', 'text')
     corpus = docs.withColumn(
-        'content_hash', F.md5(textops.norm_text('text')))
+        'content_hash', F.md5(textops.norm_text()))
     optout_df = (docs.where(F.col('doc_id') % 9 == 0)
-                 .select(F.md5(textops.norm_text('text'))
+                 .select(F.md5(textops.norm_text())
                          .alias('content_hash')).distinct())
     optout = [r.content_hash for r in optout_df.collect()]
 
@@ -1299,7 +1299,7 @@ def _q_snapshot_sketch_metadata(spark, sf_dir):
                       ndv_cols=['doc_id'], ndv_p=_HLL_P)
     docs = T.load_table(spark, sf_dir, 'documents').select(
         'doc_id', 'lang',
-        F.md5(textops.norm_text('text')).alias('content_hash'))
+        F.md5(textops.norm_text()).alias('content_hash'))
     t.append(docs.repartitionByRange(8, 'doc_id'))
     probes = [r.content_hash for r in
               docs.where(F.col('doc_id').isin([3, 7])).collect()]
@@ -1379,11 +1379,11 @@ def _q_dedup_substring_capped(spark, sf_dir):
     # cap excludes (what an operator reviews before committing to a
     # cap at corpus scale).
     docs = T.load_table(spark, sf_dir, 'documents')
-    spans = textops.duplicated_spans(docs, n=5, min_df=2, max_df=2) \
+    spans = textops.duplicated_spans(docs, max_df=2) \
         .select(F.lit('span').alias('part'), '*',
                 F.lit(None).cast('long').alias('sh'),
                 F.lit(None).cast('long').alias('df'))
-    dropped = textops.oversized_ngrams(docs, max_df=2, n=5).select(
+    dropped = textops.oversized_ngrams(docs, max_df=2).select(
         F.lit('dropped').alias('part'),
         F.lit(None).cast('long').alias('doc_id'),
         F.lit(None).cast('int').alias('span_start'),
@@ -1479,7 +1479,7 @@ def _q_corpus_pipeline(spark, sf_dir):
     # partial agg collapses a boilerplate hash; no hot-key window)
     hashed = docs.select(
         'doc_id', 'text',
-        F.md5(textops.norm_text('text')).alias('_h'))
+        F.md5(textops.norm_text()).alias('_h'))
     minids = (hashed.groupBy('_h')
               .agg(F.min('doc_id').alias('doc_id')))
     firsts = hashed.join(minids, ['_h', 'doc_id'])
@@ -1501,7 +1501,7 @@ def _q_ingest_pipeline(spark, sf_dir):
     from ocrodjvu_spark.functions import bloom, bpe
     docs = T.load_table(spark, sf_dir, 'documents')
     seen = (docs.where(F.col('doc_id') % 3 == 0)
-            .select(F.md5(textops.norm_text('text'))
+            .select(F.md5(textops.norm_text())
                     .alias('content_hash')))
     filt = bloom.bloom_build(
         seen.select(F.col('content_hash').alias('key')).distinct(),
@@ -1565,7 +1565,7 @@ def _q_dedup_substring_apply(spark, sf_dir):
     # the APPLY side of Lee et al. 2022: strip every token covered by a
     # duplicated span (5-grams shared by >= 2 docs) and reassemble
     docs = T.load_table(spark, sf_dir, 'documents')
-    return textops.remove_duplicated_spans(docs, n=5, min_df=2)
+    return textops.remove_duplicated_spans(docs)
 
 
 def _q_lm_quality(spark, sf_dir):
@@ -1673,14 +1673,14 @@ def _q_dedup_clusters(spark, sf_dir):
     # iterative connected components over the near-dup pair graph
     # (min-label propagation; oracle is a recursive CTE)
     docs = _docs_with_near_dups(spark, sf_dir)
-    return textops.dedup_clusters(docs, threshold=0.5)
+    return textops.dedup_clusters(docs)
 
 
 def _q_dedup_cluster_apply(spark, sf_dir):
     # the APPLY side of dedup_clusters: keep-one-representative-per-
     # near-dup-cluster via one left-anti join on the doc key
     docs = _docs_with_near_dups(spark, sf_dir)
-    return textops.dedup_cluster_apply(docs, threshold=0.5)
+    return textops.dedup_cluster_apply(docs)
 
 
 def _q_dedup_ngram_jaccard(spark, sf_dir):
@@ -1703,7 +1703,7 @@ def _q_dedup_simhash_pairs(spark, sf_dir):
     # the all-pairs SQL oracle is matched without an oracle that mirrors
     # the bucketing
     docs = _docs_with_near_dups(spark, sf_dir)
-    return textops.simhash_neardup_pairs(docs, max_dist=3).select(
+    return textops.simhash_neardup_pairs(docs).select(
         'doc_a', 'doc_b', F.col('hamming_dist').cast('int')
         .alias('hamming_dist'))
 
@@ -1805,7 +1805,7 @@ _BLOOM_K = 3
 
 
 _HLL_P = 6
-_CMS_D = 3
+_CMS_D = 3  # cms.CMS_DEPTH
 _CMS_W = 64
 
 
@@ -1817,11 +1817,10 @@ def _q_cms_counts(spark, sf_dir):
     # est >= true_n always (one-sided error, asserted in tests)
     from ocrodjvu_spark.functions import cms
     docs = T.load_table(spark, sf_dir, 'documents')
-    words = (docs.select(F.explode(textops.tokens('text')).alias('key'))
+    words = (docs.select(F.explode(textops.tokens()).alias('key'))
              .where(F.col('key') != ''))
-    sketch = cms.cms_build(words, d=_CMS_D, w=_CMS_W)
-    est = cms.cms_estimate(words.distinct(), sketch,
-                           d=_CMS_D, w=_CMS_W)
+    sketch = cms.cms_build(words, w=_CMS_W)
+    est = cms.cms_estimate(words.distinct(), sketch, w=_CMS_W)
     truth = words.groupBy(F.col('key')).agg(
         F.count('*').alias('true_n'))
     return est.join(truth, 'key')
@@ -1843,16 +1842,16 @@ def _q_sketch_tables(spark, sf_dir):
     # tolerance-asserted in tests/test_hll.py).
     from ocrodjvu_spark.functions import bloom, hll
     docs = T.load_table(spark, sf_dir, 'documents')
-    words = (docs.select(F.explode(textops.tokens('text')).alias('key'))
+    words = (docs.select(F.explode(textops.tokens()).alias('key'))
              .where(F.col('key') != ''))
     vocab = words.distinct()
-    filt = bloom.bloom_build(vocab, 'key', m_bits=_BLOOM_M, k=_BLOOM_K)
+    filt = bloom.bloom_build(vocab, m_bits=_BLOOM_M, k=_BLOOM_K)
     present = (docs.where(F.col('doc_id') % 7 == 0)
-               .select(F.explode(textops.tokens('text')).alias('key'))
+               .select(F.explode(textops.tokens()).alias('key'))
                .where(F.col('key') != '').distinct())
     absent = present.select(F.concat('key', F.lit('zz')).alias('key'))
     probes = present.unionByName(absent).distinct()
-    res = bloom.bloom_probe(probes, filt, 'key')
+    res = bloom.bloom_probe(probes, filt)
     truth = vocab.withColumn('in_vocab', F.lit(1))
     # booleans cast to int: a NULLable boolean round-trips as float
     # through pandas on the DuckDB side but stays boolean on the Spark
@@ -1884,7 +1883,7 @@ def _q_dedup_incremental(spark, sf_dir):
     from ocrodjvu_spark.functions import bloom
     docs = T.load_table(spark, sf_dir, 'documents')
     seen = (docs.where(F.col('doc_id') % 3 == 0)
-            .select(F.md5(textops.norm_text('text'))
+            .select(F.md5(textops.norm_text())
                     .alias('content_hash')))
     filt = bloom.bloom_build(
         seen.select(F.col('content_hash').alias('key')).distinct(),
@@ -1905,16 +1904,16 @@ def _q_ann_ivf_topk(spark, sf_dir):
     # results differ wherever a true neighbor sits across the nearest
     # Voronoi boundary, and the oracle pins that exactly.
     emb = T.load_table(spark, sf_dir, 'embeddings')
-    return (similarity.ivf_topk(emb, n_queries=10, k=5)
+    return (similarity.ivf_topk(emb)
             .select(F.lit(1).alias('nprobe'), '*')
             .unionByName(
-                similarity.ivf_topk(emb, n_queries=10, k=5, nprobe=2)
+                similarity.ivf_topk(emb, nprobe=2)
                 .select(F.lit(2).alias('nprobe'), '*')))
 
 
 def _q_ann_lsh_topk(spark, sf_dir):
     emb = T.load_table(spark, sf_dir, 'embeddings')
-    return similarity.lsh_topk(emb, n_queries=10, k=5)
+    return similarity.lsh_topk(emb)
 
 
 def _q_ann_index_persisted(spark, sf_dir):
@@ -1931,7 +1930,7 @@ def _q_ann_index_persisted(spark, sf_dir):
     # the version, pinned version stays readable) asserted in-gate.
     import os
     emb = T.load_table(spark, sf_dir, 'embeddings')
-    cents = similarity.kmeans_centroids(emb, k=8, iterations=3)
+    cents = similarity.kmeans_centroids(emb)
     root = os.path.join(_gate_tempdir('ocrodjvu-spark-annindex-'),
                         'ivf')
     v1 = similarity.save_vector_index(spark, root, cents)
@@ -1961,8 +1960,7 @@ def _q_semantic_clusters(spark, sf_dir):
     # composition of two already-gated operators, pinned end-to-end by
     # a recursive-CTE oracle over the same pair set
     emb = T.load_table(spark, sf_dir, 'embeddings')
-    pairs = similarity.semantic_dedup_pairs(emb, threshold=0.4,
-                                            k=8, iterations=3)
+    pairs = similarity.semantic_dedup_pairs(emb, k=8, iterations=3)
     edges = pairs.select(F.col('vec_a').alias('doc_a'),
                          F.col('vec_b').alias('doc_b'))
     return (textops.connected_components(edges)
@@ -1982,8 +1980,7 @@ def _q_dedup_semantic(spark, sf_dir):
     # -- the equi-join-on-cluster scale shape; threshold 0.4 because the
     # corpus max pairwise cosine is ~0.54
     emb = T.load_table(spark, sf_dir, 'embeddings')
-    return similarity.semantic_dedup_pairs(emb, threshold=0.4,
-                                           k=8, iterations=3)
+    return similarity.semantic_dedup_pairs(emb, k=8, iterations=3)
 
 
 def _sql_kmeans(k: int = 8, iterations: int = 3,
@@ -2196,7 +2193,6 @@ def _q_streaming_join(spark, sf_dir):
                         .option('maxFilesPerTrigger', 16)
                         .parquet(os.path.join(base, sub)))
     joined = SJ.interval_join_stream(read('left'), read('right'),
-                                     interval='60 minutes',
                                      watermark='90 days')
     out = os.path.join(base, 'out')
     ST.run_to_parquet(joined, out,

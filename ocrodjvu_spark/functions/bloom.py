@@ -60,14 +60,13 @@ def positions_col(key: Column, k: int, m_bits: int) -> Column:
 
 def bloom_build(
     keys: DataFrame,
-    key_col: str = 'key',
     m_bits: int = 4096,
     k: int = 3,
 ) -> BloomFilter:
     """Keys -> a BloomFilter (bitmap words (word_idx, bits) + the
     parameters bound to them). Duplicate keys are free (bit_or is
     idempotent), so no distinct pass is needed."""
-    pos = F.explode(positions_col(F.col(key_col), k, m_bits)).alias('pos')
+    pos = F.explode(positions_col(F.col('key'), k, m_bits)).alias('pos')
     bitmap = (keys
               .select(pos)
               .select(
@@ -79,17 +78,16 @@ def bloom_build(
     return BloomFilter(bitmap, m_bits, k)
 
 
-def bloom_probe(probes: DataFrame, bloom: BloomFilter,
-                key_col: str = 'key') -> DataFrame:
+def bloom_probe(probes: DataFrame, bloom: BloomFilter) -> DataFrame:
     """Membership test: (key, maybe_present), probed with the filter's
     own bound (m_bits, k) and a broadcast of its bitmap."""
     k = bloom.k
-    pos = F.explode(positions_col(F.col(key_col), k, bloom.m_bits))
+    pos = F.explode(positions_col(F.col('key'), k, bloom.m_bits))
     # distinct FIRST: a duplicated probe key would explode to 2k rows
     # and fail the count==k membership test — a false negative the
     # Bloom contract forbids
     probed = (probes
-              .select(F.col(key_col).alias('key')).distinct()
+              .select('key').distinct()
               .select('key', pos.alias('pos'))
               .select('key',
                       (F.col('pos') / 63).cast('long').alias('word_idx'),

@@ -42,21 +42,24 @@ def _positions(key: Column, d: int, w: int) -> Column:
     ])
 
 
-def cms_build(keys: DataFrame, d: int = 3, w: int = 256) -> DataFrame:
+CMS_DEPTH = 3  # d: counter rows, one hash each
+
+
+def cms_build(keys: DataFrame, w: int = 256) -> DataFrame:
     """Key occurrences (a ``key`` column) -> the (row, pos, n) counter
     table."""
-    pos = F.posexplode(_positions(F.col('key'), d, w))
+    pos = F.posexplode(_positions(F.col('key'), CMS_DEPTH, w))
     return (keys
             .select(pos.alias('row', 'pos'))
             .groupBy('row', 'pos')
             .agg(F.count('*').alias('n')))
 
 
-def cms_estimate(probes: DataFrame, sketch: DataFrame, d: int = 3,
+def cms_estimate(probes: DataFrame, sketch: DataFrame,
                  w: int = 256) -> DataFrame:
     """(key, est) — the min of the key's d counters; 0 if any counter
     row is absent (key never inserted and its cells never collided)."""
-    pos = F.posexplode(_positions(F.col('key'), d, w))
+    pos = F.posexplode(_positions(F.col('key'), CMS_DEPTH, w))
     probed = probes.select('key', pos.alias('row', 'pos'))
     return (probed
             .join(F.broadcast(sketch), ['row', 'pos'], 'left')

@@ -63,11 +63,10 @@ def register_rank_cols(key: Column, p: int):
     return (h % m).cast('int').alias('register'), rank.alias('rank')
 
 
-def hll_sketch(keys: DataFrame, key_col: str = 'key',
-               p: int = 6) -> DataFrame:
+def hll_sketch(keys: DataFrame, p: int = 6) -> DataFrame:
     """Keys -> the (register, max_rank) table (only registers that were
     hit; absent registers are rank 0 by convention)."""
-    reg, rank = register_rank_cols(F.col(key_col), p)
+    reg, rank = register_rank_cols(F.col('key'), p)
     return (keys.select(reg, rank)
             .groupBy('register')
             .agg(F.max('rank').alias('max_rank')))

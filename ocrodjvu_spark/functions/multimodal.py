@@ -253,11 +253,11 @@ def extract_features(media: DataFrame) -> DataFrame:
             .mapInPandas(batches, schema=FEATURE_SCHEMA))
 
 
-def resize_images(media: DataFrame, max_side: int = 4) -> DataFrame:
+def resize_images(media: DataFrame) -> DataFrame:
     """Real nearest-neighbor downscale for raw P5/P6 image payloads.
 
-    Images whose longest side exceeds ``max_side`` are resampled so it
-    equals ``max_side`` (floor-scaled short side, min 1) — the standard
+    Images whose longest side exceeds 4 pixels are resampled so it
+    equals 4 (floor-scaled short side, min 1) — the standard
     pre-embedding normalization pass. Non-PNM images and other kinds
     pass through unchanged; the width/height metadata columns track the
     new geometry.
@@ -279,9 +279,9 @@ def resize_images(media: DataFrame, max_side: int = 4) -> DataFrame:
                         # itself is the only pass over the body
                         ow, oh, _ = IC.pnm_geometry(data)
                         side = max(ow, oh)
-                        if side > max_side:
-                            nw = max(ow * max_side // side, 1)
-                            nh = max(oh * max_side // side, 1)
+                        if side > 4:
+                            nw = max(ow * 4 // side, 1)
+                            nh = max(oh * 4 // side, 1)
                             result = (IC.resize_pnm_nearest(data, nw, nh),
                                       nw, nh)
                         else:
@@ -323,8 +323,8 @@ def frame_byte_sum(col):
 FALLBACK_FRAME_BYTES = 256
 
 
-def sample_frames(media: DataFrame, every_n: int = 2) -> DataFrame:
-    """REAL frame sampling for AVI payloads: every Nth decoded frame's
+def sample_frames(media: DataFrame) -> DataFrame:
+    """REAL frame sampling for AVI payloads: every 2nd decoded frame's
     raw bytes, in stream order. Non-AVI / undecodable payloads fall
     back to ``FALLBACK_FRAME_BYTES``-byte windows (the former stub, kept so the
     plumbing — explode shape, Arrow batching, binary frames — still
@@ -341,7 +341,7 @@ def sample_frames(media: DataFrame, every_n: int = 2) -> DataFrame:
                     n = FALLBACK_FRAME_BYTES
                     frames = [data[i * n:(i + 1) * n]
                               for i in range(max(len(data) // n, 1))]
-                for i in range(0, len(frames), every_n):
+                for i in range(0, len(frames), 2):
                     rows.append({
                         'media_id': media_id,
                         'frame_idx': i,

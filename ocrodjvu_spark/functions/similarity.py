@@ -172,12 +172,12 @@ def ann_recall(embeddings: DataFrame, nprobe: int = 1) -> DataFrame:
                  .alias('recall')))
 
 
-def ivf_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
-             nprobe: int = 1) -> DataFrame:
+def ivf_topk(embeddings: DataFrame, nprobe: int = 1) -> DataFrame:
     """IVF-style ANN: coarse quantizer = per-label mean centroids.
 
-    Each query probes its ``nprobe`` nearest centroids (by cosine) and
-    runs exact top-k only inside those inverted lists — the standard
+    Each of the first 10 vectors (``vec_id`` < 10) queries: it probes
+    its ``nprobe`` nearest centroids (by cosine) and runs exact top-5
+    only inside those inverted lists — the standard
     IVF recall/cost knob (probing more lists recovers neighbors that
     fell just across a Voronoi boundary at nprobe x the scan cost). At
     10^12 scale the centroid table stays broadcast-small while the
@@ -199,7 +199,7 @@ def ivf_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
     centroids = centroids.select(
         F.col('list_id').alias('c_list'), 'cvec',
         norm(F.col('cvec')).alias('cnrm'))
-    queries = corpus.where(F.col('vec_id') < n_queries).select(
+    queries = corpus.where(F.col('vec_id') < 10).select(
         F.col('vec_id').alias('query_id'),
         F.col('vec').alias('qvec'),
         F.col('nrm').alias('qnrm'),
@@ -233,7 +233,7 @@ def ivf_topk(embeddings: DataFrame, n_queries: int = 10, k: int = 5,
         F.col('cos_sim').desc(), F.col('neighbor_id'))
     return (
         scored.withColumn('rank', F.row_number().over(w))
-        .where(F.col('rank') <= k)
+        .where(F.col('rank') <= 5)
         .select('query_id', 'rank', 'neighbor_id', 'cos_sim')
     )
 
@@ -471,14 +471,12 @@ def _kmeans_loop(embeddings, k, iterations):
     return centroids, dim, assign, pts
 
 
-def kmeans_centroids(embeddings: DataFrame, k: int = 8,
-                     iterations: int = 3):
-    """Train-only face of ``kmeans_labels``: the final quantized
-    centroid table as ``{cluster_id: [long, ...]}`` — k x dim values,
-    the deployable coarse-quantizer artifact (see
+def kmeans_centroids(embeddings: DataFrame):
+    """Train-only face of ``kmeans_labels`` (k=8, 3 iterations): the
+    final quantized centroid table as ``{cluster_id: [long, ...]}`` —
+    k x dim values, the deployable coarse-quantizer artifact (see
     ``save_vector_index``)."""
-    centroids, _dim, _assign, pts = _kmeans_loop(
-        embeddings, k, iterations)
+    centroids, _dim, _assign, pts = _kmeans_loop(embeddings, 8, 3)
     pts.unpersist(False)
     return centroids
 
@@ -521,8 +519,8 @@ def load_vector_index(spark, table_root: str, version=None):
             int(rows[0]['quant']))
 
 
-def semantic_dedup_pairs(embeddings: DataFrame, threshold: float = 0.4,
-                         k: int = 8, iterations: int = 3,
+def semantic_dedup_pairs(embeddings: DataFrame, k: int = 8,
+                         iterations: int = 3,
                          max_cluster_size: Optional[int] = None
                          ) -> DataFrame:
     """SemDeDup-style semantic near-duplicate pairs (Abbas et al. 2023,
@@ -544,7 +542,8 @@ def semantic_dedup_pairs(embeddings: DataFrame, threshold: float = 0.4,
     unrolls the same deterministic k-means, so the approximation itself
     is pinned exactly.
 
-    Output: (cluster, vec_a, vec_b, cos_sim) with vec_a < vec_b.
+    Output: (cluster, vec_a, vec_b, cos_sim) with vec_a < vec_b and
+    cos_sim >= 0.4.
     """
     labels = kmeans_labels(embeddings, k=k, iterations=iterations)
     corpus = _prep(embeddings).join(labels, 'vec_id')
@@ -565,7 +564,7 @@ def semantic_dedup_pairs(embeddings: DataFrame, threshold: float = 0.4,
         .select('cluster', 'vec_a', 'vec_b',
                 F.round(dot_cols(F.col('va'), F.col('vb'))
                         / (F.col('na') * F.col('nb')), 6).alias('cos_sim'))
-        .where(F.col('cos_sim') >= threshold)
+        .where(F.col('cos_sim') >= 0.4)
     )
     return pairs
 
@@ -615,12 +614,12 @@ def quantize_embeddings(embeddings: DataFrame) -> DataFrame:
     return embeddings.select(F.col('vec_id'), F.inline(F.array(out)))
 
 
-def lsh_topk(embeddings: DataFrame, n_queries: int = 10,
-             k: int = 5) -> DataFrame:
-    """Approximate cosine top-k restricted to same-LSH-bucket candidates."""
+def lsh_topk(embeddings: DataFrame) -> DataFrame:
+    """Approximate cosine top-5 of the first 10 vectors, restricted to
+    same-LSH-bucket candidates."""
     corpus = _prep(embeddings).withColumn(
         'bucket', lsh_bucket(F.col('vec')))
-    queries = corpus.where(F.col('vec_id') < n_queries).select(
+    queries = corpus.where(F.col('vec_id') < 10).select(
         F.col('vec_id').alias('query_id'),
         F.col('vec').alias('qvec'),
         F.col('nrm').alias('qnrm'),
@@ -642,6 +641,6 @@ def lsh_topk(embeddings: DataFrame, n_queries: int = 10,
         F.col('cos_sim').desc(), F.col('neighbor_id'))
     return (
         scored.withColumn('rank', F.row_number().over(w))
-        .where(F.col('rank') <= k)
+        .where(F.col('rank') <= 5)
         .select('query_id', 'rank', 'neighbor_id', 'cos_sim')
     )

@@ -45,8 +45,8 @@ MINHASH_PARAMS = [
 LSH_BAND_SIZE = 4  # 16 hashes -> 4 bands of 4
 
 
-def norm_text(col='text') -> Column:
-    return F.regexp_replace(F.trim(col), r'\s+', ' ')
+def norm_text() -> Column:
+    return F.regexp_replace(F.trim('text'), r'\s+', ' ')
 
 
 def bind_once(col: Column, fn) -> Column:
@@ -64,8 +64,8 @@ def bind_once(col: Column, fn) -> Column:
     return F.element_at(F.transform(F.array(col), fn), 1)
 
 
-def tokens(col='text') -> Column:
-    return F.split(norm_text(col), ' ')
+def tokens() -> Column:
+    return F.split(norm_text(), ' ')
 
 
 def rolling_hash(str_col: Column) -> Column:
@@ -83,7 +83,7 @@ def rolling_hash(str_col: Column) -> Column:
 
 
 SHINGLE_COMBINE = 1009  # odd multiplier for combining token hashes
-SHINGLE_N = 3  # words per shingle: MinHash, Jaccard, fingerprint, leakage
+SHINGLE_N = 3  # words per shingle: MinHash, Jaccard, fingerprints, leakage
 
 
 def shingle_hashes(tokens_col: Column) -> Column:
@@ -172,7 +172,7 @@ def simhash_table(docs: DataFrame, keep_null_docs: bool = True
     """
     w0 = F.col('_w0')
     rows = docs.select(
-        F.col('doc_id'), F.explode(tokens('text')).alias('_tok'),
+        F.col('doc_id'), F.explode(tokens()).alias('_tok'),
     ).select(
         F.col('doc_id'), rolling_hash(F.col('_tok')).alias('_w0'),
     ).select(
@@ -236,7 +236,7 @@ def _simhash_band_table(docs: DataFrame) -> DataFrame:
                        F.explode(band_keys).alias('band'))
 
 
-def simhash_neardup_pairs(docs: DataFrame, max_dist: int = 3,
+def simhash_neardup_pairs(docs: DataFrame,
                           max_bucket_size: Optional[int] = None
                           ) -> DataFrame:
     """SimHash near-duplicate pairs via banded bucket join + Hamming verify.
@@ -246,11 +246,10 @@ def simhash_neardup_pairs(docs: DataFrame, max_dist: int = 3,
     scales with the cluster instead of capping at the key count);
     candidate pairs share at least one identical band (an equi-join on
     the band key — never a cross join), then the exact Hamming distance
-    filters to ``max_dist``. With ``max_dist`` < 4 bands recall is
-    EXACT by pigeonhole: fewer differing bits than bands means some
-    band is untouched, so every qualifying pair collides somewhere. The
-    default (3 < 4) keeps that guarantee; raising max_dist to 4
-    or beyond turns the operator into an approximation.
+    filters to <= 3. With 3 < 4 bands recall is EXACT by pigeonhole:
+    fewer differing bits than bands means some band is untouched, so
+    every qualifying pair collides somewhere; a distance of 4 or more
+    would turn the operator into an approximation.
 
     ``max_bucket_size`` (skew guard, same contract as
     ``minhash_dedup_pairs``): a band bucket holding k near-identical
@@ -281,7 +280,7 @@ def simhash_neardup_pairs(docs: DataFrame, max_dist: int = 3,
                 F.col('b.doc_id').alias('doc_b'),
                 F.bit_count(F.col('a.sim').bitwiseXOR(F.col('b.sim')))
                  .alias('hamming_dist'))
-        .where(F.col('hamming_dist') <= max_dist)
+        .where(F.col('hamming_dist') <= 3)
         .distinct()
     )
 
@@ -302,7 +301,7 @@ def doc_shingle_table(docs: DataFrame) -> DataFrame:
     """
     return docs.select(
         F.col('doc_id'),
-        F.explode(shingle_hashes(tokens('text'))).alias('shingle'),
+        F.explode(shingle_hashes(tokens())).alias('shingle'),
     ).repartition('doc_id').distinct()
 
 
@@ -413,25 +412,27 @@ def positioned_shingle_hashes(tokens_col: Column, n: int = 3) -> Column:
     return bind_once(hs, combos)
 
 
+WINNOW_WINDOW = 4  # consecutive shingle hashes per winnowing window
 WINNOW_POS_CAP = 1 << 20  # max token positions per doc in the
 # winnowing composite key (31-bit hash + 20-bit pos < 2^51, exact in
 # int64 AND in a float64 engine); a 1M-token doc should be chunked
 # long before fingerprinting
 
 
-def winnowing_fingerprints(docs: DataFrame, n: int = 3,
-                           window: int = 4) -> DataFrame:
+def winnowing_fingerprints(docs: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
     SIGMOD 2003 — the MOSS local fingerprinting algorithm;
     re-expressed distributed, not copied).
 
     Positioned n-gram hashes → per-document sliding window of
-    ``window`` consecutive hashes → each full window selects its
+    ``WINNOW_WINDOW`` consecutive ``SHINGLE_N``-word shingle hashes →
+    each full window selects its
     MINIMUM (ties broken by leftmost position via the composite
     ``hash * POS_CAP + pos`` key) → the distinct selections are the
     fingerprint set. The winnowing guarantee: two documents sharing
-    any substring of >= ``window + n - 1`` tokens share at least one
-    fingerprint, while only ~2/(window+1) of all n-gram hashes are
+    any substring of >= ``WINNOW_WINDOW + SHINGLE_N - 1`` tokens share at
+    least one fingerprint, while only ~2/(window+1) of all n-gram hashes
+    are
     stored — the position-aware middle ground between the full
     positioned-shingle index (``duplicated_spans``) and the
     position-blind ``doc_fingerprint`` bottom-k sketch. Docs shorter
@@ -448,7 +449,7 @@ def winnowing_fingerprints(docs: DataFrame, n: int = 3,
     """
     pos_sh = docs.select(
         F.col('doc_id'),
-        F.explode(positioned_shingle_hashes(tokens('text'), n))
+        F.explode(positioned_shingle_hashes(tokens(), SHINGLE_N))
          .alias('p')
     ).select(F.col('doc_id'), F.col('p.pos').alias('pos'),
              (F.col('p.sh') * WINNOW_POS_CAP
@@ -464,13 +465,13 @@ def winnowing_fingerprints(docs: DataFrame, n: int = 3,
          .alias('__chk')).drop('__chk')
     w_doc = Window.partitionBy('doc_id')
     w_slide = (Window.partitionBy('doc_id').orderBy('pos')
-               .rowsBetween(Window.currentRow, window - 1))
+               .rowsBetween(Window.currentRow, WINNOW_WINDOW - 1))
     selected = (pos_sh
                 .select(F.col('doc_id'), 'pos',
                         F.min('key').over(w_slide).alias('wmin'),
                         F.count('*').over(w_doc).alias('m'))
                 .where(F.col('pos')
-                       <= F.greatest(F.col('m') - window, F.lit(0)))
+                       <= F.greatest(F.col('m') - WINNOW_WINDOW, F.lit(0)))
                 .select(F.col('doc_id'), F.col('wmin'))
                 .distinct())
     return selected.select(
@@ -480,10 +481,14 @@ def winnowing_fingerprints(docs: DataFrame, n: int = 3,
         F.shiftright('wmin', 20).alias('fp'))
 
 
-def duplicated_spans(docs: DataFrame, n: int = 5, min_df: int = 2,
+SPAN_N = 5  # words: the shortest duplicated span reported
+
+
+def duplicated_spans(docs: DataFrame,
                      max_df: Optional[int] = None) -> DataFrame:
     """Exact-substring duplicate regions: per-document token spans
-    covered by n-grams that appear in >= ``min_df`` distinct documents.
+    covered by ``SPAN_N``-word n-grams that appear in >= 2 distinct
+    documents.
 
     The span-level exact dedup of Lee et al. 2022 ("Deduplicating
     Training Data Makes Language Models Better" — their suffix-array
@@ -492,7 +497,7 @@ def duplicated_spans(docs: DataFrame, n: int = 5, min_df: int = 2,
     hashes: an m-token duplicated region is exactly a maximal run of
     m-n+1 consecutive duplicated n-grams, so merging overlapping
     duplicated windows (gaps-and-islands per document) recovers the
-    same spans. ``n`` is the minimum duplicated length reported.
+    same spans. ``SPAN_N`` is the minimum duplicated length reported.
 
     ``max_df`` is the stop-gram cap, the skew guard for the join-back:
     an n-gram occurring in more than ``max_df`` documents (a
@@ -521,18 +526,18 @@ def duplicated_spans(docs: DataFrame, n: int = 5, min_df: int = 2,
     """
     pos_sh = docs.select(
         F.col('doc_id'),
-        F.explode(positioned_shingle_hashes(tokens('text'), n))
+        F.explode(positioned_shingle_hashes(tokens(), SPAN_N))
          .alias('p')
     ).select(F.col('doc_id'), F.col('p.pos').alias('pos'),
              F.col('p.sh').alias('sh'))
     df_counts = (pos_sh.select('doc_id', 'sh').distinct()
                  .groupBy('sh').agg(F.count('*').alias('df'))
-                 .where(F.col('df') >= min_df))
+                 .where(F.col('df') >= 2))
     if max_df is not None:
         df_counts = df_counts.where(F.col('df') <= max_df)
     df_counts = df_counts.select('sh')
     dup = pos_sh.join(df_counts, 'sh').select(
-        'doc_id', 'pos', (F.col('pos') + n).alias('end'))
+        'doc_id', 'pos', (F.col('pos') + SPAN_N).alias('end'))
     w_order = Window.partitionBy('doc_id').orderBy('pos')
     prev_max = F.max('end').over(
         w_order.rowsBetween(Window.unboundedPreceding, -1))
@@ -551,8 +556,7 @@ def duplicated_spans(docs: DataFrame, n: int = 5, min_df: int = 2,
                  .alias('n_tokens')))
 
 
-def remove_duplicated_spans(docs: DataFrame, n: int = 5,
-                            min_df: int = 2) -> DataFrame:
+def remove_duplicated_spans(docs: DataFrame) -> DataFrame:
     """The *apply* side of :func:`duplicated_spans` (Lee et al. 2022's
     actual dedup step): drop every token covered by a duplicated span
     and reassemble the document.
@@ -568,12 +572,12 @@ def remove_duplicated_spans(docs: DataFrame, n: int = 5,
     Output: (id, clean_text, n_tokens, n_removed) with clean_text the
     space-joined surviving tokens.
     """
-    spans = duplicated_spans(docs, n, min_df)
+    spans = duplicated_spans(docs)
     per_doc = spans.groupBy('doc_id').agg(
         F.collect_list(F.struct('span_start', 'span_end')).alias('_spans'))
     joined = docs.join(per_doc, 'doc_id', 'left').select(
         F.col('doc_id'),
-        tokens('text').alias('_toks'),
+        tokens().alias('_toks'),
         F.coalesce(
             '_spans',
             F.array().cast(
@@ -597,7 +601,7 @@ def remove_duplicated_spans(docs: DataFrame, n: int = 5,
          .alias('n_removed'))
 
 
-def oversized_ngrams(docs: DataFrame, max_df: int, n: int = 5) -> DataFrame:
+def oversized_ngrams(docs: DataFrame, max_df: int) -> DataFrame:
     """(sh, df) for n-gram hashes above the stop-gram cap —
     observability hook for what ``duplicated_spans(max_df=...)``
     excludes. Same shuffle shape as the df-count stage itself (one
@@ -605,7 +609,7 @@ def oversized_ngrams(docs: DataFrame, max_df: int, n: int = 5) -> DataFrame:
     any corpus size before committing to a cap."""
     pos_sh = docs.select(
         F.col('doc_id'),
-        F.explode(positioned_shingle_hashes(tokens('text'), n))
+        F.explode(positioned_shingle_hashes(tokens(), SPAN_N))
          .alias('p')
     ).select(F.col('doc_id'), F.col('p.sh').alias('sh'))
     return (pos_sh.distinct()
@@ -739,7 +743,7 @@ def connected_components(edges: DataFrame) -> DataFrame:
         'rounds (expected O(log n))')
 
 
-def dedup_clusters(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
+def dedup_clusters(docs: DataFrame) -> DataFrame:
     """Near-duplicate clusters: connected components over MinHash pairs.
 
     Pair generation is the LSH-banded ``minhash_dedup_pairs``; component
@@ -747,13 +751,13 @@ def dedup_clusters(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     ``connected_components``). Output: (doc_id, cluster_id = min doc_id
     of the component) for every document with at least one near-dup.
     """
-    edges = minhash_dedup_pairs(docs, threshold) \
+    edges = minhash_dedup_pairs(docs) \
         .select('doc_a', 'doc_b')
     cc = connected_components(edges)
     return cc.select(F.col('v').alias('doc_id'), 'cluster_id')
 
 
-def dedup_cluster_apply(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
+def dedup_cluster_apply(docs: DataFrame) -> DataFrame:
     """Keep-one-per-cluster corpus filter — the apply side of
     :func:`dedup_clusters`: every document outside any near-dup cluster
     survives, and each cluster keeps its minimum-id representative.
@@ -763,7 +767,7 @@ def dedup_cluster_apply(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     on the high-cardinality document key drops them — no broadcast of
     anything corpus-sized, no second pass over text.
     """
-    labels = dedup_clusters(docs, threshold)
+    labels = dedup_clusters(docs)
     losers = labels.where(F.col('doc_id') != F.col('cluster_id')) \
         .select('doc_id')
     return docs.join(losers, 'doc_id', 'left_anti') \
@@ -794,7 +798,7 @@ def language_id(docs: DataFrame) -> DataFrame:
 
     argmax over LANG_ORDER; 'und' (undetermined) when no stopword hits.
     """
-    toks = tokens('text')
+    toks = tokens()
     hits = [stopword_hits(toks, lang).alias(f'hits_{lang}')
             for lang in LANG_ORDER]
     scored = docs.select(F.col('doc_id'), F.size(toks).alias('n_tokens'),
@@ -833,7 +837,7 @@ def language_id_ngram(docs: DataFrame) -> DataFrame:
     (``language_id``): n-gram profiles also fire on inflected forms and
     unsegmented text. JVM-side per-row scan, no shuffle.
     """
-    norm = norm_text('text')
+    norm = norm_text()
     scored = docs.select(F.col('doc_id'), norm.alias('norm'))
     positions = F.sequence(F.lit(1), F.length('norm') - 2)
 
@@ -863,8 +867,8 @@ def language_id_ngram(docs: DataFrame) -> DataFrame:
 
 def quality_score(docs: DataFrame) -> DataFrame:
     """Heuristic document quality features + a combined score."""
-    norm = norm_text('text')
-    toks = tokens('text')
+    norm = norm_text()
+    toks = tokens()
     n_tokens = F.size(toks)
     n_chars = F.length(norm)
     alpha_chars = F.length(F.regexp_replace(norm, r'[^a-zA-Z]', ''))
@@ -909,7 +913,7 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
     (Gopher, 2021) appendix A cut documents on exactly these families of
     thresholds.
     """
-    toks = tokens('text')
+    toks = tokens()
 
     # bind the token array ONCE as a lambda variable (the shingle_hashes
     # pattern): Catalyst inlines duplicated higher-order expressions on
@@ -968,7 +972,7 @@ def gopher_rules(docs: DataFrame) -> DataFrame:
     statistic is folded from a single bound lambda variable), a pure
     map-side projection: no shuffle, scales linearly with executors.
     """
-    norm = norm_text('text')
+    norm = norm_text()
     hash_chars = F.length(norm) - F.length(F.replace(norm, F.lit('#')))
     ellipses = F.size(F.regexp_extract_all(norm, F.lit(r'\.\.\.'), 0))
     en_words = F.array(*[F.lit(w) for w in STOPWORDS['en']])
@@ -986,7 +990,7 @@ def gopher_rules(docs: DataFrame) -> DataFrame:
 
     feat = docs.select(
         F.col('doc_id'),
-        F.inline(F.array(bind_once(tokens('text'), stats))),
+        F.inline(F.array(bind_once(tokens(), stats))),
         hash_chars.alias('hash_chars'), ellipses.alias('ellipses'))
     n_words = F.col('n_words')
     mean_word_len = F.col('sum_len') / F.greatest(n_words, F.lit(1))
@@ -1034,24 +1038,24 @@ def length_quantiles(docs: DataFrame) -> DataFrame:
                       for i, p in enumerate(QUANTILE_PROBS)]))
 
 
-def sampled_quantiles(docs: DataFrame, rate: int = 4) -> DataFrame:
+def sampled_quantiles(docs: DataFrame) -> DataFrame:
     """Deterministic hash-sampled quantiles: the bounded-memory quantile
     path — oracle-exact like ``length_quantiles`` and memory-bounded.
 
     The sample is the rows whose portable rolling hash of the key is
-    ``0 (mod rate)``: deterministic (no RNG — stable across retries,
+    ``0 (mod 4)``: deterministic (no RNG — stable across retries,
     partitionings, and engines, so DuckDB draws the IDENTICAL sample),
     uniform under the hash, and MERGEABLE — the sample of a corpus
     union is the union of the samples, so per-snapshot/per-partition
     samples compose exactly like the Bloom/HLL/CMS monoids
     (completing the portable sketch family with quantiles). The exact
-    interpolating percentile then buffers only ~1/rate of each
-    stratum; at 100 TB pick rate so strata sample to ~10^6 rows.
+    interpolating percentile then buffers only ~1/4 of each stratum; at
+    100 TB the modulus would grow so strata sample to ~10^6 rows.
     Unlike ``approx_percentile`` (Greenwald-Khanna, engine-specific
     internals), every step here is reproducible in plain SQL.
     """
     h = rolling_hash(F.col('doc_id').cast('string'))
-    sample = docs.where(h % F.lit(rate) == 0)
+    sample = docs.where(h % F.lit(4) == 0)
     probs = F.array(*[F.lit(p) for p in QUANTILE_PROBS])
     return (sample.groupBy(F.col('lang').alias('stratum'))
             .agg(F.count('*').alias('n_sampled'),
@@ -1142,7 +1146,7 @@ def incremental_dedup(
     driver gate checks (its oracle is bloom-agnostic).
     """
     keyed = new_docs.select(
-        F.col('doc_id'), F.md5(norm_text('text')).alias('content_hash'))
+        F.col('doc_id'), F.md5(norm_text()).alias('content_hash'))
     seen = seen_keys.select(F.col('content_hash')).distinct()
     if bloom_filter is not None:
         from .bloom import bloom_probe
@@ -1193,7 +1197,7 @@ def script_profile(docs: DataFrame) -> DataFrame:
             / F.greatest(F.length(t), F.lit(1))
 
     t = F.col('_t')
-    staged = docs.select(F.col('doc_id'), norm_text('text').alias('_t')) \
+    staged = docs.select(F.col('doc_id'), norm_text().alias('_t')) \
         .select('doc_id', F.length('_t').alias('n_chars'),
                 *[F.round(frac(t, cls), 6).alias(f'{name}_frac')
                   for name, cls, _ in SCRIPT_CLASSES])
@@ -1319,7 +1323,7 @@ def stratified_sample(docs: DataFrame, rates: dict,
                      F.lit(int(round(default_rate * SAMPLE_DENOM))))
     bucket = rolling_hash(
         F.concat(F.lit('sample:'), F.col('lang'), F.lit(':'),
-                 norm_text('text'))) % SAMPLE_DENOM
+                 norm_text())) % SAMPLE_DENOM
     return (docs
             .select(F.col('doc_id'), F.col('lang').alias('stratum'),
                     bucket.cast('int').alias('sample_bucket'), thr.alias('_thr'))
@@ -1375,7 +1379,7 @@ def pii_scrub(docs: DataFrame) -> DataFrame:
     pruning to the scan. Counts feed the pipeline's observability
     (how much PII a source emits is itself a quality signal).
     """
-    norm = norm_text('text')
+    norm = norm_text()
     scrubbed = F.regexp_replace(
         F.regexp_replace(norm, PII_EMAIL_RE, '<EMAIL>'),
         PII_PHONE_RE, '<PHONE>')
@@ -1411,7 +1415,7 @@ def domain_mix_weights(docs: DataFrame, targets: dict) -> DataFrame:
         F.lit(x) for kv in targets.items() for x in kv])
     per = docs.groupBy('source').agg(
         F.count('*').alias('n_docs'),
-        F.sum(F.size(tokens('text'))).alias('n_tokens'))
+        F.sum(F.size(tokens())).alias('n_tokens'))
     w_all = Window.partitionBy()
     total = F.sum('n_tokens').over(w_all).cast('double')
     share = F.col('n_tokens') / total
@@ -1438,7 +1442,7 @@ def chunk_documents(docs: DataFrame, window: int = 64,
     if not 0 < stride <= window:
         raise ValueError(
             f'need 0 < stride <= window (got {stride}, {window})')
-    toks = tokens('text')
+    toks = tokens()
 
     def chunks(t):
         n = F.size(t)
@@ -1498,7 +1502,7 @@ def lm_score(docs: DataFrame, vocab_size: int = 50000) -> DataFrame:
     # substr: the per-position substring runs in whole-stage codegen
     # instead of an interpreted higher-order lambda (same rows — the
     # NULL-position row keeps the short-doc NULL-trigram semantics)
-    base = docs.select(F.col('doc_id'), norm_text('text').alias('_t'))
+    base = docs.select(F.col('doc_id'), norm_text().alias('_t'))
     positions = F.when(
         F.length('_t') >= 3,
         F.sequence(F.lit(1), F.length('_t') - 2)
@@ -1557,7 +1561,7 @@ def doc_fingerprint(docs: DataFrame) -> DataFrame:
     (three plain column references would each inline a full recompute —
     Catalyst has no CSE for lambda expressions).
     """
-    hashes = shingle_hashes(tokens('text'))
+    hashes = shingle_hashes(tokens())
     return docs.select(
         F.col('doc_id'),
         F.inline(F.transform(F.array(hashes), lambda h: F.struct(

@@ -1791,8 +1791,8 @@ class SnapshotTable:
         for col in bloom_cols:
             if not sketchable(col):
                 continue
-            bf = bloom_build(keys_of(col), 'key',
-                             m_bits=props['bloom_bits'], k=_BLOOM_K)
+            bf = bloom_build(keys_of(col), m_bits=props['bloom_bits'],
+                             k=_BLOOM_K)
             is_str = isinstance(reader.schema[col].dataType, StringType)
             blooms[col] = {
                 'm': props['bloom_bits'], 'k': _BLOOM_K,
@@ -1809,7 +1809,7 @@ class SnapshotTable:
         for col in ndv_cols:
             if not sketchable(col):
                 continue
-            sketch = hll_sketch(keys_of(col), 'key', p=props['ndv_p'])
+            sketch = hll_sketch(keys_of(col), p=props['ndv_p'])
             ndv[col] = {
                 'p': props['ndv_p'],
                 'regs': sorted([int(r.register), int(r.max_rank)]

@@ -41,8 +41,8 @@ CHAR_H = 10
 MAX_TOKENS = 5
 
 
-def line_text_col(text_col='text') -> Column:
-    return F.array_join(F.slice(tokens_col(text_col), 1, MAX_TOKENS), ' ')
+def line_text_col() -> Column:
+    return F.array_join(F.slice(tokens_col('text'), 1, MAX_TOKENS), ' ')
 
 
 def _char_records_orf(line_text: Column) -> Column:
@@ -59,7 +59,7 @@ def _char_records_orf(line_text: Column) -> Column:
 
 def synthesize_orf(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, 'documents').select('doc_id', 'text')
-    line = line_text_col('text')
+    line = line_text_col()
     orf = F.concat(
         F.lit('total text blocks 1\n'
               f'text block 1 0 0 {PAGE_W} {PAGE_H}\n'
@@ -98,7 +98,7 @@ def _char_records_gocr(line_text: Column) -> Column:
 
 def synthesize_gocr(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, 'documents').select('doc_id', 'text')
-    line = line_text_col('text')
+    line = line_text_col()
     xml = F.concat(
         F.lit('<document><page><block x="0" y="0" '
               f'dx="{PAGE_W}" dy="{PAGE_H}"><line>'),
@@ -176,7 +176,7 @@ def synthesize_cuneiform08(spark: SparkSession, sf_dir: str) -> DataFrame:
     char-run -> word regrouping (T4/A3) at paragraph level.
     """
     docs = load_table(spark, sf_dir, 'documents').select('doc_id', 'text')
-    line = line_text_col('text')
+    line = line_text_col()
     chars = F.split(line, '')
     spans = F.transform(
         chars,
@@ -201,7 +201,7 @@ def synthesize_cuneiform09(spark: SparkSession, sf_dir: str) -> DataFrame:
     (-1,-1,-1,-1) whitespace sentinels.
     """
     docs = load_table(spark, sf_dir, 'documents').select('doc_id', 'text')
-    line = line_text_col('text')
+    line = line_text_col()
     # pad one boxed trailing space: the kernel rstrips it, leaving one
     # surplus x_bboxes cell — the Cuneiform >= 0.9 whitespace-surplus
     # reconciliation rule (lib/hocr.py:147-149) must absorb it
@@ -238,7 +238,7 @@ def synthesize_ocropus_surplus(spark: SparkSession,
     box must be silently dropped.
     """
     docs = load_table(spark, sf_dir, 'documents').select('doc_id', 'text')
-    line = line_text_col('text')
+    line = line_text_col()
     chars = F.split(line, '')
     cells = F.transform(
         chars,

@@ -49,7 +49,7 @@ def dedup_stream(stream: DataFrame) -> DataFrame:
     batch compaction pass (``dedup_exact``).
     """
     from ..functions.textops import norm_text
-    keyed = stream.withColumn('text_hash', F.md5(norm_text('text')))
+    keyed = stream.withColumn('text_hash', F.md5(norm_text()))
     return (keyed.withWatermark('ts', '10 minutes')
             .dropDuplicatesWithinWatermark(['text_hash']))
 

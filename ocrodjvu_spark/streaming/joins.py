@@ -17,10 +17,9 @@ from pyspark.sql import functions as F
 
 
 def interval_join_stream(left: DataFrame, right: DataFrame,
-                         interval: str = '60 minutes',
                          watermark: str = '24 hours') -> DataFrame:
     """Streaming interval join: (left, right) pairs with the same key
-    and ``left.ts <= right.ts <= left.ts + interval``.
+    and ``left.ts <= right.ts <= left.ts + 60 minutes``.
 
     Both sides are watermarked on event time; the range predicate bounds
     how long each side's rows are retained as join state. ``watermark``
@@ -43,6 +42,6 @@ def interval_join_stream(left: DataFrame, right: DataFrame,
     cond = ((F.col('user_id') == F.col('_rk'))
             & (F.col('right_ts') >= F.col('left_ts'))
             & (F.col('right_ts') <=
-               F.col('left_ts') + F.expr(f'INTERVAL {interval}')))
+               F.col('left_ts') + F.expr('INTERVAL 60 minutes')))
     return (lt.join(rt, cond, 'inner')
             .select('left_id', 'user_id', 'left_ts', 'right_id', 'right_ts'))

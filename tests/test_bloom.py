@@ -94,7 +94,7 @@ def test_incremental_dedup_prefilter_is_lossless(spark):
     docs = spark.createDataFrame(
         [Row(doc_id=i, text=t) for i, t in enumerate(texts)])
     seen = (docs.where((docs.doc_id % 4) == 0)
-            .select(F.md5(textops.norm_text('text'))
+            .select(F.md5(textops.norm_text())
                     .alias('content_hash')))
     filt = bloom.bloom_build(
         seen.select(seen.content_hash.alias('key')).distinct(),

@@ -21,14 +21,14 @@ def test_counters_and_estimates_match_reference(spark):
         rng = random.Random(seed)
         keys = _rand_keys(rng, 500)
         df = spark.createDataFrame([Row(key=x) for x in keys])
-        sketch = cms.cms_build(df, d=3, w=32)
+        sketch = cms.cms_build(df, w=32)
         ref_counters, ref_est = reference_cms(keys, d=3, w=32)
         got = {(r.row, r.pos): r.n for r in sketch.collect()}
         assert got == ref_counters, f'seed {seed}'
         probes = sorted(set(keys))
         est = {r.key: r.est for r in cms.cms_estimate(
             spark.createDataFrame([Row(key=x) for x in probes]),
-            sketch, d=3, w=32).collect()}
+            sketch, w=32).collect()}
         assert est == {k: ref_est(k) for k in probes}, f'seed {seed}'
 
 
@@ -37,10 +37,10 @@ def test_one_sided_error(spark):
     keys = _rand_keys(rng, 800)
     true = Counter(keys)
     df = spark.createDataFrame([Row(key=x) for x in keys])
-    sketch = cms.cms_build(df, d=3, w=32)
+    sketch = cms.cms_build(df, w=32)
     est = {r.key: r.est for r in cms.cms_estimate(
         spark.createDataFrame([Row(key=x) for x in sorted(true)]),
-        sketch, d=3, w=32).collect()}
+        sketch, w=32).collect()}
     assert all(est[k] >= n for k, n in true.items())
     # w=32 with ~hundreds of distinct keys must actually collide,
     # otherwise the test proves nothing
@@ -48,12 +48,12 @@ def test_one_sided_error(spark):
     # absent key estimates are >= 0 and well-defined
     absent = {r.key: r.est for r in cms.cms_estimate(
         spark.createDataFrame([Row(key='zzzzzz')]),
-        sketch, d=3, w=32).collect()}
+        sketch, w=32).collect()}
     assert absent['zzzzzz'] >= 0
 
 
 def test_build_plan_has_partial_count(spark):
     df = spark.createDataFrame([Row(key='a')])
-    plan = (cms.cms_build(df, d=3, w=32)
+    plan = (cms.cms_build(df, w=32)
             ._jdf.queryExecution().executedPlan().toString())
     assert 'partial_count' in plan

@@ -86,7 +86,7 @@ def test_vector_index_roundtrip_and_versioning(spark, tmp_path):
     emb = spark.createDataFrame([
         Row(vec_id=i, embedding=[float(i % 3), float(i % 5), 1.0])
         for i in range(12)])
-    cents = similarity.kmeans_centroids(emb, k=3, iterations=2)
+    cents = similarity.kmeans_centroids(emb)
     root = str(tmp_path / 'ivf')
     assert similarity.save_vector_index(spark, root, cents) == 1
     loaded, quant = similarity.load_vector_index(spark, root)
@@ -97,7 +97,7 @@ def test_vector_index_roundtrip_and_versioning(spark, tmp_path):
     got = {(r.vec_id, r.cluster) for r in
            similarity.assign_to_centroids(emb, loaded).collect()}
     want = {(r.vec_id, r.cluster) for r in
-            similarity.kmeans_labels(emb, k=3, iterations=2).collect()}
+            similarity.kmeans_labels(emb, k=8, iterations=3).collect()}
     assert got == want
     # publishing again bumps the version; the old pin stays readable
     assert similarity.save_vector_index(spark, root, {0: [1, 2, 3]}) == 2

@@ -61,7 +61,7 @@ class TestMultimodal:
 
     def test_resize_downscales_pnm_images(self, spark):
         media = multimodal.synthesize_media(spark, SF_DIR)
-        resized = multimodal.resize_images(media, max_side=4)
+        resized = multimodal.resize_images(media)
         out = resized.where(F.col('kind') == 'image').collect()
         assert out
         for r in out:
@@ -75,7 +75,7 @@ class TestMultimodal:
 
     def test_frame_sampling_real_avi_frames(self, spark):
         media = multimodal.synthesize_media(spark, SF_DIR)
-        frames = multimodal.sample_frames(media, every_n=2)
+        frames = multimodal.sample_frames(media)
         out = frames.collect()
         assert out
         assert all(r.frame_idx % 2 == 0 for r in out)
@@ -97,7 +97,7 @@ class TestMultimodal:
         rows = [(1, 'video', b'not an avi at all' * 80, None, None, 'raw')]
         media = spark.createDataFrame(
             rows, schema=multimodal.MEDIA_SCHEMA)
-        out = multimodal.sample_frames(media, every_n=2).collect()
+        out = multimodal.sample_frames(media).collect()
         assert len(out) == 3 and all(
             len(r.frame) == multimodal.FALLBACK_FRAME_BYTES for r in out)
         assert all(r.frame_idx % 2 == 0 for r in out)
@@ -257,8 +257,7 @@ class TestStreamingDedup:
         read = lambda sub: (spark.readStream.schema(schema)
                             .option('maxFilesPerTrigger', 1)
                             .parquet(base + '/' + sub + '/*'))
-        joined = SJ.interval_join_stream(read('left'), read('right'),
-                                         interval='60 minutes')
+        joined = SJ.interval_join_stream(read('left'), read('right'))
         ES.run_to_parquet(joined, base + '/out',
                           base + '/chk').awaitTermination()
         got = {(r.left_id, r.right_id)

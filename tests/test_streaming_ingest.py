@@ -78,7 +78,7 @@ def test_seeded_registry_blocks_preingested(spark, tmp_path):
     base = str(tmp_path)
     seed_df = spark.createDataFrame(
         [Row(text='alpha beta')]).select(
-        F.md5(textops.norm_text('text')).alias(IG.KEY_COL))
+        F.md5(textops.norm_text()).alias(IG.KEY_COL))
     IG.seed_registry(spark, os.path.join(base, 'registry'), seed_df)
     src = _write_batches(spark, base, [
         [(1, 'alpha beta'), (2, 'fresh doc')],

@@ -113,7 +113,7 @@ def test_duplicated_spans_matches_brute_force(spark):
         'doc_id long, text string')
     got = sorted((r.doc_id, r.span_start, r.span_end, r.n_tokens)
                  for r in textops.duplicated_spans(
-                     docs, n=5, min_df=2).collect())
+                     docs).collect())
     assert got == _brute_spans(token_lists, n=5, min_df=2)
     assert len(got) > 10  # the random corpus genuinely exercises it
 

@@ -22,7 +22,7 @@ def test_simhash_table_matches_column_form(spark):
     table = sorted(map(tuple, textops.simhash_table(docs).collect()))
     column = sorted(map(tuple, docs.select(
         'doc_id',
-        simhash64(textops.tokens('text')).alias('sim'),
+        simhash64(textops.tokens()).alias('sim'),
     ).collect()))
     assert table == column
 
@@ -73,7 +73,7 @@ def test_simhash_similar_docs_close(spark):
     ])
     rows = {r.doc_id: r.simhash for r in docs.select(
         'doc_id',
-        simhash64(textops.tokens('text')).alias('simhash'),
+        simhash64(textops.tokens()).alias('simhash'),
     ).collect()}
 
     def hamming(a, b):
@@ -101,7 +101,7 @@ def test_dedup_clusters_transitive_chain(spark):
     # the merge below genuinely requires transitivity
     docs = _docs(spark, base + ['unrelated words entirely different set'])
     out = {r.doc_id: r.cluster_id
-           for r in textops.dedup_clusters(docs, threshold=0.45).collect()}
+           for r in textops.dedup_clusters(docs).collect()}
     assert out.get(0) == 0 and out.get(1) == 0
     # deterministic input: the 1-2 edge must exist, so the transitive
     # merge is asserted unconditionally
@@ -160,7 +160,7 @@ def test_simhash_pairs_banding_is_exact(spark):
            for r in textops.simhash_neardup_pairs(docs).collect()}
     sims = {r.doc_id: r.simhash for r in docs.select(
         'doc_id',
-        simhash64(textops.tokens('text')).alias('simhash'))
+        simhash64(textops.tokens()).alias('simhash'))
         .collect()}
 
     def hamming(a, b):
@@ -185,7 +185,7 @@ def test_simhash_band_key_cardinality_and_width(spark):
     docs = _docs(spark, [f'word{i} alpha beta gamma text number {i}'
                          for i in range(20)])
     sims = [r.s for r in docs.select(
-        simhash64(textops.tokens('text')).alias('s')).collect()]
+        simhash64(textops.tokens()).alias('s')).collect()]
     high_halves = {(s >> 32) & 0xFFFFFFFF for s in sims}
     assert len(high_halves) > 1
 
@@ -201,7 +201,7 @@ def test_simhash_bucket_cap_bounds_hot_buckets(spark):
     docs = spark.createDataFrame(rows, 'doc_id long, text string')
     pairs = {(r.doc_a, r.doc_b)
              for r in textops.simhash_neardup_pairs(
-                 docs, max_dist=3, max_bucket_size=32).collect()}
+                 docs, max_bucket_size=32).collect()}
     assert all(a >= 5000 for a, _ in pairs)  # hot bucket fully dropped
 
 
@@ -281,14 +281,14 @@ def test_semantic_dedup_pairs_within_cluster_and_cap(spark):
         rows.append((i, [float(x) for x in vec]))
     emb = spark.createDataFrame(rows, 'vec_id long, embedding array<float>')
     pairs = similarity.semantic_dedup_pairs(
-        emb, threshold=0.99, k=2, iterations=3).collect()
+        emb, k=2, iterations=3).collect()
     assert len(pairs) == 2 * (6 * 5 // 2)  # all within-blob pairs
     for r in pairs:
         assert r.vec_a % 2 == r.vec_b % 2 and r.cos_sim > 0.99
     # cap: both clusters have 6 members; cap at 5 excludes both
     # instead of going quadratic
     capped = similarity.semantic_dedup_pairs(
-        emb, threshold=0.99, k=2, iterations=3, max_cluster_size=5)
+        emb, k=2, iterations=3, max_cluster_size=5)
     assert capped.count() == 0
 
 
@@ -519,7 +519,7 @@ def test_duplicated_spans_merges_overlapping_windows(spark):
         'unrelated text with no overlap whatsoever at all',
     ])
     out = {}
-    for r in textops.duplicated_spans(docs, n=5, min_df=2).collect():
+    for r in textops.duplicated_spans(docs).collect():
         out.setdefault(r.doc_id, []).append(
             (r.span_start, r.span_end, r.n_tokens))
     # doc 0: shared run starts at token 3, 7 tokens long
@@ -538,7 +538,7 @@ def test_duplicated_spans_separate_islands(spark):
         a + ' unrelated middle yyy zzz ' + b,
     ])
     out = {}
-    for r in textops.duplicated_spans(docs, n=5, min_df=2).collect():
+    for r in textops.duplicated_spans(docs).collect():
         out.setdefault(r.doc_id, []).append(
             (r.span_start, r.span_end))
     assert sorted(out[0]) == [(0, 5), (8, 13)]
@@ -552,7 +552,7 @@ def test_remove_duplicated_spans_apply(spark):
         'unrelated text with no overlap whatsoever at all',
     ])
     out = {r.doc_id: r for r in
-           textops.remove_duplicated_spans(docs, n=5, min_df=2).collect()}
+           textops.remove_duplicated_spans(docs).collect()}
     # the 7-token shared run is excised, surroundings survive in order
     assert out[0].clean_text == 'intro words here closing bits'
     assert out[0].n_removed == 7 and out[0].n_tokens == 5
@@ -563,7 +563,7 @@ def test_remove_duplicated_spans_apply(spark):
                                 'whatsoever at all'
     # fully-duplicated doc -> empty string, everything removed
     dup2 = _docs(spark, [shared, shared])
-    rows = textops.remove_duplicated_spans(dup2, n=5, min_df=2).collect()
+    rows = textops.remove_duplicated_spans(dup2).collect()
     assert all(r.clean_text == '' and r.n_tokens == 0 and r.n_removed == 7
                for r in rows)
 
@@ -692,7 +692,7 @@ def test_dedup_cluster_apply_keeps_representatives(spark):
         base + ' tail',                # exact dup of 1 -> dropped
     ])
     out = sorted(r.doc_id for r in
-                 textops.dedup_cluster_apply(docs, threshold=0.5)
+                 textops.dedup_cluster_apply(docs)
                  .collect())
     assert out == [0, 2]
 
@@ -709,20 +709,20 @@ def test_duplicated_spans_stop_gram_cap(spark):
     docs = _docs(spark, texts)
     capped = {}
     for r in textops.duplicated_spans(
-            docs, n=5, min_df=2, max_df=10).collect():
+            docs, max_df=10).collect():
         capped.setdefault(r.doc_id, []).append(
             (r.span_start, r.span_end))
     # boilerplate span gone everywhere; the df=2 run is still reported
     assert capped == {0: [(0, 5)], 1: [(0, 5)]}
     # uncapped: every doc reports its boilerplate span
-    uncapped = textops.duplicated_spans(docs, n=5, min_df=2).collect()
+    uncapped = textops.duplicated_spans(docs).collect()
     assert len({r.doc_id for r in uncapped}) == 40
     # observability companion sees exactly the dropped hash
-    over = textops.oversized_ngrams(docs, max_df=10, n=5).collect()
+    over = textops.oversized_ngrams(docs, max_df=10).collect()
     assert len(over) == 1 and over[0].df == 39
     # cap above every df: identical to uncapped (same row multiset)
     wide = textops.duplicated_spans(
-        docs, n=5, min_df=2, max_df=1000).collect()
+        docs, max_df=1000).collect()
     assert sorted(map(tuple, wide)) == sorted(map(tuple, uncapped))
 
 
@@ -848,17 +848,17 @@ def test_sampled_quantiles_deterministic_and_mergeable(spark):
          for i in range(200)],
         'doc_id long, lang string, n_chars double')
     a = sorted(map(tuple,
-                   textops.sampled_quantiles(docs, rate=4).collect()))
+                   textops.sampled_quantiles(docs).collect()))
     # partitioning-invariant (the hash sample has no RNG/partition
     # dependence, unlike df.sample)
     b = sorted(map(tuple, textops.sampled_quantiles(
-        docs.repartition(7), rate=4).collect()))
+        docs.repartition(7)).collect()))
     assert a == b
     # sampling commutes with union: per-shard samples merge exactly
     lo = docs.where(F.col('doc_id') < 100)
     hi = docs.where(F.col('doc_id') >= 100)
     c = sorted(map(tuple, textops.sampled_quantiles(
-        lo.unionByName(hi), rate=4).collect()))
+        lo.unionByName(hi)).collect()))
     assert a == c
     # the sample is a real subsample, not the full data
     n_sampled = sum(r[1] for r in a)

@@ -289,7 +289,7 @@ def main():
 
     audit(
         'duplicated spans w/ stop-gram cap (df filter before join-back)',
-        textops.duplicated_spans(docs, n=5, min_df=2, max_df=64),
+        textops.duplicated_spans(docs, max_df=64),
         [
             # the cap must reach the df-count side BEFORE the join back
             # onto occurrences — that filter is what keeps a boilerplate
@@ -384,7 +384,7 @@ def main():
         ])
 
     _vocab = docs.select(
-        F.explode(textops.tokens('text')).alias('key')).where(
+        F.explode(textops.tokens()).alias('key')).where(
         F.col('key') != '').distinct()
     _filt = bloom.bloom_build(_vocab, m_bits=4096, k=3)
     audit(
@@ -404,7 +404,7 @@ def main():
 
     from ocrodjvu_spark.functions import cms, hll  # noqa: E402
     _words = docs.select(
-        F.explode(textops.tokens('text')).alias('key')).where(
+        F.explode(textops.tokens()).alias('key')).where(
         F.col('key') != '')
     audit(
         'HLL sketch build (shuffle bounded at m registers)',
@@ -415,7 +415,7 @@ def main():
         ])
     audit(
         'CMS build (shuffle bounded at d*w cells)',
-        cms.cms_build(_words, d=3, w=64),
+        cms.cms_build(_words, w=64),
         [
             ('partial count before the cell shuffle',
              lambda p: 'partial_count' in p),
