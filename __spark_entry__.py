@@ -822,7 +822,7 @@ def _q_doc_chunks(spark, sf_dir):
     # sliding-window chunking, 64-token windows with stride 48 (25%
     # overlap): the pretraining/RAG document-splitting step
     docs = T.load_table(spark, sf_dir, 'documents')
-    return textops.chunk_documents(docs, window=64, stride=48)
+    return textops.chunk_documents(docs)
 
 
 def _q_snapshot_mview_cdc(spark, sf_dir):

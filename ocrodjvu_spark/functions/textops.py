@@ -1427,33 +1427,34 @@ def domain_mix_weights(docs: DataFrame, targets: dict) -> DataFrame:
             6).alias('mix_weight'))
 
 
-def chunk_documents(docs: DataFrame, window: int = 64,
-                    stride: int = 48) -> DataFrame:
+CHUNK_WINDOW = 64  # tokens per chunk
+CHUNK_STRIDE = 48  # tokens between chunk starts (16 overlap)
+
+
+def chunk_documents(docs: DataFrame) -> DataFrame:
     """Sliding-window token chunks with overlap (pretraining/RAG prep).
 
-    Chunk k covers tokens [k*stride, k*stride + window); the last
-    window clamps at the end of the document, and every document emits
-    at least one chunk. Pure Catalyst — a per-row sequence of slices
-    exploded to rows, no UDF, no shuffle (the array is bound once as a
-    lambda variable; no lambda-CSE recompute).
+    Chunk k covers tokens [k*CHUNK_STRIDE, k*CHUNK_STRIDE +
+    CHUNK_WINDOW); the last window clamps at the end of the document,
+    and every document emits at least one chunk. Pure Catalyst — a
+    per-row sequence of slices exploded to rows, no UDF, no shuffle
+    (the array is bound once as a lambda variable; no lambda-CSE
+    recompute).
 
-    Output: (id, chunk_idx, n_tokens, chunk_text).
+    Output: (doc_id, chunk_idx, n_tokens, chunk_text).
     """
-    if not 0 < stride <= window:
-        raise ValueError(
-            f'need 0 < stride <= window (got {stride}, {window})')
     toks = tokens()
 
     def chunks(t):
         n = F.size(t)
         n_chunks = (F.lit(1) + F.ceil(
-            F.greatest(n - window, F.lit(0)) / F.lit(stride))
+            F.greatest(n - CHUNK_WINDOW, F.lit(0)) / F.lit(CHUNK_STRIDE))
         ).cast('int')
         return F.transform(
             F.sequence(F.lit(0), n_chunks - 1),
             lambda k: F.struct(
                 k.cast('int').alias('chunk_idx'),
-                F.slice(t, (k * stride + 1).cast('int'), window)
+                F.slice(t, (k * CHUNK_STRIDE + 1).cast('int'), CHUNK_WINDOW)
                  .alias('_toks')))
 
     exploded = docs.select(

@@ -460,22 +460,21 @@ def test_stratified_sample_deterministic_rates(spark):
 
 
 def test_chunk_documents_overlap_and_clamp(spark):
-    docs = _docs(spark, [' '.join(f't{i}' for i in range(10)), 'solo'])
-    out = textops.chunk_documents(docs, window=4, stride=3).collect()
+    toks = [f't{i}' for i in range(100)]
+    docs = _docs(spark, [' '.join(toks), 'solo'])
+    out = textops.chunk_documents(docs).collect()
     by_doc = {}
     for r in out:
         by_doc.setdefault(r.doc_id, []).append(r)
     c0 = sorted(by_doc[0], key=lambda r: r.chunk_idx)
-    # 10 tokens, window 4, stride 3 -> starts 0,3,6 -> 3 chunks
+    # 100 tokens, window 64, stride 48 -> starts 0, 48; the second
+    # chunk overlaps the first by 16 tokens and clamps at the end
     assert [r.chunk_text for r in c0] == [
-        't0 t1 t2 t3', 't3 t4 t5 t6', 't6 t7 t8 t9']
-    assert [r.n_tokens for r in c0] == [4, 4, 4]
+        ' '.join(toks[:64]), ' '.join(toks[48:])]
+    assert [r.n_tokens for r in c0] == [64, 52]
     # single-token doc -> one (clamped) chunk
     assert [(r.chunk_idx, r.n_tokens, r.chunk_text)
             for r in by_doc[1]] == [(0, 1, 'solo')]
-    import pytest
-    with pytest.raises(ValueError):
-        textops.chunk_documents(docs, window=4, stride=5)
 
 
 def test_chunk_documents_invariants_random_sizes(spark):
@@ -489,8 +488,8 @@ def test_chunk_documents_invariants_random_sizes(spark):
         rng.randint(1, 300) for _ in range(50)]
     docs = _docs(spark, [' '.join(f'w{j}' for j in range(n))
                          for n in sizes])
-    window, stride = 64, 48
-    out = textops.chunk_documents(docs, window=window, stride=stride)
+    window, stride = textops.CHUNK_WINDOW, textops.CHUNK_STRIDE
+    out = textops.chunk_documents(docs)
     by_doc = {}
     for r in out.collect():
         by_doc.setdefault(r.doc_id, {})[r.chunk_idx] = r
