@@ -63,9 +63,9 @@ def bloom_build(
     m_bits: int = 4096,
     k: int = 3,
 ) -> BloomFilter:
-    """Keys -> a BloomFilter (bitmap words (word_idx, bits) + the
-    parameters bound to them). Duplicate keys are free (bit_or is
-    idempotent), so no distinct pass is needed."""
+    """Keys (a ``key`` column) -> a BloomFilter (bitmap words
+    (word_idx, bits) + the parameters bound to them). Duplicate keys are
+    free (bit_or is idempotent), so no distinct pass is needed."""
     pos = F.explode(positions_col(F.col('key'), k, m_bits)).alias('pos')
     bitmap = (keys
               .select(pos)

@@ -64,8 +64,9 @@ def register_rank_cols(key: Column, p: int):
 
 
 def hll_sketch(keys: DataFrame, p: int = 6) -> DataFrame:
-    """Keys -> the (register, max_rank) table (only registers that were
-    hit; absent registers are rank 0 by convention)."""
+    """Keys (a ``key`` column) -> the (register, max_rank) table (only
+    registers that were hit; absent registers are rank 0 by
+    convention)."""
     reg, rank = register_rank_cols(F.col('key'), p)
     return (keys.select(reg, rank)
             .groupBy('register')

@@ -37,8 +37,9 @@ EMBED_DIM = 64
 def dot(a: Column, b: Column) -> Column:
     """Float dot product (left-assoc zip_with fold). Safe for ANY
     column expression: the arguments are lambda-bound and evaluated
-    once. Prefer ``dot_cols`` when both arguments are plain column
-    references."""
+    once. ``dot_cols``' flat chain is faster at some call sites with
+    plain column references and slower at others (COVERAGE.md, "Two
+    dot products"), so each site keeps the one measured faster."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0),

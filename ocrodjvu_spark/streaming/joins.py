@@ -30,7 +30,7 @@ def interval_join_stream(left: DataFrame, right: DataFrame,
     — with a production-sized horizon, equality instead relies on
     arrival order being roughly event-time order.
 
-    Output: (left_id, key, left_ts, right_id, right_ts).
+    Output: (left_id, user_id, left_ts, right_id, right_ts).
     """
     lt = (left.select(F.col('event_id').alias('left_id'),
                       F.col('user_id'), F.col('ts').alias('left_ts'))
