@@ -285,7 +285,7 @@ def auto_banding(threshold: float,
 
     band_size is the precision knob (false-candidate rate per band is
     ~2^-band_size for unrelated pairs): the largest value in
-    1..max_band_size whose required n_bands stays within ``max_bands``
+    1..8 whose required n_bands stays within 64
     is chosen, so higher thresholds automatically get more selective
     bands (0.9/1e-5 -> 34 bands of 8) while low thresholds fall back to
     shallow bands (0.4/1e-4 -> 54 bands of 4) where sign-LSH has little

@@ -43,7 +43,7 @@ def write_jsonl(df: DataFrame, path: str,
 
 def read_jsonl(spark: SparkSession, path: str, schema) -> DataFrame:
     """Read JSONL with an explicit schema; malformed lines survive as
-    rows with only ``corrupt_col`` set (PERMISSIVE), so ingest jobs
+    rows with only ``_corrupt_record`` set (PERMISSIVE), so ingest jobs
     can split the error channel off with one filter instead of dying
     mid-scan. ``schema`` may be a DDL string or a StructType; the
     corrupt column is appended automatically when absent."""
