@@ -29,14 +29,16 @@ def plan_of(df) -> str:
 
 
 _RUN_SPECIFIC = ((re.compile(r'#(\d+)'), '#{}'),
-                 (re.compile(r'plan_id=(\d+)'), 'plan_id={}'))
+                 (re.compile(r'plan_id=(\d+)'), 'plan_id={}'),
+                 (re.compile(r'(?<=lambda [xyz]_)(\d+)'), '{}'))
 _SNAP_FILE = re.compile(r'plan-audit-snap-\w+/t/data/[0-9a-f]*')
 
 
 def stable_text(plan: str) -> str:
-    """The plan as PLANS.md records it: expression and plan ids renumbered
-    by first appearance and the audit's temporary paths masked, so the
-    file changes only when a plan does. The checks read the raw text."""
+    """The plan as PLANS.md records it: expression, plan and lambda
+    variable ids renumbered by first appearance and the audit's
+    temporary paths masked, so the file changes only when a plan does.
+    The checks read the raw text."""
     for pattern, fmt in _RUN_SPECIFIC:
         ids = {}
         plan = pattern.sub(
