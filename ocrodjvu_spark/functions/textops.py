@@ -122,13 +122,15 @@ def shingle_hashes(tokens_col: Column) -> Column:
     return bind_once(hs, combos)
 
 
+def _minhash_aggs() -> list:
+    """The signature aggregates mh0..mhK-1 over a ``shingle`` column."""
+    return [F.min((F.col('shingle') * a + b) % HASH_MOD).alias(f'mh{k}')
+            for k, (a, b) in enumerate(MINHASH_PARAMS)]
+
+
 def minhash_signature_table(docs: DataFrame) -> DataFrame:
     """(id, mh0..mhK-1): minhash signature via explode + aggregate."""
-    sh = doc_shingle_table(docs)
-    return sh.groupBy('doc_id').agg(*[
-        F.min((F.col('shingle') * a + b) % HASH_MOD).alias(f'mh{k}')
-        for k, (a, b) in enumerate(MINHASH_PARAMS)
-    ])
+    return doc_shingle_table(docs).groupBy('doc_id').agg(*_minhash_aggs())
 
 
 def minhash_band_table(sig: DataFrame) -> DataFrame:
@@ -298,11 +300,24 @@ def doc_shingle_table(docs: DataFrame) -> DataFrame:
     through the shuffle un-deduped (each doc is one input row, so the
     duplicates were map-local anyway); measured net win on the bench
     and strictly fewer shuffles at scale.
+
+    The NULL filter is a no-op on the rows (shingles are never NULL),
+    but it pins the plan: a self-join on ``shingle`` infers the same
+    ``isnotnull`` predicate and would push it below the exchange on
+    that branch only, and the two exchanges would then no longer be
+    reused as one.
     """
     return docs.select(
         F.col('doc_id'),
         F.explode(shingle_hashes(tokens())).alias('shingle'),
-    ).repartition('doc_id').distinct()
+    ).where(F.col('shingle').isNotNull()).repartition('doc_id').distinct()
+
+
+def _doc_shingle_sets(sh: DataFrame, *aggs: Column) -> DataFrame:
+    """(doc_id, shingles, *aggs): one row per document, its distinct
+    shingles as an array, in one aggregate over ``doc_shingle_table``."""
+    return sh.groupBy('doc_id').agg(
+        *aggs, F.collect_list('shingle').alias('shingles'))
 
 
 def jaccard_pairs(docs: DataFrame, threshold: float = 0.5,
@@ -317,50 +332,45 @@ def jaccard_pairs(docs: DataFrame, threshold: float = 0.5,
     documents from *candidate generation* — a shingle with document
     frequency f contributes O(f^2) join rows, and ultra-frequent
     shingles are the least informative. Jaccard values are still
-    computed over the full shingle sets, so pairs that remain are
-    scored exactly; pairs whose only common shingles are ultra-frequent
+    computed over the full shingle sets (``_score_candidates``), so
+    pairs that remain are scored exactly; pairs whose only common shingles are ultra-frequent
     are missed (the standard web-dedup approximation). Default None =
     exact (what the oracle checks).
     """
     sh = doc_shingle_table(docs)
-    sizes = sh.groupBy('doc_id').agg(F.count('*').alias('n_shingles'))
     if max_df is not None:
         rare = (sh.groupBy('shingle')
                 .agg(F.count('*').alias('df'))
                 .where(F.col('df') <= max_df)
                 .select('shingle'))
-        sh_cand = sh.join(rare, 'shingle')
-        a = sh_cand.alias('a')
-        b = sh_cand.alias('b')
-        candidates = (
-            a.join(b, (F.col('a.shingle') == F.col('b.shingle'))
-                   & (F.col('a.doc_id') < F.col('b.doc_id')))
-            .select(F.col('a.doc_id').alias('doc_a'),
-                    F.col('b.doc_id').alias('doc_b'))
-            .distinct()
-        )
-        return _verify_pairs(candidates, sh, sizes, threshold)
-    a = sh.alias('a')
-    b = sh.alias('b')
-    inter = (
-        a.join(b, (F.col('a.shingle') == F.col('b.shingle'))
-               & (F.col('a.doc_id') < F.col('b.doc_id')))
-        .groupBy(F.col('a.doc_id').alias('doc_a'),
-                 F.col('b.doc_id').alias('doc_b'))
-        .agg(F.count('*').alias('n_common'))
-    )
-    return _score_pairs(inter, sizes, threshold)
-
-
-def _score_pairs(inter: DataFrame, sizes: DataFrame,
-                 threshold: float) -> DataFrame:
+        candidates = _pairs_sharing(sh.join(rare, 'shingle'), 'shingle')
+        return _score_candidates(candidates.distinct(),
+                                 _doc_shingle_sets(sh), threshold)
+    sizes = sh.groupBy('doc_id').agg(F.count('*').alias('n_shingles'))
+    inter = (_pairs_sharing(sh, 'shingle').groupBy('doc_a', 'doc_b')
+             .agg(F.count('*').alias('n_common')))
     sa = sizes.select(F.col('doc_id').alias('doc_a'),
                       F.col('n_shingles').alias('size_a'))
     sb = sizes.select(F.col('doc_id').alias('doc_b'),
                       F.col('n_shingles').alias('size_b'))
+    return _jaccard_rows(inter.join(sa, 'doc_a').join(sb, 'doc_b'),
+                         threshold)
+
+
+def _pairs_sharing(rows: DataFrame, key: str) -> DataFrame:
+    """(doc_a, doc_b), doc_a < doc_b: a self-join of (doc_id, key) rows
+    on ``key``, one row per key value the two documents share."""
+    a, b = rows.alias('a'), rows.alias('b')
+    return a.join(b, (F.col(f'a.{key}') == F.col(f'b.{key}'))
+                  & (F.col('a.doc_id') < F.col('b.doc_id'))).select(
+        F.col('a.doc_id').alias('doc_a'), F.col('b.doc_id').alias('doc_b'))
+
+
+def _jaccard_rows(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard) from ``n_common``, ``size_a`` and
+    ``size_b`` columns, at or above ``threshold``."""
     return (
-        inter.join(sa, 'doc_a').join(sb, 'doc_b')
-        .withColumn(
+        pairs.withColumn(
             'jaccard',
             F.round(F.col('n_common')
                     / (F.col('size_a') + F.col('size_b')
@@ -370,22 +380,21 @@ def _score_pairs(inter: DataFrame, sizes: DataFrame,
     )
 
 
-def _verify_pairs(candidates: DataFrame, sh: DataFrame, sizes: DataFrame,
-                  threshold: float) -> DataFrame:
-    """Exact Jaccard over *full* shingle sets, restricted to candidates."""
-    sa = sh.select(F.col('doc_id').alias('doc_a'),
-                   F.col('shingle').alias('sh_a'))
-    sb = sh.select(F.col('doc_id').alias('_doc_b'),
-                   F.col('shingle').alias('sh_b'))
-    inter = (
-        candidates
-        .join(sa, 'doc_a')
-        .join(sb, (F.col('doc_b') == F.col('_doc_b'))
-              & (F.col('sh_a') == F.col('sh_b')))
-        .groupBy('doc_a', 'doc_b')
-        .agg(F.count('*').alias('n_common'))
-    )
-    return _score_pairs(inter, sizes, threshold)
+def _score_candidates(candidates: DataFrame, sets: DataFrame,
+                      threshold: float) -> DataFrame:
+    """Exact Jaccard of each (doc_a, doc_b) candidate over the two
+    documents' full shingle sets (``_doc_shingle_sets``). Cost scales
+    with |candidates|, never with a hot shingle's df^2. A pair with no
+    shingle in common gives no row, at any threshold."""
+    sa = sets.select(F.col('doc_id').alias('doc_a'),
+                     F.col('shingles').alias('sh_a'))
+    sb = sets.select(F.col('doc_id').alias('doc_b'),
+                     F.col('shingles').alias('sh_b'))
+    pairs = candidates.join(sa, 'doc_a').join(sb, 'doc_b').select(
+        'doc_a', 'doc_b',
+        F.size(F.array_intersect('sh_a', 'sh_b')).alias('n_common'),
+        F.size('sh_a').alias('size_a'), F.size('sh_b').alias('size_b'))
+    return _jaccard_rows(pairs.where(F.col('n_common') > 0), threshold)
 
 
 def positioned_shingle_hashes(tokens_col: Column, n: int = 3) -> Column:
@@ -621,10 +630,12 @@ def minhash_dedup_pairs(docs: DataFrame, threshold: float = 0.5,
                         max_bucket_size: Optional[int] = None) -> DataFrame:
     """MinHash+LSH near-dup pairs, verified with exact Jaccard.
 
-    shingle -> minhash signature -> band -> bucket self-join (candidates)
-    -> exact-Jaccard verification. At scale the band join touches only
-    colliding buckets; the verification join is on the (small) candidate
-    set. This is the scale path; ``jaccard_pairs`` is the exact baseline.
+    shingle -> one aggregate per document (minhash signature and
+    shingle set) -> band -> bucket self-join (candidates) -> exact
+    Jaccard of each candidate over its two shingle sets. At scale the
+    band join touches only colliding buckets; the verification joins
+    are on the (small) candidate set. This is the scale path;
+    ``jaccard_pairs`` is the exact baseline.
 
     ``max_bucket_size`` (skew guard): a band bucket holding k documents
     (k near-identical docs all sharing a minhash band) produces k^2/2
@@ -635,29 +646,16 @@ def minhash_dedup_pairs(docs: DataFrame, threshold: float = 0.5,
     Default None = exact (every colliding bucket considered; what the oracle
     checks at small SF).
     """
-    sig = minhash_signature_table(docs)
-    bands = minhash_band_table(sig)
+    sets = _doc_shingle_sets(doc_shingle_table(docs), *_minhash_aggs())
+    bands = minhash_band_table(sets)
     if max_bucket_size is not None:
         small = (bands.groupBy('band')
                  .agg(F.count('*').alias('_bsz'))
                  .where(F.col('_bsz') <= max_bucket_size)
                  .select('band'))
         bands = bands.join(small, 'band')
-    a = bands.alias('a')
-    b = bands.alias('b')
-    candidates = (
-        a.join(b, (F.col('a.band') == F.col('b.band'))
-               & (F.col('a.doc_id') < F.col('b.doc_id')))
-        .select(F.col('a.doc_id').alias('doc_a'),
-                F.col('b.doc_id').alias('doc_b'))
-        .distinct()
-    )
-    # exact-Jaccard verification restricted to the candidate set: the
-    # shingle join fans out per *candidate pair*, never per hot shingle,
-    # so cost scales with |candidates|, not sum(df^2) over shingles.
-    sh = doc_shingle_table(docs)
-    sizes = sh.groupBy('doc_id').agg(F.count('*').alias('n_shingles'))
-    return _verify_pairs(candidates, sh, sizes, threshold)
+    return _score_candidates(_pairs_sharing(bands, 'band').distinct(),
+                             sets, threshold)
 
 
 def _ensure_checkpoint_dir(df: DataFrame) -> None:

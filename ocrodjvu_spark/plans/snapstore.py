@@ -88,6 +88,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 class CommitConflict(RuntimeError):
@@ -293,6 +294,13 @@ def zorder_expr(df: DataFrame, cols: Sequence[str]):
     All whole-stage codegen. NULLs bucket to 0 (sort first, prune like
     any other value).
     """
+    for c in cols:
+        kind = df.schema[c].dataType
+        if not isinstance(kind, (T.NumericType, T.DateType,
+                                 T.TimestampType, T.TimestampNTZType)):
+            raise ValueError(
+                f'zorder_by: column {c!r} is {kind.simpleString()}; '
+                'z-order needs numeric, date or timestamp columns')
     n_buckets = 16
     probs = [i / n_buckets for i in range(1, n_buckets)]
     cuts_row = df.select(*[

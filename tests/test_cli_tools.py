@@ -158,3 +158,31 @@ def test_snapshot_admin_metadata_and_changelog(spark, tmp_path, capsys):
 
     # not-a-table guard
     assert snapshot_admin.main([str(tmp_path), 'log']) == 1
+
+
+def test_snapshot_admin_zorder_rejects_string_column(spark, tmp_path,
+                                                     capsys):
+    # the extraction output table (the writer run_pipeline drives):
+    # conv_id is a string, turn_idx an int; a z-order over the string
+    # column ends in one error line naming it, not a Spark traceback
+    import snapshot_admin
+    from ocrodjvu_spark.plans import checkpoint
+
+    turns = spark.createDataFrame(
+        [(f'conv-{i % 5}', i, ONE_PAGE_HOCR.decode('UTF-8'))
+         for i in range(20)], 'conv_id string, turn_idx int, text string')
+    root = str(tmp_path / 'out')
+    checkpoint.run_extraction(spark, turns, root, str(tmp_path / 'side'),
+                              n_buckets=4, table_format='snapshot')
+    assert snapshot_admin.main(
+        [root, 'compact', '--partition-col', 'bucket',
+         '--zorder-by', 'conv_id,turn_idx']) == 1
+    err = capsys.readouterr().err
+    assert [ln for ln in err.splitlines() if ln.startswith('error:')] == [
+        "error: zorder_by: column 'conv_id' is string; z-order needs "
+        'numeric, date or timestamp columns']
+    assert 'Traceback' not in err
+    assert snapshot_admin.main(
+        [root, 'compact', '--partition-col', 'bucket',
+         '--zorder-by', 'turn_idx']) == 0
+    assert 'compacted -> v' in capsys.readouterr().out

@@ -1,7 +1,14 @@
 """Direct unit checks on the text operators (beyond the SQL oracles)."""
 
+import os
+import sys
+
 from ocrodjvu_spark.functions import textops
 from tests.oracles import simhash64
+
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), '..', 'tools'))
+
+import explain_audit  # noqa: E402
 
 
 def _docs(spark, texts):
@@ -63,6 +70,82 @@ def test_minhash_superset_of_high_jaccard(spark):
                  docs, threshold=0.5).collect()}
     assert (0, 1) in pairs
     assert all(2 not in p for p in pairs)
+
+
+def _pair_rows(df):
+    return sorted((r.doc_a, r.doc_b, r.jaccard) for r in df.collect())
+
+
+def _set_scorer_docs(spark):
+    base = ('alpha beta gamma delta epsilon zeta eta theta iota kappa '
+            'lambda mu nu xi omicron pi rho sigma tau upsilon')
+    edit = base.split()
+    edit[-1] = 'UPSILON'
+    rows = [
+        (0, base),
+        (1, base),                          # identical
+        (2, ' '.join(edit)),                # last token replaced
+        (3, base + ' phi'),                 # one-token insert
+        (4, base.split(' ', 1)[1]),         # one-token delete
+        (5, 'short doc'),                   # < SHINGLE_N tokens
+        (6, 'short doc'),
+        (7, 'x y z x y z x y z x y z'),     # repeats its shingles
+        (8, 'x y z x y z'),
+        (9, None),
+        (10, 'one two three four five six seven eight nine ten eleven '
+             'twelve thirteen fourteen fifteen sixteen'),
+        (10, 'one two three four five six seven eight nine ten eleven '
+             'twelve thirteen fourteen fifteen sixteen'),  # row twice
+        (11, 'one two three four five six seven eight nine ten eleven '
+             'twelve thirteen fourteen fifteen'),  # last token deleted
+        (12, 'unrelated words entirely different from the others'),
+    ]
+    return spark.createDataFrame(rows, 'doc_id long, text string')
+
+
+def test_minhash_set_scorer_matches_jaccard_pairs(spark):
+    # every pair at or above the threshold shares a band, so the LSH
+    # path must return exactly the exact pairs, with the same values
+    assert textops.SHINGLE_N == 3
+    docs = _set_scorer_docs(spark)
+    exact = _pair_rows(textops.jaccard_pairs(docs, threshold=0.5))
+    bands = {}
+    for r in textops.minhash_band_table(
+            textops.minhash_signature_table(docs)).collect():
+        bands.setdefault(r.doc_id, set()).add(r.band)
+    assert all(bands[a] & bands[b] for a, b, _ in exact)
+    pairs = {(a, b) for a, b, _ in exact}
+    assert {(0, 1), (0, 2), (0, 3), (0, 4), (5, 6), (7, 8),
+            (10, 11)} <= pairs
+    assert not any(9 in p or 12 in p for p in pairs)
+    assert _pair_rows(textops.minhash_dedup_pairs(
+        docs, threshold=0.5)) == exact
+    # the max_df candidate path scores with the same set scorer
+    assert _pair_rows(textops.jaccard_pairs(
+        docs, threshold=0.5, max_df=100)) == exact
+
+
+def test_set_scorer_drops_pairs_without_common_shingles(spark):
+    docs = _set_scorer_docs(spark)
+    sets = textops._doc_shingle_sets(textops.doc_shingle_table(docs))
+    candidates = spark.createDataFrame(
+        [(0, 1), (0, 12), (5, 10), (3, 9)], 'doc_a long, doc_b long')
+    assert _pair_rows(textops._score_candidates(
+        candidates, sets, threshold=0.0)) == [(0, 1, 1.0)]
+
+
+def _shingle_shuffles(df):
+    """Non-reused exchanges over the shingle explode in the final
+    adaptive plan, read after the query ran."""
+    df.collect()
+    return explain_audit.explode_shuffles(
+        explain_audit.final_plan(explain_audit.plan_of(df)))
+
+
+def test_dedup_plans_shuffle_the_shingle_explode_once(spark):
+    docs = _set_scorer_docs(spark)
+    assert _shingle_shuffles(textops.minhash_dedup_pairs(docs)) == 1
+    assert _shingle_shuffles(textops.jaccard_pairs(docs)) == 1
 
 
 def test_simhash_similar_docs_close(spark):

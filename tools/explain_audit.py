@@ -46,6 +46,27 @@ def stable_text(plan: str) -> str:
     return _SNAP_FILE.sub('plan-audit-snap-<tmp>/t/data/<file>', plan)
 
 
+def final_plan(plan: str) -> str:
+    """The final adaptive plan of a query that has run."""
+    assert 'isFinalPlan=true' in plan, 'run the query before reading it'
+    return plan.split('== Initial Plan ==')[0]
+
+
+def explode_shuffles(plan: str) -> int:
+    """Non-reused exchanges with a ``Generate explode`` below them."""
+    lines = plan.split('\n')
+    depth = [len(ln) - len(ln.lstrip(' :+-')) for ln in lines]
+    found = 0
+    for i, ln in enumerate(lines):
+        if ln.lstrip(' :+-').startswith('Exchange '):
+            below = range(i + 1, len(lines))
+            sub = next((j for j in below if depth[j] <= depth[i]),
+                       len(lines))
+            found += any('Generate explode' in lines[j]
+                         for j in range(i + 1, sub))
+    return found
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else '/root/testdata/sf0.01'
     spark = get_spark('plan-audit', cpus=4, shuffle_partitions=4)
@@ -125,12 +146,20 @@ def main():
         ])
 
     docs = T.load_table(spark, sf_dir, 'documents').select('doc_id', 'text')
+    minhash = textops.minhash_dedup_pairs(docs)
+    minhash.collect()  # the final adaptive plan shows exchange reuse
     audit(
         'minhash LSH dedup (shuffle joins on band/pair keys only)',
-        textops.minhash_dedup_pairs(docs),
+        minhash,
         [
             ('bounded number of shuffles (signatures via groupBy)',
-             lambda p: p.count('Exchange hashpartitioning') <= 10),
+             lambda p: final_plan(p).count('Exchange hashpartitioning')
+             <= 10),
+            ('one shuffle of the shingle explode (reused, not re-run)',
+             lambda p: explode_shuffles(final_plan(p)) == 1),
+            ('no join keyed on shingle values (set scorer per pair)',
+             lambda p: not re.search(
+                 r'Join \[[^\]]*\bsh(ingle|_[ab])#', final_plan(p))),
         ])
 
     audit(
