@@ -317,11 +317,11 @@ def neardup_pairs(embeddings: DataFrame, threshold: float = 0.4,
                   target_miss: float = 1e-4) -> DataFrame:
     """Embedding near-duplicate pairs: banded sign-LSH + exact verify.
 
-    Scale shape (same as ``minhash_dedup_pairs``): candidates come from a
-    bucket *equi-join* on (band, bucket-bits) — never a cross join, never
-    a full-corpus broadcast — then the exact cosine runs only on the
-    candidate pairs. OR-amplification over ``n_bands`` bands of
-    ``band_size`` planes sets recall: a pair at cosine s collides per
+    Scale shape: candidates come from a bucket *equi-join* on (band,
+    bucket-bits) — never a cross join, never a full-corpus broadcast —
+    then the exact cosine runs only on the candidate pairs.
+    OR-amplification over ``n_bands`` bands of ``band_size`` planes sets
+    recall: a pair at cosine s collides per
     band with p = (1 - arccos(s)/pi)^band_size and is a candidate with
     1-(1-p)^n_bands. At the gate threshold 0.4 the 16x2 defaults give
     per-pair miss-prob ~3.0e-4 by that formula (p_band = 0.398); the

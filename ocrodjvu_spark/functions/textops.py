@@ -8,8 +8,9 @@ md5) so every operator has an exact DuckDB oracle.
 Operators:
 * word shingles + rolling hash (the shared primitive; ``bind_once`` is
   the shared no-lambda-CSE idiom)
-* MinHash signatures + LSH banding -> candidate pairs -> exact-Jaccard
-  verification (near-duplicate detection at scale; hot-bucket cap)
+* MinHash signatures + LSH banding -> band buckets grouped (no join, no
+  broadcast) -> pairs per bucket -> exact-Jaccard verification
+  (near-duplicate detection at scale; hot-bucket cap)
 * SimHash (64-bit, Manku WWW'07) fingerprints + banded near-dup pairs
 * n-gram Jaccard similarity pairs (exact, shingle-join)
 * connected components (alternating large/small-star) -> dedup clusters
@@ -133,10 +134,11 @@ def minhash_signature_table(docs: DataFrame) -> DataFrame:
     return doc_shingle_table(docs).groupBy('doc_id').agg(*_minhash_aggs())
 
 
-def minhash_band_table(sig: DataFrame) -> DataFrame:
-    """(id, band): one row per LSH band key 'band_idx:h1-h2-...'."""
+def _band_keys() -> Column:
+    """The LSH band keys 'band_idx:h1-h2-...' of a row's mh0..mhK-1
+    signature columns, as an array in band order."""
     n_bands = len(MINHASH_PARAMS) // LSH_BAND_SIZE
-    bands = F.array(*[
+    return F.array(*[
         F.concat_ws(
             ':', F.lit(str(b)),
             F.concat_ws('-', *[
@@ -145,7 +147,11 @@ def minhash_band_table(sig: DataFrame) -> DataFrame:
             ]))
         for b in range(n_bands)
     ])
-    return sig.select('doc_id', F.explode(bands).alias('band'))
+
+
+def minhash_band_table(sig: DataFrame) -> DataFrame:
+    """(id, band): one row per LSH band key 'band_idx:h1-h2-...'."""
+    return sig.select('doc_id', F.explode(_band_keys()).alias('band'))
 
 
 # Multipliers deriving the 2nd/3rd 31-bit words of a token's 64-bit
@@ -630,12 +636,24 @@ def minhash_dedup_pairs(docs: DataFrame, threshold: float = 0.5,
                         max_bucket_size: Optional[int] = None) -> DataFrame:
     """MinHash+LSH near-dup pairs, verified with exact Jaccard.
 
-    shingle -> one aggregate per document (minhash signature and
-    shingle set) -> band -> bucket self-join (candidates) -> exact
-    Jaccard of each candidate over its two shingle sets. At scale the
-    band join touches only colliding buckets; the verification joins
-    are on the (small) candidate set. This is the scale path;
-    ``jaccard_pairs`` is the exact baseline.
+    One linear plan, no join and no broadcast: shingle -> one aggregate
+    per document (minhash signature and shingle set) -> one row per
+    (document, band), carrying the document's band keys and shingle set
+    -> ``groupBy(band)`` collects each bucket's members, sorted by id ->
+    pairs streamed per bucket (``posexplode`` the members, then explode
+    the members after each one, so doc_a < doc_b and no k^2/2 array is
+    built) -> exact Jaccard of each pair over its two shingle sets. Each
+    set crosses the band exchange once per band (4 times); in return the
+    shingle exchange is read once and the per-document aggregate runs
+    once. This is the scale path; ``jaccard_pairs`` is the exact
+    baseline.
+
+    A pair that shares several bands meets in several buckets. It is
+    kept only in the first band the two documents share (the first
+    equal entry of their band-key arrays), so every pair comes out once
+    with no distinct. The score is computed inside the pair generator,
+    which the score filters cannot be pushed below, so
+    ``array_intersect`` runs once per pair.
 
     ``max_bucket_size`` (skew guard): a band bucket holding k documents
     (k near-identical docs all sharing a minhash band) produces k^2/2
@@ -643,19 +661,45 @@ def minhash_dedup_pairs(docs: DataFrame, threshold: float = 0.5,
     job. With the cap set, buckets larger than ``max_bucket_size`` are
     excluded from candidate generation (their members are by definition
     near-identical — exact dedup upstream is the right tool for them).
-    Default None = exact (every colliding bucket considered; what the oracle
-    checks at small SF).
+    The bucket sizes are counted by a window over the band rows before
+    the collect, so a hot bucket is never gathered into one row. A pair
+    whose first shared band is a dropped bucket can still meet in a
+    later one, so the capped path keeps every surviving bucket's pairs
+    and takes a distinct instead of the first-band rule. Default None =
+    exact (every colliding bucket considered; what the oracle checks at
+    small SF).
     """
     sets = _doc_shingle_sets(doc_shingle_table(docs), *_minhash_aggs())
-    bands = minhash_band_table(sets)
+    # a NULL id would sort first in its buckets and pair with the rest;
+    # a document without an id pairs with nothing
+    rows = sets.where(F.col('doc_id').isNotNull()).select(
+        'doc_id', _band_keys().alias('keys'), 'shingles',
+    ).select('*', F.posexplode('keys').alias('bi', 'band'))
     if max_bucket_size is not None:
-        small = (bands.groupBy('band')
-                 .agg(F.count('*').alias('_bsz'))
-                 .where(F.col('_bsz') <= max_bucket_size)
-                 .select('band'))
-        bands = bands.join(small, 'band')
-    return _score_candidates(_pairs_sharing(bands, 'band').distinct(),
-                             sets, threshold)
+        rows = rows.withColumn(
+            '_bsz', F.count('*').over(Window.partitionBy('band')),
+        ).where(F.col('_bsz') <= max_bucket_size)
+    buckets = rows.groupBy('band').agg(
+        F.first('bi').alias('bi'),
+        F.array_sort(F.collect_list(F.struct('doc_id', 'keys', 'shingles')))
+         .alias('m'),
+    ).where(F.size('m') > 1)
+    a = F.col('a')
+    later = F.slice('m', F.col('i') + 2, F.size('m'))
+    if max_bucket_size is None:
+        later = F.filter(later, lambda b: F.array_position(
+            F.zip_with(a['keys'], b['keys'], lambda x, y: x == y), True)
+            == F.col('bi') + 1)
+    members = buckets.select('bi', 'm', F.posexplode('m').alias('i', 'a'))
+    pairs = members.select(
+        a['doc_id'].alias('doc_a'), F.size(a['shingles']).alias('size_a'),
+        F.inline(F.transform(later, lambda b: F.struct(
+            b['doc_id'].alias('doc_b'),
+            F.size(F.array_intersect(a['shingles'], b['shingles']))
+             .alias('n_common'),
+            F.size(b['shingles']).alias('size_b')))))
+    out = _jaccard_rows(pairs.where(F.col('n_common') > 0), threshold)
+    return out if max_bucket_size is None else out.distinct()
 
 
 def _ensure_checkpoint_dir(df: DataFrame) -> None:

@@ -99,6 +99,7 @@ def _set_scorer_docs(spark):
         (11, 'one two three four five six seven eight nine ten eleven '
              'twelve thirteen fourteen fifteen'),  # last token deleted
         (12, 'unrelated words entirely different from the others'),
+        (None, base),                       # no id: pairs with nothing
     ]
     return spark.createDataFrame(rows, 'doc_id long, text string')
 
@@ -146,6 +147,27 @@ def test_dedup_plans_shuffle_the_shingle_explode_once(spark):
     docs = _set_scorer_docs(spark)
     assert _shingle_shuffles(textops.minhash_dedup_pairs(docs)) == 1
     assert _shingle_shuffles(textops.jaccard_pairs(docs)) == 1
+
+
+def test_explode_shuffles_counts_each_shingle_shuffle_once(spark):
+    # two shingle shuffles under a third exchange: the descent below the
+    # top exchange stops at the shingle stages, so it adds nothing
+    docs = _set_scorer_docs(spark)
+    two = textops.doc_shingle_table(docs.where('doc_id < 6')).union(
+        textops.doc_shingle_table(docs.where('doc_id >= 6')))
+    assert _shingle_shuffles(two.groupBy('shingle').count()) == 2
+
+
+def test_minhash_plan_groups_buckets_in_one_aggregate_per_document(spark):
+    # no broadcast build of bands or sets, and the signature and the
+    # shingle set come from one aggregate over the shingle exchange
+    pairs = textops.minhash_dedup_pairs(_set_scorer_docs(spark))
+    pairs.collect()
+    plan = explain_audit.final_plan(explain_audit.plan_of(pairs))
+    assert 'BroadcastExchange' not in plan
+    aggs = explain_audit.doc_aggregates(plan)
+    assert len(aggs) == 1
+    assert 'min(' in aggs[0] and 'collect_list(' in aggs[0]
 
 
 def test_simhash_similar_docs_close(spark):
@@ -228,6 +250,29 @@ def test_minhash_bucket_cap_bounds_hot_buckets(spark):
                  docs, threshold=0.5, max_bucket_size=32).collect()}
     assert (5000, 5001) in pairs
     assert all(a >= 5000 for a, _ in pairs)  # hot bucket fully dropped
+
+
+def test_minhash_bucket_cap_keeps_pairs_met_again_in_a_small_bucket(spark):
+    # found by a seeded search: docs 0 and 1 share bands 0, 1 and 3;
+    # doc 2 shares band 0 only. With the cap at 2 the band-0 bucket (3
+    # docs) is dropped, so the pair's first shared band is gone, and it
+    # must still come out (once) from its band-1 and band-3 buckets
+    docs = _docs(spark, [
+        'alder pine rowan oak rowan birch fir oak spruce spruce fir birch',
+        'maple rowan rowan oak rowan birch fir oak spruce spruce fir birch',
+        'maple hazel rowan oak rowan birch fir oak spruce spruce fir birch',
+    ])
+    bands = {}
+    for r in textops.minhash_band_table(
+            textops.minhash_signature_table(docs)).collect():
+        bands.setdefault(r.doc_id, set()).add(r.band)
+    assert sorted(b[0] for b in bands[0] & bands[1]) == ['0', '1', '3']
+    assert [b[0] for b in bands[2] & bands[0]] == ['0']
+    assert [b[0] for b in bands[2] & bands[1]] == ['0']
+    assert _pair_rows(textops.minhash_dedup_pairs(
+        docs, threshold=0.5, max_bucket_size=2)) == [(0, 1, 0.666667)]
+    assert len(_pair_rows(textops.minhash_dedup_pairs(
+        docs, threshold=0.5))) == 3
 
 
 def test_simhash_pairs_banding_is_exact(spark):

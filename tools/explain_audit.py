@@ -53,18 +53,40 @@ def final_plan(plan: str) -> str:
 
 
 def explode_shuffles(plan: str) -> int:
-    """Non-reused exchanges with a ``Generate explode`` below them."""
+    """Non-reused exchanges with a ``Generate explode`` in their own
+    stage: the descent below each exchange stops at the next
+    ``Exchange`` or ``ShuffleQueryStage``, so an exchange above another
+    shuffle does not count that shuffle's explode again."""
     lines = plan.split('\n')
-    depth = [len(ln) - len(ln.lstrip(' :+-')) for ln in lines]
+    nodes = [ln.lstrip(' :+-') for ln in lines]
+    depth = [len(ln) - len(node) for ln, node in zip(lines, nodes)]
+
+    def end(i):
+        return next((j for j in range(i + 1, len(lines))
+                     if depth[j] <= depth[i]), len(lines))
+
     found = 0
-    for i, ln in enumerate(lines):
-        if ln.lstrip(' :+-').startswith('Exchange '):
-            below = range(i + 1, len(lines))
-            sub = next((j for j in below if depth[j] <= depth[i]),
-                       len(lines))
-            found += any('Generate explode' in lines[j]
-                         for j in range(i + 1, sub))
+    for i, node in enumerate(nodes):
+        if not node.startswith('Exchange '):
+            continue
+        j, stop = i + 1, end(i)
+        while j < stop and 'Generate explode' not in nodes[j]:
+            j = (end(j) if nodes[j].startswith(
+                ('Exchange ', 'ShuffleQueryStage ')) else j + 1)
+        found += j < stop
     return found
+
+
+_DOC_AGGREGATE = re.compile(
+    r'Aggregate\(keys=\[doc_id#\d+L?\], functions=\[(.*)\], output=')
+
+
+def doc_aggregates(plan: str) -> list:
+    """The function lists of the aggregates keyed on ``doc_id`` alone,
+    one per per-document aggregate (partial aggregates are skipped)."""
+    found = (_DOC_AGGREGATE.search(node) for node in plan.split('\n'))
+    return [m.group(1) for m in found
+            if m and 'partial_' not in m.group(1)]
 
 
 def main():
@@ -149,17 +171,19 @@ def main():
     minhash = textops.minhash_dedup_pairs(docs)
     minhash.collect()  # the final adaptive plan shows exchange reuse
     audit(
-        'minhash LSH dedup (shuffle joins on band/pair keys only)',
+        'minhash LSH dedup (band buckets grouped, no join, one aggregate '
+        'per document)',
         minhash,
         [
-            ('bounded number of shuffles (signatures via groupBy)',
-             lambda p: final_plan(p).count('Exchange hashpartitioning')
-             <= 10),
-            ('one shuffle of the shingle explode (reused, not re-run)',
+            ('no BroadcastExchange and no join',
+             lambda p: 'BroadcastExchange' not in final_plan(p)
+             and 'Join' not in final_plan(p)),
+            ('one per-document aggregate computes both min and collect_list',
+             lambda p: [('min(' in f, 'collect_list(' in f)
+                        for f in doc_aggregates(final_plan(p))]
+             == [(True, True)]),
+            ('one shuffle of the shingle explode',
              lambda p: explode_shuffles(final_plan(p)) == 1),
-            ('no join keyed on shingle values (set scorer per pair)',
-             lambda p: not re.search(
-                 r'Join \[[^\]]*\bsh(ingle|_[ab])#', final_plan(p))),
         ])
 
     audit(
