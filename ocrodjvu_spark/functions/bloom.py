@@ -48,14 +48,25 @@ class BloomFilter(NamedTuple):
     k: int
 
 
-def positions_col(key: Column, k: int, m_bits: int) -> Column:
-    """The k probe positions of one key (double hashing)."""
-    h1 = rolling_hash(key)
+def _probe_positions(h1: Column, k: int, m: int, dtype: str) -> Column:
+    """The k positions ``(h1 + i*h2 + i^2) mod m``, cast to ``dtype``."""
     h2 = (h1 * H2_MUL + H2_ADD) % HASH_MOD
     return F.array(*[
-        ((h1 + F.lit(i) * h2 + F.lit(i * i)) % m_bits).cast('long')
+        ((h1 + F.lit(i) * h2 + F.lit(i * i)) % m).cast(dtype)
         for i in range(k)
     ])
+
+
+def positions_col(key: Column, k: int, m_bits: int) -> Column:
+    """The k probe positions of one key (double hashing)."""
+    return _probe_positions(rolling_hash(key), k, m_bits, 'long')
+
+
+def _word_and_mask() -> list:
+    """A probe position ``pos`` as its bitmap word and in-word bit."""
+    return [(F.col('pos') / 63).cast('long').alias('word_idx'),
+            F.expr('shiftleft(CAST(1 AS BIGINT), CAST(pos % 63 AS INT))')
+             .alias('mask')]
 
 
 def bloom_build(
@@ -69,10 +80,7 @@ def bloom_build(
     pos = F.explode(positions_col(F.col('key'), k, m_bits)).alias('pos')
     bitmap = (keys
               .select(pos)
-              .select(
-                  (F.col('pos') / 63).cast('long').alias('word_idx'),
-                  F.expr('shiftleft(CAST(1 AS BIGINT), '
-                         'CAST(pos % 63 AS INT))').alias('mask'))
+              .select(*_word_and_mask())
               .groupBy('word_idx')
               .agg(F.bit_or('mask').alias('bits')))
     return BloomFilter(bitmap, m_bits, k)
@@ -89,10 +97,7 @@ def bloom_probe(probes: DataFrame, bloom: BloomFilter) -> DataFrame:
     probed = (probes
               .select('key').distinct()
               .select('key', pos.alias('pos'))
-              .select('key',
-                      (F.col('pos') / 63).cast('long').alias('word_idx'),
-                      F.expr('shiftleft(CAST(1 AS BIGINT), '
-                             'CAST(pos % 63 AS INT))').alias('mask')))
+              .select('key', *_word_and_mask()))
     joined = probed.join(F.broadcast(bloom.bitmap), 'word_idx', 'left')
     bit_set = (F.col('bits').isNotNull()
                & (F.col('bits').bitwiseAND(F.col('mask')) != 0))

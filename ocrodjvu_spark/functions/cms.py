@@ -25,21 +25,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .bloom import H2_ADD, H2_MUL
-from .hll import FIN
-from .textops import HASH_MOD, rolling_hash
+from .bloom import _probe_positions
+from .hll import _finalized_hash
 
 
 def _positions(key: Column, d: int, w: int) -> Column:
     """Array of d counter positions (row j uses the j-salted probe)."""
-    h = rolling_hash(key)
-    for mul, add in FIN:
-        h = (h * mul + add) % HASH_MOD
-    h2 = (h * H2_MUL + H2_ADD) % HASH_MOD
-    return F.array(*[
-        ((h + F.lit(j) * h2 + F.lit(j * j)) % w).cast('int')
-        for j in range(d)
-    ])
+    return _probe_positions(_finalized_hash(key), d, w, 'int')
 
 
 CMS_DEPTH = 3  # d: counter rows, one hash each

@@ -49,13 +49,19 @@ def _alpha(m: int) -> float:
     return 0.7213 / (1 + 1.079 / m)
 
 
+def _finalized_hash(key: Column) -> Column:
+    """The fold hash of ``key`` after the ``FIN`` rounds."""
+    h = rolling_hash(key)
+    for mul, add in FIN:
+        h = (h * mul + add) % HASH_MOD
+    return h
+
+
 def register_rank_cols(key: Column, p: int):
     """(register, rank) of one key."""
     m = 1 << p
     w_bits = HASH_BITS - p
-    h = rolling_hash(key)
-    for mul, add in FIN:
-        h = (h * mul + add) % HASH_MOD
+    h = _finalized_hash(key)
     w = F.floor(h / m).cast('long')
     rank = F.when(w == 0, F.lit(w_bits + 1)) \
             .otherwise(F.lit(w_bits + 1) - F.length(F.bin(w))) \

@@ -1,17 +1,18 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over embedding columns (array<float>): brute-force
+(``cosine_topk``), IVF (``ivf_topk``, scored by ``ann_recall``) and
+sign-LSH (``lsh_bucket``, ``lsh_topk``) cosine top-k; near-duplicate
+pairs by banded sign-LSH (``neardup_pairs`` over ``banded_buckets`` and
+``auto_banding``) and within k-means clusters (``semantic_dedup_pairs``);
+the k-means quantizer (``kmeans_labels``, ``kmeans_centroids``,
+``assign_to_centroids``, ``save_vector_index``, ``load_vector_index``);
+and int8 ``quantize_embeddings``.
 
-* ``cosine_topk`` — brute-force cosine top-k: broadcast the (small) query
-  set against the corpus; dot products via ``zip_with``+``aggregate``
-  (JVM-side, whole-stage codegen). The baseline ANN path.
-* ``lsh_bucket`` / ``lsh_topk`` — random-hyperplane (sign) LSH: each
-  vector maps to a bit-string bucket from deterministic hyperplanes; the
-  candidate join touches only same-bucket pairs. The scale path: at 10^12
-  rows the bucket join replaces the full cross product, trading recall
-  for a ~2^bits fan-in reduction.
-
-Floats are cast to double before arithmetic and similarities rounded to 6
-decimals with vec_id tie-breaks, so results are engine-portable (DuckDB
-oracle computes the same fold).
+Every similarity is the one cosine expression ``_cosine``,
+``round(dot(a, b) / (|a| * |b|), 6)`` over vectors cast to double; each
+call site keeps the dot product measured faster there (``dot`` or
+``dot_cols``). The 6-decimal rounding, with id tie-breaks in every
+ranking, makes results engine-portable: the DuckDB oracles compute the
+same fold.
 """
 
 from __future__ import annotations
@@ -89,20 +90,52 @@ def hyperplane(j: int) -> Column:
     ])
 
 
+def _sign_bit(vec: Column, plane: Column) -> Column:
+    """'1' when ``vec`` is on the non-negative side of ``plane``, else '0'."""
+    return F.when(dot(vec, plane) >= 0, F.lit('1')).otherwise(F.lit('0'))
+
+
 def lsh_bucket(vec: Column) -> Column:
     """Sign-LSH bucket id as a bit string, e.g. '10011010'."""
-    bits = [
-        F.when(dot(vec, hyperplane(j)) >= 0, F.lit('1'))
-         .otherwise(F.lit('0'))
-        for j in range(N_HYPERPLANES)
-    ]
-    return F.concat(*bits)
+    return F.concat(*[_sign_bit(vec, hyperplane(j))
+                      for j in range(N_HYPERPLANES)])
 
 
 def _prep(embeddings: DataFrame) -> DataFrame:
     v = as_double(F.col('embedding'))
     return embeddings.select(
         F.col('vec_id'), v.alias('vec'), norm(v).alias('nrm'))
+
+
+def _cosine(dot_fn, a: str, na: str, b: str, nb: str) -> Column:
+    """``round(dot_fn(a, b) / (na * nb), 6)`` over the named columns."""
+    return F.round(dot_fn(F.col(a), F.col(b)) / (F.col(na) * F.col(nb)), 6)
+
+
+def _query_side(corpus: DataFrame, n: int, *extra: Column) -> DataFrame:
+    """The first ``n`` vectors as (query_id, qvec, qnrm, *extra)."""
+    return corpus.where(F.col('vec_id') < n).select(
+        F.col('vec_id').alias('query_id'),
+        F.col('vec').alias('qvec'),
+        F.col('nrm').alias('qnrm'),
+        *extra,
+    )
+
+
+def _rank_neighbors(paired: DataFrame, dot_fn, k: int) -> DataFrame:
+    """Top-k of an already-paired (vec_id, vec, nrm) x (query_id, qvec,
+    qnrm) frame: (query_id, rank, neighbor_id, cos_sim), a query never
+    ranking itself, rank 1..k by (cos_sim desc, neighbor_id)."""
+    scored = paired.where(F.col('vec_id') != F.col('query_id')).select(
+        'query_id', F.col('vec_id').alias('neighbor_id'),
+        _cosine(dot_fn, 'vec', 'nrm', 'qvec', 'qnrm').alias('cos_sim'))
+    w = Window.partitionBy('query_id').orderBy(
+        F.col('cos_sim').desc(), F.col('neighbor_id'))
+    return (
+        scored.withColumn('rank', F.row_number().over(w))
+        .where(F.col('rank') <= k)
+        .select('query_id', 'rank', 'neighbor_id', 'cos_sim')
+    )
 
 
 def cosine_topk(embeddings: DataFrame, n_queries: int = 10,
@@ -113,29 +146,9 @@ def cosine_topk(embeddings: DataFrame, n_queries: int = 10,
     (cos_sim desc, neighbor_id) after rounding to 6 decimals.
     """
     corpus = _prep(embeddings)
-    queries = corpus.where(F.col('vec_id') < n_queries).select(
-        F.col('vec_id').alias('query_id'),
-        F.col('vec').alias('qvec'),
-        F.col('nrm').alias('qnrm'),
-    )
-    scored = (
-        corpus.crossJoin(F.broadcast(queries))
-        .where(F.col('vec_id') != F.col('query_id'))
-        .select(
-            'query_id',
-            F.col('vec_id').alias('neighbor_id'),
-            F.round(
-                dot_cols(F.col('vec'), F.col('qvec'))
-                / (F.col('nrm') * F.col('qnrm')), 6).alias('cos_sim'),
-        )
-    )
-    w = Window.partitionBy('query_id').orderBy(
-        F.col('cos_sim').desc(), F.col('neighbor_id'))
-    return (
-        scored.withColumn('rank', F.row_number().over(w))
-        .where(F.col('rank') <= k)
-        .select('query_id', 'rank', 'neighbor_id', 'cos_sim')
-    )
+    queries = _query_side(corpus, n_queries)
+    return _rank_neighbors(
+        corpus.crossJoin(F.broadcast(queries)), dot_cols, k)
 
 
 def ann_recall(embeddings: DataFrame, nprobe: int = 1) -> DataFrame:
@@ -200,43 +213,20 @@ def ivf_topk(embeddings: DataFrame, nprobe: int = 1) -> DataFrame:
     centroids = centroids.select(
         F.col('list_id').alias('c_list'), 'cvec',
         norm(F.col('cvec')).alias('cnrm'))
-    queries = corpus.where(F.col('vec_id') < 10).select(
-        F.col('vec_id').alias('query_id'),
-        F.col('vec').alias('qvec'),
-        F.col('nrm').alias('qnrm'),
-    )
+    queries = _query_side(corpus, 10)
     probe_w = Window.partitionBy('query_id').orderBy(
         F.col('c_sim').desc(), F.col('c_list'))
     probes = (
         queries.crossJoin(F.broadcast(centroids))
-        .withColumn(
-            'c_sim',
-            F.round(dot(F.col('qvec'), F.col('cvec'))
-                    / (F.col('qnrm') * F.col('cnrm')), 6))
+        .withColumn('c_sim', _cosine(dot, 'qvec', 'qnrm', 'cvec', 'cnrm'))
         .withColumn('c_rank', F.row_number().over(probe_w))
         .where(F.col('c_rank') <= nprobe)
         .select('query_id', 'qvec', 'qnrm',
                 F.col('c_list').alias('probe_list'))
     )
-    scored = (
+    return _rank_neighbors(
         corpus.join(F.broadcast(probes),
-                    F.col('list_id') == F.col('probe_list'))
-        .where(F.col('vec_id') != F.col('query_id'))
-        .select(
-            'query_id',
-            F.col('vec_id').alias('neighbor_id'),
-            F.round(
-                dot(F.col('vec'), F.col('qvec'))
-                / (F.col('nrm') * F.col('qnrm')), 6).alias('cos_sim'),
-        )
-    )
-    w = Window.partitionBy('query_id').orderBy(
-        F.col('cos_sim').desc(), F.col('neighbor_id'))
-    return (
-        scored.withColumn('rank', F.row_number().over(w))
-        .where(F.col('rank') <= 5)
-        .select('query_id', 'rank', 'neighbor_id', 'cos_sim')
-    )
+                    F.col('list_id') == F.col('probe_list')), dot, 5)
 
 
 def _lcg_plane_values(n_planes: int, dim: int) -> list[list[float]]:
@@ -265,9 +255,8 @@ def banded_buckets(vec: Column, n_bands: int, band_size: int) -> Column:
     keys = []
     for b in range(n_bands):
         bits = [
-            F.when(dot(vec, F.array(*[F.lit(x) for x in
-                                      planes[b * band_size + j]])) >= 0,
-                   F.lit('1')).otherwise(F.lit('0'))
+            _sign_bit(vec, F.array(*[F.lit(x)
+                                     for x in planes[b * band_size + j]]))
             for j in range(band_size)
         ]
         keys.append(F.concat(F.lit(f'{b}:'), *bits))
@@ -362,8 +351,7 @@ def neardup_pairs(embeddings: DataFrame, threshold: float = 0.4,
         candidates.join(ca, 'vec_a').join(cb, 'vec_b')
         .select(
             'vec_a', 'vec_b',
-            F.round(dot_cols(F.col('va'), F.col('vb'))
-                    / (F.col('na') * F.col('nb')), 6).alias('cos_sim'))
+            _cosine(dot_cols, 'va', 'na', 'vb', 'nb').alias('cos_sim'))
         .where(F.col('cos_sim') >= threshold)
     )
 
@@ -563,8 +551,7 @@ def semantic_dedup_pairs(embeddings: DataFrame, k: int = 8,
         a.join(b, ['cluster'])
         .where(F.col('vec_a') < F.col('vec_b'))
         .select('cluster', 'vec_a', 'vec_b',
-                F.round(dot_cols(F.col('va'), F.col('vb'))
-                        / (F.col('na') * F.col('nb')), 6).alias('cos_sim'))
+                _cosine(dot_cols, 'va', 'na', 'vb', 'nb').alias('cos_sim'))
         .where(F.col('cos_sim') >= 0.4)
     )
     return pairs
@@ -620,28 +607,7 @@ def lsh_topk(embeddings: DataFrame) -> DataFrame:
     same-LSH-bucket candidates."""
     corpus = _prep(embeddings).withColumn(
         'bucket', lsh_bucket(F.col('vec')))
-    queries = corpus.where(F.col('vec_id') < 10).select(
-        F.col('vec_id').alias('query_id'),
-        F.col('vec').alias('qvec'),
-        F.col('nrm').alias('qnrm'),
-        F.col('bucket').alias('qbucket'),
-    )
-    scored = (
+    queries = _query_side(corpus, 10, F.col('bucket').alias('qbucket'))
+    return _rank_neighbors(
         corpus.join(F.broadcast(queries),
-                    F.col('bucket') == F.col('qbucket'))
-        .where(F.col('vec_id') != F.col('query_id'))
-        .select(
-            'query_id',
-            F.col('vec_id').alias('neighbor_id'),
-            F.round(
-                dot(F.col('vec'), F.col('qvec'))
-                / (F.col('nrm') * F.col('qnrm')), 6).alias('cos_sim'),
-        )
-    )
-    w = Window.partitionBy('query_id').orderBy(
-        F.col('cos_sim').desc(), F.col('neighbor_id'))
-    return (
-        scored.withColumn('rank', F.row_number().over(w))
-        .where(F.col('rank') <= 5)
-        .select('query_id', 'rank', 'neighbor_id', 'cos_sim')
-    )
+                    F.col('bucket') == F.col('qbucket')), dot, 5)

@@ -21,6 +21,26 @@ from pyspark.sql import functions as F
 ASOF_PAYLOAD = ('event_id', 'ts', 'value')
 
 
+def _tagged_union(left: DataFrame, right: DataFrame, strict: bool):
+    """(right rows with payload ``_rp``, the ``_side``-tagged union, the
+    carry order: ts, side, payload)."""
+    payload = F.struct(*[F.col(c) for c in ASOF_PAYLOAD])
+    rt = right.select(
+        F.col('user_id'), F.col('ts'), payload.alias('_rp'),
+        F.lit(0).alias('_side'))
+    lt = left.withColumn('_side', F.lit(1))
+    unioned = lt.unionByName(rt, allowMissingColumns=True)
+    side = F.col('_side').desc() if strict else F.col('_side').asc()
+    return rt, unioned, (F.col('ts').asc(), side, F.col('_rp').asc())
+
+
+def _matched(joined: DataFrame, left: DataFrame) -> DataFrame:
+    """Every left column plus ``matched_<c>`` from ``_match``."""
+    return joined.select(
+        *[F.col(c) for c in left.columns],
+        *[F.col(f'_match.{c}').alias(f'matched_{c}') for c in ASOF_PAYLOAD])
+
+
 def asof_join(left: DataFrame, right: DataFrame,
               strict: bool = False) -> DataFrame:
     """As-of (backward) join: attach to each left row the most recent
@@ -43,22 +63,12 @@ def asof_join(left: DataFrame, right: DataFrame,
     Output: every left column plus ``matched_<c>`` for each ``c`` in
     ``ASOF_PAYLOAD``.
     """
-    payload = F.struct(*[F.col(c) for c in ASOF_PAYLOAD])
-    rt = right.select(
-        F.col('user_id'), F.col('ts'), payload.alias('_rp'),
-        F.lit(0).alias('_side'))
-    lt = left.withColumn('_side', F.lit(1))
-    unioned = lt.unionByName(rt, allowMissingColumns=True)
-    side = F.col('_side').desc() if strict else F.col('_side').asc()
-    w = (Window.partitionBy('user_id')
-         .orderBy(F.col('ts').asc(), side, F.col('_rp').asc())
+    _, unioned, order = _tagged_union(left, right, strict)
+    w = (Window.partitionBy('user_id').orderBy(*order)
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     carried = unioned.withColumn(
         '_match', F.last('_rp', ignorenulls=True).over(w))
-    return (carried.where(F.col('_side') == 1)
-            .select(*[F.col(c) for c in left.columns],
-                    *[F.col(f'_match.{c}').alias(f'matched_{c}')
-                      for c in ASOF_PAYLOAD]))
+    return _matched(carried.where(F.col('_side') == 1), left)
 
 
 def asof_join_bucketed(left: DataFrame, right: DataFrame,
@@ -81,16 +91,9 @@ def asof_join_bucketed(left: DataFrame, right: DataFrame,
     ``bucket_sec`` so a (key, bucket) segment fits a task comfortably.
     """
     b_of = lambda c: F.floor(F.unix_timestamp(c) / bucket_sec)
-    payload = F.struct(*[F.col(c) for c in ASOF_PAYLOAD])
-    rt = right.select(
-        F.col('user_id'), F.col('ts'), payload.alias('_rp'),
-        F.lit(0).alias('_side'))
-    lt = left.withColumn('_side', F.lit(1))
-    unioned = lt.unionByName(rt, allowMissingColumns=True).withColumn(
-        '_b', b_of(F.col('ts')))
-    side = F.col('_side').desc() if strict else F.col('_side').asc()
-    w_seg = (Window.partitionBy('user_id', '_b')
-             .orderBy(F.col('ts').asc(), side, F.col('_rp').asc())
+    rt, unioned, order = _tagged_union(left, right, strict)
+    unioned = unioned.withColumn('_b', b_of(F.col('ts')))
+    w_seg = (Window.partitionBy('user_id', '_b').orderBy(*order)
              .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     seg = unioned.withColumn(
         '_partial', F.last('_rp', ignorenulls=True).over(w_seg))
@@ -112,10 +115,7 @@ def asof_join_bucketed(left: DataFrame, right: DataFrame,
     joined = (seg.where(F.col('_side') == 1)
               .join(prev, ['user_id', '_b'], 'left')
               .withColumn('_match', F.coalesce('_partial', '_pp')))
-    return joined.select(
-        *[F.col(c) for c in left.columns],
-        *[F.col(f'_match.{c}').alias(f'matched_{c}')
-          for c in ASOF_PAYLOAD])
+    return _matched(joined, left)
 
 
 def range_join(left: DataFrame, right: DataFrame,

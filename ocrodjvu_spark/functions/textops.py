@@ -107,20 +107,26 @@ def shingle_hashes(tokens_col: Column) -> Column:
     hs = F.transform(tokens_col, lambda t: rolling_hash(t))
 
     def combos(h):
-        def one(i):
-            out = F.element_at(h, (i + 1).cast('int'))
-            for j in range(1, SHINGLE_N):
-                out = (out * SHINGLE_COMBINE
-                       + F.element_at(h, (i + j + 1).cast('int'))) % HASH_MOD
-            return out
-        joined = F.transform(F.sequence(F.lit(0), F.size(h) - SHINGLE_N), one)
-        whole = F.aggregate(
-            h, F.lit(0).cast('long'),
-            lambda acc, x: (acc * SHINGLE_COMBINE + x) % HASH_MOD)
+        joined = F.transform(F.sequence(F.lit(0), F.size(h) - SHINGLE_N),
+                             lambda i: _shingle_at(h, i, SHINGLE_N))
+        whole = F.aggregate(h, F.lit(0).cast('long'), _combine)
         return F.array_distinct(
             F.when(F.size(h) >= SHINGLE_N, joined).otherwise(F.array(whole)))
 
     return bind_once(hs, combos)
+
+
+def _combine(acc: Column, h: Column) -> Column:
+    """One step of the shingle fold over token hashes."""
+    return (acc * SHINGLE_COMBINE + h) % HASH_MOD
+
+
+def _shingle_at(h: Column, i: Column, n: int) -> Column:
+    """The fold of the ``n`` token hashes of ``h`` from 0-based ``i``."""
+    out = F.element_at(h, (i + 1).cast('int'))
+    for j in range(1, n):
+        out = _combine(out, F.element_at(h, (i + j + 1).cast('int')))
+    return out
 
 
 def _minhash_aggs() -> list:
@@ -412,19 +418,23 @@ def positioned_shingle_hashes(tokens_col: Column, n: int = 3) -> Column:
 
     def combos(h):
         def one(i):
-            out = F.element_at(h, (i + 1).cast('int'))
-            for j in range(1, n):
-                out = (out * SHINGLE_COMBINE
-                       + F.element_at(h, (i + j + 1).cast('int'))) \
-                    % HASH_MOD
             return F.struct(i.cast('int').alias('pos'),
-                            out.alias('sh'))
+                            _shingle_at(h, i, n).alias('sh'))
         return F.when(
             F.size(h) >= n,
             F.transform(F.sequence(F.lit(0), F.size(h) - n), one)
         ).otherwise(F.array().cast('array<struct<pos:int,sh:bigint>>'))
 
     return bind_once(hs, combos)
+
+
+def _positioned_shingles(docs: DataFrame, n: int) -> DataFrame:
+    """(doc_id, pos, sh) rows: the ``n``-token shingles of each text."""
+    return docs.select(
+        F.col('doc_id'),
+        F.explode(positioned_shingle_hashes(tokens(), n)).alias('p')
+    ).select(F.col('doc_id'), F.col('p.pos').alias('pos'),
+             F.col('p.sh').alias('sh'))
 
 
 WINNOW_WINDOW = 4  # consecutive shingle hashes per winnowing window
@@ -462,13 +472,9 @@ def winnowing_fingerprints(docs: DataFrame) -> DataFrame:
     Output: (id, fp_pos, fp) — the selected position and its n-gram
     hash.
     """
-    pos_sh = docs.select(
-        F.col('doc_id'),
-        F.explode(positioned_shingle_hashes(tokens(), SHINGLE_N))
-         .alias('p')
-    ).select(F.col('doc_id'), F.col('p.pos').alias('pos'),
-             (F.col('p.sh') * WINNOW_POS_CAP
-              + F.col('p.pos')).alias('key'))
+    pos_sh = _positioned_shingles(docs, SHINGLE_N).select(
+        'doc_id', 'pos',
+        (F.col('sh') * WINNOW_POS_CAP + F.col('pos')).alias('key'))
     # the composite key is only injective below the cap — fail LOUDLY
     # on a >= 2^20-token doc rather than corrupt its fingerprints
     # (chunk such docs first; see doc_chunks)
@@ -539,12 +545,7 @@ def duplicated_spans(docs: DataFrame,
     brute-force reference pin. Coverage (the union of reported token
     ranges) is identical either way.
     """
-    pos_sh = docs.select(
-        F.col('doc_id'),
-        F.explode(positioned_shingle_hashes(tokens(), SPAN_N))
-         .alias('p')
-    ).select(F.col('doc_id'), F.col('p.pos').alias('pos'),
-             F.col('p.sh').alias('sh'))
+    pos_sh = _positioned_shingles(docs, SPAN_N)
     df_counts = (pos_sh.select('doc_id', 'sh').distinct()
                  .groupBy('sh').agg(F.count('*').alias('df'))
                  .where(F.col('df') >= 2))
@@ -622,11 +623,7 @@ def oversized_ngrams(docs: DataFrame, max_df: int) -> DataFrame:
     excludes. Same shuffle shape as the df-count stage itself (one
     distinct + one groupBy on the hash key), so it is safe to run at
     any corpus size before committing to a cap."""
-    pos_sh = docs.select(
-        F.col('doc_id'),
-        F.explode(positioned_shingle_hashes(tokens(), SPAN_N))
-         .alias('p')
-    ).select(F.col('doc_id'), F.col('p.sh').alias('sh'))
+    pos_sh = _positioned_shingles(docs, SPAN_N).select('doc_id', 'sh')
     return (pos_sh.distinct()
             .groupBy('sh').agg(F.count('*').alias('df'))
             .where(F.col('df') > max_df))
@@ -835,6 +832,28 @@ def stopword_hits(tokens_col: Column, lang: str) -> Column:
                            lambda t: F.array_contains(words, t)))
 
 
+def _argmax(labels, col_name: str, none_label: str):
+    """(best, label) over the columns ``col_name.format(label)``: the
+    greatest value, and the first label in ``labels`` order reaching it
+    (``none_label`` when the best is <= 0)."""
+    best = F.greatest(*[F.col(col_name.format(lb)) for lb in labels])
+    pred = F.when(best <= 0, F.lit(none_label))
+    for lb in labels:
+        pred = pred.when(F.col(col_name.format(lb)) == best, F.lit(lb))
+    return best, pred
+
+
+def _lang_pred(scored: DataFrame, n_col: str, ratio_name: str) -> DataFrame:
+    """The language classifiers' output: the hit columns, the argmax
+    ``lang_pred`` and the best hit count per ``n_col``."""
+    best, pred = _argmax(LANG_ORDER, 'hits_{}', 'und')
+    return scored.select(
+        'doc_id', n_col, *[f'hits_{lang}' for lang in LANG_ORDER],
+        pred.alias('lang_pred'),
+        F.round(best / F.greatest(F.col(n_col), F.lit(1)), 6)
+         .alias(ratio_name))
+
+
 def language_id(docs: DataFrame) -> DataFrame:
     """Stopword-hit language classifier with deterministic tie-break.
 
@@ -845,17 +864,7 @@ def language_id(docs: DataFrame) -> DataFrame:
             for lang in LANG_ORDER]
     scored = docs.select(F.col('doc_id'), F.size(toks).alias('n_tokens'),
                          *hits)
-    best = F.greatest(*[F.col(f'hits_{lang}') for lang in LANG_ORDER])
-    pred = F.when(best <= 0, F.lit('und'))
-    for lang in LANG_ORDER:
-        pred = pred.when(F.col(f'hits_{lang}') == best, F.lit(lang))
-    return scored.select(
-        'doc_id', 'n_tokens',
-        *[f'hits_{lang}' for lang in LANG_ORDER],
-        pred.alias('lang_pred'),
-        F.round(best / F.greatest(F.col('n_tokens'), F.lit(1)), 6)
-         .alias('stopword_ratio'),
-    )
+    return _lang_pred(scored, 'n_tokens', 'stopword_ratio')
 
 
 # Character-trigram profiles (ASCII): the most frequent trigrams of each
@@ -894,17 +903,7 @@ def language_id_ngram(docs: DataFrame) -> DataFrame:
         'doc_id',
         (F.length('norm') - 2).cast('int').alias('n_trigrams'),
         *[hits(lang).alias(f'hits_{lang}') for lang in LANG_ORDER])
-    best = F.greatest(*[F.col(f'hits_{lang}') for lang in LANG_ORDER])
-    pred = F.when(best <= 0, F.lit('und'))
-    for lang in LANG_ORDER:
-        pred = pred.when(F.col(f'hits_{lang}') == best, F.lit(lang))
-    return scored.select(
-        'doc_id', 'n_trigrams',
-        *[f'hits_{lang}' for lang in LANG_ORDER],
-        pred.alias('lang_pred'),
-        F.round(best / F.greatest(F.col('n_trigrams'), F.lit(1)), 6)
-         .alias('trigram_ratio'),
-    )
+    return _lang_pred(scored, 'n_trigrams', 'trigram_ratio')
 
 
 def quality_score(docs: DataFrame) -> DataFrame:
@@ -915,9 +914,7 @@ def quality_score(docs: DataFrame) -> DataFrame:
     n_chars = F.length(norm)
     alpha_chars = F.length(F.regexp_replace(norm, r'[^a-zA-Z]', ''))
     punct_chars = F.length(F.regexp_replace(norm, r'[^.,;:!?]', ''))
-    en_words = F.array(*[F.lit(w) for w in STOPWORDS['en']])
-    stop_hits = F.size(F.filter(toks, lambda t: F.array_contains(en_words,
-                                                                 t)))
+    stop_hits = stopword_hits(toks, 'en')
     mean_tok = (n_chars - (n_tokens - 1)) / F.greatest(n_tokens, F.lit(1))
     alpha_ratio = alpha_chars / F.greatest(n_chars, F.lit(1))
     punct_ratio = punct_chars / F.greatest(n_chars, F.lit(1))
@@ -1017,7 +1014,6 @@ def gopher_rules(docs: DataFrame) -> DataFrame:
     norm = norm_text()
     hash_chars = F.length(norm) - F.length(F.replace(norm, F.lit('#')))
     ellipses = F.size(F.regexp_extract_all(norm, F.lit(r'\.\.\.'), 0))
-    en_words = F.array(*[F.lit(w) for w in STOPWORDS['en']])
 
     def stats(t):
         return F.struct(
@@ -1026,8 +1022,7 @@ def gopher_rules(docs: DataFrame) -> DataFrame:
                         lambda acc, w: acc + F.length(w)).alias('sum_len'),
             F.size(F.filter(t, lambda w: w.rlike('[a-zA-Z]')))
              .alias('n_alpha_words'),
-            F.size(F.filter(t, lambda w: F.array_contains(en_words, w)))
-             .alias('stop_hits'),
+            stopword_hits(t, 'en').alias('stop_hits'),
         )
 
     feat = docs.select(
@@ -1061,6 +1056,18 @@ def gopher_rules(docs: DataFrame) -> DataFrame:
 QUANTILE_PROBS = (0.25, 0.5, 0.75, 0.95)
 
 
+def _stratum_quantiles(docs: DataFrame, count_name: str) -> DataFrame:
+    """(stratum, ``count_name``, p25..p95) of ``n_chars`` per ``lang``."""
+    probs = F.array(*[F.lit(p) for p in QUANTILE_PROBS])
+    return (docs.groupBy(F.col('lang').alias('stratum'))
+            .agg(F.count('*').alias(count_name),
+                 F.percentile('n_chars', probs).alias('q'))
+            .select('stratum', count_name,
+                    *[F.round(F.element_at('q', i + 1), 6)
+                      .alias(f'p{int(p * 100)}')
+                      for i, p in enumerate(QUANTILE_PROBS)]))
+
+
 def length_quantiles(docs: DataFrame) -> DataFrame:
     """Per-stratum length distribution (the data-card table): p25 / p50 /
     p75 / p95 of ``n_chars`` per ``lang`` plus the document count.
@@ -1070,14 +1077,7 @@ def length_quantiles(docs: DataFrame) -> DataFrame:
     stratum and bit-comparable to the SQL oracle's ``quantile_cont``.
     ``sampled_quantiles`` is the bounded-memory path.
     """
-    probs = F.array(*[F.lit(p) for p in QUANTILE_PROBS])
-    return (docs.groupBy(F.col('lang').alias('stratum'))
-            .agg(F.count('*').alias('n_docs'),
-                 F.percentile('n_chars', probs).alias('q'))
-            .select('stratum', 'n_docs',
-                    *[F.round(F.element_at('q', i + 1), 6)
-                      .alias(f'p{int(p * 100)}')
-                      for i, p in enumerate(QUANTILE_PROBS)]))
+    return _stratum_quantiles(docs, 'n_docs')
 
 
 def sampled_quantiles(docs: DataFrame) -> DataFrame:
@@ -1097,15 +1097,7 @@ def sampled_quantiles(docs: DataFrame) -> DataFrame:
     internals), every step here is reproducible in plain SQL.
     """
     h = rolling_hash(F.col('doc_id').cast('string'))
-    sample = docs.where(h % F.lit(4) == 0)
-    probs = F.array(*[F.lit(p) for p in QUANTILE_PROBS])
-    return (sample.groupBy(F.col('lang').alias('stratum'))
-            .agg(F.count('*').alias('n_sampled'),
-                 F.percentile('n_chars', probs).alias('q'))
-            .select('stratum', 'n_sampled',
-                    *[F.round(F.element_at('q', i + 1), 6)
-                      .alias(f'p{int(p * 100)}')
-                      for i, p in enumerate(QUANTILE_PROBS)]))
+    return _stratum_quantiles(docs.where(h % F.lit(4) == 0), 'n_sampled')
 
 
 def dedup_lines(docs: DataFrame) -> DataFrame:
@@ -1243,11 +1235,8 @@ def script_profile(docs: DataFrame) -> DataFrame:
         .select('doc_id', F.length('_t').alias('n_chars'),
                 *[F.round(frac(t, cls), 6).alias(f'{name}_frac')
                   for name, cls, _ in SCRIPT_CLASSES])
-    best = F.greatest(*[F.col(f'{n}_frac') for n, _, _ in SCRIPT_CLASSES])
-    dominant = F.when(best <= 0, F.lit('other'))
-    for name, _, _ in SCRIPT_CLASSES:
-        dominant = dominant.when(F.col(f'{name}_frac') == best,
-                                 F.lit(name))
+    _, dominant = _argmax([n for n, _, _ in SCRIPT_CLASSES], '{}_frac',
+                          'other')
     return staged.select(
         'doc_id', 'n_chars',
         *[f'{n}_frac' for n, _, _ in SCRIPT_CLASSES],

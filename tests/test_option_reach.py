@@ -41,7 +41,8 @@ ALLOWED = {
     ('textops', 'jaccard_pairs', 'max_df'):
         'skew guard: drops ultra-frequent shingles from the self-join',
     ('textops', 'minhash_dedup_pairs', 'max_bucket_size'):
-        'skew guard: caps the quadratic hot-band-bucket self-join',
+        'skew guard: drops hot band buckets (a window count per band) '
+        'before their documents are collected and paired',
 }
 
 

@@ -990,3 +990,57 @@ def test_sampled_quantiles_deterministic_and_mergeable(spark):
     # the sample is a real subsample, not the full data
     n_sampled = sum(r[1] for r in a)
     assert 0 < n_sampled < 200
+
+
+def test_topk_rankers_tie_order_self_exclusion_and_k(spark):
+    # one hand-made corpus through the three top-k rankers: ids 4 and 7
+    # are positive multiples of query 0 (cos 1.0, like query 0 itself),
+    # ids 2 and 5 tie just below them, the others score lower, id 10 is
+    # query 0's opposite; one IVF list holds every vector
+    import random
+    from pyspark.sql import functions as F
+    from ocrodjvu_spark.functions import similarity
+    rnd = random.Random(10)
+    base = [float(rnd.randint(1, 4)) for _ in range(similarity.EMBED_DIM)]
+    assert base[0] == base[3]  # so the bumps of 2 and 5 tie exactly
+
+    def bump(i, c):
+        v = list(base)
+        v[i] += c
+        return v
+
+    vecs = {0: base, 4: [3 * x for x in base], 7: [2 * x for x in base],
+            2: bump(0, 0.5), 5: bump(3, 0.5), 1: bump(10, 3.0),
+            3: bump(20, -2.0), 6: bump(30, 4.0), 8: bump(40, -3.0),
+            9: bump(50, 2.5), 10: [-x for x in base], 11: bump(60, 3.5)}
+    emb = spark.createDataFrame(
+        [(i, v, 0) for i, v in sorted(vecs.items())],
+        'vec_id long, embedding array<float>, label int')
+    # the small bumps keep query 0's sign-LSH bucket
+    buckets = dict(emb.select('vec_id', similarity.lsh_bucket(
+        similarity.as_double(F.col('embedding')))).collect())
+    assert all(buckets[i] == buckets[0] for i in (2, 4, 5, 7))
+    assert buckets[10] != buckets[0]
+
+    def ranked(df, k):
+        by_query = {}
+        for r in df.collect():
+            by_query.setdefault(r.query_id, []).append(r)
+        for q, rows in by_query.items():
+            rows.sort(key=lambda r: r.rank)
+            assert len(rows) <= k
+            assert [r.rank for r in rows] == list(range(1, len(rows) + 1))
+            assert all(r.neighbor_id != q for r in rows)
+            keys = [(-r.cos_sim, r.neighbor_id) for r in rows]
+            assert keys == sorted(keys)
+        return {q: [r.neighbor_id for r in rows]
+                for q, rows in by_query.items()}
+
+    brute = ranked(similarity.cosine_topk(emb, n_queries=2, k=3), 3)
+    assert sorted(brute) == [0, 1]
+    assert brute[0] == [4, 7, 2]
+    ivf = ranked(similarity.ivf_topk(emb), 5)
+    lsh = ranked(similarity.lsh_topk(emb), 5)
+    assert sorted(ivf) == list(range(10))
+    for top in (ivf, lsh):
+        assert top[0][:4] == [4, 7, 2, 5]

@@ -578,6 +578,30 @@ def main():
     sections.append(('tfidf top terms (optimized logical plan)',
                      tfidf_opt, []))
 
+    # new sections go last: Spark truncates DataFilters text before the
+    # ids are renumbered, so a section planned after a new one can change
+    # in PLANS.md while its plan does not
+    audit(
+        'ann ivf top-k (broadcast centroids and probes, no shuffle join)',
+        similarity.ivf_topk(emb),
+        [
+            ('centroid side broadcast to the probe cross join',
+             lambda p: 'BroadcastNestedLoopJoin BuildRight, Cross' in p),
+            ('probe side broadcast to the inverted-list join',
+             lambda p: 'BroadcastHashJoin [list_id#' in p),
+            ('no sort-merge join',
+             lambda p: 'SortMergeJoin' not in p),
+        ])
+    audit(
+        'ann lsh top-k (broadcast queries, no shuffle join)',
+        similarity.lsh_topk(emb),
+        [
+            ('query side broadcast to the bucket join',
+             lambda p: 'BroadcastHashJoin [bucket#' in p),
+            ('no sort-merge join',
+             lambda p: 'SortMergeJoin' not in p),
+        ])
+
     lines = ['# PLANS — physical-plan audit (auto-generated)\n',
              f'Generated by `python tools/explain_audit.py {sf_dir}`.\n']
     n_fail = 0
