@@ -91,7 +91,12 @@ def doc_aggregates(plan: str) -> list:
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else '/root/testdata/sf0.01'
-    spark = get_spark('plan-audit', cpus=4, shuffle_partitions=4)
+    # untruncated scan filters: Spark cuts metadata text at a fixed
+    # length while the ids are still raw, so the cut point would move
+    # with the id widths of earlier sections
+    spark = get_spark(
+        'plan-audit', cpus=4, shuffle_partitions=4,
+        extra_conf={'spark.sql.maxMetadataStringLength': '100000'})
     spark.sparkContext.setLogLevel('ERROR')
 
     # a stored transcripts table (models the Iceberg input)
