@@ -347,7 +347,7 @@ def _q_stateful_conversation_state(spark, sf_dir):
 def _q_multimodal_features(spark, sf_dir):
     # binary multimodal pipeline end-to-end: real netpbm/BMP/TIFF image
     # payloads, real 8-bit-PCM WAV audio AND real uncompressed-AVI
-    # video payloads -> mapInPandas decode (stdlib codecs,
+    # video payloads -> mapInArrow decode (stdlib codecs,
     # kernel/{image,audio,video}_codecs.py) with exact geometry /
     # sample counts / integer sample sums / duration; compressed
     # codecs remain out of scope (no codec library in this container;

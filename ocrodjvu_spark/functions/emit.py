@@ -1,13 +1,14 @@
-"""Inverse-direction pandas UDF: ``make_emit_hocr_udf`` turns an
+"""Inverse-direction Arrow UDF: ``make_emit_hocr_udf`` turns an
 extracted_sexpr column into an hOCR markup column (djvu2hocr semantics;
 used for text-layer round-trip pipelines).
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import StringType, StructField, StructType
 
 from ..kernel import hocr_emit, sexpr
@@ -25,12 +26,14 @@ def make_emit_hocr_udf():
     Failures are typed per-row errors (the same on-error-resume channel
     as extraction), never silent nulls.
     """
+    result_type = to_arrow_type(EMIT_RESULT)
 
-    @pandas_udf(EMIT_RESULT)
-    def emit_hocr(sexprs: pd.Series, page_w: pd.Series,
-                  page_h: pd.Series) -> pd.DataFrame:
+    @arrow_udf(EMIT_RESULT)
+    def emit_hocr(sexprs: pa.Array, page_w: pa.Array,
+                  page_h: pa.Array) -> pa.Array:
         rows = []
-        for s, w, h in zip(sexprs, page_w, page_h):
+        for s, w, h in zip(sexprs.tolist(), page_w.tolist(),
+                           page_h.tolist()):
             if s is None:
                 rows.append({'hocr': None, 'error': 'null input'})
                 continue
@@ -43,7 +46,6 @@ def make_emit_hocr_udf():
                     'hocr': None,
                     'error': f'{type(exc).__name__}: {exc}',
                 })
-        return pd.DataFrame(rows, columns=['hocr', 'error'])
+        return pa.array(rows, type=result_type)
 
     return emit_hocr
-

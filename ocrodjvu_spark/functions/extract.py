@@ -1,10 +1,11 @@
-"""Extraction pandas UDFs: OCR markup column -> zone spans + text + sexpr.
+"""Extraction Arrow UDF: OCR markup column -> zone spans + text + sexpr.
 
 This is the Spark face of the pure-Python kernel. Parsing HTML is
 inherently per-document Python work, so the hot path is an Arrow-batched
-``pandas_udf`` (never a row-at-a-time Python UDF): one Python call per
-Arrow batch, with the kernel looping inside. Everything around it
-(filters, joins, windows, aggregations) stays JVM-side.
+``arrow_udf`` (never a row-at-a-time Python UDF): one Python call per
+Arrow batch, with the kernel looping inside and the result built
+straight into an Arrow array. Everything around it (filters, joins,
+windows, aggregations) stays JVM-side.
 
 Reference parity: the per-turn result matches ocrodjvu's
 ``hocr.extract_text`` (lib/hocr.py:446-472) — one s-expression per
@@ -17,9 +18,10 @@ from __future__ import annotations
 
 from typing import List, Tuple
 
-import pandas as pd
+import pyarrow as pa
 
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
+from pyspark.sql.pandas.types import to_arrow_type
 
 from ..kernel import engines, hocr
 from ..kernel.zones import (
@@ -131,7 +133,7 @@ def zone_text(zone: Zone) -> str:
 
 def extract_one(
     markup,
-    details: int = hocr.DETAILS_BY_NAME['words'],
+    details: str = 'words',
     uax29=None,
     rotation: int = 0,
     page_size=None,
@@ -142,8 +144,9 @@ def extract_one(
 ):
     """Extract one turn; returns the EXTRACT_RESULT-shaped dict.
 
-    ``engine`` (see ``ENGINES``) names the input dialect: ``'hocr'``
-    markup, ocrad ORF text (``'ocrad'``) or gocr XML (``'gocr'``).
+    ``details`` is a ``hocr.DETAILS_BY_NAME`` name. ``engine`` (see
+    ``ENGINES``) names the input dialect: ``'hocr'`` markup, ocrad ORF
+    text (``'ocrad'``) or gocr XML (``'gocr'``).
     The two engine dialects need ``page_size`` and ignore ``fix_utf8``;
     their ``dialect`` is the engine name. ``emit_spans`` (see
     ``EMIT_SPANS``) / ``emit_sexpr`` skip or prune those payloads (they
@@ -153,7 +156,7 @@ def extract_one(
     if markup is None:
         return {'pages': None, 'dialect': None, 'error': 'null input'}
     settings = hocr.ExtractSettings(
-        rotation=rotation, details=details, uax29=uax29,
+        rotation=rotation, details=hocr.DETAILS_BY_NAME[details], uax29=uax29,
         fix_utf8=fix_utf8, page_size=page_size)
     try:
         if engine == 'hocr':
@@ -162,7 +165,7 @@ def extract_one(
             # one page zone per document; the scan takes the caller's
             # uax29 (ExtractSettings rewrites True to a locale)
             zones = [_ENGINE_SCANS[engine](
-                markup, details=details, uax29=uax29,
+                markup, details=settings.details, uax29=uax29,
                 page_size=page_size, rotation=rotation)]
     except Exception as exc:  # error channel, not abort (on-error resume)
         return {
@@ -214,8 +217,10 @@ def make_extract_udf(
     """Build the Arrow-batched extraction UDF for a fixed config.
 
     The config is captured in the closure (broadcast with the task
-    binary), so Catalyst sees a deterministic scalar pandas UDF it can
-    pipeline inside a single stage — no shuffle is introduced.
+    binary), so Catalyst sees a deterministic scalar Arrow UDF it can
+    pipeline inside a single stage — no shuffle is introduced. It maps a
+    ``pa.Array`` of markup to a ``pa.StructArray`` of the result
+    schema's exact type (``.func`` also takes a ``pd.Series``).
     ``emit_spans``/``emit_sexpr`` elide the heavy payloads when a query
     only consumes ``extracted_text`` (Catalyst cannot prune *inside* a
     UDF result struct, so the pruning knob lives here). This is the one
@@ -230,20 +235,22 @@ def make_extract_udf(
             f'emit_spans must be one of {EMIT_SPANS}, got {emit_spans!r}')
     if engine not in ENGINES:
         raise ValueError(f'engine must be one of {ENGINES}, got {engine!r}')
-    details_level = hocr.DETAILS_BY_NAME[details]
+    if details not in hocr.DETAILS_BY_NAME:
+        raise ValueError(f'details must be one of '
+                         f'{tuple(hocr.DETAILS_BY_NAME)}, got {details!r}')
     result_schema = (EXTRACT_RESULT_PACKED if emit_spans == 'packed'
                      else EXTRACT_RESULT)
+    result_type = to_arrow_type(result_schema)
 
-    @pandas_udf(result_schema)
-    def extract_turn(texts: pd.Series) -> pd.DataFrame:
-        rows = [
+    @arrow_udf(result_schema)
+    def extract_turn(texts: pa.Array) -> pa.Array:
+        return pa.array([
             extract_one(
-                t, details=details_level, uax29=uax29, rotation=rotation,
+                t, details=details, uax29=uax29, rotation=rotation,
                 page_size=page_size, fix_utf8=fix_utf8,
                 emit_spans=emit_spans, emit_sexpr=emit_sexpr, engine=engine,
             )
-            for t in texts
-        ]
-        return pd.DataFrame(rows, columns=['pages', 'dialect', 'error'])
+            for t in texts.tolist()
+        ], type=result_type)
 
     return extract_turn

@@ -2,7 +2,7 @@
 
 Images/audio/video are carried as ``binary`` columns next to a typed
 metadata struct; decode / feature-extraction / resize / frame-sampling
-run as Arrow-batched ``mapInPandas`` stages so payload bytes never leave
+run as Arrow-batched ``mapInArrow`` stages so payload bytes never leave
 the executor (only one Python hop per batch).
 
 Image payloads are decoded for real: the stdlib codecs in
@@ -31,10 +31,11 @@ from __future__ import annotations
 import hashlib
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BinaryType, IntegerType, LongType, StringType, StructField, StructType,
 )
@@ -148,11 +149,11 @@ def synthesize_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f'{sf_dir}/documents.parquet') \
         .select('doc_id')
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        schema = to_arrow_schema(MEDIA_SCHEMA)
+        for batch in it:
             rows = []
-            for doc_id in pdf['doc_id']:
-                doc_id = int(doc_id)
+            for doc_id in batch.column('doc_id').to_pylist():
                 if doc_id % 3 == 0:
                     payload = _make_image(doc_id)
                     w, h = _image_dims(doc_id)
@@ -171,10 +172,9 @@ def synthesize_media(spark: SparkSession, sf_dir: str) -> DataFrame:
                                  'payload': _make_video(doc_id),
                                  'width': w, 'height': h,
                                  'codec': 'avi'})
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in MEDIA_SCHEMA.fields])
+            yield pa.RecordBatch.from_pylist(rows, schema=schema)
 
-    return docs.mapInPandas(batches, schema=MEDIA_SCHEMA)
+    return docs.mapInArrow(batches, schema=MEDIA_SCHEMA)
 
 
 _NULL_FEATURES = {'width': None, 'height': None, 'channels': None,
@@ -189,7 +189,7 @@ def _stub_features(payload: bytes) -> dict:
 
 
 def extract_features(media: DataFrame) -> DataFrame:
-    """mapInPandas feature extraction over binary payloads.
+    """mapInArrow feature extraction over binary payloads.
 
     Image rows are decoded with the stdlib netpbm/BMP/TIFF readers
     (exact geometry + integer pixel sums); audio rows with the stdlib
@@ -200,12 +200,13 @@ def extract_features(media: DataFrame) -> DataFrame:
     get NULL decode columns with ``decoder = 'stub'``.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        schema = to_arrow_schema(FEATURE_SCHEMA)
+        for batch in it:
             rows = []
-            for media_id, kind, payload in zip(
-                    pdf['media_id'], pdf['kind'], pdf['payload']):
-                data = bytes(payload) if payload is not None else b''
+            for row in batch.to_pylist():
+                kind = row['kind']
+                data = row['payload'] or b''
                 if kind == 'image':
                     try:
                         feats = {**_NULL_FEATURES, **IC.decode_image(data)}
@@ -239,18 +240,17 @@ def extract_features(media: DataFrame) -> DataFrame:
                 else:
                     feats = _stub_features(data)
                 rows.append({
-                    'media_id': media_id,
+                    'media_id': row['media_id'],
                     'kind': kind,
                     'n_bytes': len(data),
                     'checksum': hashlib.md5(data).hexdigest(),
                     **feats,
                 })
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in FEATURE_SCHEMA.fields])
+            yield pa.RecordBatch.from_pylist(rows, schema=schema)
 
     return (media
             .repartition('media_id')
-            .mapInPandas(batches, schema=FEATURE_SCHEMA))
+            .mapInArrow(batches, schema=FEATURE_SCHEMA))
 
 
 def resize_images(media: DataFrame) -> DataFrame:
@@ -263,61 +263,41 @@ def resize_images(media: DataFrame) -> DataFrame:
     new geometry.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            pdf = pdf.copy()
-            payloads, widths, heights = [], [], []
-            for kind, payload, w, h in zip(
-                    pdf['kind'], pdf['payload'], pdf['width'],
-                    pdf['height']):
-                data = bytes(payload) if payload is not None else None
-                result = None
-                if (kind == 'image' and data is not None
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        schema = to_arrow_schema(MEDIA_SCHEMA)
+        for batch in it:
+            rows = batch.to_pylist()
+            for row in rows:
+                data = row['payload']
+                if not (row['kind'] == 'image' and data is not None
                         and data[:2] in (b'P5', b'P6')):
-                    try:
-                        # header-only geometry read — the resample
-                        # itself is the only pass over the body
-                        ow, oh, _ = IC.pnm_geometry(data)
-                        side = max(ow, oh)
-                        if side > 4:
-                            nw = max(ow * 4 // side, 1)
-                            nh = max(oh * 4 // side, 1)
-                            result = (IC.resize_pnm_nearest(data, nw, nh),
-                                      nw, nh)
-                        else:
-                            result = (data, ow, oh)
-                    except (IC.ImageDecodeError, ValueError, IndexError):
-                        result = None  # malformed: pass through below
-                if result is None:
-                    result = (data, w, h)
-                payloads.append(result[0])
-                widths.append(result[1])
-                heights.append(result[2])
-            pdf['payload'] = payloads
-            pdf['width'] = pd.array(widths, dtype='Int32')
-            pdf['height'] = pd.array(heights, dtype='Int32')
-            yield pdf
+                    continue
+                try:
+                    # header-only geometry read — the resample itself
+                    # is the only pass over the body
+                    ow, oh, _ = IC.pnm_geometry(data)
+                    side = max(ow, oh)
+                    if side > 4:
+                        nw = max(ow * 4 // side, 1)
+                        nh = max(oh * 4 // side, 1)
+                        data, ow, oh = (IC.resize_pnm_nearest(data, nw, nh),
+                                        nw, nh)
+                except (IC.ImageDecodeError, ValueError, IndexError):
+                    continue  # malformed: pass through unchanged
+                row.update(payload=data, width=ow, height=oh)
+            yield pa.RecordBatch.from_pylist(rows, schema=schema)
 
-    return media.mapInPandas(batches, schema=MEDIA_SCHEMA)
+    return media.mapInArrow(batches, schema=MEDIA_SCHEMA)
 
 
-_FRAME_BYTE_SUM = None
-
-
-def frame_byte_sum(col):
+@F.arrow_udf(LongType())
+def frame_byte_sum(frames: pa.Array) -> pa.Array:
     """Exact integer byte sum of a binary column (Arrow-batched) — the
     measurement companion for frame-content parity gates: DuckDB cannot
     rebuild the binary frame to hash it, but it can recompute the sum
-    from the generative pattern. (UDF built lazily — pandas_udf return
-    types resolve against the active SparkSession.)"""
-    global _FRAME_BYTE_SUM
-    if _FRAME_BYTE_SUM is None:
-        @F.pandas_udf('long')
-        def _byte_sum(frames: pd.Series) -> pd.Series:
-            return frames.map(
-                lambda b: int(sum(bytes(b))) if b is not None else None)
-        _FRAME_BYTE_SUM = _byte_sum
-    return _FRAME_BYTE_SUM(col)
+    from the generative pattern."""
+    return pa.array([None if b is None else sum(b) for b in frames.tolist()],
+                    type=pa.int64())
 
 
 FALLBACK_FRAME_BYTES = 256
@@ -330,11 +310,12 @@ def sample_frames(media: DataFrame) -> DataFrame:
     plumbing — explode shape, Arrow batching, binary frames — still
     exercises arbitrary binaries)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        schema = to_arrow_schema(FRAME_SCHEMA)
+        for batch in it:
             rows = []
-            for media_id, payload in zip(pdf['media_id'], pdf['payload']):
-                data = bytes(payload) if payload is not None else b''
+            for row in batch.to_pylist():
+                data = row['payload'] or b''
                 try:
                     frames = list(VC.iter_avi_frames(data))
                 except VC.VideoDecodeError:
@@ -343,12 +324,11 @@ def sample_frames(media: DataFrame) -> DataFrame:
                               for i in range(max(len(data) // n, 1))]
                 for i in range(0, len(frames), 2):
                     rows.append({
-                        'media_id': media_id,
+                        'media_id': row['media_id'],
                         'frame_idx': i,
                         'frame': frames[i],
                     })
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in FRAME_SCHEMA.fields])
+            yield pa.RecordBatch.from_pylist(rows, schema=schema)
 
     return media.where(F.col('kind') == 'video') \
-        .mapInPandas(batches, schema=FRAME_SCHEMA)
+        .mapInArrow(batches, schema=FRAME_SCHEMA)

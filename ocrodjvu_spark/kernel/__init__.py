@@ -3,7 +3,7 @@
 These modules re-implement, from public knowledge of the formats
 (hOCR spec, DjVu hidden-text s-expressions) and the observable
 behavior of jwilk-archive/ocrodjvu, the text-extraction semantics
-that the Spark layer vectorizes via Arrow/pandas UDFs.
+that the Spark layer vectorizes via Arrow UDFs.
 
 Everything here is deterministic and unit-testable without a
 SparkSession; the golden corpus under tests/ pins behavior to the

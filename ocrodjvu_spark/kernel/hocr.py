@@ -7,7 +7,7 @@ classifies each element's assembled content, and leaf text is reshaped
 into word/character zones by a small pipeline of pure helpers
 (tail-strip -> detail early-out -> box harvest -> count reconciliation ->
 word/char burst). Pure Python, stdlib-only, deterministic — designed to
-run inside Arrow-batched pandas UDFs.
+run inside Arrow-batched UDFs.
 
 Behaviors pinned by the golden corpus (tests/), with reference citations
 so parity stays checkable:

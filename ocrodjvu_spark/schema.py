@@ -61,3 +61,8 @@ EXTRACT_RESULT_PACKED = StructType([
 ])
 
 TRANSCRIPTS_COLUMNS = ('conv_id', 'turn_idx', 'role', 'text', 'tool', 'ts')
+
+# the transcripts input schema, in TRANSCRIPTS_COLUMNS order (streaming
+# and JSONL readers)
+TRANSCRIPTS_DDL = ('conv_id string, turn_idx int, role string, '
+                   'text string, tool string, ts timestamp')

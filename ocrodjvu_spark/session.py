@@ -2,7 +2,7 @@
 
 Local mode stands in for a multi-executor cluster; the knobs below are the
 ones that matter at 100 TB too (AQE for runtime re-planning and skew-join
-splitting, Arrow batching for the pandas-UDF kernel, shuffle-partition
+splitting, Arrow batching for the Arrow-UDF kernel, shuffle-partition
 sizing relative to parallelism).
 
 ``SESSION_CONF`` holds the settings every session of the package needs,
@@ -69,7 +69,7 @@ def get_spark(
         .config('spark.sql.adaptive.coalescePartitions.enabled', 'true')
         .config('spark.sql.adaptive.skewJoin.enabled', 'true')
         .config('spark.sql.shuffle.partitions', str(shuffle_partitions))
-        # Arrow batching for the pandas-UDF extraction kernel. 512 rows
+        # Arrow batching for the Arrow-UDF extraction kernel. 512 rows
         # per batch beats 2048 by ~20-25% on the extraction hot path
         # (measured at sf0.1: flagship 3.0->2.5s, word_spans 3.9->3.1s):
         # more batches per task means the JVM->Python->JVM stages

@@ -7,7 +7,7 @@ engine exposes the same extraction as a Structured Streaming flow:
 * ``readStream`` over the transcripts location (file source here; Kafka /
   Iceberg-CDC in production) with the same schema;
 * the identical extraction operator, ``pipeline.extract_turns``, applied
-  to the unbounded DataFrame — scalar pandas UDFs are streaming-safe
+  to the unbounded DataFrame — scalar Arrow UDFs are streaming-safe
   (stateless projection);
 * ``foreachBatch``/file sink for the extracted output, partitioned like
   the batch path.
@@ -18,10 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TRANSCRIPTS_DDL = (
-    'conv_id string, turn_idx int, role string, text string, '
-    'tool string, ts timestamp'
-)
+from ..schema import TRANSCRIPTS_DDL
 
 
 def read_transcripts_stream(spark: SparkSession, input_path: str,

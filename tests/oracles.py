@@ -1,5 +1,6 @@
-"""Reference implementations the sketch, tokenizer, SimHash and
-filename-template tests compare the Spark operators against."""
+"""Reference implementations the sketch, tokenizer, SimHash,
+filename-template and Arrow-UDF tests compare the Spark operators
+against."""
 
 import os
 import re
@@ -8,6 +9,7 @@ from typing import List
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ocrodjvu_spark.functions.bloom import H2_ADD, H2_MUL
 from ocrodjvu_spark.functions.bpe import PAIR_SEP, _STRIP_RE, _merge_pass
@@ -214,3 +216,17 @@ def expand_template(template: str, page_no: int, page_id: str) -> str:
         values[field] = base + delta if m.group('sign') == '+' else \
             base - delta
     return fmt.vformat(template, (), values)
+
+
+def pandas_route(rows, schema: StructType):
+    """The Arrow result column a Python UDF returning ``rows`` (dicts
+    shaped like ``schema``) gave Spark through the retired pandas route:
+    ``pd.DataFrame(rows)`` through pyspark's pandas-UDF serializer, as
+    the worker built it for a scalar pandas UDF."""
+    import pandas as pd
+    from pyspark.sql.pandas.serializers import ArrowStreamPandasUDFSerializer
+    from pyspark.sql.pandas.types import to_arrow_type
+    ser = ArrowStreamPandasUDFSerializer(
+        'UTC', False, True, df_for_struct=True, arrow_cast=True)
+    frame = pd.DataFrame(rows, columns=schema.fieldNames())
+    return ser._create_batch([(frame, to_arrow_type(schema))]).column(0)

@@ -15,8 +15,7 @@ from pyspark.sql import Row
 
 from ocrodjvu_spark import pipeline
 from ocrodjvu_spark.kernel import hocr, sexpr
-TRANSCRIPTS_DDL = ('conv_id string, turn_idx int, role string, '
-                   'text string, tool string, ts timestamp')
+from ocrodjvu_spark.schema import TRANSCRIPTS_DDL
 
 from tests.corpus import (IN_REPO_HOCR_PAGES, REFERENCE_PRESENT,
                           golden_cases, needs_reference_corpus)
@@ -294,6 +293,7 @@ def test_run_metrics_pinned_on_hand_built_rows(spark, shape):
     pytest.param('emit_spans', 'Packed', id='Packed'),
     pytest.param('emit_spans', None, id='None'),
     pytest.param('engine', 'tesseract', id='engine-tesseract'),
+    pytest.param('details', 'word', id='details-word'),
 ])
 def test_make_extract_udf_rejects_unknown_emit_spans(option, value):
     from ocrodjvu_spark.functions.extract import make_extract_udf

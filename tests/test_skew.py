@@ -12,9 +12,7 @@ from pyspark.sql import functions as F
 
 from ocrodjvu_spark import pipeline
 from ocrodjvu_spark.functions import textops
-
-TRANSCRIPTS_DDL = ('conv_id string, turn_idx int, role string, '
-                   'text string, tool string, ts timestamp')
+from ocrodjvu_spark.schema import TRANSCRIPTS_DDL
 
 
 def _skewed_df(spark, mega_turns=400, small_convs=20):

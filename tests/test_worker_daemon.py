@@ -1,6 +1,8 @@
 """The Python worker daemon: zip directories re-read only on change."""
 
 import importlib
+import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -111,3 +113,17 @@ def test_session_workers_run_the_patched_daemon(spark):
         assert module == 'ocrodjvu_spark.worker_daemon'
         assert 'ocrodjvu_spark.worker_daemon' in cmdline
         assert 'pyspark' in cmdline
+
+
+def test_worker_imports_no_pandas():
+    """A Python worker imports the daemon and, through the package, the
+    extraction path: none of it may pull in pandas, which costs every
+    worker ~0.5 s of imports and ~24 MB."""
+    code = ('import sys, ocrodjvu_spark.worker_daemon, '
+            'ocrodjvu_spark.functions.extract, ocrodjvu_spark.functions.emit, '
+            'ocrodjvu_spark.functions.multimodal; '
+            "print(sorted(m for m in sys.modules if m.startswith('pandas')))")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, '-c', code], cwd=root, check=True,
+                         capture_output=True, text=True)
+    assert out.stdout.strip() == '[]'

@@ -81,6 +81,7 @@ def main(argv=None):
     from ocrodjvu_spark.kernel.iso639 import normalize_language
     from ocrodjvu_spark.kernel.utils import parse_page_numbers
     from ocrodjvu_spark.plans import checkpoint
+    from ocrodjvu_spark.schema import TRANSCRIPTS_DDL
     from ocrodjvu_spark.session import SESSION_CONF
 
     normalize_language(args.language)  # validate config early
@@ -95,10 +96,7 @@ def main(argv=None):
     n_corrupt = 0
     if args.input_format == 'jsonl':
         from ocrodjvu_spark.sources import jsonl as J
-        raw = J.read_jsonl(
-            spark, args.input,
-            'conv_id string, turn_idx int, role string, tool string, '
-            'ts timestamp, text string').cache()
+        raw = J.read_jsonl(spark, args.input, TRANSCRIPTS_DDL).cache()
         n_corrupt = raw.where(
             F.col('_corrupt_record').isNotNull()).count()
         transcripts = raw.where(F.col('_corrupt_record').isNull()) \
