@@ -621,7 +621,7 @@ def main():
     for name, plan, results in sections:
         lines.append(f'## {name}\n')
         lines.append('```')
-        lines.append(stable_text(plan.strip())[:4000])
+        lines.append(stable_text(plan.strip()))
         lines.append('```\n')
     with open('PLANS.md', 'w') as f:
         f.write('\n'.join(lines))
