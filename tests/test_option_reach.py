@@ -1,8 +1,9 @@
-"""Guard against option regrowth in the operator library.
+"""Guard against option regrowth in the operator library and the plans.
 
 Every defaulted parameter of a public function in
-``ocrodjvu_spark/functions/`` must be passed by some caller outside the
-tests: the package itself, ``__spark_entry__.py`` (the gates),
+``ocrodjvu_spark/functions/`` or ``ocrodjvu_spark/plans/``, and of a
+public method of a public class there, must be passed by some caller
+outside the tests: the package itself, ``__spark_entry__.py`` (the gates),
 ``tools/``, ``bench.py`` or ``perfbench/``. A parameter that only a test
 (or nothing) sets is an option nobody uses: make it a constant, or list
 it in ``ALLOWED`` with the reason it stays. COVERAGE.md "Option map"
@@ -20,7 +21,8 @@ import ast
 import os
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-OPERATORS = os.path.join(REPO_ROOT, 'ocrodjvu_spark', 'functions')
+OPERATORS = tuple(os.path.join(REPO_ROOT, 'ocrodjvu_spark', d)
+                  for d in ('functions', 'plans'))
 CALLERS = ('ocrodjvu_spark', 'tools', 'perfbench', '__spark_entry__.py',
            'bench.py')
 
@@ -43,6 +45,18 @@ ALLOWED = {
     ('textops', 'minhash_dedup_pairs', 'max_bucket_size'):
         'skew guard: drops hot band buckets (a window count per band) '
         'before their documents are collected and paired',
+    ('snapstore', 'SnapshotTable.overwrite', 'tag'):
+        'the documented rebuild of a refresh_incremental view under its '
+        'cursor tag',
+    ('snapstore', 'SnapshotTable.delete_where', 'partition_col'):
+        'a rewrite of a partitioned table must restage partition values '
+        '(it raises without); partitioned append is gated',
+    ('snapstore', 'SnapshotTable.delete_where', 'prune_filters'):
+        'copy-on-write file pruning; tier-1 checks pruned and unpruned '
+        'deletes agree',
+    ('snapstore', 'SnapshotTable.merge_into', 'partition_col'):
+        'as for delete_where: a rewrite of a partitioned table must '
+        'restage partition values',
 }
 
 
@@ -61,23 +75,38 @@ def _parse(path):
         return ast.parse(fh.read(), path)
 
 
+def _public_functions(tree):
+    """(qualified name, def node, takes self) of every public
+    module-level function and public method of a public class."""
+    for node in tree.body:
+        if getattr(node, 'name', '_').startswith('_'):
+            continue
+        if isinstance(node, ast.FunctionDef):
+            yield node.name, node, False
+        elif isinstance(node, ast.ClassDef):
+            for fn in node.body:
+                if (isinstance(fn, ast.FunctionDef)
+                        and not fn.name.startswith('_')):
+                    static = any(getattr(d, 'id', None) == 'staticmethod'
+                                 for d in fn.decorator_list)
+                    yield f'{node.name}.{fn.name}', fn, not static
+
+
 def operator_options():
     """(module, function, parameter, position or None) for every
-    defaulted parameter of a public module-level operator."""
-    for path in _py_files(OPERATORS):
+    defaulted parameter of a public operator or method; a method's
+    positions do not count ``self``."""
+    for path in (p for d in OPERATORS for p in _py_files(d)):
         module = os.path.splitext(os.path.basename(path))[0]
-        for node in _parse(path).body:
-            if (not isinstance(node, ast.FunctionDef)
-                    or node.name.startswith('_')):
-                continue
+        for name, node, method in _public_functions(_parse(path)):
             args = node.args
-            positional = args.posonlyargs + args.args
+            positional = (args.posonlyargs + args.args)[int(method):]
             first = len(positional) - len(args.defaults)
             for i, arg in enumerate(positional[first:], first):
-                yield module, node.name, arg.arg, i
+                yield module, name, arg.arg, i
             for arg, default in zip(args.kwonlyargs, args.kw_defaults):
                 if default is not None:
-                    yield module, node.name, arg.arg, None
+                    yield module, name, arg.arg, None
 
 
 def calls_by_name():
@@ -106,9 +135,11 @@ def unset_options():
     calls = calls_by_name()
     unset = []
     for module, func, param, pos in operator_options():
+        # a method is called by its bare name
+        name = func.rsplit('.', 1)[-1]
         if not any(param in keywords or spreads
                    or (pos is not None and n_pos > pos)
-                   for keywords, n_pos, spreads in calls.get(func, ())):
+                   for keywords, n_pos, spreads in calls.get(name, ())):
             unset.append((module, func, param))
     return unset
 
