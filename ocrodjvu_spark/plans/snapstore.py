@@ -100,7 +100,7 @@ class _CompactConflict(Exception):
 
 
 _PART_DIR = '__pv='  # staged partition directory prefix
-# attempts of a rewrite (``SnapshotTable._rewrite``) whose base keeps
+# attempts of a rewrite or refresh (``_retry``) whose base keeps
 # changing under it before it raises
 _REWRITE_RETRIES = 5
 # version claims a commit may lose to concurrent writers before it raises
@@ -492,6 +492,16 @@ def file_may_match(entry: dict, filters) -> bool:
     return True
 
 
+def _split_files(files: List[dict], filters):
+    """(files the ``filters`` may match, files their stats rule out),
+    each in manifest order (see ``file_may_match``)."""
+    touched: List[dict] = []
+    untouched: List[dict] = []
+    for f in files:
+        (touched if file_may_match(f, filters) else untouched).append(f)
+    return touched, untouched
+
+
 def _unquote_partition(raw: str):
     """Decode a partitionBy directory value ('__HIVE_DEFAULT_PARTITION__'
     and %-escapes)."""
@@ -587,15 +597,19 @@ class SnapshotTable:
 
     # -- snapshot resolution ------------------------------------------------
 
-    def versions(self) -> List[int]:
-        out = []
+    def _numbered_docs(self, kinds: str):
+        """(N, file name) of every ``<kind><N>.json`` in manifests/
+        whose one-letter kind is in ``kinds`` (v: snapshots, x: expiry
+        tombstones)."""
         for name in os.listdir(self.manifest_dir):
-            if name.startswith('v') and name.endswith('.json'):
+            if name[:1] in kinds and name.endswith('.json'):
                 try:
-                    out.append(int(name[1:-5]))
+                    yield int(name[1:-5]), name
                 except ValueError:
                     continue
-        return sorted(out)
+
+    def versions(self) -> List[int]:
+        return sorted(v for v, _name in self._numbered_docs('v'))
 
     def current_version(self) -> int:
         """HEAD version; 0 means the table is empty (no committed snapshot)."""
@@ -661,14 +675,8 @@ class SnapshotTable:
             raise ValueError(f'invalid ref name {name!r}')
         if version != 0 and version not in self.versions():
             raise ValueError(f'ref target v{version} does not exist')
-        tmp = os.path.join(self.manifest_dir,
-                           f'.tmp-ref-{uuid.uuid4().hex}.json')
-        with open(tmp, 'w', encoding='utf-8') as fh:
-            json.dump({'version': version}, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.rename(tmp, os.path.join(self.manifest_dir,
-                                    f'r-{name}.json'))
+        os.rename(self._temp_json({'version': version}),
+                  os.path.join(self.manifest_dir, f'r-{name}.json'))
 
     def get_ref(self, name: str) -> Optional[int]:
         """The version a ref points at, or None if unset."""
@@ -693,11 +701,7 @@ class SnapshotTable:
         return out
 
     def drop_ref(self, name: str) -> None:
-        try:
-            os.remove(os.path.join(self.manifest_dir,
-                                   f'r-{name}.json'))
-        except FileNotFoundError:
-            pass
+        self._remove([f'manifests/r-{name}.json'])
 
     def read(
         self,
@@ -798,15 +802,7 @@ class SnapshotTable:
         ``keep_positions`` appends ``__snap_file`` / ``__snap_pos``
         scan-metadata columns to the OUTPUT (the changelog scan needs
         them to resolve a later position delete against this state)."""
-        deletes = list(manifest.get('deletes') or [])
-        schema_json = manifest.get('schema')
-        if not deletes and not keep_positions:
-            return self._read_entries(spark, files, schema_json)
-        if not deletes:
-            return self._read_entries(spark, files, schema_json).select(
-                '*',
-                F.col('_metadata.file_name').alias('__snap_file'),
-                F.col('_metadata.row_index').alias('__snap_pos'))
+        deletes = manifest.get('deletes') or []
         groups: Dict[tuple, List[dict]] = {}
         for f in files:
             applicable = tuple(
@@ -815,7 +811,7 @@ class SnapshotTable:
             groups.setdefault(applicable, []).append(f)
         out = None
         for applicable, fs in sorted(groups.items()):
-            df = self._read_entries(spark, fs, schema_json)
+            df = self._read_entries(spark, fs, manifest.get('schema'))
             pos_ds = [deletes[i] for i in applicable
                       if deletes[i].get('positions')]
             if pos_ds or keep_positions:
@@ -825,30 +821,35 @@ class SnapshotTable:
                     F.col('_metadata.file_name').alias('__snap_file'),
                     F.col('_metadata.row_index').alias('__snap_pos'))
             if pos_ds:
-                # POSITION deletes (Iceberg v2): anti-join on the
-                # scan-provided (_metadata.file_name, row_index) —
-                # file names are table-unique (uuid staging)
-                pk = spark.read.parquet(*[
-                    os.path.join(self.root, d['path'])
-                    for d in pos_ds]).toDF('__snap_file', '__snap_pos')
-                df = df.join(F.broadcast(pk.dropDuplicates()),
-                             on=['__snap_file', '__snap_pos'],
-                             how='left_anti')
-            if pos_ds and not keep_positions:
-                df = df.select(data_cols)
+                df = self._join_delete_files(spark, df, pos_ds,
+                                             'left_anti')
+                if not keep_positions:
+                    df = df.select(data_cols)
             by_cols: Dict[tuple, List[dict]] = {}
             for i in applicable:
-                d = deletes[i]
-                if d.get('positions'):
-                    continue
-                by_cols.setdefault(tuple(d['key_cols']), []).append(d)
-            for cols, ds in sorted(by_cols.items()):
-                keys = spark.read.parquet(*[
-                    os.path.join(self.root, d['path']) for d in ds])
-                df = df.join(F.broadcast(keys.dropDuplicates()),
-                             on=list(cols), how='left_anti')
+                if not deletes[i].get('positions'):
+                    by_cols.setdefault(tuple(deletes[i]['key_cols']),
+                                       []).append(deletes[i])
+            for _cols, ds in sorted(by_cols.items()):
+                df = self._join_delete_files(spark, df, ds, 'left_anti')
             out = df if out is None else out.unionByName(df)
         return out
+
+    def _join_delete_files(self, spark: SparkSession, df: DataFrame,
+                           ds: List[dict], how: str) -> DataFrame:
+        """``df`` ``how``-joined ('left_anti' or 'left_semi') with the
+        broadcast rows of delete files ``ds`` of one kind: POSITION
+        deletes (Iceberg v2) on the scan-provided (``__snap_file``,
+        ``__snap_pos``) — file names are table-unique (uuid staging) —
+        or equality deletes on their shared key columns."""
+        keys = spark.read.parquet(*[
+            os.path.join(self.root, d['path']) for d in ds])
+        if ds[0].get('positions'):
+            on = ['__snap_file', '__snap_pos']
+            keys = keys.toDF(*on)
+        else:
+            on = list(ds[0]['key_cols'])
+        return df.join(F.broadcast(keys.dropDuplicates()), on=on, how=how)
 
     def read_changelog(self, spark: SparkSession, from_version: int,
                        to_version: Optional[int] = None
@@ -927,21 +928,15 @@ class SnapshotTable:
                     f'{len(dls)} delete files, expected 1')
             d = dls[0]
             prev = self.snapshot(v - 1)
+            if not prev['files']:
+                continue  # nothing was visible, so nothing was deleted
             state = self._read_files_mor(
                 spark, prev['files'], prev,
                 keep_positions=bool(d.get('positions')))
-            dfile = spark.read.parquet(
-                os.path.join(self.root, d['path']))
+            deleted = self._join_delete_files(spark, state, [d],
+                                              'left_semi')
             if d.get('positions'):
-                dfile = dfile.toDF('__snap_file', '__snap_pos')
-                deleted = state.join(
-                    F.broadcast(dfile.dropDuplicates()),
-                    on=['__snap_file', '__snap_pos'],
-                    how='left_semi').drop('__snap_file', '__snap_pos')
-            else:
-                deleted = state.join(
-                    F.broadcast(dfile.dropDuplicates()),
-                    on=list(d['key_cols']), how='left_semi')
+                deleted = deleted.drop('__snap_file', '__snap_pos')
             events.append(deleted.select(
                 '*', F.lit('delete').alias('_change_type'),
                 F.lit(v).cast('int').alias('_commit_version')))
@@ -1001,6 +996,21 @@ class SnapshotTable:
                     or head.get('partition_transform') == transform)
         return check
 
+    def _commit_transformed(self, operation: str, entries, schema,
+                            transform: Optional[str], **commit) -> int:
+        """``_commit`` of a partitioned write staged under
+        ``transform``, validated by ``_transform_validate``: a spec
+        that changed under the write raises ``CommitConflict``."""
+        try:
+            return self._commit(
+                operation, entries, schema, transform=transform,
+                validate=self._transform_validate(transform), **commit)
+        except _CompactConflict:
+            raise CommitConflict(
+                f'{operation}: the table\'s partition transform changed '
+                'under this write — restage against the new spec'
+            ) from None
+
     @staticmethod
     def _doc_has_files(doc: dict) -> bool:
         """Emptiness from the RAW snapshot doc's list aggregates, so
@@ -1043,17 +1053,9 @@ class SnapshotTable:
             # an unpartitioned append must not ERASE a recorded spec
             return self._commit('append', entries, schema,
                                 tag=tag, evolve=True, list_op='append')
-        try:
-            return self._commit(
-                'append', entries, schema, tag=tag,
-                evolve=True, transform=transform,
-                validate=self._transform_validate(transform),
-                list_op='append')
-        except _CompactConflict:
-            raise CommitConflict(
-                'append: the table\'s partition transform changed '
-                'under this write — restage against the new '
-                'spec') from None
+        return self._commit_transformed(
+            'append', entries, schema, transform, tag=tag, evolve=True,
+            list_op='append')
 
     def find_tag(self, tag: str) -> Optional[int]:
         """The version committed under ``tag``, or None. Sees expiry
@@ -1070,13 +1072,7 @@ class SnapshotTable:
         keeping tag lookups O(new versions), not O(history) per call.
         """
         cache = self._tag_cache
-        for name in os.listdir(self.manifest_dir):
-            if not name.endswith('.json') or name[0] not in 'vx':
-                continue
-            try:
-                v = int(name[1:-5])
-            except ValueError:
-                continue
+        for v, name in self._numbered_docs('vx'):
             if v in cache:
                 continue
             try:
@@ -1125,16 +1121,8 @@ class SnapshotTable:
             kept = [f for f in base if f.get('partition') not in replaced]
             return kept + entries
 
-        try:
-            return self._commit(
-                'replace_partitions', entries, schema,
-                apply=apply, transform=transform,
-                validate=self._transform_validate(transform))
-        except _CompactConflict:
-            raise CommitConflict(
-                'replace_partitions: the table\'s partition transform '
-                'changed under this write — restage against the new '
-                'spec') from None
+        return self._commit_transformed('replace_partitions', entries,
+                                        schema, transform, apply=apply)
 
     def delete_keys(self, spark: SparkSession, keys: DataFrame,
                     key_cols: Sequence[str]) -> int:
@@ -1176,29 +1164,19 @@ class SnapshotTable:
         zero-row staging is reclaimed). ``kdf`` holds key tuples on
         ``key_cols`` (equality delete) or, with ``key_cols`` None,
         (file name, row position) pairs (position delete)."""
-        stage_id = uuid.uuid4().hex
-        stage_dir = os.path.join(self.data_dir, f'.stage-{stage_id}')
-        kdf.coalesce(1).write.parquet(stage_dir)
-        try:
-            for name in sorted(os.listdir(stage_dir)):
-                if not name.endswith('.parquet'):
-                    continue
-                rel = f'data/{stage_id}-del.parquet'
-                os.rename(os.path.join(stage_dir, name),
-                          os.path.join(self.root, rel))
-                rows, _stats = self._file_meta(
-                    os.path.join(self.root, rel))
-                if rows == 0:
-                    self._delete_entries([{'path': rel}])
-                    return None
-                entry = {'path': rel, 'rows': rows}
-                if key_cols is None:
-                    entry['positions'] = True
-                else:
-                    entry['key_cols'] = list(key_cols)
-                return entry
-        finally:
-            shutil.rmtree(stage_dir, ignore_errors=True)
+        for rel, _pv in self._stage_files(
+                lambda stage_dir: kdf.coalesce(1).write.parquet(stage_dir),
+                'del'):
+            rows, _stats = self._file_meta(os.path.join(self.root, rel))
+            if rows == 0:
+                self._remove([rel])
+                return None
+            entry = {'path': rel, 'rows': rows}
+            if key_cols is None:
+                entry['positions'] = True
+            else:
+                entry['key_cols'] = list(key_cols)
+            return entry
         return None
 
     def _base_unchanged(self, base: dict):
@@ -1226,10 +1204,10 @@ class SnapshotTable:
         (``entries``, ``schema``, ``apply``, ...) — or None when
         nothing needs rewriting — and commit them validated against
         the pinned base (``_base_unchanged``). A base that changed
-        underneath reclaims the staged files and re-derives on the new
-        HEAD, up to ``_REWRITE_RETRIES`` times. ``restages`` ops write
-        new data files, which must keep their partition values."""
-        for _attempt in range(_REWRITE_RETRIES):
+        underneath (``_commit`` reclaims the staged files) re-derives
+        on the new HEAD (``_retry``). ``restages`` ops write new data
+        files, which must keep their partition values."""
+        def attempt():
             base = self.snapshot()
             if not base['files']:
                 return base['version']
@@ -1241,14 +1219,10 @@ class SnapshotTable:
             commit = derive(base)
             if commit is None:
                 return base['version']
-            try:
-                return self._commit(operation,
-                                    validate=self._base_unchanged(base),
-                                    **commit)
-            except _CompactConflict:
-                self._delete_entries(commit['entries'])
-        raise CommitConflict(
-            f'{name}: base kept changing for {_REWRITE_RETRIES} attempts')
+            return self._commit(operation,
+                                validate=self._base_unchanged(base),
+                                **commit)
+        return _retry(name, attempt)
 
     def delete_positions(self, spark: SparkSession, condition) -> int:
         """MERGE-ON-READ position delete (Iceberg v2 position delete
@@ -1319,15 +1293,10 @@ class SnapshotTable:
         prune_filters = _materialize_filters(prune_filters)
 
         def derive(base):
-            files0 = base['files']
-            touched = (files0 if prune_filters is None else
-                       [f for f in files0
-                        if file_may_match(f, prune_filters)])
+            touched, untouched = _split_files(base['files'],
+                                              prune_filters or ())
             if not touched:
                 return None  # stats prove nothing matches
-            touched_paths = {f['path'] for f in touched}
-            untouched = [f for f in files0
-                         if f['path'] not in touched_paths]
             # SQL DELETE semantics: rows where the condition is NULL
             # are KEPT (bare ~condition would drop them — fatal when
             # the condition references a schema-evolution column that
@@ -1407,14 +1376,9 @@ class SnapshotTable:
             return self.append(source, partition_col=partition_col)
 
         def derive(base):
-            files0 = base['files']
             # a file whose key range cannot intersect the source's
             # envelope provably holds no matched row — carry it forward
-            touched = [f for f in files0
-                       if file_may_match(f, key_filters)]
-            touched_paths = {f['path'] for f in touched}
-            untouched = [f for f in files0
-                         if f['path'] not in touched_paths]
+            touched, untouched = _split_files(base['files'], key_filters)
             schema_json = base.get('schema')
             target_cols = [
                 fld['name'] for fld in
@@ -1559,13 +1523,8 @@ class SnapshotTable:
         stage-to-claim window. Orphaned ``.stage-*`` directories are
         swept by the same age rule. Returns the reclaimed paths.
         """
-        referenced = set()
-        for v in self.versions():
-            m = self.snapshot(v)
-            referenced |= {f['path'] for f in m['files']}
-            referenced |= {d['path']
-                           for d in (m.get('deletes') or [])}
-            referenced |= {mf['path'] for mf in m['manifest_list']}
+        referenced = {rel for v in self.versions()
+                      for rel in self._referenced(self.snapshot(v))}
         now = time.time()
         removed: List[str] = []
         for name in sorted(os.listdir(self.data_dir)):
@@ -1631,55 +1590,45 @@ class SnapshotTable:
         keep |= {v for v in self.refs().values() if v in versions}
         if keep >= set(versions):
             return []
-        live = set()
-        for v in keep:
-            kept_manifest = self.snapshot(v)
-            for f in kept_manifest['files']:
-                live.add(f['path'])
-            for dl in (kept_manifest.get('deletes') or []):
-                live.add(dl['path'])  # pending delete files are live
-            for m in kept_manifest['manifest_list']:
-                live.add(m['path'])  # shared manifest files are live
+        live = {rel for v in keep
+                for rel in self._referenced(self.snapshot(v))}
         deleted = []
         for v in versions:
             if v in keep:
                 continue
             manifest = self.snapshot(v)
-            expired_mfs = [{'path': m['path']}
-                           for m in manifest['manifest_list']]
-            for f in (manifest['files']
-                      + list(manifest.get('deletes') or [])
-                      + expired_mfs):
-                rel = f['path']
-                if rel in live:
-                    continue
-                full = os.path.join(self.root, rel)
-                if os.path.exists(full):
-                    os.remove(full)
-                deleted.append(rel)
-                live.add(rel)  # only report/remove once
+            gone = [rel for rel in self._referenced(manifest)
+                    if rel not in live]
+            self._remove(gone)
+            deleted += gone
+            live.update(gone)  # only report/remove once
             if manifest.get('tag'):
-                # same tmp+fsync+link publish as _claim_version: a
-                # crash mid-write must never leave a truncated
-                # tombstone (tags are load-bearing cursor state)
-                tomb = os.path.join(self.manifest_dir, f'x{v}.json')
-                tmp = os.path.join(self.manifest_dir,
-                                   f'.tmp-{uuid.uuid4().hex}.json')
-                with open(tmp, 'w', encoding='utf-8') as fh:
-                    json.dump({'version': v, 'tag': manifest['tag']},
-                              fh)
-                    fh.flush()
-                    os.fsync(fh.fileno())
-                try:
-                    os.link(tmp, tomb)
-                except FileExistsError:
-                    pass  # a concurrent expirer already published it
-                finally:
-                    os.remove(tmp)
+                # published like a version claim: a crash mid-write
+                # must never leave a truncated tombstone (tags are
+                # load-bearing cursor state); a concurrent expirer may
+                # already have published it
+                self._link_json(f'x{v}.json',
+                                {'version': v, 'tag': manifest['tag']})
             os.remove(os.path.join(self.manifest_dir, f'v{v}.json'))
         return deleted
 
     # -- internals ----------------------------------------------------------
+
+    @staticmethod
+    def _referenced(snap: dict) -> List[str]:
+        """Every file a materialized snapshot references: its data
+        files, pending delete files and manifest files."""
+        return ([f['path'] for f in snap['files']]
+                + [d['path'] for d in snap.get('deletes') or ()]
+                + [m['path'] for m in snap['manifest_list']])
+
+    def _remove(self, rels) -> None:
+        """Remove each of ``rels`` (paths under the root) that exists."""
+        for rel in rels:
+            try:
+                os.remove(os.path.join(self.root, rel))
+            except FileNotFoundError:
+                pass
 
     def _stage(self, df: DataFrame | pa.Table,
                partition_col: Optional[str],
@@ -1700,44 +1649,50 @@ class SnapshotTable:
         same rows would get from ``createDataFrame``.
         """
         props = self.write_props()
-        stage_id = uuid.uuid4().hex
         if isinstance(df, pa.Table):
             if partition_col is not None:
                 raise ValueError('an Arrow table stages unpartitioned')
             from pyspark.sql.pandas.types import from_arrow_schema
-            rel = f'data/{stage_id}-0.parquet'
+            rel = f'data/{uuid.uuid4().hex}-0.parquet'
             pq.write_table(df, os.path.join(self.root, rel))
             return ([self._entry(rel, None, props)],
                     from_arrow_schema(df.schema).json())
-        stage_dir = os.path.join(self.data_dir, f'.stage-{stage_id}')
-        writer = df
-        if partition_col is not None:
-            writer = writer.withColumn(
-                '__pv', _transform_expr(df, partition_transform,
-                                        partition_col))
-            writer.write.partitionBy('__pv').parquet(stage_dir)
-        else:
-            writer.write.parquet(stage_dir)
-        schema = df.schema.json()
-        entries = []
-        try:
-            for dirpath, _dirnames, filenames in os.walk(stage_dir):
-                part_val = None
-                base = os.path.basename(dirpath)
-                if base.startswith(_PART_DIR):
-                    part_val = _unquote_partition(base[len(_PART_DIR):])
-                for name in sorted(filenames):
-                    if not name.endswith('.parquet'):
-                        continue
-                    rel = f'data/{stage_id}-{len(entries)}.parquet'
-                    os.rename(os.path.join(dirpath, name),
-                              os.path.join(self.root, rel))
-                    entries.append(self._entry(rel, part_val, props))
-        finally:
-            shutil.rmtree(stage_dir, ignore_errors=True)
+
+        def write(stage_dir):
+            if partition_col is None:
+                df.write.parquet(stage_dir)
+            else:
+                df.withColumn('__pv', _transform_expr(
+                    df, partition_transform, partition_col)
+                ).write.partitionBy('__pv').parquet(stage_dir)
+        entries = [self._entry(rel, part_val, props)
+                   for rel, part_val in self._stage_files(write)]
         # the staged schema (post-partitionBy) drops __pv; record the
         # ORIGINAL DataFrame schema, which matches the file contents
-        return entries, schema
+        return entries, df.schema.json()
+
+    def _stage_files(self, write, name: Optional[str] = None):
+        """Run ``write(stage_dir)`` and rename each parquet file it
+        wrote into data/ as ``<stage id>-<i>`` (``-<name>`` for a
+        one-file staging); returns ``[(rel, partition value)]``."""
+        stage_id = uuid.uuid4().hex
+        stage_dir = os.path.join(self.data_dir, f'.stage-{stage_id}')
+        write(stage_dir)
+        staged = []
+        try:
+            for dirpath, _dirnames, filenames in os.walk(stage_dir):
+                base = os.path.basename(dirpath)
+                part_val = (_unquote_partition(base[len(_PART_DIR):])
+                            if base.startswith(_PART_DIR) else None)
+                for fn in sorted(filenames):
+                    if fn.endswith('.parquet'):
+                        rel = f'data/{stage_id}-{name or len(staged)}.parquet'
+                        os.rename(os.path.join(dirpath, fn),
+                                  os.path.join(self.root, rel))
+                        staged.append((rel, part_val))
+        finally:
+            shutil.rmtree(stage_dir, ignore_errors=True)
+        return staged
 
     def _entry(self, rel: str, part_val, props: dict) -> dict:
         """The manifest entry of one staged data file: row count and
@@ -1897,12 +1852,13 @@ class SnapshotTable:
         commit passes ``apply``, which maps the base file list to the
         new one."""
         fast = list_op is not None
+        staged = [f['path'] for f in entries]
         for _attempt in range(_COMMIT_RETRIES):
             base_version = self.current_version()
             base = (self._snapshot_doc(base_version) if fast
                     else self.snapshot(base_version))
             if validate is not None and not validate():
-                self._delete_entries(entries)
+                self._remove(staged)
                 raise _CompactConflict
             if tag is not None:
                 # the race variant of the idempotence check: a replayed
@@ -1911,14 +1867,14 @@ class SnapshotTable:
                 # referenced by no manifest, so reclaim them (no leak)
                 existing = self.find_tag(tag)
                 if existing is not None:
-                    self._delete_entries(entries)
+                    self._remove(staged)
                     return existing
             if evolve and schema:
                 try:
                     committed_schema = _merge_schema(
                         base.get('schema'), schema)
                 except ValueError:
-                    self._delete_entries(entries)  # never published
+                    self._remove(staged)  # never published
                     raise
             else:
                 committed_schema = schema or base.get('schema')
@@ -1996,16 +1952,12 @@ class SnapshotTable:
                 return base_version + 1
             # lost the claim: the freshly written manifest files are
             # referenced by nothing — reclaim before the rebase repacks
-            self._reclaim_manifest_files(written)
-        self._delete_entries(entries)  # never published — reclaim
+            self._remove(written)
+            for rel in written:
+                self._mf_cache.pop(rel, None)
+        self._remove(staged)  # never published — reclaim
         raise CommitConflict(
             f'{operation}: lost {_COMMIT_RETRIES} commit races')
-
-    def _delete_entries(self, entries) -> None:
-        for f in entries:
-            path = os.path.join(self.root, f['path'])
-            if os.path.exists(path):
-                os.remove(path)
 
     def _write_manifest_file(self, entries: List[dict]) -> str:
         """Persist one immutable manifest file (tmp + fsync + rename;
@@ -2013,13 +1965,8 @@ class SnapshotTable:
         clean = [{k: v for k, v in e.items() if k != '__mf'}
                  for e in entries]
         rel = f'manifests/m-{uuid.uuid4().hex}.json'
-        tmp = os.path.join(self.manifest_dir,
-                           f'.tmp-{uuid.uuid4().hex}.json')
-        with open(tmp, 'w', encoding='utf-8') as fh:
-            json.dump({'entries': clean}, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.rename(tmp, os.path.join(self.root, rel))
+        os.rename(self._temp_json({'entries': clean}),
+                  os.path.join(self.root, rel))
         self._mf_cache[rel] = clean
         return rel
 
@@ -2107,13 +2054,6 @@ class SnapshotTable:
             out['sv'] = min(e.get('sv', 1) for e in entries)
         return out
 
-    def _reclaim_manifest_files(self, written: List[str]) -> None:
-        for rel in written:
-            self._mf_cache.pop(rel, None)
-            full = os.path.join(self.root, rel)
-            if os.path.exists(full):
-                os.remove(full)
-
     def _claim_version(self, version: int, manifest: dict) -> bool:
         """Atomically claim ``v<version>.json``; False if already taken.
 
@@ -2124,22 +2064,46 @@ class SnapshotTable:
         the two-step O_EXCL-then-rename variant had exactly that
         window. On an object store, replace with a conditional put
         (S3 If-None-Match) or a metastore compare-and-swap — this
-        method is the only seam.
+        method and ``_link_json`` are the seam.
         """
-        final = os.path.join(self.manifest_dir, f'v{version}.json')
-        tmp = os.path.join(self.manifest_dir,
-                           f'.tmp-{uuid.uuid4().hex}.json')
-        with open(tmp, 'w', encoding='utf-8') as fh:
-            json.dump(manifest, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
+        return self._link_json(f'v{version}.json', manifest)
+
+    def _link_json(self, name: str, doc: dict) -> bool:
+        """Publish ``doc`` as manifests/``name`` unless that name exists
+        (exclusive ``os.link``); False if it did."""
+        tmp = self._temp_json(doc)
         try:
-            os.link(tmp, final)
+            os.link(tmp, os.path.join(self.manifest_dir, name))
             return True
         except FileExistsError:
             return False
         finally:
             os.remove(tmp)
+
+    def _temp_json(self, doc: dict) -> str:
+        """Write and fsync ``doc`` to a temp file in manifests/; the
+        caller publishes it by rename or exclusive link, so no reader
+        ever sees a torn document."""
+        tmp = os.path.join(self.manifest_dir,
+                           f'.tmp-{uuid.uuid4().hex}.json')
+        with open(tmp, 'w', encoding='utf-8') as fh:
+            json.dump(doc, fh)
+            fh.flush()
+            os.fsync(fh.fileno())
+        return tmp
+
+
+def _retry(name: str, attempt: Callable[[], Optional[int]]):
+    """Run ``attempt`` (derive from the current state, then a validated
+    commit) again while the state it derived from changed under it
+    (``_CompactConflict``), at most ``_REWRITE_RETRIES`` times."""
+    for _attempt in range(_REWRITE_RETRIES):
+        try:
+            return attempt()
+        except _CompactConflict:
+            continue
+    raise CommitConflict(
+        f'{name}: base kept changing for {_REWRITE_RETRIES} attempts')
 
 
 def refresh_incremental(spark: SparkSession, source: SnapshotTable,
@@ -2201,7 +2165,8 @@ def refresh_incremental(spark: SparkSession, source: SnapshotTable,
     Returns the sink version committed, or None when already current.
     """
     key_cols = list(key_cols)
-    for _attempt in range(10):
+
+    def attempt():
         hi = source.current_version()
         lo = sink.last_consumed(name)
         if hi <= lo:
@@ -2209,6 +2174,9 @@ def refresh_incremental(spark: SparkSession, source: SnapshotTable,
         log = source.read_changelog(spark, lo, hi)
         if log is None:
             return None  # empty window: cursor re-derives next call
+        # the refresh stages unpartitioned, so a hidden-partitioned
+        # sink refuses it as it refuses an unpartitioned append
+        sink._resolve_transform(None, None)
         # read_changelog validated the chain lo+1..hi, so its
         # operations say on the driver whether any delete is in it
         mutating = any(source._snapshot_doc(v)['operation'] != 'append'
@@ -2230,11 +2198,9 @@ def refresh_incremental(spark: SparkSession, source: SnapshotTable,
             raise ValueError(
                 f'refresh_incremental: transform dropped key columns '
                 f'{missing} — deletes could not be propagated')
-        sink_tf = sink._snapshot_doc().get('partition_transform')
-        entries, schema = sink._stage(
-            new_rows, None, partition_transform=sink_tf)
-        sink._delete_entries(  # empty stagings: reclaim, don't commit
-            [e for e in entries if e['rows'] == 0])
+        entries, schema = sink._stage(new_rows, None)
+        # empty stagings: reclaim, don't commit
+        sink._remove(e['path'] for e in entries if e['rows'] == 0)
         entries = [e for e in entries if e['rows'] > 0]
         if mutating:
             del_entry = sink._stage_delete_file(
@@ -2247,15 +2213,10 @@ def refresh_incremental(spark: SparkSession, source: SnapshotTable,
         else:
             commit = dict(operation='append', entries=entries,
                           list_op='append')
-        try:
-            return sink._commit(
-                schema=schema, tag=f'{name}@{hi}', evolve=True,
-                validate=lambda: (
-                    sink.last_consumed(name) == lo
-                    and sink._snapshot_doc().get('partition_transform')
-                    == sink_tf),
-                **commit)
-        except _CompactConflict:
-            continue  # cursor moved under us: recompute the window
-    raise CommitConflict(
-        f'refresh_incremental({name}): cursor kept moving')
+        unpartitioned_ok = sink._transform_validate(None)
+        return sink._commit(
+            schema=schema, tag=f'{name}@{hi}', evolve=True,
+            validate=lambda: (sink.last_consumed(name) == lo
+                              and unpartitioned_ok()),
+            **commit)
+    return _retry(f'refresh_incremental({name})', attempt)

@@ -2029,3 +2029,38 @@ def test_arrow_append_records_what_a_dataframe_append_does(spark, tmp_path):
         by_frame.read(spark).collect() * 2, key=str)
     with pytest.raises(ValueError):
         by_arrow.append(table, partition_col='bucket')
+
+
+def test_refresh_rejects_hidden_partitioned_sink(spark, tmp_path):
+    # the refresh stages its rows unpartitioned, so a sink with a
+    # partition transform must refuse them as an unpartitioned append
+    # does, before anything is staged
+    import datetime
+
+    from ocrodjvu_spark.plans.snapstore import refresh_incremental
+    day0 = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
+    rows = spark.createDataFrame([
+        Row(doc_id=i, ts=day0 + datetime.timedelta(days=i % 2))
+        for i in range(4)])
+    src = SnapshotTable(str(tmp_path / 'src'))
+    src.append(rows)
+    mv = SnapshotTable(str(tmp_path / 'mv'))
+    mv.append(rows.where('doc_id < 2'), partition_col='ts',
+              partition_transform='day')
+    staged = sorted(os.listdir(mv.data_dir))
+    with pytest.raises(ValueError,
+                       match=r"table is hidden-partitioned \('day'\)"):
+        mv.append(rows)
+    with pytest.raises(ValueError,
+                       match=r"table is hidden-partitioned \('day'\)"):
+        refresh_incremental(spark, src, mv, lambda df: df, ['doc_id'])
+    assert mv.current_version() == 1
+    assert sorted(os.listdir(mv.data_dir)) == staged
+
+
+def test_changelog_of_a_delete_on_an_empty_table_is_empty(spark, tmp_path):
+    # nothing was visible before the delete, so it removed no row
+    t = SnapshotTable(str(tmp_path / 't'))
+    t.delete_keys(spark, spark.createDataFrame([Row(doc_id=1)]),
+                  ['doc_id'])
+    assert t.read_changelog(spark, 0) is None
