@@ -911,27 +911,28 @@ def _q_dedup_substring_spans(spark, sf_dir):
 def _q_checkpoint_resume(spark, sf_dir):
     # S8 savers + resume driver gate: phase 1 processes only 3 of 8
     # lineage buckets; a simulated crash then loses one completed
-    # bucket's output partition AND its lineage rows (as if the job
-    # died between the data write and the sidecar append); phase 2
-    # resumes from the surviving sidecar. The final table must equal a
-    # clean full recompute — the anti-join resume + dynamic-partition
-    # overwrite idempotency contract, end-to-end through the driver.
+    # bucket's lineage rows (as if the job died between the output
+    # commit and the sidecar append). Phase 2 resumes from a copy of
+    # the sidecar without that bucket while the output still holds its
+    # rows, so the redo must replace them, not duplicate them. The
+    # final table must equal a clean full recompute — the anti-join
+    # resume + replace_partitions idempotency contract, end-to-end
+    # through the driver.
     import os
-    import shutil
     from ocrodjvu_spark.plans import checkpoint as CK
+    from ocrodjvu_spark.plans.snapstore import SnapshotTable
     base = _gate_tempdir('ocrodjvu-spark-ckpt-gate-')
     out = os.path.join(base, 'out')
     side = os.path.join(base, 'side')
-    side2 = os.path.join(base, 'side2')
+    side2 = SnapshotTable(os.path.join(base, 'side2'))
     tr = T.synthesize_transcripts(spark, sf_dir)
     done = CK.run_extraction(spark, tr, out, side, n_buckets=8,
                              max_buckets=3, emit_spans=False,
                              emit_sexpr=False)
     lost = done[-1]
-    shutil.rmtree(os.path.join(out, f'bucket={lost}'))
-    (spark.read.parquet(side).where(F.col(CK.BUCKET_COL) != lost)
-     .write.parquet(side2))
-    CK.run_extraction(spark, tr, out, side2, n_buckets=8,
+    side2.append(SnapshotTable(side).read(spark)
+                 .where(F.col(CK.BUCKET_COL) != lost))
+    CK.run_extraction(spark, tr, out, side2.root, n_buckets=8,
                       emit_spans=False, emit_sexpr=False)
     # S9/A5 lineage metrics off the SAME resumed run (consolidated
     # from checkpoint_metrics, zero semantics lost): the post-resume
@@ -939,14 +940,14 @@ def _q_checkpoint_resume(spark, sf_dir):
     # corpus — every bucket marked complete, turn and char totals
     # match, zero errors. (The resume path rebuilds the sidecar at
     # side2 + appends; metrics read the final sidecar.)
-    rows = (spark.read.parquet(out)
+    rows = (SnapshotTable(out).read(spark)
             .select(F.lit('rows').alias('part'),
                     'conv_id', 'turn_idx', 'extracted_text',
                     F.lit(None).cast('int').alias('n_buckets'),
                     F.lit(None).cast('long').alias('n_turns'),
                     F.lit(None).cast('long').alias('n_errors'),
                     F.lit(None).cast('long').alias('n_chars')))
-    metrics = (spark.read.parquet(side2).agg(
+    metrics = (side2.read(spark).agg(
         F.count('*').cast('int').alias('n_buckets'),
         F.sum('n_turns').cast('long').alias('n_turns'),
         F.sum('n_errors').cast('long').alias('n_errors'),
@@ -961,13 +962,12 @@ def _q_checkpoint_resume(spark, sf_dir):
 
 def _q_checkpoint_snapshot(spark, sf_dir):
     # Snapshot-manifest table format (plans/snapstore.py): the same
-    # two-phase resume as checkpoint_resume, but committed through the
-    # Iceberg-style manifest protocol — and the gate additionally
-    # exercises the isolation property the parquet stand-in lacks: a
-    # reader pinned at the phase-1 snapshot must still read cleanly
-    # AFTER phase 2 re-swaps one of its partitions (old files are
-    # immutable until expire_snapshots). Final state must equal a full
-    # clean recompute, per-turn.
+    # two-phase resume as checkpoint_resume, driven through
+    # replace_partitions directly — and the gate additionally exercises
+    # snapshot isolation: a reader pinned at the phase-1 snapshot must
+    # still read cleanly AFTER phase 2 re-swaps one of its partitions
+    # (old files are immutable until expire_snapshots). Final state
+    # must equal a full clean recompute, per-turn.
     import os
     from ocrodjvu_spark import pipeline
     from ocrodjvu_spark.plans import checkpoint as CK

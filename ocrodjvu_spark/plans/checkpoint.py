@@ -5,9 +5,10 @@ Each run:
 
 1. reads the sidecar table and computes the pending bucket set
    (anti-join on completed lineage keys);
-2. extracts only pending buckets, writing the output table with *dynamic
-   partition overwrite* on the bucket column — re-processing a bucket
-   replaces exactly its own files, so a crashed run can simply be rerun;
+2. extracts only pending buckets and commits them to the output table
+   with ``SnapshotTable.replace_partitions`` on the bucket column —
+   re-processing a bucket replaces exactly its own files, so a crashed
+   run can simply be rerun;
 3. appends one sidecar row per completed bucket with its run metrics
    (``pipeline.run_metric_terms``: turns, errors, spans, chars). They
    are observed on the write itself (``DataFrame.observe``), so the
@@ -15,27 +16,11 @@ Each run:
 
 This mirrors the reference's crash behavior (temp results preserved,
 resume skips done pages — lib/cli/ocrodjvu.py:494-501,596-603) at table
-granularity. On a real deployment both tables are Iceberg (atomic commit
-+ snapshot isolation); the parquet emulation here keeps the same
-idempotency contract via dynamic partition overwrite.
-
-Reader-visibility contract of the parquet stand-in (tested in
-``tests/test_checkpoint.py::test_reader_across_overwrite_never_mixes``):
-a reader snapshots the file listing when the DataFrame is created, so a
-reader that *starts* after a commit sees the overwritten bucket fully
-new and every other bucket untouched (atomic per-bucket visibility); a
-reader whose listing *spans* a commit either returns the old snapshot
-or fails loudly with FileNotFoundException once the old files are
-swapped out — it can never silently return a row-level old/new mix of
-one bucket, because parquet files are immutable and the committer
-replaces a partition's file set, not file contents. The remaining gap
-vs real Iceberg — an in-flight reader should SUCCEED on its pinned
-snapshot instead of failing — is closed by ``snapstore.SnapshotTable``
-(Iceberg-style manifest commits; see that module and the
-``checkpoint_snapshot`` gate): commits there add immutable files and
-atomically swap a manifest version, so pinned readers keep working
-until ``expire_snapshots``. This module keeps the plain-parquet
-dynamic-overwrite path as the zero-metadata default.
+granularity. The output, the sidecar and the raw-payload sidecar are
+``snapstore.SnapshotTable`` tables (Iceberg-style manifest commits):
+each commit atomically swaps a manifest version, so a reader pinned to
+an earlier snapshot keeps reading it across a resumed bucket's
+re-commit, until ``expire_snapshots``.
 """
 
 from __future__ import annotations
@@ -48,6 +33,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import pipeline
+from .snapstore import SnapshotTable
 
 BUCKET_COL = 'bucket'
 
@@ -58,8 +44,15 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
 
 
 def completed_buckets(spark: SparkSession, sidecar_path: str,
-                      table_format: str = 'parquet') -> List[int]:
-    sidecar = read_table(spark, sidecar_path, table_format)
+                      table_format: str = 'snapshot') -> List[int]:
+    """The buckets the sidecar at ``sidecar_path`` marks complete.
+
+    ``table_format`` accepts only ``'snapshot'``; it stays until the
+    benchmark's checkpoint workload stops passing it.
+    """
+    if table_format != 'snapshot':
+        raise ValueError(f'unknown table_format: {table_format!r}')
+    sidecar = SnapshotTable(sidecar_path).read(spark)
     if sidecar is None:
         return []
     # one row per completed bucket and run: deduplicated on the driver,
@@ -77,7 +70,7 @@ def run_extraction(
     salt_buckets: Optional[int] = None,
     raw_output_path: Optional[str] = None,
     raw_template: str = '{id}/p{page+1}',
-    table_format: str = 'parquet',
+    table_format: str = 'snapshot',
     **extract_kwargs,
 ) -> List[int]:
     """Run (or resume) the extraction job; returns buckets processed.
@@ -89,21 +82,9 @@ def run_extraction(
     extraction UDF then runs on the salted layout before the final
     by-bucket exchange for the partitioned write.
 
-    ``table_format``: ``'parquet'`` commits via dynamic partition
-    overwrite (zero metadata, loud in-flight-reader failures);
-    ``'snapshot'`` commits output and sidecar through
-    ``snapstore.SnapshotTable`` (atomic manifest swap — pinned readers
-    keep working across a resumed bucket's re-commit, time travel,
-    optimistic concurrency). The idempotency/resume contract is
-    identical in both.
+    ``table_format`` accepts only ``'snapshot'``, as in
+    ``completed_buckets``.
     """
-    if table_format not in ('parquet', 'snapshot'):
-        raise ValueError(f'unknown table_format: {table_format!r}')
-    snap_out = snap_side = None
-    if table_format == 'snapshot':
-        from .snapstore import SnapshotTable
-        snap_out = SnapshotTable(output_path)
-        snap_side = SnapshotTable(sidecar_path)
     done = set(completed_buckets(spark, sidecar_path, table_format))
     pending = [b for b in range(n_buckets) if b not in done]
     if max_buckets is not None:
@@ -116,8 +97,8 @@ def run_extraction(
     src = with_bucket(transcripts, n_buckets).where(
         '{} IN ({})'.format(BUCKET_COL, ', '.join(map(str, pending))))
     if raw_output_path:
-        # S9 sidecar restricted to this run's pending buckets (dynamic
-        # overwrite — resumes never rescan or clobber completed buckets)
+        # S9 sidecar restricted to this run's pending buckets: resumes
+        # never rescan or clobber completed buckets
         save_raw_payloads(src, raw_output_path, template=raw_template)
     extracted = pipeline.extract_turns(
         src, keep_columns=('role', 'tool', 'ts', BUCKET_COL),
@@ -136,13 +117,13 @@ def run_extraction(
             f'sum(if({BUCKET_COL} = {b}, ({term}), NULL))'
             for b in pending), n))
         for n, term in terms.items()))
-    _write_output(shaped, output_path, snap_out)
+    _write_output(shaped, output_path)
 
     # lineage + metrics, appended only after the bucket data is durable;
     # empty buckets get a zero row so they are marked complete too. The
     # few rows are built on the driver as Arrow, run_ts from the driver
-    # clock; the snapshot store appends the table itself (no Spark job),
-    # the parquet format writes it through Spark's Hadoop filesystem.
+    # clock, and the snapshot store appends the table itself (no Spark
+    # job)
     observed = observation.get
     run_ts = datetime.datetime.now(datetime.timezone.utc)
     table = pa.Table.from_arrays(
@@ -154,27 +135,14 @@ def run_extraction(
             + [pa.field(n, pa.int64(), nullable=False) for n in terms]
             + [pa.field('run_ts', pa.timestamp('us', 'UTC'),
                         nullable=False)]))
-    if snap_side is not None:
-        snap_side.append(table)
-    else:
-        # one file per run, not one per partition of the Arrow frame
-        spark.createDataFrame(table).coalesce(1).write.mode(
-            'append').parquet(sidecar_path)
+    SnapshotTable(sidecar_path).append(table)
     return pending
 
 
-def _write_output(shaped: DataFrame, output_path: str, snap_out) -> None:
+def _write_output(shaped: DataFrame, output_path: str) -> None:
     """Commit the pending buckets' rows, replacing exactly their
     partitions of the output table."""
-    if snap_out is not None:
-        snap_out.replace_partitions(shaped, BUCKET_COL)
-    else:
-        (shaped
-         .write
-         .partitionBy(BUCKET_COL)
-         .option('partitionOverwriteMode', 'dynamic')
-         .mode('overwrite')
-         .parquet(output_path))
+    SnapshotTable(output_path).replace_partitions(shaped, BUCKET_COL)
 
 
 def template_path_expr(template: str):
@@ -229,51 +197,12 @@ def save_raw_payloads(transcripts: DataFrame, path: str,
     same artifact is a debug sidecar keyed by (conv_id, turn_idx) whose
     ``raw_name`` column carries the expanded template value.
 
-    If the frame carries the lineage bucket column the write partitions
-    by it with dynamic overwrite, so a resumed run touching only pending
-    buckets rewrites only those buckets' raw files (and a crash never
-    destroys completed ones). A bucket-less frame does a plain overwrite.
+    ``transcripts`` carries the lineage bucket column, and the write
+    replaces exactly the buckets it holds, so a resumed run touching
+    only pending buckets rewrites only those buckets' raw files (and a
+    crash never destroys completed ones).
     """
-    cols = ['conv_id', 'turn_idx',
-            template_path_expr(template).alias('raw_name'),
-            F.col('text').alias('payload')]
-    if BUCKET_COL in transcripts.columns:
-        (transcripts.select(*cols, BUCKET_COL)
-         .write
-         .partitionBy(BUCKET_COL)
-         .option('partitionOverwriteMode', 'dynamic')
-         .mode('overwrite')
-         .parquet(path))
-    else:
-        transcripts.select(*cols).write.mode('overwrite').parquet(path)
-
-
-def read_table(spark: SparkSession, path: str,
-               table_format: str) -> Optional[DataFrame]:
-    """The output or sidecar table at ``path`` in ``table_format``; None
-    when it holds no data yet.
-
-    A snapshot table reads its HEAD through ``SnapshotTable.read``. A
-    parquet table is opened through Spark itself (works on any Hadoop
-    filesystem — HDFS/S3/local — unlike a driver-side os.path probe,
-    which on a cluster deployment would always miss and silently degrade
-    resume into full reprocessing). A missing path, checked through the
-    path's Hadoop ``FileSystem``, or one that holds no data (an
-    AnalysisException) means 'no table yet'. The existence check keeps
-    the common first run from failing analysis, which a session that has
-    used an ``Observation`` logs as a listener error with a stack trace.
-    """
-    if table_format == 'snapshot':
-        from .snapstore import SnapshotTable
-        return SnapshotTable(path).read(spark)
-    from pyspark.errors import AnalysisException
-    sc = spark.sparkContext
-    jpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-    if not jpath.getFileSystem(sc._jsc.hadoopConfiguration()).exists(jpath):
-        return None
-    try:
-        df = spark.read.parquet(path)
-        df.schema  # force resolution eagerly
-        return df
-    except AnalysisException:
-        return None
+    SnapshotTable(path).replace_partitions(transcripts.select(
+        'conv_id', 'turn_idx',
+        template_path_expr(template).alias('raw_name'),
+        F.col('text').alias('payload'), BUCKET_COL), BUCKET_COL)

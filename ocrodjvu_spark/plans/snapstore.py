@@ -1,11 +1,12 @@
 """Snapshot-manifest table format: Iceberg-style commits over parquet.
 
-The checkpoint layer's parquet stand-in (``checkpoint.py``) documents one
-limitation vs a real table format: a reader whose file listing spans a
-dynamic-partition overwrite fails with FileNotFoundException once the old
-files are swapped out. This module closes that gap from scratch — no
-external table-format library — with the same core protocol Iceberg uses
-(spec: https://iceberg.apache.org/spec/ — metadata tree + atomic swap;
+The table format under the checkpointed extraction (``checkpoint.py``)
+and the transcripts tables. A plain parquet directory committed by
+dynamic partition overwrite fails a reader whose file listing spans the
+commit (FileNotFoundException once the old files are swapped out). This
+module closes that gap from scratch — no external table-format library —
+with the same core protocol Iceberg uses (spec:
+https://iceberg.apache.org/spec/ — metadata tree + atomic swap;
 re-implemented here, not copied):
 
 * **Immutable data files.** Writers stage parquet files and *add* them to
@@ -722,8 +723,7 @@ class SnapshotTable:
         so the caller applies the same predicate row-level on the
         returned frame (exactly how an engine consumes Iceberg's
         bounds). Returns None for an empty table/snapshot — callers
-        decide their own empty-schema story, same convention as
-        ``checkpoint.read_table``.
+        decide their own empty-schema story.
         """
         if version is not None and ref is not None:
             raise ValueError('read: version and ref are mutually exclusive')
@@ -1599,9 +1599,6 @@ class SnapshotTable:
             manifest = self.snapshot(v)
             gone = [rel for rel in self._referenced(manifest)
                     if rel not in live]
-            self._remove(gone)
-            deleted += gone
-            live.update(gone)  # only report/remove once
             if manifest.get('tag'):
                 # published like a version claim: a crash mid-write
                 # must never leave a truncated tombstone (tags are
@@ -1609,7 +1606,13 @@ class SnapshotTable:
                 # already have published it
                 self._link_json(f'x{v}.json',
                                 {'version': v, 'tag': manifest['tag']})
+            # the version goes before its files: a crash in between
+            # leaves orphans for ``remove_orphans``, never a version
+            # whose files are gone
             os.remove(os.path.join(self.manifest_dir, f'v{v}.json'))
+            self._remove(gone)
+            deleted += gone
+            live.update(gone)  # only report/remove once
         return deleted
 
     # -- internals ----------------------------------------------------------
@@ -2042,7 +2045,7 @@ class SnapshotTable:
             ks = set((e.get('stats') or {}).keys())
             cols = ks if cols is None else (cols & ks)
         stats = {}
-        for c in (cols or ()):
+        for c in sorted(cols or ()):
             los = [e['stats'][c][0] for e in entries]
             his = [e['stats'][c][1] for e in entries]
             try:

@@ -11,12 +11,14 @@ The corpus is not part of this repository. Where it is absent:
 
 * the tests marked ``needs_reference_corpus`` compare against (or count)
   its goldens and are skipped with a reason that says so;
-* the parametrized golden sweeps (``test_golden``, ``test_rough_no_crash``,
+* the parametrized golden sweeps (``test_golden``,
   ``test_roundtrip_fixed_point``) collect no cases;
 * the round-trip and serialization tests whose subject does not depend
   on the corpus run on the in-repo inputs below (``ONE_PAGE_HOCR``,
   ``EMPTY_PAGE_HOCR``, ``TESSERACT_MAKEBOX_HOCR``, ``NESTING_DJVUSED``).
-  Where the corpus is present they run on its files as well.
+  Where the corpus is present they run on its files as well. So do the
+  sweeps that need no golden output (``rough_cases`` and the tokenizer
+  equivalence sweep over ``hocr_inputs``).
 """
 
 from __future__ import annotations
@@ -164,22 +166,33 @@ def golden_cases():
         )
 
 
+def hocr_inputs():
+    """Yield (name, html_bytes) of the in-repo hOCR pages, then of every
+    reference fixture (named by its file name) where the corpus is
+    present."""
+    yield from zip(('one_page', 'empty_page', 'tesseract_makebox'),
+                   IN_REPO_HOCR_PAGES)
+    for html_file in sorted(
+            glob.glob(os.path.join(HOCR2DJVUSED_DIR, '*.html'))):
+        with open(html_file, 'rb') as f:
+            yield os.path.basename(html_file), f.read()
+
+
 def rough_cases():
-    """Yield (case_id, html_bytes, kwargs) for fixtures without goldens."""
+    """Yield (case_id, html_bytes, kwargs) for the inputs without
+    goldens, under five configs each."""
     known = {
-        os.path.basename(t)[:-6]
+        os.path.basename(t)[:-6] + '.html'
         for t in glob.glob(os.path.join(HOCR2DJVUSED_DIR, '*.test[0-9]'))
     }
     configs = [dict(details=hocr.DETAILS_BY_NAME['lines'])] + [
         dict(details=hocr.DETAILS_BY_NAME[d], uax29=(True if u else None))
         for d in ('words', 'chars') for u in (0, 1)
     ]
-    for html_file in sorted(glob.glob(os.path.join(HOCR2DJVUSED_DIR, '*.html'))):
-        base = os.path.basename(html_file)[:-5]
-        if base in known:
+    for name, html_bytes in hocr_inputs():
+        if name in known:
             continue
-        with open(html_file, 'rb') as f:
-            html_bytes = f.read()
+        base = name[:-5] if name.endswith('.html') else name
         for i, cfg in enumerate(configs):
             kw = dict(cfg)
             if base.endswith(('cuneiform0.7', 'cuneiform0.8')):

@@ -4,6 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocrodjvu_spark.plans import checkpoint
+from ocrodjvu_spark.plans.snapstore import SnapshotTable
 from ocrodjvu_spark.sources import transcripts as T
 
 SF_DIR = '/root/testdata/sf0.001'
@@ -31,140 +32,53 @@ def test_resume_after_partial_run(spark, paths):
         spark, df, out, side, n_buckets=N_BUCKETS)
     assert sorted(first + second) == list(range(N_BUCKETS))
     # the sidecar grows by one file per run, not one per partition
-    import glob
-    assert len(glob.glob(f'{side}/part-*.parquet')) == 2
+    assert len(SnapshotTable(side).snapshot()['files']) == 2
 
     # third run: nothing pending -> no-op
     assert checkpoint.run_extraction(
         spark, df, out, side, n_buckets=N_BUCKETS) == []
 
     # output is complete and keyed correctly
-    result = spark.read.parquet(out)
+    result = SnapshotTable(out).read(spark)
     assert result.count() == total
     assert result.select('conv_id', 'turn_idx').distinct().count() == total
 
     # sidecar metrics add up
-    metrics = spark.read.parquet(side)
+    metrics = SnapshotTable(side).read(spark)
     agg = metrics.agg(F.sum('n_turns'), F.sum('n_errors')).first()
     assert agg[0] == total
     assert agg[1] == 0
+
+
+def test_table_formats_other_than_snapshot_raise(paths):
+    out, side = paths
+    with pytest.raises(ValueError, match='parquet'):
+        checkpoint.completed_buckets(None, side, 'parquet')
+    with pytest.raises(ValueError, match='parquet'):
+        checkpoint.run_extraction(None, None, out, side,
+                                  table_format='parquet')
 
 
 def test_rerun_bucket_is_idempotent(spark, paths):
     out, side = paths
     df = T.synthesize_transcripts(spark, SF_DIR)
     checkpoint.run_extraction(spark, df, out, side, n_buckets=4)
-    before = spark.read.parquet(out).count()
+    before = SnapshotTable(out).read(spark).count()
 
     # wipe the sidecar -> everything looks pending -> full reprocess;
-    # dynamic partition overwrite must not duplicate rows
+    # replacing the buckets' partitions must not duplicate rows
     import shutil
     shutil.rmtree(side)
     checkpoint.run_extraction(spark, df, out, side, n_buckets=4)
-    after = spark.read.parquet(out).count()
+    after = SnapshotTable(out).read(spark).count()
     assert before == after
-
-
-def test_concurrent_dynamic_overwrites_last_writer_wins(spark, tmp_path):
-    # Iceberg-shaped commit contract of the parquet stand-in: two
-    # writers whose bucket sets overlap both commit dynamic-partition
-    # overwrites to the same table. Per overlapping bucket the LAST
-    # writer's files fully replace the partition — never a row-level
-    # mix — and non-overlapping buckets are untouched.
-    out = str(tmp_path / 'out')
-    df = checkpoint.with_bucket(
-        T.synthesize_transcripts(spark, SF_DIR), 8).cache()
-
-    def write(writer, buckets):
-        (df.where(F.col(checkpoint.BUCKET_COL).isin(buckets))
-         .withColumn('writer', F.lit(writer))
-         .write.partitionBy(checkpoint.BUCKET_COL)
-         .option('partitionOverwriteMode', 'dynamic')
-         .mode('overwrite').parquet(out))
-
-    present = sorted(r[0] for r in
-                     df.select(checkpoint.BUCKET_COL).distinct().collect())
-    assert len(present) >= 4  # need a real overlap to test anything
-    a_buckets = present[:4]
-    b_buckets = present[2:6]          # overlaps A on present[2:4]
-    write('A', a_buckets)
-    write('B', b_buckets)
-
-    res = spark.read.parquet(out)
-    per = {r[checkpoint.BUCKET_COL]: set(r['ws'])
-           for r in res.groupBy(checkpoint.BUCKET_COL)
-                       .agg(F.collect_set('writer').alias('ws'))
-                       .collect()}
-    assert per.keys() == set(a_buckets) | set(b_buckets)
-    assert all(len(ws) == 1 for ws in per.values())  # no partial mixes
-    assert all(per[b] == {'A'} for b in a_buckets[:2])
-    assert all(per[b] == {'B'} for b in b_buckets)
-    # per-bucket row counts match the source exactly (no dup/loss)
-    src = {r[0]: r[1] for r in
-           df.where(F.col(checkpoint.BUCKET_COL).isin(
-               a_buckets + b_buckets))
-             .groupBy(checkpoint.BUCKET_COL).count().collect()}
-    got = {r[0]: r[1] for r in
-           res.groupBy(checkpoint.BUCKET_COL).count().collect()}
-    assert got == src
-    df.unpersist()
-
-
-def test_reader_across_overwrite_never_mixes(spark, tmp_path):
-    # snapshot-isolation face of the Iceberg-shaped commit contract
-    # (checkpoint module docstring): a reader that starts AFTER a
-    # commit sees the overwritten bucket atomically (all-new rows,
-    # other buckets untouched); a reader whose file listing SPANS the
-    # commit either yields the old snapshot or fails loudly once the
-    # old files are swapped out — never a row-level old/new mix.
-    out = str(tmp_path / 'out')
-    df = checkpoint.with_bucket(
-        T.synthesize_transcripts(spark, SF_DIR), 4)
-
-    def write(ver, buckets=None):
-        d = df.withColumn('ver', F.lit(ver))
-        if buckets is not None:
-            d = d.where(F.col(checkpoint.BUCKET_COL).isin(buckets))
-        (d.write.partitionBy(checkpoint.BUCKET_COL)
-         .option('partitionOverwriteMode', 'dynamic')
-         .mode('overwrite').parquet(out))
-
-    write('v1')
-    stale = spark.read.parquet(out)        # listing pinned pre-commit
-    assert stale.where(F.col('ver') != 'v1').count() == 0
-    target = stale.select(checkpoint.BUCKET_COL).distinct().head()[0]
-    write('v2', [target])
-
-    # the stale reader spans the commit: old snapshot or a loud
-    # failure — assert it cannot produce a v1/v2 mix in the bucket
-    try:
-        vers = {r.ver for r in
-                stale.where(F.col(checkpoint.BUCKET_COL) == target)
-                     .select('ver').distinct().collect()}
-        assert vers in ({'v1'}, {'v2'}, set())
-    except Exception as e:  # documented limitation vs real Iceberg
-        assert 'FileNotFoundException' in str(e)
-
-    # a fresh reader sees the commit atomically per bucket
-    fresh = spark.read.parquet(out)
-    per = {r[checkpoint.BUCKET_COL]: set(r.ws) for r in
-           fresh.groupBy(checkpoint.BUCKET_COL)
-                .agg(F.collect_set('ver').alias('ws')).collect()}
-    assert per[target] == {'v2'}
-    assert all(v == {'v1'} for b, v in per.items() if b != target)
-    # row counts per bucket unchanged (full replace, no dup/loss)
-    src = {r[0]: r[1] for r in
-           df.groupBy(checkpoint.BUCKET_COL).count().collect()}
-    got = {r[0]: r[1] for r in
-           fresh.groupBy(checkpoint.BUCKET_COL).count().collect()}
-    assert got == src
 
 
 def test_racing_resume_runs_stay_idempotent(spark, tmp_path):
     # worst-case race: a second worker starts from a stale snapshot in
     # which NO lineage exists (its own empty sidecar), so it reprocesses
     # every bucket into the same output table the first worker already
-    # filled. Dynamic overwrite keeps the table exactly-once.
+    # filled. Replacing whole partitions keeps the table exactly-once.
     out = str(tmp_path / 'out')
     side_a = str(tmp_path / 'sideA')
     side_b = str(tmp_path / 'sideB')
@@ -172,7 +86,7 @@ def test_racing_resume_runs_stay_idempotent(spark, tmp_path):
     total = df.count()
     checkpoint.run_extraction(spark, df, out, side_a, n_buckets=4)
     checkpoint.run_extraction(spark, df, out, side_b, n_buckets=4)
-    res = spark.read.parquet(out)
+    res = SnapshotTable(out).read(spark)
     assert res.count() == total
     assert res.select('conv_id', 'turn_idx').distinct().count() == total
 
@@ -182,13 +96,13 @@ def test_raw_payload_sidecar(spark, tmp_path):
     # expansion compiled to a Catalyst expression (no per-row Python)
     from ocrodjvu_spark.plans.checkpoint import save_raw_payloads
     df = spark.createDataFrame(
-        [('conv-1', 1, 'raw one'), ('conv-1', 2, 'raw two'),
-         ('conv-2', 1, 'raw three')],
-        'conv_id string, turn_idx int, text string')
+        [('conv-1', 1, 'raw one', 0), ('conv-1', 2, 'raw two', 0),
+         ('conv-2', 1, 'raw three', 1)],
+        'conv_id string, turn_idx int, text string, bucket int')
     out = str(tmp_path / 'raw')
     save_raw_payloads(df, out, template='{id}/p{page+1}')
     rows = {(r.conv_id, r.turn_idx): (r.raw_name, r.payload)
-            for r in spark.read.parquet(out).collect()}
+            for r in SnapshotTable(out).read(spark).collect()}
     assert rows[('conv-1', 1)] == ('conv-1/p2', 'raw one')
     assert rows[('conv-1', 2)] == ('conv-1/p3', 'raw two')
     assert rows[('conv-2', 1)] == ('conv-2/p2', 'raw three')
@@ -221,7 +135,7 @@ def test_raw_sidecar_bucketed_resume(spark, tmp_path):
     first = checkpoint.run_extraction(
         spark, df, out, side, n_buckets=N_BUCKETS, max_buckets=3,
         raw_output_path=raw)
-    raw1 = spark.read.parquet(raw)
+    raw1 = SnapshotTable(raw).read(spark)
     assert sorted(r.bucket for r in
                   raw1.select('bucket').distinct().collect()) == \
         sorted(first)
@@ -229,7 +143,7 @@ def test_raw_sidecar_bucketed_resume(spark, tmp_path):
 
     checkpoint.run_extraction(
         spark, df, out, side, n_buckets=N_BUCKETS, raw_output_path=raw)
-    raw2 = spark.read.parquet(raw)
+    raw2 = SnapshotTable(raw).read(spark)
     assert raw2.count() == total
     # completed buckets' rows unchanged (not rewritten to something else)
     assert raw2.where(F.col('bucket').isin(first)).count() == n_first
@@ -250,12 +164,12 @@ def test_run_extraction_with_packed_spans_metrics(spark, tmp_path):
         spark, tr, out, side, n_buckets=4,
         emit_spans='packed', emit_sexpr=False)
     assert len(done) == 4
-    side_df = spark.read.parquet(side)
+    side_df = SnapshotTable(side).read(spark)
     total_spans = side_df.agg(F.sum('n_spans')).first()[0]
     # the synthetic corpus has one span per word; must be non-zero and
     # equal the decoded span count
     from ocrodjvu_spark import pipeline
-    decoded = pipeline.word_spans(spark.read.parquet(out)).count()
+    decoded = pipeline.word_spans(SnapshotTable(out).read(spark)).count()
     assert total_spans == decoded > 0
 
 
@@ -271,11 +185,11 @@ def _rows_by_bucket(df):
     return {r[0]: tuple(r[1:]) for r in df.collect()}
 
 
-def _expected_sidecar(spark, out, table_format, buckets):
+def _expected_sidecar(spark, out, buckets):
     """``run_metrics`` grouped by bucket over the written output, with a
     zero row for each bucket that holds no rows."""
     from ocrodjvu_spark import pipeline
-    written = checkpoint.read_table(spark, out, table_format)
+    written = SnapshotTable(out).read(spark)
     got = {} if written is None else _rows_by_bucket(
         written.groupBy(checkpoint.BUCKET_COL)
         .agg(*pipeline.run_metrics(written)))
@@ -308,7 +222,7 @@ class _PlanNodes:
         return found
 
 
-@pytest.mark.parametrize('table_format', ['parquet', 'snapshot'])
+@pytest.mark.parametrize('table_format', ['snapshot'])
 def test_sidecar_metrics_observed_without_rescan(spark, tmp_path,
                                                  table_format):
     # the sidecar's per-bucket metrics come from the write itself: no
@@ -344,13 +258,13 @@ def test_sidecar_metrics_observed_without_rescan(spark, tmp_path,
             assert not [d for d in descs if out in d], name
             side_writes = [d for n, d in nodes
                            if not n.startswith('Scan') and side in d]
-            assert bool(side_writes) == (table_format == 'parquet'), name
+            assert not side_writes, name
             assert sorted(done) == list(range(n_buckets))
-            sidecar = checkpoint.read_table(spark, side, table_format)
+            sidecar = SnapshotTable(side).read(spark)
             assert sidecar.dtypes == SIDECAR_DTYPES
             got = _rows_by_bucket(sidecar.drop('run_ts'))
             assert got == _expected_sidecar(
-                spark, out, table_format, range(n_buckets)), name
+                spark, out, range(n_buckets)), name
             if name == 'full':
                 assert sum(v[0] for v in got.values()) == tr.count()
             else:
@@ -359,33 +273,28 @@ def test_sidecar_metrics_observed_without_rescan(spark, tmp_path,
         spark.conf.set(key, old)
 
 
-@pytest.mark.parametrize('table_format', ['parquet', 'snapshot'])
+@pytest.mark.parametrize('table_format', ['snapshot'])
 def test_resume_from_sidecar_in_existing_layout(spark, tmp_path,
                                                 table_format):
     # sidecars written before the metrics were observed on the write
     # (all-nullable metric columns) still drive a resume
-    from ocrodjvu_spark.plans.snapstore import SnapshotTable
     out, side = str(tmp_path / 'out'), str(tmp_path / 'side')
     old = spark.createDataFrame(
         [(0, 5, 0, 0, 40), (1, 7, 1, 0, 60)],
         'bucket int, n_turns bigint, n_errors bigint, n_spans bigint, '
         'n_chars bigint').withColumn('run_ts', F.current_timestamp())
-    if table_format == 'snapshot':
-        SnapshotTable(side).append(old)
-    else:
-        old.write.parquet(side)
+    SnapshotTable(side).append(old)
     tr = T.synthesize_transcripts(spark, SF_DIR)
     done = checkpoint.run_extraction(spark, tr, out, side, n_buckets=4,
                                      table_format=table_format)
     assert done == [2, 3]
     assert checkpoint.completed_buckets(
         spark, side, table_format) == [0, 1, 2, 3]
-    sidecar = checkpoint.read_table(spark, side, table_format)
+    sidecar = SnapshotTable(side).read(spark)
     assert sidecar.dtypes == SIDECAR_DTYPES
     got = _rows_by_bucket(sidecar.drop('run_ts'))
     assert got[0] == (5, 0, 0, 40) and got[1] == (7, 1, 0, 60)
-    assert {b: got[b] for b in done} == _expected_sidecar(
-        spark, out, table_format, done)
+    assert {b: got[b] for b in done} == _expected_sidecar(spark, out, done)
 
 
 _RETRY_SCRIPT = r'''
@@ -405,7 +314,7 @@ spark.sparkContext.setLogLevel('FATAL')
 write_output = checkpoint._write_output
 
 
-def fail_first_attempt(shaped, output_path, snap_out):
+def fail_first_attempt(shaped, output_path):
     """Hand the write a frame that keeps every row but fails attempt 0
     of the first non-empty partition to run it."""
     marker = output_path + '.failed'
@@ -421,29 +330,24 @@ def fail_first_attempt(shaped, output_path, snap_out):
         return True
 
     write_output(shaped.where(F.udf(keep, 'boolean')('bucket')),
-                 output_path, snap_out)
+                 output_path)
 
 
 checkpoint._write_output = fail_first_attempt
 tr = T.synthesize_transcripts(spark, sf_dir)
-result = {}
-for fmt in ('parquet', 'snapshot'):
-    out = os.path.join(root, fmt, 'out')
-    side = os.path.join(root, fmt, 'side')
-    done = checkpoint.run_extraction(spark, tr, out, side, n_buckets=4,
-                                     table_format=fmt, emit_spans='packed')
-    read = ((lambda p: SnapshotTable(p).read(spark)) if fmt == 'snapshot'
-            else spark.read.parquet)
-    written, sidecar = read(out), read(side)
-    result[fmt] = {
-        'done': done,
-        'failed': os.path.exists(out + '.failed'),
-        'sidecar': sorted(list(r) for r in sidecar.drop('run_ts').collect()),
-        'expected': sorted(list(r) for r in written.groupBy('bucket').agg(
-            *pipeline.run_metrics(written)).collect()),
-        'turns': tr.count(),
-    }
-print(json.dumps(result))
+out, side = os.path.join(root, 'out'), os.path.join(root, 'side')
+done = checkpoint.run_extraction(spark, tr, out, side, n_buckets=4,
+                                 emit_spans='packed')
+written = SnapshotTable(out).read(spark)
+sidecar = SnapshotTable(side).read(spark)
+print(json.dumps({
+    'done': done,
+    'failed': os.path.exists(out + '.failed'),
+    'sidecar': sorted(list(r) for r in sidecar.drop('run_ts').collect()),
+    'expected': sorted(list(r) for r in written.groupBy('bucket').agg(
+        *pipeline.run_metrics(written)).collect()),
+    'turns': tr.count(),
+}))
 '''
 
 
@@ -460,13 +364,11 @@ def test_observed_metrics_count_retried_rows_once(tmp_path):
         capture_output=True, text=True, cwd=repo,
         env=dict(os.environ, PYTHONPATH=repo), timeout=600)
     assert r.returncode == 0, r.stderr[-3000:]
-    result = json.loads(r.stdout.strip().splitlines()[-1])
-    for fmt in ('parquet', 'snapshot'):
-        got = result[fmt]
-        assert got['failed'], fmt  # the planted failure fired
-        assert got['done'] == [0, 1, 2, 3]
-        assert got['sidecar'] == got['expected'], fmt
-        assert sum(row[1] for row in got['sidecar']) == got['turns']
+    got = json.loads(r.stdout.strip().splitlines()[-1])
+    assert got['failed']  # the planted failure fired
+    assert got['done'] == [0, 1, 2, 3]
+    assert got['sidecar'] == got['expected']
+    assert sum(row[1] for row in got['sidecar']) == got['turns']
 
 
 _PROBE_SCRIPT = r'''
@@ -487,7 +389,7 @@ for name in ('first', 'second'):
 '''
 
 
-def test_parquet_runs_probe_missing_sidecar_quietly_from_any_cwd(tmp_path):
+def test_runs_probe_missing_sidecar_quietly_from_any_cwd(tmp_path):
     # once a session has used an Observation (the first run does), a
     # query that fails analysis makes Spark's listener bus log an ERROR
     # with a stack trace: the second run's probe of its missing sidecar

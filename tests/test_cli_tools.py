@@ -173,7 +173,7 @@ def test_snapshot_admin_zorder_rejects_string_column(spark, tmp_path,
          for i in range(20)], 'conv_id string, turn_idx int, text string')
     root = str(tmp_path / 'out')
     checkpoint.run_extraction(spark, turns, root, str(tmp_path / 'side'),
-                              n_buckets=4, table_format='snapshot')
+                              n_buckets=4)
     assert snapshot_admin.main(
         [root, 'compact', '--partition-col', 'bucket',
          '--zorder-by', 'conv_id,turn_idx']) == 1

@@ -1,17 +1,18 @@
 """Fast regex tokenizer == stdlib html.parser over the whole corpus.
 
 Both feed the same _TreeBuilder, so recovery semantics are shared; this
-pins the tokenizers to byte-identical DOMs on every reference fixture
-plus adversarial fragments.
+pins the tokenizers to byte-identical DOMs on the in-repo hOCR pages,
+every reference fixture where the corpus is present, and adversarial
+fragments.
 """
-
-import glob
 
 import pytest
 
 from ocrodjvu_spark.kernel import htmldom
 
-FIXTURES = sorted(glob.glob('/root/reference/tests/hocr2djvused/*.html'))
+from tests.corpus import hocr_inputs
+
+HOCR_INPUTS = list(hocr_inputs())
 
 ADVERSARIAL = [
     '',
@@ -48,10 +49,10 @@ def canon(e):
             tuple(canon(c) for c in e))
 
 
-@pytest.mark.parametrize('path', FIXTURES,
-                         ids=[p.rsplit('/', 1)[1] for p in FIXTURES])
-def test_corpus_equivalence(path):
-    text = open(path, 'rb').read().decode('UTF-8', 'replace')
+@pytest.mark.parametrize('html_bytes', [b for _n, b in HOCR_INPUTS],
+                         ids=[n for n, _b in HOCR_INPUTS])
+def test_corpus_equivalence(html_bytes):
+    text = html_bytes.decode('UTF-8', 'replace')
     assert canon(htmldom.parse_html(text, fast=True)) == \
         canon(htmldom.parse_html(text, fast=False))
 

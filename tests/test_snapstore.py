@@ -1,9 +1,9 @@
 """Snapshot-manifest table format: commit protocol + isolation tests.
 
-These pin the semantics the checkpoint docstring previously listed as a
-LIMITATION of the parquet stand-in: a reader pinned to a snapshot must
-keep working across a concurrent overwrite (real-Iceberg behavior), and
-concurrent commits must rebase instead of clobbering each other.
+A reader pinned to a snapshot must keep working across a concurrent
+overwrite (real-Iceberg behavior, which a parquet directory committed by
+dynamic partition overwrite lacks), and concurrent commits must rebase
+instead of clobbering each other.
 """
 
 import os
@@ -69,7 +69,7 @@ def test_replace_partitions_swaps_only_target(spark, tmp_path):
 
 
 def test_pinned_reader_survives_replace(spark, tmp_path):
-    # THE gap vs the parquet stand-in: the pinned reader must SUCCEED
+    # THE gap vs a plain parquet directory: the pinned reader must SUCCEED
     # with the old snapshot (not FileNotFoundException, not a mix),
     # because commits add files without deleting old ones.
     t = SnapshotTable(str(tmp_path / 't'))
@@ -417,18 +417,18 @@ def test_run_extraction_snapshot_backend_resumes(spark, tmp_path):
     tr = T.synthesize_transcripts(spark, SF_DIR)
     done1 = checkpoint.run_extraction(
         spark, tr, out, side, n_buckets=8, max_buckets=3,
-        table_format='snapshot', emit_spans=False, emit_sexpr=False)
+        emit_spans=False, emit_sexpr=False)
     assert len(done1) == 3
     pinned = SnapshotTable(out).read(spark)
     n_phase1 = pinned.count()
     done2 = checkpoint.run_extraction(
         spark, tr, out, side, n_buckets=8,
-        table_format='snapshot', emit_spans=False, emit_sexpr=False)
+        emit_spans=False, emit_sexpr=False)
     assert sorted(done1 + done2) == list(range(8))
     # resume is idempotent: nothing pending on a third run
     assert checkpoint.run_extraction(
         spark, tr, out, side, n_buckets=8,
-        table_format='snapshot', emit_spans=False, emit_sexpr=False) == []
+        emit_spans=False, emit_sexpr=False) == []
     full = pipeline.extract_turns(
         checkpoint.with_bucket(tr, 8),
         keep_columns=(checkpoint.BUCKET_COL,),
@@ -1058,6 +1058,57 @@ def test_expire_tombstone_truncated_file_does_not_brick_tags(
     assert fresh.find_tag('batch-1') == 1  # lookup still works
     t.expire_snapshots(keep_last=1)
     assert SnapshotTable(t.root).find_tag('batch-1') == 1  # tombstoned
+
+
+def test_expire_crash_after_file_removal_leaves_only_orphans(
+        spark, tmp_path):
+    # expiry unlinks a version before removing its files: a crash while
+    # the files go leaves no version that references missing files, so
+    # later expiries and orphan sweeps still work
+    t = SnapshotTable(str(tmp_path / 't'))
+    t.append(_docs(spark, 'v1'))
+    t.overwrite(_docs(spark, 'v2', n=6))
+    remove = t._remove
+
+    def crash(rels):
+        remove(rels)
+        raise RuntimeError('planted crash after removing files')
+
+    t._remove = crash
+    with pytest.raises(RuntimeError, match='planted'):
+        t.expire_snapshots(keep_last=1)
+    del t._remove
+    assert t.versions() == [2]
+    t.remove_orphans(older_than_sec=0)
+    assert t.expire_snapshots(keep_last=1) == []
+    assert t.read(spark).count() == 6
+
+
+_MF_SUMMARY_SCRIPT = r'''
+import json
+from ocrodjvu_spark.plans.snapstore import SnapshotTable
+entry = {'rows': 1,
+         'stats': {c: [0, 1] for c in ('body', 'id', 'score', 'ts')}}
+print(json.dumps(list(SnapshotTable._mf_summary('m', [entry])['stats'])))
+'''
+
+
+def test_manifest_list_stats_order_ignores_hash_seed():
+    # a manifest-list item's stats keys follow the column names, not the
+    # interpreter's string hash, so one history writes the same bytes
+    import json
+    import subprocess
+    import sys
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    orders = []
+    for seed in ('1', '2'):
+        r = subprocess.run(
+            [sys.executable, '-c', _MF_SUMMARY_SCRIPT],
+            capture_output=True, text=True, cwd=repo, timeout=120,
+            env=dict(os.environ, PYTHONPATH=repo, PYTHONHASHSEED=seed))
+        assert r.returncode == 0, r.stderr[-3000:]
+        orders.append(json.loads(r.stdout))
+    assert orders[0] == orders[1] == ['body', 'id', 'score', 'ts']
 
 
 # -- review-pass regressions ------------------------------------------------

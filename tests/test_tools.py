@@ -78,7 +78,7 @@ def test_run_pipeline_jsonl_input_end_to_end(spark, tmp_path):
          '--input', inp, '--input-format', 'jsonl',
          '--output', str(tmp_path / 'out'),
          '--sidecar', str(tmp_path / 'side'),
-         '--buckets', '4', '--table-format', 'snapshot'],
+         '--buckets', '4'],
         capture_output=True, text=True, env=env, cwd=REPO_ROOT)
     assert r.returncode == 0, r.stderr[-2000:]
     summary = _json.loads(

@@ -4,11 +4,16 @@ Runs every ``queries()`` entry on Spark at sf0.01 and the matching
 ``oracle_sql()`` in DuckDB over the same parquet files, then compares
 row count, column names, and order-insensitive values.
 
-Usage: python tools/check_correctness.py [sf_dir] [query ...]
+Usage: python tools/check_correctness.py [sf_dir] [query ...] [--json out]
+
+``--json`` also records, for every gate (rows-only ones included), the
+sha256 of the Spark side's column names and sorted normalized rows, so
+two sweeps' row equality is a diff of their JSON files.
 """
 
 from __future__ import annotations
 
+import hashlib
 import math
 import sys
 
@@ -64,13 +69,15 @@ def main():
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        spark_df = fn(spark, sf_dir).toPandas()
+        s_cols, s_rows = frame_to_rows(fn(spark, sf_dir).toPandas())
+        digest = hashlib.sha256('\n'.join(
+            [repr(s_cols), *s_rows]).encode()).hexdigest()
+        entry = record[name] = {'rows': len(s_rows), 'sha256': digest}
         if name not in oracles:
-            print(f'{name}: rows-only check, {len(spark_df)} rows')
-            record[name] = {'status': 'rows-only', 'rows': len(spark_df)}
+            print(f'{name}: rows-only check, {len(s_rows)} rows')
+            entry['status'] = 'rows-only'
             continue
         oracle_df = con.execute(oracles[name]).df()
-        s_cols, s_rows = frame_to_rows(spark_df)
         o_cols, o_rows = frame_to_rows(oracle_df)
         status = []
         if s_cols != o_cols:
@@ -88,10 +95,10 @@ def main():
         if status:
             failures += 1
             print(f'{name}: FAIL', *status, sep='\n  ')
-            record[name] = {'status': 'FAIL', 'detail': status}
+            entry.update(status='FAIL', detail=status)
         else:
             print(f'{name}: OK ({len(s_rows)} rows)')
-            record[name] = {'status': 'OK', 'rows': len(s_rows)}
+            entry['status'] = 'OK'
     print('FAILURES:', failures)
     if json_out:
         import json as _json

@@ -9,12 +9,12 @@ Deploy (north rule: two cluster sizes, resumable, lineage sidecar):
         --sidecar <lineage table path> \\
         [--details words] [--uax29] [--rotation 0] \\
         [--buckets 64] [--max-buckets N] [--salt 16] [--pages 17,37-42] \\
-        [--input-format snapshot --input-ref published] \\
-        [--table-format snapshot]
+        [--input-format snapshot --input-ref published]
 
 On a cluster, master/executors come from spark-submit flags
 (--num-executors etc.); rerunning after a failure resumes from the
-sidecar (only pending buckets are processed).
+sidecar (only pending buckets are processed). Output and sidecar are
+snapshot-manifest tables (``plans/snapstore.SnapshotTable``).
 """
 
 from __future__ import annotations
@@ -66,13 +66,6 @@ def main(argv=None):
     parser.add_argument('--input-ref', default=None,
                         help="snapshot input: read a published ref "
                              "(e.g. 'published') instead of HEAD")
-    parser.add_argument('--table-format', default='parquet',
-                        choices=('parquet', 'snapshot'),
-                        dest='table_format',
-                        help='output/sidecar commit protocol: plain '
-                             'dynamic-partition overwrite, or the '
-                             'snapshot-manifest store (atomic commits, '
-                             'pinned readers, time travel)')
     args = parser.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -81,6 +74,7 @@ def main(argv=None):
     from ocrodjvu_spark.kernel.iso639 import normalize_language
     from ocrodjvu_spark.kernel.utils import parse_page_numbers
     from ocrodjvu_spark.plans import checkpoint
+    from ocrodjvu_spark.plans.snapstore import SnapshotTable
     from ocrodjvu_spark.schema import TRANSCRIPTS_DDL
     from ocrodjvu_spark.session import SESSION_CONF
 
@@ -102,7 +96,6 @@ def main(argv=None):
         transcripts = raw.where(F.col('_corrupt_record').isNull()) \
             .drop('_corrupt_record')
     elif args.input_format == 'snapshot':
-        from ocrodjvu_spark.plans.snapstore import SnapshotTable
         src = SnapshotTable(args.input)
         transcripts = src.read(spark, version=args.input_version,
                                ref=args.input_ref)
@@ -122,14 +115,12 @@ def main(argv=None):
         n_buckets=args.buckets, max_buckets=args.max_buckets,
         salt_buckets=args.salt,
         raw_output_path=args.raw_output, raw_template=args.raw_template,
-        table_format=args.table_format,
         details=args.details,
         uax29=(args.language if args.segmentation == 'uax29' else None),
         rotation=args.rotation, fix_utf8=args.fix_utf8,
     )
     elapsed = time.time() - t0
-    metrics = checkpoint.read_table(
-        spark, args.sidecar, args.table_format) if processed else None
+    metrics = SnapshotTable(args.sidecar).read(spark) if processed else None
     summary = {
         'buckets_processed': len(processed),
         'elapsed_sec': round(elapsed, 2),
