@@ -26,6 +26,8 @@ re-commit, until ``expire_snapshots``.
 from __future__ import annotations
 
 import datetime
+import glob
+import os
 from typing import List, Optional
 
 import pyarrow as pa
@@ -48,10 +50,16 @@ def completed_buckets(spark: SparkSession, sidecar_path: str,
     """The buckets the sidecar at ``sidecar_path`` marks complete.
 
     ``table_format`` accepts only ``'snapshot'``; it stays until the
-    benchmark's checkpoint workload stops passing it.
+    benchmark's checkpoint workload stops passing it. A sidecar written
+    as plain parquet files (no ``manifests/``) raises ``ValueError``:
+    it cannot be resumed, and a rerun would write every bucket again.
     """
     if table_format != 'snapshot':
         raise ValueError(f'unknown table_format: {table_format!r}')
+    if (not os.path.isdir(os.path.join(sidecar_path, 'manifests'))
+            and glob.glob(os.path.join(sidecar_path, '*.parquet'))):
+        raise ValueError(f'{sidecar_path} is a plain parquet sidecar, '
+                         'not a snapshot table; runs cannot resume it')
     sidecar = SnapshotTable(sidecar_path).read(spark)
     if sidecar is None:
         return []

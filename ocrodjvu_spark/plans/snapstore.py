@@ -84,6 +84,7 @@ import shutil
 import time
 import uuid
 from typing import Callable, Dict, List, Optional, Sequence
+from urllib.parse import urlsplit
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -565,7 +566,16 @@ class SnapshotTable:
         an admin CLI running ``compact``, a maintenance cron — adopts
         the recorded ones, so rewrites preserve the sketches instead
         of silently stripping them. Passing an explicit value (even
-        ``[]``) overrides and re-records."""
+        ``[]``) overrides and re-records.
+
+        ``root`` is a path on a local or shared POSIX filesystem,
+        mounted at the same path on the driver and every executor: the
+        driver stages and commits with ``os`` calls. A URI (``hdfs://``,
+        ``s3a://``, ``file://``) raises ``ValueError``."""
+        if urlsplit(os.fspath(root)).scheme:
+            raise ValueError(
+                'SnapshotTable needs a local or shared POSIX path, '
+                f'not a URI: {root!r}')
         self.root = root
         self.data_dir = os.path.join(root, 'data')
         self.manifest_dir = os.path.join(root, 'manifests')
@@ -1681,6 +1691,11 @@ class SnapshotTable:
         stage_id = uuid.uuid4().hex
         stage_dir = os.path.join(self.data_dir, f'.stage-{stage_id}')
         write(stage_dir)
+        if not os.path.isdir(stage_dir):
+            # Spark resolved the path on another filesystem (a cluster's
+            # fs.defaultFS): committing would add none of its files
+            raise RuntimeError(
+                f'the staged write is not on this filesystem: {stage_dir}')
         staged = []
         try:
             for dirpath, _dirnames, filenames in os.walk(stage_dir):

@@ -1,5 +1,9 @@
 """Resumable extraction: sidecar lineage, idempotent bucket overwrite."""
 
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -57,6 +61,20 @@ def test_table_formats_other_than_snapshot_raise(paths):
     with pytest.raises(ValueError, match='parquet'):
         checkpoint.run_extraction(None, None, out, side,
                                   table_format='parquet')
+
+
+def test_plain_parquet_sidecar_raises(paths):
+    # a sidecar left by the deleted parquet format is refused, not
+    # silently read as an empty snapshot table
+    out, side = paths
+    os.makedirs(side)
+    pq.write_table(pa.table({'bucket': [0]}), os.path.join(side, 'p.parquet'))
+    with pytest.raises(ValueError, match='plain parquet'):
+        checkpoint.completed_buckets(None, side)
+    with pytest.raises(ValueError, match='plain parquet'):
+        checkpoint.run_extraction(None, None, out, side)
+    assert not os.path.exists(os.path.join(side, 'manifests'))
+    assert not os.path.exists(out)
 
 
 def test_rerun_bucket_is_idempotent(spark, paths):

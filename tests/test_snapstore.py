@@ -1060,6 +1060,26 @@ def test_expire_tombstone_truncated_file_does_not_brick_tags(
     assert SnapshotTable(t.root).find_tag('batch-1') == 1  # tombstoned
 
 
+@pytest.mark.parametrize('root', [
+    'hdfs://nn/t', 's3a://bucket/t', 'file:///tmp/t', 'file:/tmp/t'])
+def test_uri_roots_raise(tmp_path, monkeypatch, root):
+    # the store stages and commits with os calls on the driver, so a
+    # Hadoop URI is refused before anything is created
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ValueError, match='POSIX'):
+        SnapshotTable(root)
+    assert os.listdir(tmp_path) == []
+
+
+def test_staged_write_elsewhere_raises(tmp_path):
+    # a Spark write resolved on another filesystem (a cluster's
+    # fs.defaultFS) leaves no local stage directory: refuse to commit
+    t = SnapshotTable(str(tmp_path / 't'))
+    with pytest.raises(RuntimeError, match='not on this filesystem'):
+        t._stage_files(lambda stage_dir: None)
+    assert t.versions() == []
+
+
 def test_expire_crash_after_file_removal_leaves_only_orphans(
         spark, tmp_path):
     # expiry unlinks a version before removing its files: a crash while

@@ -14,7 +14,10 @@ Deploy (north rule: two cluster sizes, resumable, lineage sidecar):
 On a cluster, master/executors come from spark-submit flags
 (--num-executors etc.); rerunning after a failure resumes from the
 sidecar (only pending buckets are processed). Output and sidecar are
-snapshot-manifest tables (``plans/snapstore.SnapshotTable``).
+snapshot-manifest tables (``plans/snapstore.SnapshotTable``), which the
+driver commits with POSIX calls: every table path must be on a local or
+shared POSIX filesystem mounted at the same path on the driver and the
+executors; a Hadoop URI (hdfs://, s3a://, file://) is refused.
 """
 
 from __future__ import annotations
